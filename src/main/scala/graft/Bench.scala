@@ -162,8 +162,8 @@ object Bench {
     try { microCalibrationBody(spark)(); microCalibrationBody(spark)() }
     catch { case _: Throwable => }
     // ... and spark.ml: the FIRST KMeans fit in a JVM pays class-load +
-    // codegen (~3.5 s measured at r14 — TimeProbe q_ann_ivf_topk run 1
-    // = 5.12 s vs steady 1.44 s), so without this a fitting query's min
+    // codegen (~3.5 s: q_ann_ivf_topk's first run takes 5.12 s against
+    // a steady 1.44 s), so without this a fitting query's min
     // depends on whether an earlier sweep entry already fitted a model
     // — sweep reordering between rounds moved the ivf rows for exactly
     // this reason (the r13 "residual": steady-state min ≡ the fit-once
@@ -171,7 +171,7 @@ object Bench {
     try warmSparkMl(spark) catch { case _: Throwable => }
 
     // Each run fully materializes the query (count()) before
-    // GraftSession.releasingScratch releases the blocks it persisted
+    // GraftSession.releasingScratch releases the pins made in it
     // (localCheckpoint scratch of the dedup/similarity queries), outside
     // the captured time — so a 60+-query session never accumulates
     // block-manager pressure that distorts later timings (observed: same

@@ -129,27 +129,83 @@ object GraftSession {
     else df
   }
 
-  /** Run two INDEPENDENT driver-side legs concurrently (guide §2.6:
-    * actions are only sequential because the driver calls them
-    * sequentially) — the buildIvfPq thread-pool pattern as a reusable
-    * seam for paired writes/fits whose inputs share no data
-    * dependency. Each leg's jobs back-fill executors idled by the
-    * other's driver latency; job descriptions are thread-local, so
-    * callers label inside the legs. Exceptions propagate (first leg's
-    * first). */
-  def inParallel[A, B](a: => A, b: => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val fa = scala.concurrent.Future(a)
-      val fb = scala.concurrent.Future(b)
-      val ra = scala.concurrent.Await.result(
-        fa, scala.concurrent.duration.Duration(3600, "s"))
-      val rb = scala.concurrent.Await.result(
-        fb, scala.concurrent.duration.Duration(3600, "s"))
-      (ra, rb)
-    } finally pool.shutdown()
+  /** How long [[concurrently]] waits for its legs; past it every leg is
+    * cancelled and the call throws a `TimeoutException`. */
+  private val LegTimeout: scala.concurrent.duration.FiniteDuration =
+    scala.concurrent.duration.Duration(3600, "s")
+
+  private val legThreads: java.util.concurrent.ThreadFactory = { r =>
+    val t = new Thread(r, "graft-leg")
+    t.setDaemon(true) // a stuck leg must never pin the JVM open after main
+    t
+  }
+
+  /** THE driver-side concurrency seam: a fork-join over independent
+    * legs (guide §2.6 — actions are only sequential because the driver
+    * calls them sequentially), results in input order.
+    *
+    *  - Each call gets its own pool of at most `maxThreads` daemon
+    *    threads; fewer than two legs run on the caller's thread.
+    *  - Each leg starts with the caller's job description, job tags and
+    *    scratch scope (so its pins are released with the caller's
+    *    scope), plus its own job tag with interrupt-on-cancel.
+    *  - The first leg to throw cancels its siblings' jobs (again on every
+    *    poll, so a sibling between two jobs cannot start a fresh one),
+    *    legs that have not started are skipped, and the call returns
+    *    only when every leg has — then rethrows that first exception,
+    *    unwrapped. Nothing a leg started is left running behind it. */
+  def concurrently[T](spark: SparkSession, maxThreads: Int)(
+      legs: Seq[() => T]): Seq[T] = {
+    if (legs.lengthCompare(2) < 0) return legs.map(_())
+    val sc = spark.sparkContext
+    val description = sc.getLocalProperty("spark.job.description")
+    val callerTags = sc.getJobTags()
+    val callerScope = scope.get
+    val fork = java.util.UUID.randomUUID().toString
+    val tags = legs.indices.map(i => s"graft-leg-$fork-$i")
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    def cancel(except: Int): Unit = tags.indices.filter(_ != except)
+      .foreach(j => sc.cancelJobsWithTag(tags(j), "a sibling leg failed"))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(maxThreads, legs.size)), legThreads)
+    val results = legs.zipWithIndex.map { case (leg, i) =>
+      pool.submit[T] { () =>
+        Option(failure.get).foreach(e => throw e) // a sibling failed: skip
+        sc.setJobDescription(description)
+        sc.clearJobTags()
+        (callerTags + tags(i)).foreach(sc.addJobTag)
+        sc.setInterruptOnCancel(true)
+        scope.set(callerScope)
+        try leg()
+        catch {
+          case e: Throwable =>
+            if (failure.compareAndSet(null, e)) cancel(i)
+            throw e
+        }
+      }
+    }
+    pool.shutdown()
+    val deadline = System.nanoTime() + LegTimeout.toNanos
+    var done = false
+    while (!done) {
+      try done = pool.awaitTermination(50, java.util.concurrent.TimeUnit.MILLISECONDS)
+      catch { case e: InterruptedException => failure.compareAndSet(null, e) }
+      if (!done && failure.get != null) cancel(-1)
+      if (!done && System.nanoTime() > deadline) {
+        cancel(-1)
+        pool.shutdownNow()
+        throw new java.util.concurrent.TimeoutException(
+          s"legs still running after $LegTimeout")
+      }
+    }
+    Option(failure.get).foreach(e => throw e)
+    results.map(_.get())
+  }
+
+  /** [[concurrently]] for two legs of different types. */
+  def concurrently[A, B](spark: SparkSession)(a: => A, b: => B): (A, B) = {
+    val Seq(ra, rb) = concurrently[Any](spark, 2)(Seq(() => a, () => b))
+    (ra.asInstanceOf[A], rb.asInstanceOf[B])
   }
 
   /** Conf key selecting the scratch strategy for [[pin]]: unset (the
@@ -169,31 +225,34 @@ object GraftSession {
     * seam: every composed operator pins through here, so switching
     * [[ScratchDirKey]] moves the whole engine between local-fast and
     * cluster-durable scratch with no operator changes — spec-proven
-    * equivalent (GraftSessionSpec).
+    * equivalent (GraftSessionSpec). The pin is owned by the current
+    * [[releasingScratch]] scope (none: the caller owns it).
     *
     * Contract: pin preserves VALUES, not physical structure — the
     * parquet strategy reassembles partitions by file-size bin-packing
     * and keeps no ordering. An operator whose later passes read the
     * materialized frame's partition index or within-partition order
-    * (e.g. [[graft.operators.Packing]]'s prefix sum) must materialize
-    * with `localCheckpoint` itself, not through this seam. */
+    * (e.g. [[graft.operators.Packing]]'s prefix sum) pins with
+    * [[localPin]] instead. */
   def pin(df: DataFrame): DataFrame =
     df.sparkSession.conf.getOption(ScratchDirKey) match {
       case Some(root) =>
         val path = s"$root/pin-${java.util.UUID.randomUUID().toString}"
         df.write.mode("overwrite").parquet(path)
-        parquetPins.add(path)
-        df.sparkSession.read.parquet(path)
-      case None => df.localCheckpoint(true)
+        own(df.sparkSession.read.parquet(path))
+      case None => localPin(df)
     }
 
-  /** Parquet pins created and not yet reclaimed — the bookkeeping that
-    * lets [[releasingScratch]] treat parquet scratch exactly like the
-    * localCheckpoint blocks it already releases. Without it every pin
-    * under [[ScratchDirKey]] leaked a full intermediate copy until the
-    * job ended (the 15-minute crawl loop would leak one batch-sized dir
-    * set per trigger, forever). */
-  private val parquetPins = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  /** [[pin]] that always uses `localCheckpoint`, keeping the partition
+    * layout and within-partition order of `df`. */
+  def localPin(df: DataFrame): DataFrame = own(df.localCheckpoint(true))
+
+  /** Releases a pin before its scope ends — for loops whose superseded
+    * snapshots would otherwise pile up until the scope closes. */
+  def unpin(df: DataFrame): Unit = handleOf(df).foreach { h =>
+    Option(scope.get).foreach(_.remove(h))
+    release(df.sparkSession, h)
+  }
 
   /** `.pinScratch()` — the postfix spelling of [[pin]], so call sites
     * read like the `.localCheckpoint(true)` chains they replace. */
@@ -201,30 +260,51 @@ object GraftSession {
     def pinScratch(): DataFrame = pin(df)
   }
 
-  /** Runs `body`, then releases every RDD persisted DURING it (the
-    * localCheckpoint scratch the dedup/similarity operators materialize).
-    * Scoped by snapshot-diff: pre-existing persisted state is untouched,
-    * so callers keeping genuine cross-query caches are safe. Release runs
-    * in a finally — a failed query must not leak its scratch blocks into
-    * the sessions that follow (the round-1 block-pressure failure mode).
-    * Shared by Bench / Verify / ScaleBench; TextDedup's per-round
-    * checkpointTracked/release is the finer-grained sibling. */
+  /** The scratch a pin's returned frame reads: the RDD a local
+    * checkpoint persisted (its `LogicalRDD`), or the directory a parquet
+    * pin wrote (the root of its scan). */
+  private def handleOf(df: DataFrame): Option[AnyRef] =
+    df.queryExecution.analyzed match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => Some(r.rdd)
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        l.relation match {
+          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            h.location.rootPaths.headOption
+          case _ => None
+        }
+      case _ => None
+    }
+
+  private def release(spark: SparkSession, scratch: AnyRef): Unit = scratch match {
+    case rdd: org.apache.spark.rdd.RDD[_] => rdd.unpersist(blocking = false)
+    case dir: org.apache.hadoop.fs.Path =>
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
+  }
+
+  /** The scratch owned by the innermost open [[releasingScratch]] on
+    * this thread (legs of [[concurrently]] share their caller's). */
+  private val scope =
+    new ThreadLocal[java.util.concurrent.ConcurrentLinkedQueue[AnyRef]]
+
+  private def own(pinned: DataFrame): DataFrame = {
+    for (s <- Option(scope.get); h <- handleOf(pinned)) s.add(h)
+    pinned
+  }
+
+  /** Runs `body` in a fresh scratch scope, then releases exactly the
+    * pins made in it — by this thread or by the [[concurrently]] legs it
+    * spawns — and nothing else: enclosing scopes, sibling legs and
+    * caller-kept pins are untouched. Release runs in a finally, so a
+    * failed query never leaks its scratch into the sessions that
+    * follow. */
   def releasingScratch[T](spark: SparkSession)(body: => T): T = {
-    val sc = spark.sparkContext
-    val pre = sc.getPersistentRDDs.keySet.toSet
-    val prePins = new java.util.HashSet(parquetPins)
+    val outer = scope.get
+    val mine = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
+    scope.set(mine)
     try body
     finally {
-      (sc.getPersistentRDDs.keySet.toSet -- pre)
-        .foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-      // parquet pins created DURING the body: every consumer is done,
-      // reclaim the files (the parquet twin of the unpersist above)
-      parquetPins.iterator().asScala.filterNot(prePins.contains).toList
-        .foreach { p =>
-          parquetPins.remove(p)
-          val hp = new org.apache.hadoop.fs.Path(p)
-          hp.getFileSystem(sc.hadoopConfiguration).delete(hp, true)
-        }
+      scope.set(outer)
+      mine.asScala.foreach(release(spark, _))
     }
   }
 

@@ -23,7 +23,7 @@ object Verify {
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
         // the write fully materializes the query before releasingScratch
-        // frees the blocks it persisted; pre-existing state is untouched
+        // frees the pins made in it; pre-existing state is untouched
         GraftSession.releasingScratch(spark) {
           try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")

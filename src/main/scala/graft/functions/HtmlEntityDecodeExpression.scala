@@ -253,12 +253,6 @@ object HtmlEntityDecode {
     m
   }
 
-  /** The names as a regex alternation, LONGEST FIRST — under
-    * leftmost-first alternation semantics a shorter name that
-    * prefixes a longer one can never steal its match. */
-  def namedAlternation: String =
-    Named.map(_._1).sortBy(n => (-n.length, n)).mkString("|")
-
   /** The HTML5 legacy compat subset — the 106 named references the
     * spec's table marks as usable WITHOUT a trailing semicolon (the
     * HTML 4.01 Latin-1/markup set; `&Yuml` is NOT here — Ÿ was never

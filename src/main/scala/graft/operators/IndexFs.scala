@@ -437,37 +437,6 @@ private[graft] object IndexFs {
     }
   }
 
-  /** Order-preserving parallel map for DRIVER-SIDE metadata fan-out
-    * (one sidecar read / listStatus / exists per shard): O(shards)
-    * round-trips is the right complexity for a metadata plane, but
-    * running them serially makes the object-store latency additive —
-    * at 10k shards, minutes of driver stall for work that is pure
-    * wait. A bounded pool overlaps the round-trips; results come back
-    * in input order, so callers stay deterministic. NOT for Spark
-    * actions (jobs already parallelize) and not for mutations that
-    * must be ordered. A thrown `f` propagates its ORIGINAL exception
-    * (first failing item wins), after the pool drains. */
-  private[graft] def parMapOrdered[A, B](items: Seq[A],
-      parallelism: Int = 16)(f: A => B): Seq[B] = {
-    if (items.lengthCompare(2) < 0 || parallelism <= 1) return items.map(f)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(parallelism, items.length))
-    try {
-      val futures = items.map { a =>
-        pool.submit(new java.util.concurrent.Callable[B] {
-          def call(): B = f(a)
-        })
-      }
-      futures.map { fut =>
-        try fut.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
-        }
-      }
-    } finally pool.shutdownNow()
-  }
-
   /** No-clobber creation of a small control FILE — the compare-and-swap
     * primitive under [[graft.operators.SnapshotMerge]]'s optimistic
     * commit: at most ONE concurrent caller per target path ever returns
@@ -767,7 +736,7 @@ private[graft] object IndexFs {
     // below, so the all-or-nothing contract is untouched
     def writeRelations(base: String): Unit = relations match {
       case Seq((n1, d1), (n2, d2)) =>
-        graft.GraftSession.inParallel(
+        graft.GraftSession.concurrently(spark)(
           d1.write.mode("overwrite").parquet(s"$base/$n1"),
           d2.write.mode("overwrite").parquet(s"$base/$n2"))
         ()

@@ -60,17 +60,14 @@ object Packing {
 
     // (1) the ONE shuffle: range-partition on the packing order, sort
     // locally, materialize once — both later passes read these blocks.
-    // Deliberately NOT the GraftSession.pin scratch seam: pin preserves
-    // VALUES only, while passes (2) and (3) read this frame's physical
-    // partition structure (partition index IS the range order, rows are
-    // sorted within) — a parquet round-trip reassembles partitions by
-    // file-size bin-packing and would silently scramble the stream
-    // layout (caught by GraftSessionSpec when this site briefly used
-    // the seam).
-    val ranged = docs
+    // localPin, not pin: pin preserves VALUES only, while passes (2)
+    // and (3) read this frame's physical partition structure (partition
+    // index IS the range order, rows are sorted within) — a parquet
+    // round-trip reassembles partitions by file-size bin-packing and
+    // would silently scramble the stream layout.
+    val ranged = graft.GraftSession.localPin(docs
       .repartitionByRange(p, col(keyCol))
-      .sortWithinPartitions(col(keyCol))
-      .localCheckpoint(true)
+      .sortWithinPartitions(col(keyCol)))
     val tokIdx = ranged.schema.fieldIndex(tokensCol)
     def tok(r: Row): Long =
       if (r.isNullAt(tokIdx)) 0L else r.getAs[Number](tokIdx).longValue()

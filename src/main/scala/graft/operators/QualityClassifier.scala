@@ -60,8 +60,8 @@ object QualityClassifier {
     * few dozen iterations, and each iteration schedules jobs over the
     * (bounded, internally persisted) sample — on small fits the
     * iteration count is mostly scheduler overhead (~0.15 s/iteration
-    * measured on the sf0.1 gate fixture; 35 ≈ 7 s fit, 10 ≈ 3.5 s —
-    * `tools/QcProbe`). The gate result is iteration-independent: the
+    * measured on the sf0.1 gate fixture; 35 ≈ 7 s fit, 10 ≈ 3.5 s).
+    * The gate result is iteration-independent: the
     * oracle rescores whatever weights come out, and the spec's
     * separable-corpus accuracy bound holds at 35. */
   def fit(labeled: DataFrame, textCol: String, labelCol: String,

@@ -39,13 +39,11 @@ object Ranking {
       s"output column $rankCol already present in ${df.columns.mkString(",")}")
     val spark = df.sparkSession
     val p = numPartitions.getOrElse(graft.GraftSession.partitionsForPlan(df))
-    // the ONE shuffle; materialized because both passes read the
-    // physical partition structure (see Packing for why this is NOT
-    // the pin seam: a parquet round-trip re-bins partitions)
-    val ranged = df
+    // the ONE shuffle; materialized with localPin because both passes
+    // read the physical partition structure (see Packing)
+    val ranged = graft.GraftSession.localPin(df
       .repartitionByRange(p, order: _*)
-      .sortWithinPartitions(order: _*)
-      .localCheckpoint(true)
+      .sortWithinPartitions(order: _*))
     // pass 2: one row count per partition → driver exclusive prefix
     val counts = ranged.rdd
       .mapPartitionsWithIndex((i, it) => Iterator.single(i -> {

@@ -181,11 +181,10 @@ object Sampling {
     // partition structure (see Packing — a parquet round-trip would
     // re-bin partitions and scramble the stream layout)
     val h = Sharding.orderHash(col(keyCol), salt)
-    val ranged = df
+    val ranged = graft.GraftSession.localPin(df
       .withColumn("__order_hash", h)
       .repartitionByRange(p, col(groupCol), col("__order_hash"), col(keyCol))
-      .sortWithinPartitions(col(groupCol), col("__order_hash"), col(keyCol))
-      .localCheckpoint(true)
+      .sortWithinPartitions(col(groupCol), col("__order_hash"), col(keyCol)))
     val grpIdx = ranged.schema.fieldIndex(groupCol)
     val tokIdx = ranged.schema.fieldIndex(tokensCol)
     def grp(r: Row): Option[String] =

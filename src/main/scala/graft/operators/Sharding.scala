@@ -74,8 +74,8 @@ object Sharding {
     * sources. Two EVALUATIONS, too: "one cheap column-pruned pass"
     * holds when `df` is a scan-rooted plan, but a frame derived from
     * expensive upstream work (joins, explodes, UDF-heavy projections)
-    * recomputes that whole pipeline for the guard — cache() or
-    * localCheckpoint() such inputs first, or go straight to
+    * recomputes that whole pipeline for the guard — pin such inputs
+    * first, or go straight to
     * [[writeShards]]. */
   def shuffled(df: DataFrame, keyCol: String, salt: String = "shard",
       maxRows: Long = shuffledDefaultMaxRows): DataFrame = {

@@ -512,39 +512,22 @@ object Similarity {
       .withColumn("__resid", zip_with(col("vec"), col("cvec"), (a, b) => a - b))
       .pinScratch()
     // the nSub fits are INDEPENDENT (own subspace slice, own seed, all
-    // over the pinned residual blocks) — overlap them from a small
-    // thread pool (guide §2.6) so one fit's driver latency (init
-    // rounds, per-iteration collects) back-fills another's idle
-    // executors. Each fit's input, seed and iteration count are
-    // unchanged, so every model is bit-identical to the sequential
-    // spelling; rows are reassembled in subspace order.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(nSub, 4))
-    val cbRows = try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val fits = (0 until nSub).map { m =>
-        scala.concurrent.Future {
-          val sub = resid.select(
-            slice(col("__resid"), m * subDim + 1, subDim).as("sv"))
-          val model = new KMeans().setK(nCodes).setSeed(seed + 1 + m)
-            .setMaxIter(maxIter).setFeaturesCol("features")
-            .fit(fitInput(sub, "sv", sampleRows))
-          model.clusterCenters.zipWithIndex.map { case (v, j) =>
-            (m, j, v.toArray.map(_.toFloat).toSeq)
-          }.toSeq
-        }
-      }
-      // Future.sequence + a finite (generous) timeout: a hung fit fails
-      // the build loudly instead of wedging the driver forever, and a
-      // FAILED fit surfaces as soon as it fails — not only after every
-      // earlier future completes. shutdownNow in the finally stops the
-      // remaining fits from submitting further jobs on that path.
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(fits),
-        scala.concurrent.duration.Duration(3600, "s")).flatten
-      catch { case e: Throwable => pool.shutdownNow(); throw e }
-    } finally pool.shutdown()
+    // over the pinned residual blocks) — overlap up to 4 of them so one
+    // fit's driver latency (init rounds, per-iteration collects)
+    // back-fills another's idle executors. Each fit's input, seed and
+    // iteration count are unchanged, so every model is bit-identical to
+    // the sequential spelling; rows come back in subspace order.
+    val cbRows = graft.GraftSession.concurrently(spark, 4)(
+      (0 until nSub).map { m => () =>
+        val sub = resid.select(
+          slice(col("__resid"), m * subDim + 1, subDim).as("sv"))
+        val model = new KMeans().setK(nCodes).setSeed(seed + 1 + m)
+          .setMaxIter(maxIter).setFeaturesCol("features")
+          .fit(fitInput(sub, "sv", sampleRows))
+        model.clusterCenters.zipWithIndex.map { case (v, j) =>
+          (m, j, v.toArray.map(_.toFloat).toSeq)
+        }.toSeq
+      }).flatten
     spark.createDataFrame(cbRows).toDF("sub", "code", "subvec")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
     // encode: one codegen pass — codes + the true norm (kept so ADC can

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
+
 /** A sharded-snapshot commit lost its compare-and-swap: another writer
   * committed the same target version first. Thrown by the maintenance
   * ops ([[SnapshotMerge.optimizeSharded]], [[SnapshotMerge.evolveSharded]],
@@ -54,6 +56,12 @@ final class ConcurrentCommitException(msg: String)
   * anti-join removes what the re-insert re-adds).
   */
 object SnapshotMerge {
+
+  /** Thread bound for the driver-side per-shard metadata round-trips
+    * (sidecar reads, listStatus, exists): overlapped so object-store
+    * latency is not additive in shard count, bounded so a 10k-shard
+    * snapshot does not open 10k connections. */
+  private val MetadataFanOut = 16
 
   /** Trailing-slash-insensitive snapshot root (a caller spelling
     * `dir/` must address the same snapshot as `dir`). */
@@ -776,7 +784,7 @@ object SnapshotMerge {
     * writer-unique version dir, manifest CAS (lost race throws
     * [[ConcurrentCommitException]]), superseded dirs retire-logged.
     * The per-shard listing fan-out is overlapped
-    * ([[IndexFs.parMapOrdered]]). Returns the number of shards
+    * ([[GraftSession.concurrently]]). Returns the number of shards
     * compacted (0 = nothing qualified, no version committed). */
   def compactSharded(spark: SparkSession, dir: String,
       targetFileBytes: Long = 128L * 1024 * 1024,
@@ -786,12 +794,12 @@ object SnapshotMerge {
         s"($targetFileBytes, $minFiles)")
     val m = readManifest(spark, dir)
     val f = IndexFs.fs(spark, dir)
-    val stats = IndexFs.parMapOrdered(m.shards.toSeq.sortBy(_._1)) {
-      case (k, p) =>
+    val stats = GraftSession.concurrently(spark, MetadataFanOut)(
+      m.shards.toSeq.sortBy(_._1).map { case (k, p) => () =>
         val sts = f.listStatus(new org.apache.hadoop.fs.Path(p))
           .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
         (k, p, sts.length, sts.map(_.getLen).sum)
-    }
+      })
     val qualifying = stats.filter { case (_, _, n, bytes) =>
       n >= minFiles && bytes <= targetFileBytes }
     if (qualifying.isEmpty) return 0
@@ -1215,9 +1223,9 @@ object SnapshotMerge {
         s"its manifest was vacuumed past the retention window " +
         s"(readable versions: ${shardedVersions(spark, dir).mkString(",")})")
     val m = readManifestFile(spark, dir, name)
-    val missing = IndexFs.parMapOrdered(
-        m.shards.values.toSeq ++ m.anchor)(p =>
-      p -> IndexFs.exists(spark, p)).collect { case (p, false) => p }
+    val missing = GraftSession.concurrently(spark, MetadataFanOut)(
+        (m.shards.values.toSeq ++ m.anchor).map(p => () =>
+          p -> IndexFs.exists(spark, p))).collect { case (p, false) => p }
     require(missing.isEmpty,
       s"version $version of $dir lost ${missing.size} dir(s) to " +
         s"vacuum — raise vacuumSharded's minAgeMs above the longest " +
@@ -1237,8 +1245,8 @@ object SnapshotMerge {
     // one sidecar/footer fetch per shard, overlapped — serial
     // round-trips would make the driver stall additive in shard count
     // on an object store
-    val selected = IndexFs.parMapOrdered(dirs)(d =>
-      Layout.prunedFilesInDir(spark, d, bands)._1).flatten
+    val selected = GraftSession.concurrently(spark, MetadataFanOut)(
+      dirs.map(d => () => Layout.prunedFilesInDir(spark, d, bands)._1)).flatten
     if (selected.isEmpty)
       spark.read.parquet(anchorDirOf(spark, dir, m)).limit(0)
     else spark.read.parquet(selected: _*)
@@ -1255,14 +1263,14 @@ object SnapshotMerge {
   def describeSharded(spark: SparkSession, dir: String): DataFrame = {
     val m = readManifest(spark, dir)
     val f = IndexFs.fs(spark, dir)
-    // one listStatus per shard, overlapped (IndexFs.parMapOrdered) —
-    // a serial walk makes DESCRIBE latency additive in shard count
-    val rows = IndexFs.parMapOrdered(m.shards.toSeq.sortBy(_._1)) {
-      case (k, pth) =>
+    // one listStatus per shard, overlapped — a serial walk makes
+    // DESCRIBE latency additive in shard count
+    val rows = GraftSession.concurrently(spark, MetadataFanOut)(
+      m.shards.toSeq.sortBy(_._1).map { case (k, pth) => () =>
         val sts = f.listStatus(new org.apache.hadoop.fs.Path(pth))
           .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
         (m.version, k, pth, sts.length.toLong, sts.map(_.getLen).sum)
-    }
+      })
     spark.createDataFrame(rows)
       .toDF("version", "shard", "path", "files", "bytes")
   }
@@ -1389,9 +1397,9 @@ object SnapshotMerge {
     // the slow per-dir decision input (a recursive mtime walk each) is
     // gathered with overlapped round-trips; the mutations below stay
     // serial and cheap
-    val candidateMtimes = IndexFs.parMapOrdered(shardDirCandidates) {
-      case (_, p) => p -> IndexFs.newestMtime(spark, p)
-    }.toMap
+    val candidateMtimes = GraftSession.concurrently(spark, MetadataFanOut)(
+      shardDirCandidates.map { case (_, p) => () =>
+        p -> IndexFs.newestMtime(spark, p) }).toMap
     shardDirCandidates.foreach { case (_, p) =>
         val q = qual(p)
         if (!live.contains(q) && !protectedPaths.contains(q)) {

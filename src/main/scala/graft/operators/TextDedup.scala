@@ -576,8 +576,8 @@ object TextDedup {
 
   /** LSH banding: one (band, bandHash) row per signature band — the
     * bucket key of the candidate self-join. Shared by [[minhashLsh]] and
-    * the tuning tools (LshTune / MinhashProbe) so measurements always
-    * exercise the shipped banding, not a copy. */
+    * the LshTune tool so measurements always exercise the shipped
+    * banding, not a copy. */
   def withBands(sigs: DataFrame, idCol: String, bands: Int, r: Int): DataFrame =
     sigs.select(
       col(idCol),
@@ -706,26 +706,12 @@ object TextDedup {
         * distributed. Both paths produce identical components. */
       driverUnionFindLimit: Long = 1L << 20): DataFrame = {
     val spark = pairs.sparkSession
-    val sc = spark.sparkContext
+    // every snapshot is a localPin, and each is unpinned as soon as it
+    // is superseded — otherwise up to maxIter full label snapshots pile
+    // up in the block manager until the caller's scope closes
+    import graft.GraftSession.{localPin, unpin}
 
-    // localCheckpoint with a handle on the blocks it created, so
-    // superseded snapshots can be released along the way — otherwise up
-    // to maxIter full label snapshots pile up in the block manager
-    // (round 1's measured failure mode). NOTE Dataset.unpersist would be
-    // a NO-OP here: it only uncaches CacheManager-tracked plans, while
-    // localCheckpoint persists the underlying RDD directly.
-    def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-      val pre = sc.getPersistentRDDs.keySet.toSet
-      // deliberately NOT the pinScratch seam: these per-iteration label
-      // snapshots are released block-by-block as they're superseded —
-      // a lifecycle the parquet-scratch strategy has no analog for
-      val out = df.localCheckpoint(true)
-      (out, sc.getPersistentRDDs.keySet.toSet -- pre)
-    }
-    def release(ids: Set[Int]): Unit =
-      ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-
-    val (dedupedPairs, pairIds) = checkpointTracked(
+    val dedupedPairs = localPin(
       pairs.select(col(d1Col).as("p1"), col(d2Col).as("p2")).distinct())
     // The driver path reads ids as primitive longs — gate it on BOTH
     // pair columns being LongType so int/string ids route to the
@@ -758,23 +744,23 @@ object TextDedup {
       import spark.implicits._
       val result = nodes.toSeq.map(n => (n, find(n)))
       val out = result.toDF("node", "component")
-      release(pairIds) // collected — the checkpoint blocks are done
+      unpin(dedupedPairs) // collected — the checkpoint blocks are done
       return out
     }
     // the node set is pinned BEFORE self-loops are dropped, so a node
     // that only ever appears as (a, a) still gets its self-labeled row
     // blocks stay live past return (the result reads them) — released
-    // by the session-level scratch sweep, like the final edge snapshot
-    val (allNodes, _) = checkpointTracked(
+    // with the caller's scratch scope, like the final edge snapshot
+    val allNodes = localPin(
       dedupedPairs.select(col("p1").as("node"))
         .union(dedupedPairs.select(col("p2").as("node")))
         .distinct())
-    var (edges, edgeIds) = checkpointTracked(
+    var edges = localPin(
       dedupedPairs.filter(col("p1") =!= col("p2"))
         .select(greatest(col("p1"), col("p2")).as("src"),
           least(col("p1"), col("p2")).as("dst"))
         .distinct())
-    release(pairIds) // nodes + edges materialized — the pair snapshot is done
+    unpin(dedupedPairs) // nodes + edges materialized — the pair snapshot is done
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -794,7 +780,7 @@ object TextDedup {
       // re-hang as (·, m). The root's own (m, m) row is filtered.
       val sMin = large.groupBy("src").agg(min("dst").as("__m"))
       val joined = large.join(sMin, "src")
-      val (next, nextIds) = checkpointTracked(
+      val next = localPin(
         joined.select(col("src"), col("__m").as("dst"))
           .union(joined.select(col("dst").as("src"), col("__m").as("dst")))
           .filter(col("src") =!= col("dst"))
@@ -803,9 +789,8 @@ object TextDedup {
       // equal counts + empty one-sided anti-join ⇒ set equality)
       converged = next.count() == edges.count() &&
         next.join(edges, Seq("src", "dst"), "left_anti").isEmpty
-      release(edgeIds) // superseded snapshot — both consumers are done
+      unpin(edges) // superseded snapshot — both consumers are done
       edges = next
-      edgeIds = nextIds
       i += 1
     }
     require(converged,
@@ -1184,7 +1169,7 @@ object TextDedup {
     // the buckets and vectors relations are independent projections of
     // the same input — overlap their writes (guide §2.6) so the cheap
     // vectors write rides the SRP-heavy buckets write's idle capacity
-    graft.GraftSession.inParallel(
+    graft.GraftSession.concurrently(vecs.sparkSession)(
       idx.buckets.write.mode("overwrite").parquet(s"$path/buckets"),
       idx.vectors.write.mode("overwrite").parquet(s"$path/vectors"))
     writeEmbeddingMeta(vecs.sparkSession, path,
@@ -1352,7 +1337,7 @@ object TextDedup {
     IndexFs.beginRefit(spark, path)
     // independent relations of the same pinned input — overlap the two
     // publishes (guide §2.6; the saveEmbeddingIndex twin)
-    graft.GraftSession.inParallel(
+    graft.GraftSession.concurrently(spark)(
       IndexFs.publishRelation(
         idx.buckets.repartition(
           graft.GraftSession.partitionsFor(spark, nVecs * idx.tables)),

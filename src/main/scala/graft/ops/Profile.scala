@@ -153,19 +153,4 @@ object Profile {
       ColumnProfile(c, dtypes(c), nulls(c), uniques(c), top.getOrElse(c, Nil))
     }
   }
-
-  /** The profile as a DataFrame (column_name, dtype, null_count, n_unique)
-    * — the oracle-checkable projection of Q4. */
-  def profileStatsDF(df: DataFrame): DataFrame = {
-    val cols = df.columns.toSeq
-    val statAggs = cols.flatMap { c =>
-      Seq(
-        count(when(col(c).isNull, 1)).as(s"__null__$c"),
-        count_distinct(col(c)).as(s"__uniq__$c"))
-    }
-    val one = df.agg(statAggs.head, statAggs.tail: _*)
-    val stackArgs = cols.map(c => s"'$c', `__null__$c`, `__uniq__$c`").mkString(", ")
-    one.selectExpr(
-      s"stack(${cols.size}, $stackArgs) as (column_name, null_count, n_unique)")
-  }
 }

@@ -3,10 +3,6 @@ package graft.pipeline
 import java.util.UUID
 import java.time.format.DateTimeFormatter
 import java.time.{ZoneOffset, ZonedDateTime}
-import java.util.concurrent.Executors
-
-import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -14,6 +10,7 @@ import org.apache.spark.sql.functions.col
 import org.json4s.JsonDSL._
 import org.json4s._
 
+import graft.GraftSession
 import graft.meta.RunLedger
 import graft.ops._
 import graft.sinks.Sinks
@@ -33,10 +30,11 @@ import graft.spec.{ObjectSpec, SpecRegistry}
   *
   * The extract result is materialized once and shared by both branches
   * (the reference's DAG-level common-subexpression reuse, `Readme.md:27`);
-  * branch parallelism uses driver `Future`s over the shared session —
-  * Spark's scheduler interleaves the jobs. Error policy is two-tier:
-  * ETL failures always raise, QA failures are advisory unless
-  * `failOnQaError` (`flow:91,163-171`).
+  * the branches, and the QA legs, run as [[GraftSession.concurrently]]
+  * legs over the shared session — Spark's scheduler interleaves the
+  * jobs. Error policy is two-tier: ETL failures always raise (cancelling
+  * the QA branch), QA failures are advisory unless `failOnQaError`
+  * (`flow:91,163-171`).
   */
 object Orchestrator {
 
@@ -46,6 +44,7 @@ object Orchestrator {
       failOnQaError: Boolean = false,
       driftThreshold: Double = 0.5,
       dedupKey: String = "Id",
+      /** Thread bound for the QA branch's concurrent legs. */
       qaParallelism: Int = 8,
       /** Raw hand-off format: `"parquet"` (typed, the scale default) or
         * `"csv"` — the reference's medium, schema re-INFERRED on read
@@ -179,7 +178,7 @@ object Orchestrator {
     }
 
     // ---- ETL branch (strict; process retried 2×5s ≙ process.py:56) ----
-    val etl: Future[(Long, Long)] = Future {
+    def etl(): (Long, Long) = {
       val processed = recordState("process") {
         retry(2, opts.processRetryDelayMs) {
           val out = SpecAggregate.run(spark, spec, raw)
@@ -198,89 +197,77 @@ object Orchestrator {
       // processed row count == JSON record count by construction (same
       // artifact, just collected) — don't relaunch the aggregate job
       (n, n)
-    }(etlEc)
+    }
 
-    // ---- QA branch (advisory; ≙ flow:145-157) ----
-    // Worker pool for the QA tasks; the COORDINATING future runs on
-    // etlEc (which blocks in Await) — putting it on qaEc would deadlock
-    // at qaParallelism=1: the coordinator would hold the only thread the
-    // inner futures need.
-    val qaEc = ExecutionContext.fromExecutorService(
-      Executors.newFixedThreadPool(math.max(opts.qaParallelism, 1), daemonFactory))
-    val qa: Future[(Map[String, Try[String]], Option[String], Long)] = Future {
+    // ---- QA branch (advisory; ≙ flow:145-157): at most
+    // `qaParallelism` of its legs run at a time ----
+    def qa(): (Map[String, Try[String]], Option[String], Long) = {
       states("start_gate") = "COMPLETED" // Q1: no-op barrier
-      val schemaF = Future(recordState("precheck_schema") {
-        val report = Gates.schemaGate(raw, spec.requiredCols)
-        Sinks.textScalar(
-          org.json4s.jackson.JsonMethods.pretty(
-            ("columns_present" -> report.columnsPresent) ~ ("missing" -> report.missing)),
-          paths("schema_report"))
-        report
-      })(qaEc)
-      val nonEmptyF = Future(recordState("precheck_nonempty") {
-        Gates.nonEmptyGate(raw)
-      })(qaEc)
-      val schema = Await.result(schemaF, Duration.Inf)
-      val rows = Await.result(nonEmptyF, Duration.Inf)
+      val Seq(schema: Gates.SchemaReport, rows: Long) =
+        GraftSession.concurrently[Any](spark, opts.qaParallelism)(Seq(
+          () => recordState("precheck_schema") {
+            val report = Gates.schemaGate(raw, spec.requiredCols)
+            Sinks.textScalar(
+              org.json4s.jackson.JsonMethods.pretty(
+                ("columns_present" -> report.columnsPresent) ~ ("missing" -> report.missing)),
+              paths("schema_report"))
+            report
+          },
+          () => recordState("precheck_nonempty") { Gates.nonEmptyGate(raw) }))
       require(schema.ok)
 
-      val dedupF = Future(recordState("dedup") {
-        retry(2, opts.processRetryDelayMs) {
-          val deduped =
-            if (raw.columns.contains(opts.dedupKey))
-              Dedup.keepFirst(raw, Seq(opts.dedupKey),
-                raw.columns.filterNot(_ == opts.dedupKey).map(col).toSeq)
-            else raw
-          Sinks.csv(Normalize.temporalsToString(deduped), paths("dedup_csv"), singleFile = true)
-          paths("dedup_csv")
-        }
-      })(qaEc)
-      val profileF = Future(recordState("profile") {
-        retry(2, opts.processRetryDelayMs) {
-          val profiles = Profile.profile(raw)
-          val json = JArray(profiles.map { p =>
-            ("column" -> p.name) ~ ("dtype" -> p.dtype) ~
-              ("null_count" -> p.nullCount) ~ ("n_unique" -> p.nUnique) ~
-              ("top_values" -> JArray(p.topValues.map { case (v, c) =>
-                ("value" -> Option(v)) ~ ("count" -> c): JValue
-              }.toList))
-          }.toList)
-          Sinks.textScalar(org.json4s.jackson.JsonMethods.pretty(json), paths("profile_json"))
-          paths("profile_json")
-        }
-      })(qaEc)
-      val snapshotF = Future(recordState("snapshot_parquet") {
-        retry(2, opts.processRetryDelayMs) {
-          Sinks.parquetSnappy(raw, paths("parquet_snapshot"))
-          paths("parquet_snapshot")
-        }
-      })(qaEc)
-
-      val results = Map(
-        "dedup" -> Try(Await.result(dedupF, Duration.Inf)),
-        "profile" -> Try(Await.result(profileF, Duration.Inf)),
-        "snapshot" -> Try(Await.result(snapshotF, Duration.Inf)))
+      // each task is advisory on its own: a failure is its result
+      def task(name: String)(body: => String): () => Try[String] =
+        () => Try(recordState(name)(retry(2, opts.processRetryDelayMs)(body)))
+      val Seq(dedup, profile, snapshot) =
+        GraftSession.concurrently(spark, opts.qaParallelism)(Seq(
+          task("dedup") {
+            val deduped =
+              if (raw.columns.contains(opts.dedupKey))
+                Dedup.keepFirst(raw, Seq(opts.dedupKey),
+                  raw.columns.filterNot(_ == opts.dedupKey).map(col).toSeq)
+              else raw
+            Sinks.csv(Normalize.temporalsToString(deduped), paths("dedup_csv"), singleFile = true)
+            paths("dedup_csv")
+          },
+          task("profile") {
+            val profiles = Profile.profile(raw)
+            val json = JArray(profiles.map { p =>
+              ("column" -> p.name) ~ ("dtype" -> p.dtype) ~
+                ("null_count" -> p.nullCount) ~ ("n_unique" -> p.nUnique) ~
+                ("top_values" -> JArray(p.topValues.map { case (v, c) =>
+                  ("value" -> Option(v)) ~ ("count" -> c): JValue
+                }.toList))
+            }.toList)
+            Sinks.textScalar(org.json4s.jackson.JsonMethods.pretty(json), paths("profile_json"))
+            paths("profile_json")
+          },
+          task("snapshot_parquet") {
+            Sinks.parquetSnappy(raw, paths("parquet_snapshot"))
+            paths("parquet_snapshot")
+          }))
 
       val drift = recordState("drift") {
         Drift.checkRowcountDrift(rows, paths("rowcount_txt"), opts.driftThreshold)
       }
-      (results, drift.alert, rows)
-    }(etlEc)
+      (Map("dedup" -> dedup, "profile" -> profile, "snapshot" -> snapshot),
+        drift.alert, rows)
+    }
 
-    // ---- collect with two-tier strictness (flow:162-171) ----
-    val (processedRows, jsonN, qaResults, driftAlert, rawRows) =
-      try {
-        val (p, j) = Await.result(etl, Duration.Inf) // strict: propagate
-        val (qr, da, rr) = Try(Await.result(qa, Duration.Inf)) match {
-          case Success(v) => v
-          case Failure(e) if !opts.failOnQaError =>
-            (Map.empty[String, Try[String]], None, raw.count())
-          case Failure(e) => throw e
-        }
-        if (opts.failOnQaError)
-          qr.collect { case (k, Failure(e)) => throw e }
-        (p, j, qr, da, rr)
-      } finally qaEc.shutdown()
+    // ---- both branches beside each other, two-tier strictness
+    // (flow:162-171): an ETL failure cancels the QA branch and
+    // propagates; a QA failure never stops the ETL branch and raises
+    // only under failOnQaError ----
+    val ((processedRows, jsonN), qaOutcome) =
+      GraftSession.concurrently(spark)(etl(), Try(qa()))
+    val (qaResults, driftAlert, rawRows) = qaOutcome match {
+      case Success(v) => v
+      case Failure(_) if !opts.failOnQaError =>
+        (Map.empty[String, Try[String]], None, raw.count())
+      case Failure(e) => throw e
+    }
+    if (opts.failOnQaError)
+      qaResults.collect { case (_, Failure(e)) => throw e }
 
     val durationS = (System.nanoTime() - t0) / 1e9
     val report = RunReport(
@@ -291,18 +278,6 @@ object Orchestrator {
     recordMetadata(spark, report, paths, opts.rawFormat)
     report
   }
-
-  /** Daemon threads: the pools must never pin the JVM open after main
-    * completes (a non-daemon leftover pool hangs `runMain` forever). */
-  private val daemonFactory: java.util.concurrent.ThreadFactory =
-    (r: Runnable) => {
-      val t = new Thread(r)
-      t.setDaemon(true)
-      t
-    }
-
-  private lazy val etlEc: ExecutionContext =
-    ExecutionContext.fromExecutorService(Executors.newFixedThreadPool(2, daemonFactory))
 
   /** Q6: run-metadata recorder — payload with params, artifact paths,
     * RE-counted artifact rows (`metadata.py:195-197`), task states and

@@ -5,7 +5,7 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.GraftSession.Pinnable
+import graft.GraftSession.{Pinnable, concurrently}
 import graft.operators.{Blocklist, Chunking, Curation, Dsir, Packing,
   ParagraphDedup, QualityClassifier, Sampling, SemDedup, Sharding,
   SubstringDedup, TextDedup}
@@ -53,48 +53,23 @@ object TrainingDataQueries {
     * adds its total ORDER BY). */
   def ingestFlow(docs: DataFrame, idxPath: String): DataFrame = {
     val s = docs.sparkSession
-    // OVERLAP the three independent up-front legs (guide §2.6: actions
-    // are only sequential because the driver calls them sequentially):
-    // signing the pre-existing corpus into the index and curating each
-    // wave share no data dependency — wave curation touches only the
-    // wave's documents, and only the AGAINST-INDEX step (below, still
-    // strictly ordered) reads the index. A 2-thread pool back-fills
-    // executors idled by one leg's driver latency with the other leg's
-    // tasks; every leg's inputs/parameters are unchanged, so results
-    // are identical to the sequential spelling (JobProbe r22: the
-    // serial ladder was 111 jobs with a 3.0 s driver residual).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val (fIdx, fCurA, fCurB) = try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      def curateWave(wave: Int) = scala.concurrent.Future {
-        s.sparkContext.setJobDescription(s"e2e:curate_wave_$wave")
-        // pinned: the curated wave feeds the against-index dedup AND
-        // the anti-join below; the pin also FORCES the wave's curation
-        // jobs now, inside the overlap window
-        val c = Curation.curate(
-          docs.filter(col("doc_id") % 4 === wave), "doc_id", "text")
-          .pinScratch()
-        s.sparkContext.setJobDescription(null)
-        c
-      }
-      // the pre-existing corpus, signed once (save wipes stale commits,
-      // so re-runs in one session start from the same index state)
-      val fi = scala.concurrent.Future {
-        s.sparkContext.setJobDescription("e2e:index_save")
-        TextDedup.saveMinhashIndex(
-          docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", idxPath)
-        s.sparkContext.setJobDescription(null)
-      }
-      (fi, curateWave(1), curateWave(3))
-    } finally pool.shutdown() // already-submitted futures still run
-    def await[T](f: scala.concurrent.Future[T]): T =
-      scala.concurrent.Await.result(
-        f, scala.concurrent.duration.Duration(600, "s"))
-
+    // The up-front legs share no data dependency — wave curation
+    // touches only the wave's documents, and only the against-index
+    // step reads the index — so the index save and both waves' curation
+    // overlap, and wave B's curation also overlaps wave A's ingest. The
+    // against-index → append chain stays strictly ordered (wave B must
+    // see wave A's append). Every leg's inputs are unchanged, so results
+    // equal the sequential spelling.
+    def curateWave(wave: Int): DataFrame = {
+      s.sparkContext.setJobDescription(s"e2e:curate_wave_$wave")
+      // pinned: the curated wave feeds the against-index dedup AND the
+      // anti-join below; the pin also FORCES the wave's curation jobs
+      // now, inside the overlap window
+      Curation.curate(docs.filter(col("doc_id") % 4 === wave), "doc_id", "text")
+        .pinScratch()
+    }
     // one crawl wave: drop curated docs already in the (current) index,
-    // fold the accepted survivors in for the NEXT wave to see — this
-    // half stays STRICTLY ordered (wave B must see wave A's append)
+    // fold the accepted survivors in for the NEXT wave to see
     def ingestWave(curated: DataFrame, tag: String): DataFrame = {
       val dupIds = TextDedup.minhashLshAgainstIndex(
           curated, "doc_id", "text",
@@ -106,9 +81,17 @@ object TrainingDataQueries {
         accepted, "doc_id", "text", idxPath, commitTag = Some(tag))
       accepted
     }
-    await(fIdx)
-    val acceptedA = ingestWave(await(fCurA), "wave_a")
-    val acceptedB = ingestWave(await(fCurB), "wave_b")
+    val (acceptedA, curatedB) = concurrently(s)({
+      val (_, curatedA) = concurrently(s)({
+        // the pre-existing corpus, signed once (save wipes stale
+        // commits, so re-runs in one session start from the same state)
+        s.sparkContext.setJobDescription("e2e:index_save")
+        TextDedup.saveMinhashIndex(
+          docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", idxPath)
+      }, curateWave(1))
+      ingestWave(curatedA, "wave_a")
+    }, curateWave(3))
+    val acceptedB = ingestWave(curatedB, "wave_b")
     val accepted = acceptedA.unionByName(acceptedB)
       .select(col("doc_id"), col("pred_lang"), col("quality"),
         col("n_tokens"), col("text"))
@@ -207,92 +190,79 @@ object TrainingDataQueries {
       s.sparkContext.getLocalProperty("spark.job.description")
     try {
 
-    // OVERLAP (guide §2.6): the DSIR reference-LM pair depends ONLY on
-    // dsRef (the raw corpus) — not on stages 1-5 — yet ran serially at
-    // stage 6 (JobProbe r22: a ~0.5-1 s eager fit in the middle of the
-    // ladder). Kick the fused fit off on a driver thread now so its
-    // jobs back-fill executors idled by the serial qc/dedup pins; same
-    // inputs, seeds and spelling, so the LMs are bit-identical.
-    val lmPool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    val lmFit = try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(lmPool)
-      scala.concurrent.Future {
-        s.sparkContext.setJobDescription("v2:dsir_lm_fit")
-        val r = Dsir.fitHashedLmPair(
-          dsRef, "text", col("lang") === "en", buckets = 1024)
-        s.sparkContext.setJobDescription(null)
-        r
-      }
-    } finally lmPool.shutdown()
+    // the DSIR reference-LM pair depends ONLY on dsRef (the raw
+    // corpus), not on stages 1-5, so it is fitted as a leg beside them;
+    // its jobs back-fill executors idled by the serial qc/dedup pins.
+    // Same inputs, seeds and spelling, so the LMs are bit-identical.
+    val ((scored, sem), (tLm, rLm)) = concurrently(s)({
+      // stage 1: blocklist drop (C4 rule; null text has no hits → kept,
+      // and then dropped at stage 2 where a null can't score)
+      val blok = Blocklist.filterBlocked(
+        docs.select(col("doc_id"), col("text"), col("lang")),
+        "text", V2BlockTerms)
 
-    // stage 1: blocklist drop (C4 rule; null text has no hits → kept,
-    // and then dropped at stage 2 where a null can't score)
-    val blok = Blocklist.filterBlocked(
-      docs.select(col("doc_id"), col("text"), col("lang")),
-      "text", V2BlockTerms)
+      // stage 2: learned-classifier filter. The fit slice is the RAW
+      // corpus (doc_id < 300, rule-based labels) — a reference model,
+      // not a function of upstream stages; the snapshot is what the
+      // oracle scores with. Filter on the ROUNDED score so the 0.5
+      // boundary is engine-portable.
+      val labeled = docs.filter(col("doc_id") < 300)
+        .withColumn("y",
+          (graft.functions.TextAnalysis.stopwordHits(col("text"), "en") >= 2)
+            .cast("double"))
+      label("qc_fit")
+      val model = QualityClassifier.fit(labeled, "text", "y", buckets = 128)
+      label("qc_snapshot")
+      QualityClassifier.modelRelation(s, model)
+        .coalesce(1).write.mode("overwrite").parquet(qcModelDir)
+      label("qc_score_pin")
+      val scored = QualityClassifier.score(blok, "text", model)
+        .withColumn("p_good", roundPortable(col("p_good"), 6))
+        .filter(col("p_good") >= 0.5)
+        .pinScratch() // feeds stage 3 AND the post-resample enrich join
 
-    // stage 2: learned-classifier filter. The fit slice is the RAW
-    // corpus (doc_id < 300, rule-based labels) — a reference model,
-    // not a function of upstream stages; the snapshot is what the
-    // oracle scores with. Filter on the ROUNDED score so the 0.5
-    // boundary is engine-portable.
-    val labeled = docs.filter(col("doc_id") < 300)
-      .withColumn("y",
-        (graft.functions.TextAnalysis.stopwordHits(col("text"), "en") >= 2)
-          .cast("double"))
-    label("qc_fit")
-    val model = QualityClassifier.fit(labeled, "text", "y", buckets = 128)
-    label("qc_snapshot")
-    QualityClassifier.modelRelation(s, model)
-      .coalesce(1).write.mode("overwrite").parquet(qcModelDir)
-    label("qc_score_pin")
-    val scored = QualityClassifier.score(blok, "text", model)
-      .withColumn("p_good", roundPortable(col("p_good"), 6))
-      .filter(col("p_good") >= 0.5)
-      .pinScratch() // feeds stage 3 AND the post-resample enrich join
+      // stages 3+4: paragraph- then substring-level exact dedup — both
+      // rebuild `text`, so downstream stages must see the REBUILT copy
+      val para = ParagraphDedup.dedupParagraphs(
+          scored.select(col("doc_id"), col("text")), "doc_id", "text",
+          sepRegex = " table ", joiner = " | ")
+        .select(col("doc_id"), col("text"))
+      val sub = SubstringDedup.dedupSubstrings(para, "doc_id", "text",
+          minTokens = 20)
+        .select(col("doc_id"), col("text"))
 
-    // stages 3+4: paragraph- then substring-level exact dedup — both
-    // rebuild `text`, so downstream stages must see the REBUILT copy
-    val para = ParagraphDedup.dedupParagraphs(
-        scored.select(col("doc_id"), col("text")), "doc_id", "text",
-        sepRegex = " table ", joiner = " | ")
-      .select(col("doc_id"), col("text"))
-    val sub = SubstringDedup.dedupSubstrings(para, "doc_id", "text",
-        minTokens = 20)
-      .select(col("doc_id"), col("text"))
-
-    // stage 5: SemDeDup over the survivors' embeddings — clusters FIT
-    // ON THE SURVIVOR SET (the composition point: a clustering of the
-    // raw corpus would leak dropped docs into the witness scope),
-    // snapshotted for the oracle's NOT-EXISTS twin
-    label("semdedup_vec_pin")
-    val withVec = sub.join(
-        embeddings.select(col("vec_id").as("doc_id"), col("embedding")),
-        "doc_id")
-      .pinScratch() // read by the cluster fit, the snapshot AND the witness join
-    label("semdedup_fit_snapshot")
-    SemDedup.withClusters(withVec, "doc_id", "embedding", nClusters,
-        maxIter = 5)
-      .select(col("doc_id"), col("cluster_id"))
-      .coalesce(1).write.mode("overwrite").parquet(assignDir)
-    label("semdedup_pin")
-    val sem = SemDedup.semDedup(withVec, "doc_id", "embedding",
-        tau = V2Tau, assignments = Some(s.read.parquet(assignDir)),
-        maxClusterSize = maxClusterSize)
-      .select(col("doc_id"), col("text"))
-      .pinScratch() // scored AND joined back inside the resample
+      // stage 5: SemDeDup over the survivors' embeddings — clusters FIT
+      // ON THE SURVIVOR SET (the composition point: a clustering of the
+      // raw corpus would leak dropped docs into the witness scope),
+      // snapshotted for the oracle's NOT-EXISTS twin
+      label("semdedup_vec_pin")
+      val withVec = sub.join(
+          embeddings.select(col("vec_id").as("doc_id"), col("embedding")),
+          "doc_id")
+        .pinScratch() // read by the cluster fit, the snapshot AND the witness join
+      label("semdedup_fit_snapshot")
+      SemDedup.withClusters(withVec, "doc_id", "embedding", nClusters,
+          maxIter = 5)
+        .select(col("doc_id"), col("cluster_id"))
+        .coalesce(1).write.mode("overwrite").parquet(assignDir)
+      label("semdedup_pin")
+      val sem = SemDedup.semDedup(withVec, "doc_id", "embedding",
+          tau = V2Tau, assignments = Some(s.read.parquet(assignDir)),
+          maxClusterSize = maxClusterSize)
+        .select(col("doc_id"), col("text"))
+        .pinScratch() // scored AND joined back inside the resample
+      (scored, sem)
+    }, {
+      label("dsir_lm_fit")
+      Dsir.fitHashedLmPair(dsRef, "text", col("lang") === "en", buckets = 1024)
+    })
 
     // stage 6: DSIR importance resample — reference LMs from the RAW
     // corpus (target = the en slice), documents scored on their
     // REBUILT text, A-ES priority with weight exp(log_ratio)
     label("dsir_resample")
-    // target = the en slice OF dsRef: one fused reference pass fits
-    // both LMs (bit-identical counts; see Dsir.fitHashedLmPair),
-    // started up at the top of the flow — by now it has usually
-    // already landed
-    val (tLm, rLm) = scala.concurrent.Await.result(
-      lmFit, scala.concurrent.duration.Duration(600, "s"))
+    // target = the en slice OF dsRef: one fused reference pass fitted
+    // both LMs (bit-identical counts; see Dsir.fitHashedLmPair)
     val res = Dsir.resampleByImportance(sem, "doc_id", "text",
         dsRef.filter(col("lang") === "en"), "text", dsRef, "text",
         k = V2ResampleK, buckets = 1024,

@@ -87,13 +87,6 @@ object StreamingOps {
     StructField("lang", StringType), StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  /** File-source stream over the documents table — the arriving-crawl
-    * half of streaming incremental dedup. */
-  def readDocumentsStream(spark: SparkSession, sfDir: String): DataFrame =
-    spark.readStream
-      .schema(documentsSchema)
-      .parquet(stagedDir(sfDir, "documents").toString)
-
   /** Documents stream over an ARBITRARY staged directory with a
     * per-trigger file cap — under `Trigger.AvailableNow` each part-file
     * becomes (at most) its own micro-batch, so a K-file directory

@@ -884,7 +884,7 @@ object ScaleBench {
         // log_ratio filter makes the row HONEST (SCALE.md ¹⁰): a bare
         // count() lets Catalyst prune the ratio aggregate and both
         // broadcast LM inputs out of the counted plan, under-measuring
-        // scoring by ~2× (the DsirProbe finding, now folded in)
+        // scoring by ~2×
         "dsir_score" -> (() =>
           graft.operators.Dsir.importanceLogRatio(
             docs, "doc_id", "text",

@@ -46,9 +46,107 @@ class GraftSessionSpec extends SparkSpec {
         assert(GraftSession.pin(df).count() == 10)
         assert(GraftSession.pin(df).count() == 10)
         assert(pinDirs() == 3)
+        // a nested scope releases its own pins and nothing else
+        GraftSession.releasingScratch(spark) {
+          assert(GraftSession.pin(df).count() == 10)
+          assert(pinDirs() == 4)
+        }
+        assert(pinDirs() == 3)
+        // pins made inside concurrently legs belong to the caller's
+        // scope: they outlive the legs and stay readable
+        val (l1, l2) = GraftSession.concurrently(spark)(
+          GraftSession.pin(df), GraftSession.pin(df))
+        assert(pinDirs() == 5)
+        assert(l1.count() == 10 && l2.count() == 10)
+        // an early unpin reclaims exactly that pin
+        GraftSession.unpin(l1)
+        assert(pinDirs() == 4)
+        assert(l2.count() == 10)
       }
       assert(pinDirs() == 1)
       assert(outside.count() == 10)
+    }
+  }
+
+  test("concurrently: overlapped legs, input order, original exceptions") {
+    // 64 simulated 20 ms round-trips: serial would be ≥1.28 s, 16
+    // threads must land well under half that (generous bound — CI
+    // hosts stall; the point is overlap happened at all)
+    val t0 = System.nanoTime()
+    val got = GraftSession.concurrently(spark, 16)(
+      (1 to 64).map(i => () => { Thread.sleep(20); i * 2 }))
+    val sec = (System.nanoTime() - t0) / 1e9
+    assert(got == (1 to 64).map(_ * 2), "results must come back in input order")
+    assert(sec < 0.64, f"expected overlapped execution, took $sec%.2f s")
+    // the ORIGINAL exception surfaces, not an ExecutionException wrapper
+    val e = intercept[IllegalStateException] {
+      GraftSession.concurrently(spark, 16)((1 to 8).map(i => () =>
+        if (i == 3) throw new IllegalStateException("boom-3") else i))
+    }
+    assert(e.getMessage == "boom-3")
+    // degenerate inputs stay on the caller thread
+    val caller = Thread.currentThread()
+    assert(GraftSession.concurrently(spark, 16)(
+      Seq(() => Thread.currentThread() eq caller)) == Seq(true))
+    assert(GraftSession.concurrently(spark, 16)(Seq.empty[() => Int]).isEmpty)
+  }
+
+  test("concurrently: a failing leg cancels its sibling's running job and rethrows its own exception") {
+    val sc = spark.sparkContext
+    val boom = new IllegalStateException("boom")
+    val siblingReturned = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException] {
+      GraftSession.concurrently(spark)(
+        // the sibling's cleanup outlasts its cancelled job: the call must
+        // wait for it, not just for the job
+        try GraftSessionSpec.sleepingJob(spark)
+        finally { Thread.sleep(300); siblingReturned.set(true) },
+        {
+          assert(GraftSessionSpec.sleeperStarted.await(60, java.util.concurrent.TimeUnit.SECONDS))
+          throw boom
+        })
+    }
+    val sec = (System.nanoTime() - t0) / 1e9
+    assert(e eq boom, s"expected the failing leg's own exception, got $e")
+    assert(siblingReturned.get, "the exception escaped before the sibling leg returned")
+    assert(org.apache.spark.scheduler.DagProbe.activeJobs(sc) == 0,
+      "the sibling's job must be gone before the exception escapes")
+    assert(sec < 30, f"the sibling's 60 s tasks were not cancelled ($sec%.1f s)")
+    // interrupt-on-cancel reached the sibling's task threads
+    val until = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (!GraftSessionSpec.sleeperInterrupted.get && System.nanoTime() < until)
+      Thread.sleep(20)
+    assert(GraftSessionSpec.sleeperInterrupted.get)
+  }
+
+  test("concurrently: two distributed connectedComponents legs never release each other's checkpoints") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // two disjoint chain graphs; driverUnionFindLimit = 0 forces the
+    // distributed star-contraction loop, whose superseded per-round
+    // snapshots are unpinned while the sibling leg is mid-loop
+    val g1 = Seq((1L, 2L), (2L, 3L), (3L, 4L), (7L, 8L)).toDF("d1", "d2")
+    val g2 = Seq((11L, 12L), (13L, 12L), (14L, 13L)).toDF("d1", "d2")
+    def components(g: org.apache.spark.sql.DataFrame) =
+      graft.operators.TextDedup.connectedComponents(g, driverUnionFindLimit = 0L)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val want1 = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 7L -> 7L, 8L -> 7L)
+    val want2 = Map(11L -> 11L, 12L -> 11L, 13L -> 11L, 14L -> 11L)
+    // the registry holds its RDDs weakly: an earlier suite's unreachable
+    // pin may vanish at any GC, so compare ids, not sizes
+    def persisted() = sc.getPersistentRDDs.keySet.toSet
+    val before = persisted()
+    (1 to 18).foreach { round =>
+      val (c1, c2) = GraftSession.releasingScratch(spark) {
+        val out = GraftSession.concurrently(spark)(components(g1), components(g2))
+        // the final node/edge snapshots stay pinned until the scope ends
+        assert((persisted() -- before).size == 4, s"round $round")
+        out
+      }
+      assert(c1 == want1 && c2 == want2, s"round $round")
+      val left = persisted() -- before
+      assert(left.isEmpty, s"round $round left persisted RDD(s) $left")
     }
   }
 
@@ -88,4 +186,19 @@ class GraftSessionSpec extends SparkSpec {
       assert(jobs.get() == 0, s"partitionsForPlan ran ${jobs.get()} job(s)")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+}
+
+object GraftSessionSpec {
+  val sleeperStarted = new java.util.concurrent.CountDownLatch(1)
+  val sleeperInterrupted = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** A job whose tasks sleep 60 s unless interrupted. Defined here, not
+    * in the suite, so the task closure captures no suite instance. */
+  def sleepingJob(spark: org.apache.spark.sql.SparkSession): Long =
+    spark.sparkContext.parallelize(1 to 2, 2).map { i =>
+      sleeperStarted.countDown()
+      try Thread.sleep(60000)
+      catch { case _: InterruptedException => sleeperInterrupted.set(true) }
+      i
+    }.count()
 }

@@ -299,27 +299,6 @@ class IndexFsSpec extends SparkSpec {
       "clearPublished must never touch a sibling relation")
   }
 
-  test("parMapOrdered: overlapped round-trips, input order, original exceptions") {
-    // 64 simulated 20 ms metadata round-trips: serial would be ≥1.28 s,
-    // a 16-wide pool must land well under half that (generous bound —
-    // CI hosts stall; the point is overlap happened at all)
-    val t0 = System.nanoTime()
-    val got = IndexFs.parMapOrdered(1 to 64) { i => Thread.sleep(20); i * 2 }
-    val sec = (System.nanoTime() - t0) / 1e9
-    assert(got == (1 to 64).map(_ * 2), "results must come back in input order")
-    assert(sec < 0.64, f"expected overlapped execution, took $sec%.2f s")
-    // the ORIGINAL exception surfaces, not an ExecutionException wrapper
-    val e = intercept[IllegalStateException] {
-      IndexFs.parMapOrdered(1 to 8) { i =>
-        if (i == 3) throw new IllegalStateException("boom-3") else i
-      }
-    }
-    assert(e.getMessage == "boom-3")
-    // degenerate inputs stay on the caller thread
-    assert(IndexFs.parMapOrdered(Seq(5))(_ + 1) == Seq(6))
-    assert(IndexFs.parMapOrdered(Seq.empty[Int])(_ + 1).isEmpty)
-  }
-
   test("writeSmallFileNoClobber: exactly one writer per target wins; body is complete") {
     val dir = tmp("idxfs_cas")
     val f = IndexFs.fs(spark, dir)

@@ -19,10 +19,9 @@ class OrchestratorSpec extends SparkSpec {
     "Order", Seq("Id", "Status", "TotalAmount"), Seq("Id", "Status"),
     Seq("Status"), ListMap("TotalAmount" -> Seq("sum", "mean", "count")))
 
-  test("full DAG: artifacts written, states COMPLETED, ledger appended") {
+  private def fullDag(opts: Orchestrator.RunOptions): Unit = {
     val base = Files.createTempDirectory("orch").toString
-    val report = Orchestrator.run(spark, "Order", source, base,
-      Orchestrator.RunOptions(limit = None, timestampRaw = false),
+    val report = Orchestrator.run(spark, "Order", source, base, opts,
       specOverride = Some(orderSpec))
 
     assert(report.rawRows == 4)
@@ -41,11 +40,36 @@ class OrchestratorSpec extends SparkSpec {
     assert(ledger.size == 1)
 
     // second run: drift state now exists, ledger grows, dedupe keeps both ids
-    val report2 = Orchestrator.run(spark, "Order", source, base,
-      Orchestrator.RunOptions(limit = None, timestampRaw = false),
+    val report2 = Orchestrator.run(spark, "Order", source, base, opts,
       specOverride = Some(orderSpec))
     assert(report2.driftAlert.isEmpty) // same rowcount → no drift
     assert(RunLedger.read(s"$base/meta/runs.jsonl").size == 2)
+  }
+
+  test("full DAG: artifacts written, states COMPLETED, ledger appended") {
+    fullDag(Orchestrator.RunOptions(limit = None, timestampRaw = false))
+  }
+
+  test("full DAG with qaParallelism = 1: the QA legs run one at a time, same result") {
+    fullDag(Orchestrator.RunOptions(limit = None, timestampRaw = false, qaParallelism = 1))
+  }
+
+  test("a failing process step cancels the QA branch: no QA job outlives run") {
+    val base = Files.createTempDirectory("orchFail").toString
+    // a regular file where the processed-CSV directory must go: the
+    // process step computes its aggregate, then fails to write it
+    Files.createDirectories(Paths.get(base, "processed"))
+    Files.write(Paths.get(base, "processed", "Order"), Array[Byte](1))
+    val e = intercept[Exception] {
+      Orchestrator.run(spark, "Order", source, base,
+        Orchestrator.RunOptions(limit = None, timestampRaw = false,
+          processRetryDelayMs = 0L),
+        specOverride = Some(orderSpec))
+    }
+    assert(!String.valueOf(e.getMessage).toLowerCase.contains("cancel"),
+      s"expected the process step's own failure, got $e")
+    assert(org.apache.spark.scheduler.DagProbe.activeJobs(spark.sparkContext) == 0,
+      "a QA job was still running when run threw")
   }
 
   test("QA failures are advisory by default, strict with failOnQaError") {
