@@ -8,12 +8,13 @@ import graft.GraftSession
 /** A sharded-snapshot commit lost its compare-and-swap: another writer
   * committed the same target version first. Thrown by the maintenance
   * ops ([[SnapshotMerge.optimizeSharded]], [[SnapshotMerge.evolveSharded]],
-  * [[SnapshotMerge.migrateSharded]], [[SnapshotMerge.compactSharded]]),
-  * which must NOT silently redo their full-rewrite work against a moved
-  * snapshot — and by [[SnapshotMerge.upsertSharded]] only after its
-  * bounded re-read-and-retry loop is exhausted. The losing writer's
-  * delta dirs are already deleted (or left for the orphan vacuum path)
-  * when this surfaces; no committed state is ever touched. */
+  * [[SnapshotMerge.migrateSharded]], [[SnapshotMerge.compactSharded]],
+  * [[SnapshotMerge.reshardSharded]], [[SnapshotMerge.restoreSharded]]),
+  * which must NOT silently redo their work against a moved snapshot —
+  * and by [[SnapshotMerge.upsertSharded]] only after its bounded
+  * re-read-and-retry loop is exhausted. Everything the losing attempt
+  * wrote is already deleted when this surfaces; no committed state is
+  * ever touched. */
 final class ConcurrentCommitException(msg: String)
   extends RuntimeException(msg)
 
@@ -44,8 +45,8 @@ final class ConcurrentCommitException(msg: String)
   * an UNPARTITIONED snapshot; at 100 TB the snapshot should be
   * key-sharded ([[Sharding.writeShards]]) so a batch rewrites only the
   * shards its keys touch — the same "rewrite what changed" contract,
-  * manifest-pointer committed. Set `broadcastKeys = false` for
-  * backfill-sized batches (the join then shuffles both sides at the
+  * committed through a versioned manifest. Set `broadcastKeys = false`
+  * for backfill-sized batches (the join then shuffles both sides at the
   * corpus-tracked width) — both the flat and the sharded path take the
   * flag.
   *
@@ -123,6 +124,34 @@ object SnapshotMerge {
     current.join(rhs, cond, "left_anti")
   }
 
+  /** Batch preparation shared by [[upsert]] and [[upsertSharded]]:
+    * validates the key columns, `deleteCol` and reserved names, and
+    * returns None when `commitTag` is already committed. Otherwise
+    * returns the keep-last `ranked` batch (every one of its keys, deleted
+    * or not, knocks its current row out) and its insert side (deleted
+    * rows and `deleteCol` dropped). */
+  private def prepareBatch(updates: DataFrame, keyCols: Seq[String],
+      dir: String, deleteCol: Option[String],
+      updateOrder: Option[Seq[Column]],
+      commitTag: Option[String]): Option[(DataFrame, DataFrame)] = {
+    require(keyCols.nonEmpty, "upsert needs at least one key column")
+    require(keyCols.forall(updates.columns.contains),
+      s"key columns ${keyCols.filterNot(updates.columns.contains)} absent from updates")
+    deleteCol.foreach(c => require(updates.columns.contains(c),
+      s"deleteCol $c absent from updates"))
+    requireNoReservedKeyNames(updates, keyCols, "updates")
+    commitTag.foreach(IndexFs.requireValidTag)
+    if (commitTag.exists(t => IndexFs.isCommitted(updates.sparkSession, dir, t)))
+      None
+    else {
+      val ranked = updateOrder.fold(updates)(
+        graft.ops.Dedup.keepLast(updates, keyCols, _))
+      val inserts = deleteCol.fold(ranked)(c =>
+        ranked.filter(!coalesce(col(c), lit(false))).drop(c))
+      Some((ranked, inserts))
+    }
+  }
+
   /** Merge `updates` into the snapshot at `dir` by `keyCols`.
     *
     * @param deleteCol boolean column in `updates` marking rows whose
@@ -160,24 +189,8 @@ object SnapshotMerge {
       broadcastKeys: Boolean = true,
       allowSchemaEvolution: Boolean = false): Boolean = {
     val spark = updates.sparkSession
-    require(keyCols.nonEmpty, "upsert needs at least one key column")
-    require(keyCols.forall(updates.columns.contains),
-      s"key columns ${keyCols.filterNot(updates.columns.contains)} absent from updates")
-    deleteCol.foreach(c => require(updates.columns.contains(c),
-      s"deleteCol $c absent from updates"))
-    requireNoReservedKeyNames(updates, keyCols, "updates")
-    commitTag.foreach(IndexFs.requireValidTag)
-    if (commitTag.exists(t => IndexFs.isCommitted(spark, dir, t)))
-      return false
-
-    val ranked = updateOrder match {
-      case Some(order) => graft.ops.Dedup.keepLast(updates, keyCols, order)
-      case None => updates
-    }
-    val inserts = deleteCol match {
-      case Some(c) => ranked.filter(!coalesce(col(c), lit(false))).drop(c)
-      case None => ranked
-    }
+    val (ranked, inserts) = prepareBatch(updates, keyCols, dir, deleteCol,
+      updateOrder, commitTag).getOrElse(return false)
     // both updates AND deletes knock their key out of the current rows
     val touchedKeys = ranked.select(keyCols.map(col): _*).distinct()
 
@@ -205,63 +218,43 @@ object SnapshotMerge {
   // ------------------------------------------------------------------
   // Sharded variant — the 100 TB shape: the snapshot lives as key-hash
   // shard directories behind a MANIFEST (shard → physical dir), and a
-  // batch rewrites ONLY the shards its keys touch; the commit is one
-  // atomic pointer swap to the new manifest. Untouched shards are not
-  // read, not rewritten, not even listed — merge cost tracks the
+  // batch rewrites ONLY the shards its keys touch. Untouched shards are
+  // not read, not rewritten, not even listed — merge cost tracks the
   // TOUCHED fraction, not the snapshot (measured in ScaleBench
-  // `merge_upsert` vs `merge_upsert_sharded`). The manifest is the
-  // same version-pointer idea as IndexFs's marker protocol, applied
-  // per shard so unchanged data is REFERENCED, not copied — what a
-  // table format's metadata layer does, in one small file.
+  // `merge_upsert` vs `merge_upsert_sharded`). Unchanged data is
+  // REFERENCED by the next manifest, not copied — what a table
+  // format's metadata layer does, in one small file.
+  //
+  // The commit record is `manifest-v<N>`, one file per version, in one
+  // format (see [[tryCommitManifest]]); the live version is the newest
+  // such file (one root listing). Every writer goes through the same
+  // two steps: [[writeDelta]] writes the attempt's data under
+  // writer-unique `shards-v<N>-<uid>` / `schema-v<N>-<uid>` dirs that
+  // nothing references yet, then [[commit]] no-clobber creates
+  // `manifest-v<N>`. A crash anywhere before that create leaves the
+  // previous version live and the attempt's dirs inert until
+  // [[vacuumSharded]] reaps them; once the create lands the version is
+  // committed, whatever happens after.
   //
   // COMMIT vs RETIRE are separate phases (the Delta/Iceberg posture):
-  // the commit is ONLY the manifest publication — superseded shard
-  // dirs and manifests are never deleted inline. The upsert records
-  // them in a retire log (`_retired/retired-v<N>`, mtime = the moment
-  // of supersession) and [[vacuumSharded]] reaps them later, behind a
-  // caller-chosen retention window — so a long-running reader that
-  // resolved the OLD manifest keeps a complete, scannable old snapshot
-  // for at least `minAgeMs` after the merge that superseded it.
+  // superseded shard dirs, anchors and manifests are never deleted
+  // inline. The winning commit records them in a retire log
+  // (`_retired/retired-v<N>`, mtime = the moment of supersession) and
+  // [[vacuumSharded]] reaps them behind a caller-chosen retention
+  // window — so a long-running reader that resolved the OLD manifest
+  // keeps a complete, scannable old snapshot for at least `minAgeMs`.
   //
-  // CONCURRENCY is optimistic (the Delta commit-file posture): the
-  // commit point is a no-clobber CREATE of `manifest-v<N>` — a writer
-  // that read version N-1 can publish N only if no one else has, so
-  // two concurrent writers (a mergeStream CDC batch racing an
+  // CONCURRENCY is optimistic (the Delta commit-file posture): a
+  // writer that read version N-1 can publish N only if no one else
+  // has, so two concurrent writers (a mergeStream CDC batch racing an
   // optimizeSharded maintenance window, say) can never silently
-  // discard each other's committed work. The loser's verdict is
-  // per-op: upsertSharded re-reads the moved snapshot and retries its
-  // (batch-sized) merge; the full-rewrite maintenance ops fail loudly
-  // with [[ConcurrentCommitException]]. Readers resolve the NEWEST
-  // committed manifest file (one root listing); `manifest.current` is
-  // kept as a best-effort cache/back-compat pointer, never the source
-  // of truth — a crash between the CAS and the pointer write therefore
-  // rolls FORWARD (the committed file wins) instead of wedging the
-  // version number against debris. Each attempt writes its delta under
-  // a writer-unique `shards-v<N>-<uid>` dir, so a loser's in-flight
-  // write can never clobber the winner's committed files; lost deltas
-  // are reaped by the orphan vacuum path.
+  // discard each other's committed work. A losing attempt deletes what
+  // it wrote; what happens next is per-op: upsertSharded re-reads the
+  // moved snapshot and retries its (batch-sized) merge, every other
+  // writer fails loudly with [[ConcurrentCommitException]].
   // ------------------------------------------------------------------
 
-  private def manifestPtr(dir: String) = s"${norm(dir)}/manifest.current"
   private def retiredDir(dir: String) = s"${norm(dir)}/_retired"
-
-  /** LEGACY anchor resolution — snapshots written before the anchor
-    * went into the manifest (r15) keep their zero-row schema relation
-    * at `schema/` behind the marker-protocol pointer; a manifest with
-    * no anchor field resolves here. New snapshots version the anchor
-    * THROUGH the manifest ([[Manifest.anchor]]): each schema change
-    * writes a fresh `schema-v<N>-<uid>` dir that is invisible until
-    * its manifest CAS lands, schema-neutral commits carry the anchor
-    * path forward by reference, and a restore across a schema change
-    * rolls the schema back with the data. */
-  private def schemaAnchorDir(spark: SparkSession, dir: String): String =
-    IndexFs.resolveDir(spark, s"${norm(dir)}/schema")
-
-  /** The anchor dir a given version reads with: the manifest's own
-    * (versioned, r15) or the legacy pointer. */
-  private def anchorDirOf(spark: SparkSession, dir: String,
-      m: Manifest): String =
-    m.anchor.getOrElse(schemaAnchorDir(spark, dir))
 
   /** Version tag of the shard-assignment function, persisted in the
     * manifest header: a snapshot built under a DIFFERENT assignment
@@ -275,28 +268,21 @@ object SnapshotMerge {
   private val TrailerFlag = "t1"
 
   /** (version, nShards, salt, shard → physical dir, anchor dir).
-    * In-memory paths are always ABSOLUTE (resolved against the
-    * snapshot root at read); on disk they are stored RELATIVE to the
-    * root, so the snapshot survives being moved/mounted under a
-    * different spelling and no maintenance op ever compares paths
-    * across spellings. `anchor` is the zero-row schema relation THIS
-    * version reads with (r15) — None on legacy manifests, which
-    * resolve the pointer-managed `schema/` dir instead. */
+    * In-memory paths are always rooted at the snapshot dir the caller
+    * named; on disk they are stored RELATIVE to the root, so the
+    * snapshot survives being moved/mounted under a different spelling
+    * and no maintenance op ever compares paths across spellings.
+    * `anchor` is the zero-row schema relation THIS version reads with:
+    * schema changes write a fresh `schema-v<N>-<uid>` dir, every other
+    * commit carries the anchor forward by reference, and a restore
+    * across a schema change rolls the schema back with the data. */
   private[operators] final case class Manifest(
       version: Long, nShards: Int, salt: String, shards: Map[Long, String],
-      anchor: Option[String] = None)
+      anchor: String)
 
-  /** A stored shard path, resolved against the snapshot root. Legacy
-    * manifests (written before paths went relative) carried absolute
-    * paths — those pass through untouched. Absolute means a leading `/`
-    * OR any URI scheme, including the single-slash Hadoop
-    * `Path.toString` spelling (`file:/tmp/...`) — treating that form as
-    * relative would resolve a legacy entry to `<dir>/file:/tmp/...`
-    * and fail the shard read. */
-  private val SchemePrefix = "^[a-zA-Z][a-zA-Z0-9+.-]*:/".r
+  /** A stored (relative) path, resolved against the snapshot root. */
   private def resolveShardPath(dir: String, p: String): String =
-    if (p.startsWith("/") || SchemePrefix.findPrefixOf(p).isDefined) p
-    else s"${norm(dir)}/$p"
+    s"${norm(dir)}/$p"
 
   /** The on-disk (relative) spelling of a shard path under `dir`. */
   private def relativizeShardPath(dir: String, p: String): String = {
@@ -309,7 +295,7 @@ object SnapshotMerge {
     * loser's `mode=overwrite` write would clobber the winner's
     * already-committed files. The manifest stores whatever dir the
     * winner wrote, so the spelling carries no meaning beyond the
-    * `shards-v` prefix the vacuum walks. */
+    * `shards-v` / `schema-v` prefixes the vacuum walks. */
   private def writerUid(): String =
     f"${java.util.concurrent.ThreadLocalRandom.current().nextLong() & 0xffffffffL}%08x"
 
@@ -323,103 +309,185 @@ object SnapshotMerge {
     pmod(Sharding.orderHash(key, salt), lit(nShards.toLong))
   }
 
-  /** The commit: CAS-create `manifest-v<version>` — no-clobber, so at
-    * most one writer per version number ever wins — then roll the
-    * `manifest.current` cache pointer forward. Returns false when the
-    * version was already committed (a concurrent writer, or a previous
-    * crash's committed-but-unpointed file — indistinguishable by
-    * design, and both read the same way: someone owns this version,
-    * re-read and go again). The pointer write is best-effort: readers
-    * resolve through the newest committed FILE ([[readManifest]]), so
-    * a crash between the two leaves a fully-committed version that the
-    * next reader/writer simply rolls forward to. */
+  // --- the commit seam: every sharded writer commits through
+  // writeDelta + commit, and nothing else partitions by __shard,
+  // creates a manifest or writes a retire log (SeamGuardSpec) ---
+
+  /** CAS-creates `manifest-v<version>` — no-clobber, so at most one
+    * writer per version number ever wins; false when the version is
+    * already committed. The format is the only one readers accept
+    * ([[readManifestFile]]): a six-field tab-separated header
+    * `meta, nShards, salt, hash version, anchor, trailer flag`, one
+    * `shard, path` line per shard (paths relative to the root), and an
+    * `end\t<shard-line count>` trailer. The trailer makes the body
+    * SELF-VALIDATING: on schemes where writeSmallFileNoClobber falls
+    * back to a direct create, a concurrent reader can glimpse the
+    * create-to-close window, and a truncated shard list would otherwise
+    * parse as a smaller snapshot. */
   private[operators] def tryCommitManifest(spark: SparkSession, dir: String,
       m: Manifest): Boolean = {
-    val f = IndexFs.fs(spark, dir)
-    // the anchor rides as a 5th header field (absent on pre-r15
-    // manifests); relative like every stored path. The 6th field is
-    // the trailer FORMAT FLAG: it announces, from the header line —
-    // which a torn tail can never lose — that this body ends in a
-    // count trailer, so readManifestFile can require the trailer for
-    // manifests that promised one while still reading pre-flag
-    // snapshots (which never wrote a trailer) untouched.
     val header = Seq("meta", m.nShards.toString, m.salt, ShardHashVersion,
-      m.anchor.map(relativizeShardPath(dir, _)).getOrElse(""),
-      TrailerFlag).mkString("\t")
-    // trailer = shard-line count: makes the body SELF-VALIDATING. On
-    // schemes where writeSmallFileNoClobber falls back to a direct
-    // create (no AbstractFileSystem binding), a concurrent reader can
-    // glimpse the create-to-close window; without the trailer a
-    // truncated shard list parses SUCCESSFULLY (header intact, tail
-    // lines missing) and that reader silently scans a smaller
-    // snapshot. readManifestFile requires the trailer, so a torn read
-    // fails loudly instead.
+      relativizeShardPath(dir, m.anchor), TrailerFlag).mkString("\t")
     val shardLines = m.shards.toSeq.sortBy(_._1)
       .map { case (k, p) => s"$k\t${relativizeShardPath(dir, p)}" }
     val body = ((header +: shardLines) :+ s"end\t${shardLines.length}")
       .mkString("\n")
-    val name = s"manifest-v${m.version}"
-    val won = IndexFs.writeSmallFileNoClobber(spark, f,
-      new org.apache.hadoop.fs.Path(s"${norm(dir)}/$name"), body)
-    if (won)
-      IndexFs.atomicWriteSmallFile(spark, f,
-        new org.apache.hadoop.fs.Path(manifestPtr(dir)), name)
-    won
+    IndexFs.writeSmallFileNoClobber(spark, IndexFs.fs(spark, dir),
+      new org.apache.hadoop.fs.Path(s"${norm(dir)}/manifest-v${m.version}"), body)
   }
 
-  /** The LIVE manifest — the NEWEST committed manifest file (one root
-    * listing; a manifest file exists iff its commit CAS won, so the
-    * listing can never surface a torn or in-flight version). The
-    * `manifest.current` pointer is only a fallback for snapshots
-    * written before the CAS protocol whose superseded files were all
-    * vacuumed — when manifest files exist they win, so a stale pointer
-    * (crash between CAS and pointer write, or a delayed pointer write
-    * racing a later commit) can never roll a reader backwards.
-    * Manifests written before the hash-version tag existed were built
-    * under the same (never-changed) h1 assignment — read as h1. */
-  private[operators] def readManifest(spark: SparkSession,
-      dir: String): Manifest = {
-    val versions = shardedVersions(spark, dir)
-    if (versions.nonEmpty)
-      readManifestFile(spark, dir, s"manifest-v${versions.last}")
-    else {
-      val f = IndexFs.fs(spark, dir)
-      val name = IndexFs.readSmallFile(f,
-        new org.apache.hadoop.fs.Path(manifestPtr(dir)))
-      readManifestFile(spark, dir, name)
-    }
-  }
-
-  /** Appends a retire log entry: the shard dirs + manifest file that
-    * version `supersededBy` made unreachable. The LOG FILE's mtime is
-    * the supersession instant — exactly what [[vacuumSharded]]'s
-    * retention window must measure from (a shard dir's own mtime is its
-    * WRITE time, which can be arbitrarily older than the merge that
-    * retired it). Advisory, not transactional: a torn write degrades
-    * to the orphan path (mtime-cutoff reaping), never to data loss. */
+  /** Writes the retire log entry for version `supersededBy`: the dirs
+    * and manifest file it made unreachable. The LOG FILE's mtime is the
+    * supersession instant — exactly what [[vacuumSharded]]'s retention
+    * window must measure from (a shard dir's own mtime is its WRITE
+    * time, which can be arbitrarily older than the merge that retired
+    * it). Advisory, not transactional: a torn write degrades to the
+    * orphan path (mtime-cutoff reaping), never to data loss. */
   private def writeRetireLog(spark: SparkSession, dir: String,
       supersededBy: Long, retiredDirs: Seq[String],
       retiredManifest: String): Unit = {
-    if (retiredDirs.isEmpty && retiredManifest.isEmpty) return
     val f = IndexFs.fs(spark, dir)
     val body = (retiredManifest +: retiredDirs.map(relativizeShardPath(dir, _)))
-      .filter(_.nonEmpty).mkString("\n")
+      .mkString("\n")
     val p = new org.apache.hadoop.fs.Path(
       s"${retiredDir(dir)}/retired-v$supersededBy")
     val out = f.create(p, true)
     try out.write(body.getBytes("UTF-8")) finally out.close()
   }
 
+  /** What one commit attempt wrote: the `shards-v<N>-<uid>` dir, the
+    * shard map listed back from it, and the `schema-v<N>-<uid>` anchor
+    * when the attempt changes the schema. */
+  private[operators] final case class Delta(dir: String,
+      shards: Map[Long, String], anchor: Option[String]) {
+    def written: Seq[String] = dir +: anchor.toSeq
+
+    /** The version after `base`: this delta's shards replace their own
+      * ids and every id in `replaced`; every other shard is carried by
+      * reference, and so is the anchor unless this delta wrote one. */
+    def over(base: Manifest, replaced: Set[Long] = Set.empty): Manifest =
+      base.copy(version = base.version + 1,
+        shards = (base.shards -- replaced) ++ shards,
+        anchor = anchor.getOrElse(base.anchor))
+  }
+
+  /** Writes version `version`'s delta: `rows` (carrying `__shard`, laid
+    * out as the caller wants the files) partitioned by shard, plus
+    * `anchor` as a zero-row schema relation when given. Shard files are
+    * internal — read back only through Spark — so they are written with
+    * micros timestamps ([[Layout.withMicrosTimestamps]]), whose INT64
+    * stats let a timestamp band prune in [[readShardedPruned]]. */
+  private[operators] def writeDelta(spark: SparkSession, dir: String,
+      version: Long, rows: DataFrame,
+      anchor: Option[DataFrame] = None): Delta = {
+    val uid = writerUid()
+    val deltaDir = s"${norm(dir)}/shards-v$version-$uid"
+    val anchorDir = anchor.map(_ => s"${norm(dir)}/schema-v$version-$uid")
+    Layout.withMicrosTimestamps(spark) {
+      for (a <- anchor; d <- anchorDir) a.write.mode("overwrite").parquet(d)
+      rows.write.partitionBy("__shard").mode("overwrite").parquet(deltaDir)
+    }
+    val shards = IndexFs.listDirNames(spark, deltaDir)
+      .filter(_.startsWith("__shard="))
+      .map(n => n.stripPrefix("__shard=").toLong -> s"$deltaDir/$n")
+      .toMap
+    Delta(deltaDir, shards, anchorDir)
+  }
+
+  /** Commits `next` over `base` (None only for the first version). A
+    * lost CAS deletes every dir in `written` and returns false —
+    * committed state is untouched and the caller decides what a lost
+    * race means. A won CAS retire-logs every dir of `base` that `next`
+    * no longer references, plus `base`'s manifest. */
+  private[operators] def commit(spark: SparkSession, dir: String,
+      base: Option[Manifest], next: Manifest, written: Seq[String]): Boolean = {
+    val won = tryCommitManifest(spark, dir, next)
+    if (!won) written.foreach(IndexFs.deleteRecursively(spark, _))
+    else base.foreach { b =>
+      val live = next.shards.values.toSet + next.anchor
+      writeRetireLog(spark, dir, next.version,
+        (b.shards.toSeq.sortBy(_._1).map(_._2) :+ b.anchor).filterNot(live),
+        s"manifest-v${b.version}")
+    }
+    won
+  }
+
+  /** The loud verdict of every writer but upsertSharded on a lost CAS:
+    * re-running a rewrite or restore against a snapshot that moved
+    * underneath it is an operator decision, never a silent retry. */
+  private def lostRace(op: String, dir: String, version: Long) =
+    new ConcurrentCommitException(
+      s"$op lost the commit race for version $version of $dir — a " +
+        "concurrent writer committed first; the snapshot is untouched " +
+        "and this attempt was discarded. Re-read and re-run against the " +
+        "new current version if still wanted")
+
+  /** The LIVE manifest — the newest committed manifest file (one root
+    * listing; a manifest file exists iff its commit CAS won, so the
+    * listing can never surface an in-flight version). Fails loudly
+    * when `dir` holds no sharded snapshot. */
+  private[operators] def readManifest(spark: SparkSession,
+      dir: String): Manifest = {
+    val versions = shardedVersions(spark, dir)
+    require(versions.nonEmpty,
+      s"no sharded snapshot at $dir — createSharded first")
+    readManifestFile(spark, dir, s"manifest-v${versions.last}")
+  }
+
+  /** Reads a named manifest file — shared by [[readManifest]] and the
+    * time-travel path. Anything but the [[tryCommitManifest]] format
+    * fails loudly and names the file: a torn tail (the header promises
+    * a trailer, and a torn read can lose the tail but never the first
+    * line), a foreign hash version, or a header missing a field. */
+  private def readManifestFile(spark: SparkSession, dir: String,
+      name: String): Manifest = {
+    val lines = IndexFs.readSmallFile(IndexFs.fs(spark, dir),
+      new org.apache.hadoop.fs.Path(s"${norm(dir)}/$name"))
+      .split("\n").toSeq.filter(_.nonEmpty)
+    def corrupt(why: String) = s"corrupt or torn manifest $name at $dir: $why"
+    val header = lines.headOption.getOrElse("")
+    val meta = header.split("\t", -1)
+    require(meta.length == 6 && meta(0) == "meta" && meta(4).nonEmpty &&
+      meta(5) == TrailerFlag,
+      corrupt(s"header '$header' is not " +
+        s"meta/nShards/salt/hash version/anchor/$TrailerFlag"))
+    require(meta(3) == ShardHashVersion,
+      s"$name at $dir was sharded under hash version ${meta(3)}, " +
+        s"this build uses $ShardHashVersion — rebuild it (createSharded) " +
+        "before merging into it")
+    val body = lines.tail
+    require(body.nonEmpty && body.last.startsWith("end\t"),
+      corrupt("missing end trailer (concurrent read of an in-flight " +
+        "commit? retry the read)"))
+    require(body.last == s"end\t${body.init.length}",
+      corrupt(s"trailer '${body.last}' does not match ${body.init.length} " +
+        "shard lines (concurrent read of an in-flight commit? retry)"))
+    Manifest(name.stripPrefix("manifest-v").toLong, meta(1).toInt, meta(2),
+      body.init.map { l =>
+        val Array(k, p) = l.split("\t", 2)
+        k.toLong -> resolveShardPath(dir, p)
+      }.toMap,
+      resolveShardPath(dir, meta(4)))
+  }
+
+  /** A version's rows: the union scan of its shard dirs, or of its
+    * zero-row anchor when it holds no shard (shards carry the schema
+    * themselves; the anchor keeps an empty version readable with its
+    * full schema). */
+  private def scan(spark: SparkSession, m: Manifest): DataFrame =
+    spark.read.parquet((
+      if (m.shards.isEmpty) Seq(m.anchor)
+      else m.shards.toSeq.sortBy(_._1).map(_._2)): _*)
+
   def existsSharded(spark: SparkSession, dir: String): Boolean =
-    IndexFs.exists(spark, manifestPtr(dir)) ||
-      shardedVersions(spark, dir).nonEmpty // committed, pointer write lost
+    shardedVersions(spark, dir).nonEmpty
 
   /** Bootstraps a sharded snapshot: rows land in `nShards` key-hash
     * shard dirs (ONE partitioned write — a hash exchange on the shard
-    * key, like any clustered write), plus a zero-row `schema/` dir so
-    * an all-deleted snapshot stays readable. `nShards` and the hash
-    * salt are persisted in the manifest — every later batch derives
-    * the IDENTICAL assignment from there, never from its own params. */
+    * key, like any clustered write), plus the zero-row anchor so an
+    * all-deleted snapshot stays readable. `nShards` and the hash salt
+    * are persisted in the manifest — every later batch derives the
+    * IDENTICAL assignment from there, never from its own params. */
   def createSharded(df: DataFrame, keyCols: Seq[String], nShards: Int,
       dir: String, salt: String = "merge"): Unit = {
     val spark = df.sparkSession
@@ -431,132 +499,51 @@ object SnapshotMerge {
     requireNoReservedKeyNames(df, keyCols, "input")
     require(!existsSharded(spark, dir),
       s"sharded snapshot already exists at $dir — upsertSharded into it")
-    // micros timestamps (scoped, Layout.withMicrosTimestamps): shard
-    // files are internal — read back only through Spark — and INT64
-    // stats are what lets a timestamp Band prune in readShardedPruned
-    val uid = writerUid()
-    val vDir = s"${norm(dir)}/shards-v1-$uid"
-    val anchorDir = s"${norm(dir)}/schema-v1-$uid"
-    Layout.withMicrosTimestamps(spark) {
-      df.limit(0).write.mode("overwrite").parquet(anchorDir)
+    val d = writeDelta(spark, dir, 1L,
       df.withColumn("__shard", shardExpr(keyCols, nShards, salt))
-        .repartition(col("__shard"))
-        .write.partitionBy("__shard").mode("overwrite").parquet(vDir)
-    }
-    val present = IndexFs.listDirNames(spark, vDir)
-      .filter(_.startsWith("__shard="))
-      .map(n => n.stripPrefix("__shard=").toLong -> s"$vDir/$n")
-    if (!tryCommitManifest(spark, dir,
-        Manifest(1L, nShards, salt, present.toMap, Some(anchorDir)))) {
-      IndexFs.deleteRecursively(spark, vDir)
-      IndexFs.deleteRecursively(spark, anchorDir)
+        .repartition(col("__shard")),
+      anchor = Some(df.limit(0)))
+    if (!commit(spark, dir, None,
+        Manifest(1L, nShards, salt, d.shards, d.anchor.get), d.written))
       throw new ConcurrentCommitException(
         s"sharded snapshot at $dir was created concurrently (version 1 " +
           "already committed) — upsertSharded into it instead")
-    }
   }
 
   /** The current sharded snapshot — a union scan of the manifest's
-    * shard dirs (schema anchored by the manifest's zero-row anchor
-    * relation, so even an empty snapshot reads with full schema). */
-  def readSharded(spark: SparkSession, dir: String): DataFrame = {
-    val m = readManifest(spark, dir)
-    // the anchor joins the scan ONLY when no shard holds rows: when
-    // shards exist they carry the schema themselves, and the anchor
-    // is pure schema metadata (both now version together through the
-    // manifest, so a read can never mix two physical schemas)
-    val dirs =
-      if (m.shards.isEmpty) Seq(anchorDirOf(spark, dir, m))
-      else m.shards.toSeq.sortBy(_._1).map(_._2)
-    spark.read.parquet(dirs: _*)
-  }
-
-  /** Reads a named manifest FILE (not the pointer) — shared by
-    * [[readManifest]] and the time-travel path. */
-  private def readManifestFile(spark: SparkSession, dir: String,
-      name: String): Manifest = {
-    val f = IndexFs.fs(spark, dir)
-    val lines = IndexFs.readSmallFile(f,
-      new org.apache.hadoop.fs.Path(s"${norm(dir)}/$name")).split("\n").toSeq
-    val meta = lines.head.split("\t")
-    require(meta(0) == "meta", s"corrupt manifest $name: bad header")
-    val ver = if (meta.length >= 4) meta(3) else "h1"
-    require(ver == ShardHashVersion,
-      s"snapshot at $dir was sharded under hash version $ver, this " +
-        s"build uses $ShardHashVersion — rebuild it (createSharded) " +
-        "before merging into it")
-    // the self-validation gate, keyed on the header's format flag: a
-    // flagged manifest whose body lacks a correct `end\t<n>` trailer
-    // is a torn read (fallback-path create-to-close window) or
-    // corruption — fail loudly, never scan a partial shard map. The
-    // flag lives in the HEADER because a torn tail can lose the
-    // trailer but never the first line — so "flagged but trailerless"
-    // is unambiguously torn, while an UNflagged manifest is a
-    // pre-flag snapshot that never wrote a trailer and still reads
-    // (its end lines, if any interim build wrote them, are skipped).
-    val bodyLines = lines.tail.filter(_.nonEmpty)
-    val shardLines =
-      if (meta.length >= 6 && meta(5) == TrailerFlag) {
-        require(bodyLines.nonEmpty && bodyLines.last.startsWith("end\t"),
-          s"corrupt or torn manifest $name at $dir: missing end trailer " +
-            "(concurrent read of an in-flight commit? retry the read)")
-        require(bodyLines.last == s"end\t${bodyLines.init.length}",
-          s"corrupt or torn manifest $name at $dir: trailer " +
-            s"'${bodyLines.last}' does not match ${bodyLines.init.length} " +
-            "shard lines (concurrent read of an in-flight commit? retry)")
-        bodyLines.init
-      } else bodyLines.filterNot(_.startsWith("end\t"))
-    Manifest(name.stripPrefix("manifest-v").toLong,
-      meta(1).toInt, meta(2),
-      shardLines.map { l =>
-        val Array(k, p) = l.split("\t", 2)
-        k.toLong -> resolveShardPath(dir, p)
-      }.toMap,
-      anchor = if (meta.length >= 5 && meta(4).nonEmpty)
-        Some(resolveShardPath(dir, meta(4))) else None)
-  }
+    * shard dirs (the manifest's zero-row anchor stands in when no
+    * shard holds rows, so even an empty snapshot reads with full
+    * schema). */
+  def readSharded(spark: SparkSession, dir: String): DataFrame =
+    scan(spark, readManifest(spark, dir))
 
   /** The snapshot versions currently READABLE — every manifest whose
     * file [[vacuumSharded]] has not yet reaped, ascending. The newest
     * entry is the live version; older entries are time-travel targets
-    * for as long as the retention window keeps them. O(1) driver
+    * for as long as the retention window keeps them. One driver
     * listing of the snapshot root. */
-  def shardedVersions(spark: SparkSession, dir: String): Seq[Long] = {
-    val f = IndexFs.fs(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(norm(dir))
-    if (!f.exists(p)) return Seq.empty
-    f.listStatus(p).toSeq
-      .filter(st => st.isFile && st.getPath.getName.matches("manifest-v\\d+"))
-      .map(_.getPath.getName.stripPrefix("manifest-v").toLong).sorted
-  }
+  def shardedVersions(spark: SparkSession, dir: String): Seq[Long] =
+    try {
+      IndexFs.fs(spark, dir).listStatus(new org.apache.hadoop.fs.Path(norm(dir)))
+        .toSeq
+        .filter(st => st.isFile && st.getPath.getName.matches("manifest-v\\d+"))
+        .map(_.getPath.getName.stripPrefix("manifest-v").toLong).sorted
+    } catch { case _: java.io.FileNotFoundException => Seq.empty }
 
   /** TIME TRAVEL: the snapshot exactly as version `version` committed
     * it — the emergent read the commit-vs-retire split pays for: every
-    * upsert/optimize leaves its predecessor's manifest AND shard dirs
-    * intact until [[vacuumSharded]]'s window expires, so any version
-    * inside the window is a complete, consistent union scan (the
-    * Delta/Iceberg `VERSION AS OF` shape). Fails LOUDLY — never a
-    * partial result — when the version's manifest or any of its shard
-    * dirs has been vacuumed: a time-travel read outside the retention
-    * window is a caller error, not a silently-smaller snapshot.
-    *
-    * The anchor is versioned through the manifest (r15), so an EMPTY
-    * version (all-deleted or just-created) reads with ITS OWN schema,
-    * even across a later [[evolveSharded]]/[[migrateSharded]]. Legacy
-    * manifests (no anchor field) fall back to the current pointer
-    * anchor — for those the pre-r15 limit stands: an empty legacy
-    * version reports today's schema (rows are correct either way —
-    * zero). */
+    * commit leaves its predecessor's manifest AND dirs intact until
+    * [[vacuumSharded]]'s window expires, so any version inside the
+    * window is a complete, consistent union scan (the Delta/Iceberg
+    * `VERSION AS OF` shape). Fails LOUDLY — never a partial result —
+    * when the version's manifest or any of its dirs has been vacuumed:
+    * a time-travel read outside the retention window is a caller
+    * error, not a silently-smaller snapshot. Each version carries its
+    * own anchor, so an EMPTY version reads with ITS OWN schema, even
+    * across a later [[evolveSharded]]/[[migrateSharded]]. */
   def readShardedVersion(spark: SparkSession, dir: String,
-      version: Long): DataFrame = {
-    val m = requireReadableVersion(spark, dir, version)
-    // shards carry the schema; the version's anchor joins only when
-    // the version is empty
-    val dirs =
-      if (m.shards.isEmpty) Seq(anchorDirOf(spark, dir, m))
-      else m.shards.toSeq.sortBy(_._1).map(_._2)
-    spark.read.parquet(dirs: _*)
-  }
+      version: Long): DataFrame =
+    scan(spark, requireReadableVersion(spark, dir, version))
 
   /** [[upsert]] against a sharded snapshot: reads and rewrites ONLY the
     * shards the batch's keys hash into; everything else is carried into
@@ -593,43 +580,22 @@ object SnapshotMerge {
       broadcastKeys: Boolean = true,
       onCommitAttempt: () => Unit = () => ()): Boolean = {
     val spark = updates.sparkSession
-    require(keyCols.nonEmpty && keyCols.forall(updates.columns.contains),
-      s"bad key columns $keyCols for ${updates.columns.mkString(",")}")
-    deleteCol.foreach(c => require(updates.columns.contains(c),
-      s"deleteCol $c absent from updates"))
-    requireNoReservedKeyNames(updates, keyCols, "updates")
-    commitTag.foreach(IndexFs.requireValidTag)
-    if (commitTag.exists(t => IndexFs.isCommitted(spark, dir, t)))
-      return false
-    require(existsSharded(spark, dir),
-      s"no sharded snapshot at $dir — createSharded first")
-
-    val ranked = updateOrder match {
-      case Some(order) => graft.ops.Dedup.keepLast(updates, keyCols, order)
-      case None => updates
-    }
-    val insertRows = deleteCol match {
-      case Some(c) => ranked.filter(!coalesce(col(c), lit(false))).drop(c)
-      case None => ranked
-    }
+    val (ranked, insertRows) = prepareBatch(updates, keyCols, dir, deleteCol,
+      updateOrder, commitTag).getOrElse(return false)
 
     // everything below depends on the manifest just read, so a lost CAS
     // restarts from here against the moved snapshot: the shard → dir
-    // map and schema anchor can move, and since reshardSharded even
-    // nShards/salt can change between attempts — which is exactly why
-    // shardExpr below is re-derived from the re-read manifest each time
+    // map, the schema anchor and even nShards/salt (reshardSharded) can
+    // move between attempts, so shardExpr is re-derived every time
     val maxCommitAttempts = 5
-    for (attempt <- 1 to maxCommitAttempts) {
+    for (_ <- 1 to maxCommitAttempts) {
       val m = readManifest(spark, dir)
       val shard = shardExpr(keyCols, m.nShards, m.salt)
       val inserts = insertRows.withColumn("__shard", shard)
-      // (r22 note: a one-collect variant — pulling the distinct key set
-      // to the driver to serve both the footprint and the anti-join's
-      // broadcast side as a LocalRelation — measured consistently
-      // SLOWER on q_merge_concurrent across three windows: the
-      // key rows embedded in every downstream plan grow analysis and
-      // task-binary cost by more than the saved broadcast-build job.
-      // Reverted to the plan-side spelling.)
+      // the key set stays a plan-side distinct: collecting it to the
+      // driver as a LocalRelation would embed the key rows in every
+      // downstream plan, which costs more analysis and task-binary
+      // time than the broadcast build it saves
       val touchedKeys = ranked.select(keyCols.map(col): _*).distinct()
         .withColumn("__shard", shard)
       // the batch's shard footprint — at most nShards rows
@@ -643,7 +609,7 @@ object SnapshotMerge {
       // does not evolve in place — untouched shards are carried by
       // reference with their old physical schema, so evolution is the
       // explicit evolveSharded/migrateSharded maintenance op
-      val anchorCols = spark.read.parquet(anchorDirOf(spark, dir, m)).columns
+      val anchorCols = spark.read.parquet(m.anchor).columns
       require(
         anchorCols.sorted.toSeq ==
           inserts.columns.filterNot(_ == "__shard").sorted.toSeq,
@@ -662,33 +628,15 @@ object SnapshotMerge {
             .withColumn("__shard", shard)
         }
 
-      val next = m.version + 1
-      val deltaDir = s"${norm(dir)}/shards-v$next-${writerUid()}"
-      Layout.withMicrosTimestamps(spark) {
-        survivors.unionByName(inserts)
-          .repartition(col("__shard"))
-          .write.partitionBy("__shard").mode("overwrite").parquet(deltaDir)
-      }
-      val rewritten = IndexFs.listDirNames(spark, deltaDir)
-        .filter(_.startsWith("__shard="))
-        .map(n => n.stripPrefix("__shard=").toLong -> s"$deltaDir/$n")
-        .toMap
-      // untouched shards ride along by reference; touched ones remap to
-      // the delta (a touched shard rewritten to zero rows drops out)
-      val merged = (m.shards -- touched) ++ rewritten
+      val d = writeDelta(spark, dir, m.version + 1,
+        survivors.unionByName(inserts).repartition(col("__shard")))
       onCommitAttempt()
-      if (tryCommitManifest(spark, dir,
-          Manifest(next, m.nShards, m.salt, merged, m.anchor))) {
-        // the commit is complete at the CAS above; superseded dirs +
-        // manifest go to the retire log for a windowed vacuum
-        writeRetireLog(spark, dir, next, currentTouchedDirs,
-          s"manifest-v${m.version}")
+      // touched shards remap to the delta (one rewritten to zero rows
+      // drops out); the rest ride along by reference
+      if (commit(spark, dir, Some(m), d.over(m, touched), d.written)) {
         commitTag.foreach(t => IndexFs.markCommitted(spark, dir, t))
         return true
       }
-      // lost the race: our delta references nothing committed — drop it
-      // and re-merge against whatever version beat us
-      IndexFs.deleteRecursively(spark, deltaDir)
     }
     throw new ConcurrentCommitException(
       s"upsertSharded at $dir lost the commit CAS $maxCommitAttempts " +
@@ -708,14 +656,12 @@ object SnapshotMerge {
     * slices, and the partitioned write splits boundary slices per
     * shard — clustered files land under each `__shard=` dir, each with
     * a narrow stats window, plus a [[Layout]] stats sidecar per shard.
-    * Commits like an upsert: new version dir, manifest CAS, superseded
-    * dirs retire-logged for [[vacuumSharded]]. Content is preserved
+    * Commits like every writer ([[commit]]). Content is preserved
     * row-for-row (hash-gated in q_merge_optimize_sharded). A lost CAS
     * (a concurrent CDC batch committed mid-rewrite) throws
     * [[ConcurrentCommitException]] — retrying a FULL-rewrite against a
     * moved snapshot is an operator decision, not something to spin on
-    * silently; the committed snapshot is untouched and the failed
-    * delta is deleted. Maintenance-window cost: one full snapshot
+    * silently. Maintenance-window cost: one full snapshot
     * read + clustered write — the same posture as [[Layout.optimize]]
     * and the index refits. `keyCols` are the snapshot's merge keys (the
     * manifest persists the hash params but not the key column NAMES —
@@ -729,37 +675,23 @@ object SnapshotMerge {
     require(filesPerShard > 0, s"filesPerShard=$filesPerShard must be positive")
     val m = readManifest(spark, dir)
     require(m.shards.nonEmpty, s"nothing to optimize at $dir (empty snapshot)")
-    val current = spark.read.parquet(m.shards.toSeq.sortBy(_._1).map(_._2): _*)
+    val current = scan(spark, m)
     require(keyCols.nonEmpty && keyCols.forall(current.columns.contains),
       s"bad key columns $keyCols for ${current.columns.mkString(",")}")
     require(clusterCols.nonEmpty && clusterCols.forall(current.columns.contains),
       s"bad cluster columns $clusterCols for ${current.columns.mkString(",")}")
-    val next = m.version + 1
-    val deltaDir = s"${norm(dir)}/shards-v$next-${writerUid()}"
     val withShard = current.withColumn("__shard",
       shardExpr(keyCols, m.nShards, m.salt))
-    Layout.withMicrosTimestamps(spark) {
+    val d = writeDelta(spark, dir, m.version + 1,
       Layout.withZValue(withShard, clusterCols, curve = curve,
           rankMode = rankMode)
         .repartitionByRange(math.max(1, m.shards.size * filesPerShard),
           col("__shard"), col("__zvalue"))
         .sortWithinPartitions("__shard", "__zvalue")
-        .drop("__zvalue")
-        .write.partitionBy("__shard").mode("overwrite").parquet(deltaDir)
-    }
-    val rewritten = IndexFs.listDirNames(spark, deltaDir)
-      .filter(_.startsWith("__shard="))
-      .map(n => n.stripPrefix("__shard=").toLong -> s"$deltaDir/$n")
-      .toMap
-    rewritten.values.foreach(d => Layout.writeStatsSidecar(spark, d, clusterCols))
-    val mergedShards = m.shards.filter { case (k, _) =>
-      !rewritten.contains(k) } ++ rewritten
-    commitMaintenanceOrThrow(spark, dir, deltaDir,
-      Manifest(next, m.nShards, m.salt, mergedShards, m.anchor),
-      "optimizeSharded")
-    writeRetireLog(spark, dir, next,
-      m.shards.view.filterKeys(rewritten.contains).values.toSeq,
-      s"manifest-v${m.version}")
+        .drop("__zvalue"))
+    d.shards.values.foreach(s => Layout.writeStatsSidecar(spark, s, clusterCols))
+    if (!commit(spark, dir, Some(m), d.over(m), d.written))
+      throw lostRace("optimizeSharded", dir, m.version + 1)
   }
 
   /** Small-file COMPACTION without re-clustering — the maintenance op
@@ -780,9 +712,8 @@ object SnapshotMerge {
     *
     * ONE Spark job for all qualifying shards (each shard's rows tagged
     * with its manifest shard id — no key re-hash, so no `keyCols`
-    * param and no reshard risk), then the standard maintenance commit:
-    * writer-unique version dir, manifest CAS (lost race throws
-    * [[ConcurrentCommitException]]), superseded dirs retire-logged.
+    * param and no reshard risk), then the shared [[commit]] (a lost
+    * race throws [[ConcurrentCommitException]]).
     * The per-shard listing fan-out is overlapped
     * ([[GraftSession.concurrently]]). Returns the number of shards
     * compacted (0 = nothing qualified, no version committed). */
@@ -813,46 +744,12 @@ object SnapshotMerge {
       .withColumn("__shard",
         regexp_extract(element_at(split(input_file_name(), "/"), -2),
           "^__shard=(\\d+)$", 1).cast("long"))
-    val next = m.version + 1
-    val deltaDir = s"${norm(dir)}/shards-v$next-${writerUid()}"
-    Layout.withMicrosTimestamps(spark) {
-      packed
-        .repartition(col("__shard")) // all of a shard's rows → one task → one file
-        .write.partitionBy("__shard").mode("overwrite").parquet(deltaDir)
-    }
-    val rewritten = IndexFs.listDirNames(spark, deltaDir)
-      .filter(_.startsWith("__shard="))
-      .map(n => n.stripPrefix("__shard=").toLong -> s"$deltaDir/$n")
-      .toMap
-    val mergedShards = m.shards.filter { case (k, _) =>
-      !rewritten.contains(k) } ++ rewritten
-    commitMaintenanceOrThrow(spark, dir, deltaDir,
-      Manifest(next, m.nShards, m.salt, mergedShards, m.anchor),
-      "compactSharded")
-    writeRetireLog(spark, dir, next,
-      m.shards.view.filterKeys(rewritten.contains).values.toSeq,
-      s"manifest-v${m.version}")
+    // all of a shard's rows → one task → one file
+    val d = writeDelta(spark, dir, m.version + 1,
+      packed.repartition(col("__shard")))
+    if (!commit(spark, dir, Some(m), d.over(m), d.written))
+      throw lostRace("compactSharded", dir, m.version + 1)
     qualifying.size
-  }
-
-  /** Shared commit tail of the full-rewrite maintenance ops
-    * (optimize/evolve/migrate/compact): CAS the manifest; on a lost
-    * race delete the already-written delta and fail LOUDLY — a
-    * maintenance rewrite must never silently redo itself against a
-    * snapshot that moved underneath it (the operator re-decides;
-    * upserts are the ones that auto-retry). */
-  private[operators] def commitMaintenanceOrThrow(spark: SparkSession, dir: String,
-      deltaDir: String, m: Manifest, op: String,
-      alsoDelete: Seq[String] = Nil): Unit = {
-    if (!tryCommitManifest(spark, dir, m)) {
-      IndexFs.deleteRecursively(spark, deltaDir)
-      alsoDelete.foreach(IndexFs.deleteRecursively(spark, _))
-      throw new ConcurrentCommitException(
-        s"$op lost the commit race for version ${m.version} of $dir — a " +
-          "concurrent writer committed first; the snapshot is untouched " +
-          "and this rewrite was discarded. Re-run against the new " +
-          "current version if still wanted")
-    }
   }
 
   /** The sharded snapshot's SCHEMA MIGRATION — the maintenance op the
@@ -860,14 +757,11 @@ object SnapshotMerge {
     * under the union of the current schema and `template`'s (survivor
     * rows null-fill columns only the template brings; a column the
     * template drops is KEPT — evolution only widens, narrowing is
-    * [[migrateSharded]]), writes the widened zero-row anchor as a NEW
-    * versioned dir carried by the new manifest (r15 — invisible until
-    * the commit CAS lands, so there is no anchor-vs-manifest crash
-    * window), and commits like an upsert (new version dir, manifest
-    * pointer swap, superseded SHARD dirs AND the superseded anchor
-    * retire-logged for [[vacuumSharded]]'s retention window — a legacy
-    * pointer-managed anchor is left in place for the legacy manifests
-    * that still resolve it). After it,
+    * [[migrateSharded]]) and writes the widened zero-row anchor as a NEW
+    * versioned dir beside the shard delta. Both become visible together
+    * at the manifest CAS, so there is no anchor-vs-manifest crash
+    * window, and the superseded shard dirs and anchor are retire-logged
+    * for [[vacuumSharded]]'s retention window. After it,
     * batches carrying the new columns merge normally. Full-rewrite
     * cost by design — the same maintenance-window posture as
     * [[optimizeSharded]]: the sharded layout's by-reference carry means
@@ -880,7 +774,7 @@ object SnapshotMerge {
   def evolveSharded(spark: SparkSession, dir: String,
       keyCols: Seq[String], template: DataFrame): Unit = {
     val m = readManifest(spark, dir)
-    val anchor = spark.read.parquet(anchorDirOf(spark, dir, m))
+    val anchor = spark.read.parquet(m.anchor)
     require(keyCols.nonEmpty && keyCols.forall(anchor.columns.contains),
       s"bad key columns $keyCols for ${anchor.columns.mkString(",")}")
     require(!template.columns.contains("__shard"),
@@ -896,40 +790,13 @@ object SnapshotMerge {
         s"(snapshot already has ${anchor.columns.sorted.mkString(",")})")
     val widened = anchor.limit(0)
       .unionByName(template.limit(0), allowMissingColumns = true)
-    val current =
-      if (m.shards.isEmpty) anchor.limit(0)
-      else spark.read.parquet(m.shards.toSeq.sortBy(_._1).map(_._2): _*)
-    val rewrittenRows = current
+    val rewrittenRows = scan(spark, m)
       .unionByName(widened.limit(0), allowMissingColumns = true)
       .withColumn("__shard", shardExpr(keyCols, m.nShards, m.salt))
-    val next = m.version + 1
-    val uid = writerUid()
-    val deltaDir = s"${norm(dir)}/shards-v$next-$uid"
-    val anchorDir = s"${norm(dir)}/schema-v$next-$uid"
-    Layout.withMicrosTimestamps(spark) {
-      // the anchor evolves WITH the data, atomically: it lands in a
-      // NEW versioned dir that nothing resolves until the manifest CAS
-      // commits — a crash or lost race leaves the old manifest (and
-      // its old anchor) fully live, and the orphaned dirs are inert
-      // until vacuum
-      widened.write.mode("overwrite").parquet(anchorDir)
-      rewrittenRows
-        .repartition(col("__shard"))
-        .write.partitionBy("__shard").mode("overwrite").parquet(deltaDir)
-    }
-    val rewritten = IndexFs.listDirNames(spark, deltaDir)
-      .filter(_.startsWith("__shard="))
-      .map(n => n.stripPrefix("__shard=").toLong -> s"$deltaDir/$n")
-      .toMap
-    val mergedShards = m.shards.filter { case (k, _) =>
-      !rewritten.contains(k) } ++ rewritten
-    commitMaintenanceOrThrow(spark, dir, deltaDir,
-      Manifest(next, m.nShards, m.salt, mergedShards, Some(anchorDir)),
-      "evolveSharded", alsoDelete = Seq(anchorDir))
-    writeRetireLog(spark, dir, next,
-      m.shards.view.filterKeys(rewritten.contains).values.toSeq ++
-        m.anchor, // the superseded anchor gets the same windowed retention
-      s"manifest-v${m.version}")
+    val d = writeDelta(spark, dir, m.version + 1,
+      rewrittenRows.repartition(col("__shard")), anchor = Some(widened))
+    if (!commit(spark, dir, Some(m), d.over(m), d.written))
+      throw lostRace("evolveSharded", dir, m.version + 1)
   }
 
   /** RESTORE — roll the LIVE snapshot back to a retained version (the
@@ -952,29 +819,18 @@ object SnapshotMerge {
     * restoring across a [[reshardSharded]] boundary re-activates the
     * old assignment, and restoring across an
     * [[evolveSharded]]/[[migrateSharded]] rolls the SCHEMA back with
-    * the data — the next upsert merges under the restored schema (a
-    * legacy no-anchor target keeps resolving the pointer anchor, whose
-    * schema the migrate lifecycle owns). Returns the new (restored)
-    * version number. */
+    * the data — the next upsert merges under the restored schema.
+    * Returns the new (restored) version number. */
   def restoreSharded(spark: SparkSession, dir: String,
       version: Long): Long = {
     val m = readManifest(spark, dir)
     require(version != m.version,
       s"restoreSharded: version $version IS the live version of $dir")
-    val target = requireReadableVersion(spark, dir, version)
-    val next = m.version + 1
-    if (!tryCommitManifest(spark, dir,
-        Manifest(next, target.nShards, target.salt, target.shards,
-          target.anchor)))
-      throw new ConcurrentCommitException(
-        s"restoreSharded lost the commit race for version $next of $dir — " +
-          "a concurrent writer committed first; re-read and re-decide " +
-          "the restore target")
-    val reactivated = target.shards.values.toSet ++ target.anchor
-    writeRetireLog(spark, dir, next,
-      (m.shards.values ++ m.anchor).filterNot(reactivated.contains).toSeq,
-      s"manifest-v${m.version}")
-    next
+    val next = requireReadableVersion(spark, dir, version)
+      .copy(version = m.version + 1)
+    if (!commit(spark, dir, Some(m), next, Nil))
+      throw lostRace("restoreSharded", dir, next.version)
+    next.version
   }
 
   /** RESHARD — change the snapshot's shard COUNT (the answer to
@@ -997,43 +853,29 @@ object SnapshotMerge {
     require(newNShards > 0, s"newNShards=$newNShards must be positive")
     val m = readManifest(spark, dir)
     if (newNShards == m.nShards) return false
-    val anchor = spark.read.parquet(anchorDirOf(spark, dir, m))
-    require(keyCols.nonEmpty && keyCols.forall(anchor.columns.contains),
-      s"bad key columns $keyCols for ${anchor.columns.mkString(",")}")
-    val current =
-      if (m.shards.isEmpty) anchor.limit(0)
-      else spark.read.parquet(m.shards.toSeq.sortBy(_._1).map(_._2): _*)
-    val next = m.version + 1
-    val deltaDir = s"${norm(dir)}/shards-v$next-${writerUid()}"
-    Layout.withMicrosTimestamps(spark) {
-      current
-        .withColumn("__shard", shardExpr(keyCols, newNShards, m.salt))
-        .repartition(col("__shard"))
-        .write.partitionBy("__shard").mode("overwrite").parquet(deltaDir)
-    }
-    val rewritten = IndexFs.listDirNames(spark, deltaDir)
-      .filter(_.startsWith("__shard="))
-      .map(n => n.stripPrefix("__shard=").toLong -> s"$deltaDir/$n")
-      .toMap
-    commitMaintenanceOrThrow(spark, dir, deltaDir,
-      Manifest(next, newNShards, m.salt, rewritten, m.anchor),
-      "reshardSharded")
-    writeRetireLog(spark, dir, next, m.shards.values.toSeq,
-      s"manifest-v${m.version}")
+    val current = scan(spark, m)
+    require(keyCols.nonEmpty && keyCols.forall(current.columns.contains),
+      s"bad key columns $keyCols for ${current.columns.mkString(",")}")
+    val d = writeDelta(spark, dir, m.version + 1,
+      current.withColumn("__shard", shardExpr(keyCols, newNShards, m.salt))
+        .repartition(col("__shard")))
+    if (!commit(spark, dir, Some(m),
+        d.over(m, replaced = m.shards.keySet).copy(nShards = newNShards),
+        d.written))
+      throw lostRace("reshardSharded", dir, m.version + 1)
     true
   }
 
   /** COLUMN RENAME / DROP migration — the narrowing counterpart of
     * [[evolveSharded]] (which only widens): rewrites EVERY shard under
-    * the target schema (`renames` applied, `drops` removed), refreshes
-    * the zero-row `schema/` anchor, and commits like every maintenance
-    * op (writer-unique version dir, manifest CAS — a lost race throws
-    * [[ConcurrentCommitException]] — superseded shard dirs
-    * retire-logged). Old versions keep their OLD schema: shard files
-    * are immutable and time travel reads them as written, so a
-    * `readShardedVersion` before the migration still shows the dropped
-    * column. After it, batches must arrive in the NEW spelling and
-    * callers address the snapshot with the NEW key names.
+    * the target schema (`renames` applied, `drops` removed) beside a new
+    * zero-row anchor of that schema, and commits like every maintenance
+    * op (a lost race throws [[ConcurrentCommitException]]; superseded
+    * shard dirs and anchor retire-logged). Old versions keep their OLD
+    * schema: shard files are immutable and time travel reads them as
+    * written, so a `readShardedVersion` before the migration still
+    * shows the dropped column. After it, batches must arrive in the NEW
+    * spelling and callers address the snapshot with the NEW key names.
     *
     * Renaming a KEY column is legal — the shard assignment hashes key
     * VALUES, which don't move (the assignment is recomputed under the
@@ -1046,7 +888,7 @@ object SnapshotMerge {
       renames: Map[String, String] = Map.empty,
       drops: Seq[String] = Nil): Unit = {
     val m = readManifest(spark, dir)
-    val anchor = spark.read.parquet(anchorDirOf(spark, dir, m))
+    val anchor = spark.read.parquet(m.anchor)
     val cols = anchor.columns.toSeq
     require(keyCols.nonEmpty && keyCols.forall(cols.contains),
       s"bad key columns $keyCols for ${cols.mkString(",")}")
@@ -1075,45 +917,21 @@ object SnapshotMerge {
       "reserved internal column name in migrated schema: __shard")
     requireNoReservedKeyNames(newAnchor, newKeyCols, "migrated schema")
 
-    val current =
-      if (m.shards.isEmpty) anchor.limit(0)
-      else spark.read.parquet(m.shards.toSeq.sortBy(_._1).map(_._2): _*)
     // shard BEFORE renaming: assignment hashes the same key values
     // every batch hashed, regardless of what the columns are called
     val rewrittenRows = renames.foldLeft(
         drops.foldLeft(
-          current.withColumn("__shard", shardExpr(keyCols, m.nShards, m.salt))
+          scan(spark, m).withColumn("__shard", shardExpr(keyCols, m.nShards, m.salt))
         )(_.drop(_))) {
       case (df, (from, to)) => df.withColumnRenamed(from, to)
     }
-    val next = m.version + 1
-    val uid = writerUid()
-    val deltaDir = s"${norm(dir)}/shards-v$next-$uid"
-    val anchorDir = s"${norm(dir)}/schema-v$next-$uid"
-    Layout.withMicrosTimestamps(spark) {
-      // versioned anchor (r15): the narrowed anchor lands in a new dir
-      // nothing resolves until the CAS commits — the pre-r15 ordering
-      // dilemma (publish before the CAS under-reports columns to the
-      // old manifest, publish after leaves a crash window where the
-      // new manifest sees the old wider anchor) is gone
-      newAnchor.write.mode("overwrite").parquet(anchorDir)
-      rewrittenRows
-        .repartition(col("__shard"))
-        .write.partitionBy("__shard").mode("overwrite").parquet(deltaDir)
-    }
-    val rewritten = IndexFs.listDirNames(spark, deltaDir)
-      .filter(_.startsWith("__shard="))
-      .map(n => n.stripPrefix("__shard=").toLong -> s"$deltaDir/$n")
-      .toMap
-    val mergedShards = m.shards.filter { case (k, _) =>
-      !rewritten.contains(k) } ++ rewritten
-    commitMaintenanceOrThrow(spark, dir, deltaDir,
-      Manifest(next, m.nShards, m.salt, mergedShards, Some(anchorDir)),
-      "migrateSharded", alsoDelete = Seq(anchorDir))
-    writeRetireLog(spark, dir, next,
-      m.shards.view.filterKeys(rewritten.contains).values.toSeq ++
-        m.anchor,
-      s"manifest-v${m.version}")
+    // the narrowed anchor lands beside the shard delta and goes live at
+    // the same CAS: the old manifest keeps reading the old anchor, the
+    // new one the new anchor, and no crash point mixes them
+    val d = writeDelta(spark, dir, m.version + 1,
+      rewrittenRows.repartition(col("__shard")), anchor = Some(newAnchor))
+    if (!commit(spark, dir, Some(m), d.over(m), d.written))
+      throw lostRace("migrateSharded", dir, m.version + 1)
   }
 
   /** CHANGE DATA FEED between two retained versions — what turns the
@@ -1159,7 +977,7 @@ object SnapshotMerge {
     def side(m: Manifest): DataFrame = {
       val dirs = m.shards.view.filterKeys(changedIds).values.toSeq.sorted
       if (dirs.isEmpty)
-        spark.read.parquet(anchorDirOf(spark, dir, m)).limit(0)
+        spark.read.parquet(m.anchor).limit(0)
       else spark.read.parquet(dirs: _*)
     }
     val oldSide = side(mFrom)
@@ -1224,7 +1042,7 @@ object SnapshotMerge {
         s"(readable versions: ${shardedVersions(spark, dir).mkString(",")})")
     val m = readManifestFile(spark, dir, name)
     val missing = GraftSession.concurrently(spark, MetadataFanOut)(
-        (m.shards.values.toSeq ++ m.anchor).map(p => () =>
+        (m.shards.values.toSeq :+ m.anchor).map(p => () =>
           p -> IndexFs.exists(spark, p))).collect { case (p, false) => p }
     require(missing.isEmpty,
       s"version $version of $dir lost ${missing.size} dir(s) to " +
@@ -1248,7 +1066,7 @@ object SnapshotMerge {
     val selected = GraftSession.concurrently(spark, MetadataFanOut)(
       dirs.map(d => () => Layout.prunedFilesInDir(spark, d, bands)._1)).flatten
     if (selected.isEmpty)
-      spark.read.parquet(anchorDirOf(spark, dir, m)).limit(0)
+      spark.read.parquet(m.anchor).limit(0)
     else spark.read.parquet(selected: _*)
   }
 
@@ -1278,13 +1096,13 @@ object SnapshotMerge {
   /** Reaps snapshot state nothing can reach anymore, behind a
     * retention window:
     *
-    *  - RETIRED shard dirs + manifests (logged by [[upsertSharded]] /
-    *    [[optimizeSharded]] at supersession time): deleted once their
+    *  - RETIRED dirs + manifests (logged by every winning [[commit]]
+    *    at supersession time): deleted once their
     *    retire-log entry is older than `minAgeMs` — measured from the
     *    SUPERSESSION instant (the log file's mtime), so "readers get at
     *    least `minAgeMs` to finish a scan of the old version" holds
     *    regardless of when the data was originally written.
-    *  - ORPHANS (delta dirs a crashed upsert half-wrote before its
+    *  - ORPHANS (delta dirs a crashed writer half-wrote before its
     *    commit — reachable by no manifest, logged by no retire entry):
     *    under a real window these are reaped CONSERVATIVELY — a
     *    synthesized retire-log entry is written at first sight and the
@@ -1310,9 +1128,9 @@ object SnapshotMerge {
     def qual(p: String): String =
       f.makeQualified(new org.apache.hadoop.fs.Path(p)).toString
     val cutoff = System.currentTimeMillis() - minAgeMs
-    // liveness covers the anchor too (r15: the anchor is a versioned
-    // dir the manifest references like any shard dir)
-    val live = (m.shards.values ++ m.anchor).map(qual).toSet
+    // liveness covers the anchor too: it is a versioned dir the
+    // manifest references like any shard dir
+    val live = (m.shards.values.toSeq :+ m.anchor).map(qual).toSet
     val curManifest = s"manifest-v${m.version}"
     var reaped = 0
 
@@ -1371,7 +1189,7 @@ object SnapshotMerge {
     // phase 2: orphans — unreachable and unlogged. With a real window
     // these are NOT reaped on their write-time mtime: an unlogged dead
     // dir can be a JUST-superseded shard whose upsert crashed between
-    // the pointer swap and its retire-log write, and its write mtime
+    // the manifest commit and its retire-log write, and its write mtime
     // can be arbitrarily older than the supersession instant — reaping
     // on it would break the "readers keep the old version for minAgeMs
     // after supersession" guarantee across that crash. Instead a
@@ -1383,7 +1201,7 @@ object SnapshotMerge {
     // window waives the reader guarantee by definition.
     val versionDirs = IndexFs.listDirNames(spark, dir)
       .filter(_.startsWith("shards-v")).map(v => s"${norm(dir)}/$v")
-    // versioned anchor dirs (r15) are top-level candidates with the
+    // versioned anchor dirs are top-level candidates with the
     // same orphan rule — an unreferenced one is a crashed writer's
     // debris or a retire-log-crash leftover, never deletable while the
     // live manifest (or an unexpired retire entry) names it
@@ -1432,9 +1250,10 @@ object SnapshotMerge {
       }
     }
 
-    // phase 3: superseded manifest FILES (pre-retire-log leftovers and
-    // crash debris); the current one and any named by an unexpired
-    // retire log stay. Same conservative rule as phase 2: under a real
+    // phase 3: superseded manifest FILES no retire log names (a commit
+    // that crashed before its retire-log write); the current one and
+    // any named by an unexpired retire log stay. Same conservative
+    // rule as phase 2: under a real
     // window an UNLOGGED superseded manifest gets a synthesized retire
     // entry (its file mtime is the version's COMMIT time, not its
     // supersession time — reaping on it would shrink a time-travel

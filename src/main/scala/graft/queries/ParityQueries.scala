@@ -458,7 +458,7 @@ object ParityQueries {
   }
 
   // --- TIME TRAVEL over the sharded snapshot: the emergent read the
-  // r14 commit-vs-retire split pays for. Version 1 (the pre-batch
+  // commit-vs-retire split pays for. Version 1 (the pre-batch
   // snapshot) is read back AFTER a later version committed — its
   // manifest and shard dirs are retained until a windowed vacuum, so
   // the read is complete and consistent (VERSION AS OF). The batch is
@@ -641,7 +641,7 @@ object ParityQueries {
 
   // --- STREAMING CDC through the SHARDED layout: the same micro-batch
   // feed as q_stream_merge_upsert applied via mergeStream(sharded =
-  // true) — exactly-once per batch THROUGH the manifest pointer swaps,
+  // true) — exactly-once per batch THROUGH the manifest commits,
   // each micro-batch rewriting only its touched shards. Shares the flat
   // query's oracle verbatim: arrival mode and layout must never change
   // the merged content. ---
@@ -671,21 +671,23 @@ object ParityQueries {
       .orderBy(col("o_orderkey"))
   }
 
-  // --- CDF REPLICATION round trip under the hard gate: a three-version
-  // source snapshot (create → upsert-with-deletes → status rewrite) is
+  // --- CDF REPLICATION round trip under the hard gate: a five-version
+  // source snapshot (create → price bump with deletes → status rewrite
+  // that reinserts, each batch committed as two key-disjoint halves) is
   // mirrored into a REPLICA table purely through the change feed —
   // consumeShardedChanges follows the manifest chain from a durable
-  // checkpoint (bootstrap inserts, then per-version diffs), and
-  // replicateSharded applies each span under a version-derived commit
-  // tag (exactly-once effects). The first replicate call runs MID-chain
-  // (after v1 only), the second drains v2..v3 — incremental pickup is
-  // inside the measured query, not just spec-proven. The oracle
-  // recomputes the source's final keep-last state from the orders
-  // fixture; any change row lost, duplicated, or misapplied (or a
-  // bootstrap/diff boundary error) diverges the replica and fails the
-  // hash. ---
+  // checkpoint (bootstrap inserts, then diffs), and replicateSharded
+  // applies each span under a version-derived commit tag (exactly-once
+  // effects). The replica bootstraps MID-chain (after v1 only), drains
+  // v2..v3 one version at a time, then v4..v5 as one coalesced span, so
+  // incremental pickup and both drain shapes run inside the measured
+  // query. The oracle recomputes the source's final keep-last state
+  // from the orders fixture; any change row lost, duplicated, or
+  // misapplied (or a bootstrap/diff boundary error) diverges the
+  // replica and fails the hash. ---
   val streamCdfReplica: Q = (s, dir) => {
     import graft.operators.SnapshotMerge
+    import graft.streaming.StreamingOps
     val orders = t(s, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"),
         col("o_orderstatus"), col("o_totalprice"))
@@ -698,23 +700,27 @@ object ParityQueries {
       orders.filter(col("o_orderkey") % 2 === 0), Seq("o_orderkey"),
       nShards = 8, srcSnap) // v1
     // replica bootstraps from v1 before the later versions exist
-    graft.streaming.StreamingOps.replicateSharded(
+    StreamingOps.replicateSharded(
       s, srcSnap, replica, Seq("o_orderkey"), ckptDir, nShards = 8)
-    SnapshotMerge.upsertSharded( // v2: price bump, %9 deletes
-      orders.filter(col("o_orderkey") % 3 === 0)
-        .withColumn("o_totalprice", col("o_totalprice") + 1000.0)
-        .withColumn("is_deleted", col("o_orderkey") % 9 === 0),
-      Seq("o_orderkey"), srcSnap, deleteCol = Some("is_deleted"))
-    SnapshotMerge.upsertSharded( // v3: status rewrite, reinserts %45s
-      orders.filter(col("o_orderkey") % 5 === 0)
-        .withColumn("o_orderstatus", lit("R")),
-      Seq("o_orderkey"), srcSnap)
-    // drain v2..v3 as ONE coalesced span (r22, guide §2.4): the span
-    // diff composes the two versions' effects exactly, so the replica
-    // content — the gated output — is byte-identical at one diff join
-    // + one merge instead of two of each. Incremental pickup is still
-    // exercised: this second call starts from the v1 checkpoint.
-    graft.streaming.StreamingOps.replicateSharded(
+    // price bump with %9 deletes over the %3 keys: v2 = %6, v3 = the rest
+    val bump = orders.filter(col("o_orderkey") % 3 === 0)
+      .withColumn("o_totalprice", col("o_totalprice") + 1000.0)
+      .withColumn("is_deleted", col("o_orderkey") % 9 === 0)
+    Seq(bump.filter(col("o_orderkey") % 6 === 0),
+        bump.filter(col("o_orderkey") % 6 =!= 0)).foreach(half =>
+      SnapshotMerge.upsertSharded(half, Seq("o_orderkey"), srcSnap,
+        deleteCol = Some("is_deleted")))
+    StreamingOps.replicateSharded(
+      s, srcSnap, replica, Seq("o_orderkey"), ckptDir, nShards = 8)
+    // status rewrite over the %5 keys, reinserting %45s: v4 = %10, v5 =
+    // the rest — drained as ONE coalesced span (one diff join + one
+    // merge), whose diff composes the two versions' effects exactly
+    val rewrite = orders.filter(col("o_orderkey") % 5 === 0)
+      .withColumn("o_orderstatus", lit("R"))
+    Seq(rewrite.filter(col("o_orderkey") % 10 === 0),
+        rewrite.filter(col("o_orderkey") % 10 =!= 0)).foreach(half =>
+      SnapshotMerge.upsertSharded(half, Seq("o_orderkey"), srcSnap))
+    StreamingOps.replicateSharded(
       s, srcSnap, replica, Seq("o_orderkey"), ckptDir, nShards = 8,
       coalesceSpans = true)
     SnapshotMerge.readSharded(s, replica).orderBy(col("o_orderkey"))
@@ -726,10 +732,10 @@ object ParityQueries {
   // deterministic, where a thread race would be flaky), writer B runs a
   // COMPLETE competing upsert. A's commit CAS loses, A re-reads the
   // moved snapshot and retries onto it. The oracle applies the batches
-  // SEQUENTIALLY (B then A — the commit order the race resolves to):
-  // under the r14 last-pointer-swap-wins protocol A's commit silently
-  // DISCARDED B's committed batch and this hash fails; under the CAS
-  // the retry path must converge to the sequential fixed point exactly.
+  // SEQUENTIALLY (B then A — the commit order the race resolves to): a
+  // commit that let the last writer win would silently DISCARD B's
+  // committed batch and fail this hash; under the manifest CAS the
+  // retry path must converge to the sequential fixed point exactly.
   // Rerun-stable: both batches are idempotent re-applies. ---
   val mergeConcurrent: Q = (s, dir) => {
     import graft.operators.SnapshotMerge
@@ -1240,7 +1246,7 @@ object ParityQueries {
          ORDER BY o_orderkey, _change_type""",
     // two RACING writers resolve to the sequential fixed point (B
     // commits first, A retries onto it): a batch silently discarded by
-    // the losing commit — the r14 last-swap-wins failure — or a
+    // the losing commit — the last-writer-wins failure — or a
     // double-applied retry both fail the hash
     "q_merge_concurrent" ->
       """WITH snap AS (SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice

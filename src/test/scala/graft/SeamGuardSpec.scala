@@ -6,10 +6,12 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps the driver-concurrency and scratch seams single: thread pools,
-  * execution contexts, persisted-RDD registry reads and local
-  * checkpoints are spelled only in `GraftSession.scala`
-  * ([[GraftSession.concurrently]], [[GraftSession.localPin]]). */
+/** Keeps cross-cutting seams single: thread pools, execution contexts,
+  * persisted-RDD registry reads and local checkpoints are spelled only
+  * in `GraftSession.scala` ([[GraftSession.concurrently]],
+  * [[GraftSession.localPin]]); shard-partitioned writes, manifest
+  * commits and retire logs only in the commit seam of
+  * `SnapshotMerge.scala` (`writeDelta` / `commit`). */
 class SeamGuardSpec extends AnyFunSuite {
 
   private val banned =
@@ -33,6 +35,32 @@ class SeamGuardSpec extends AnyFunSuite {
       f <- files if f != seam.head
       (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
       token <- banned if line.contains(token)
+    } yield s"$f:${n + 1}: $token"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  private val commitTokens =
+    Seq(""".partitionBy("__shard")""", "tryCommitManifest(", "writeRetireLog(")
+
+  test("shard-partitioned writes, manifest commits and retire logs live only in the commit seam") {
+    val files = sources()
+    val merge = files.filter(_.getFileName.toString == "SnapshotMerge.scala")
+    assert(merge.size == 1, "the scan must see SnapshotMerge.scala")
+    val lines = Files.readAllLines(merge.head).asScala.toIndexedSeq
+    // the seam: from tryCommitManifest's definition to the end of commit's
+    val start = lines.indexWhere(_.contains("def tryCommitManifest("))
+    val commitDef = lines.indexWhere(_.contains("def commit("))
+    val end = lines.indexWhere(_ == "  }", commitDef)
+    assert(start >= 0 && start < commitDef && commitDef < end,
+      "the seam must run from tryCommitManifest to the end of commit")
+    val seam = lines.slice(start, end + 1)
+    commitTokens.foreach(t =>
+      assert(seam.exists(_.contains(t)), s"the commit seam must hold $t"))
+    val offenders = for {
+      f <- files
+      (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
+      if !(f == merge.head && n >= start && n <= end)
+      token <- commitTokens if line.contains(token)
     } yield s"$f:${n + 1}: $token"
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }

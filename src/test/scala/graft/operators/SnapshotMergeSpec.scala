@@ -266,6 +266,13 @@ class SnapshotMergeSpec extends SparkSpec {
     val got = SnapshotMerge.readSharded(spark, dir).orderBy("id")
       .select("name").as[String].collect().toSeq
     assert(got == Seq("a", "b2", "c2"))
+    // readers and writers accept the same spellings
+    SnapshotMerge.upsertSharded(
+      Seq((1L, "a2", 11.0)).toDF("id", "name", "score"), Seq("id"), dir + "/")
+    Seq(dir, dir + "/", "file:" + dir).foreach { spelled =>
+      assert(SnapshotMerge.readSharded(spark, spelled).orderBy("id")
+        .select("name").as[String].collect().toSeq == Seq("a2", "b2", "c2"))
+    }
   }
 
   test("a moved snapshot keeps working (relative manifest paths)") {
@@ -687,9 +694,9 @@ class SnapshotMergeSpec extends SparkSpec {
       .select(col("id"), concat(lit("n"), col("id")).as("name"))
     SnapshotMerge.createSharded(big, Seq("id"), 8, dir) // v1
     // writer A reads v1, writes its delta … and in its commit window
-    // writer B runs a COMPLETE upsert (committing v2). Under the r14
-    // pointer swap A's later swap silently discarded B's batch; under
-    // the CAS, A's commit of v2 loses, A re-reads v2 and commits v3.
+    // writer B runs a COMPLETE upsert (committing v2). A's commit of v2
+    // loses the CAS, so A re-reads v2 and commits v3 — B's batch is
+    // never discarded.
     val batchA = spark.range(0, 300, 3)
       .select(col("id"), lit("from_a").as("name"))
     val batchB = spark.range(0, 300, 5)
@@ -715,17 +722,17 @@ class SnapshotMergeSpec extends SparkSpec {
       col("name") =!= "from_b").count() == 0)
   }
 
-  test("a torn commit (manifest file without pointer) rolls forward, never backwards") {
+  test("a torn commit (manifest, no retire log) rolls forward") {
     val dir = tmp()
     SnapshotMerge.createSharded(base, Seq("id"), 4, dir) // v1
     SnapshotMerge.upsertSharded(
       Seq((2L, "b2", 21.0)).toDF("id", "name", "score"), Seq("id"), dir) // v2
-    // simulate the crash between the manifest CAS and the pointer
-    // write: wind the pointer back to v1 — the committed v2 FILE must
-    // still win for readers and writers (listing is the source of truth)
+    // simulate the crash between the manifest CAS and the retire-log
+    // write: the committed v2 FILE is the commit, so readers and writers
+    // roll forward to it
     val f = IndexFs.fs(spark, dir)
-    IndexFs.atomicWriteSmallFile(spark, f,
-      new org.apache.hadoop.fs.Path(s"$dir/manifest.current"), "manifest-v1")
+    assert(f.delete(new org.apache.hadoop.fs.Path(s"$dir/_retired/retired-v2"), false))
+    assert(SnapshotMerge.existsSharded(spark, dir))
     assert(SnapshotMerge.readSharded(spark, dir)
       .filter(col("id") === 2L).select("name").as[String].head() == "b2")
     // the next writer targets v3, not a re-fight over v2
@@ -735,32 +742,116 @@ class SnapshotMergeSpec extends SparkSpec {
     val got = SnapshotMerge.readSharded(spark, dir).orderBy("id")
       .select("name").as[String].collect().toSeq
     assert(got == Seq("a", "b2", "c2"))
-    // a lost pointer ALTOGETHER still resolves (existsSharded + reads)
-    f.delete(new org.apache.hadoop.fs.Path(s"$dir/manifest.current"), false)
-    assert(SnapshotMerge.existsSharded(spark, dir))
-    assert(SnapshotMerge.readSharded(spark, dir).count() == 3)
   }
 
-  test("maintenance ops fail loudly on a contested commit, leaving the snapshot untouched") {
+  test("commit seam: a lost CAS leaves nothing, a won CAS retire-logs") {
     val dir = tmp()
-    SnapshotMerge.createSharded(base, Seq("id"), 4, dir)
-    val m = SnapshotMerge.readManifest(spark, dir)
-    // a competing writer owns the target version → the maintenance
-    // commit must throw AND discard its already-written delta
-    val deltaDir = s"$dir/shards-v${m.version + 1}-deadbeef"
-    base.limit(1).write.parquet(s"$deltaDir/__shard=0")
-    val e = intercept[ConcurrentCommitException] {
-      SnapshotMerge.commitMaintenanceOrThrow(spark, dir, deltaDir,
-        m.copy(version = m.version), "optimizeSharded") // v1 already committed
+    // multi-file shards, so compactSharded has work to race
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "20")
+    try SnapshotMerge.createSharded(
+      spark.range(0, 400).select(col("id"), concat(lit("n"), col("id")).as("name")),
+      Seq("id"), 4, dir) // v1
+    finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    val f = IndexFs.fs(spark, dir)
+    def relative(p: String) = p.stripPrefix(s"$dir/")
+    def retireLog(v: Long): Option[Set[String]] = {
+      val p = new org.apache.hadoop.fs.Path(s"$dir/_retired/retired-v$v")
+      if (f.exists(p)) Some(IndexFs.readSmallFile(f, p).split("\n").toSet)
+      else None
     }
-    assert(e.getMessage.contains("optimizeSharded"))
-    assert(!IndexFs.exists(spark, deltaDir), "failed delta must be deleted")
-    assert(SnapshotMerge.readSharded(spark, dir).count() == 3)
-    assert(SnapshotMerge.readManifest(spark, dir).version == m.version)
-    // an uncontested version commits fine through the same path
-    SnapshotMerge.tryCommitManifest(spark, dir,
-      m.copy(version = m.version + 1)) // simulate the competitor
-    assert(SnapshotMerge.readManifest(spark, dir).version == m.version + 1)
+    def attemptDirs(v: Long) = IndexFs.listDirNames(spark, dir)
+      .filter(n => n.startsWith(s"shards-v$v-") || n.startsWith(s"schema-v$v-"))
+    // a competitor that commits the next version as a bare manifest (no
+    // retire log of its own) carrying the current state
+    def competitor(): SnapshotMerge.Manifest = {
+      val m = SnapshotMerge.readManifest(spark, dir)
+      val c = m.copy(version = m.version + 1)
+      assert(SnapshotMerge.tryCommitManifest(spark, dir, c))
+      c
+    }
+
+    // LOST at the seam, with and without a fresh anchor: everything the
+    // attempt wrote is gone, no retire log, the competitor's manifest is live
+    for (withAnchor <- Seq(false, true)) {
+      val m = SnapshotMerge.readManifest(spark, dir)
+      val d = SnapshotMerge.writeDelta(spark, dir, m.version + 1,
+        base.withColumn("__shard", lit(0L)),
+        anchor = if (withAnchor) Some(base.limit(0)) else None)
+      assert(d.written.length == (if (withAnchor) 2 else 1))
+      assert(d.written.forall(IndexFs.exists(spark, _)))
+      val c = competitor()
+      assert(!SnapshotMerge.commit(spark, dir, Some(m), d.over(m), d.written))
+      d.written.foreach(p => assert(!IndexFs.exists(spark, p), s"lost attempt left $p"))
+      assert(retireLog(c.version).isEmpty)
+      assert(SnapshotMerge.readManifest(spark, dir) == c)
+    }
+
+    // LOST inside every full-rewrite op: a competitor commits the
+    // moment the op's shard write lands (RacingCommitProtocol) — the op
+    // deletes what it wrote and throws, naming itself
+    val ops: Seq[(String, () => Unit)] = Seq(
+      "compactSharded" -> (() => SnapshotMerge.compactSharded(spark, dir)),
+      "optimizeSharded" -> (() =>
+        SnapshotMerge.optimizeSharded(spark, dir, Seq("id"), Seq("id"))),
+      "evolveSharded" -> (() => SnapshotMerge.evolveSharded(spark, dir,
+        Seq("id"), Seq((1L, "x", 1.0)).toDF("id", "name", "score"))),
+      "migrateSharded" -> (() => SnapshotMerge.migrateSharded(spark, dir,
+        Seq("id"), renames = Map("name" -> "title"))),
+      "reshardSharded" -> (() =>
+        assert(SnapshotMerge.reshardSharded(spark, dir, Seq("id"), 8))))
+    spark.conf.set("spark.sql.sources.commitProtocolClass",
+      classOf[RacingCommitProtocol].getName)
+    try ops.foreach { case (op, run) =>
+      val next = SnapshotMerge.readManifest(spark, dir).version + 1
+      var raced: Option[SnapshotMerge.Manifest] = None
+      RacingCommitProtocol.afterCommit = path =>
+        if (raced.isEmpty && path.contains(s"$dir/shards-v")) raced = Some(competitor())
+      val e = intercept[ConcurrentCommitException](run())
+      assert(e.getMessage.contains(op) && e.getMessage.contains(s"version $next"),
+        e.getMessage)
+      assert(raced.exists(_.version == next), s"$op: the race never fired")
+      assert(attemptDirs(next).isEmpty, s"$op left ${attemptDirs(next)}")
+      assert(retireLog(next).isEmpty)
+      assert(SnapshotMerge.readManifest(spark, dir) == raced.get)
+    } finally {
+      RacingCommitProtocol.afterCommit = _ => ()
+      spark.conf.unset("spark.sql.sources.commitProtocolClass")
+    }
+
+    // upsertSharded retries instead: 5 attempts, one hook call each, and
+    // exhaustion throws with no attempt's dirs left behind
+    val vBefore = SnapshotMerge.readManifest(spark, dir).version
+    var attempts = 0
+    val e = intercept[ConcurrentCommitException] {
+      SnapshotMerge.upsertSharded(Seq((2L, "b9")).toDF("id", "name"),
+        Seq("id"), dir, onCommitAttempt = () => { attempts += 1; competitor() })
+    }
+    assert(attempts == 5 && e.getMessage.contains("upsertSharded"))
+    (vBefore + 1 to vBefore + 5).foreach { v =>
+      assert(attemptDirs(v).isEmpty && retireLog(v).isEmpty)
+    }
+    assert(SnapshotMerge.readSharded(spark, dir).count() == 400)
+
+    // WON: the retire log names exactly the superseded dirs — the
+    // anchor only when it was replaced — plus the old manifest
+    def expectedRetired(before: SnapshotMerge.Manifest,
+        after: SnapshotMerge.Manifest): Set[String] =
+      ((before.shards.values.toSet + before.anchor) --
+        (after.shards.values.toSet + after.anchor)).map(relative) +
+        s"manifest-v${before.version}"
+    val m0 = SnapshotMerge.readManifest(spark, dir)
+    SnapshotMerge.upsertSharded(Seq((2L, "b2")).toDF("id", "name"),
+      Seq("id"), dir)
+    val m1 = SnapshotMerge.readManifest(spark, dir)
+    assert(retireLog(m1.version).contains(expectedRetired(m0, m1)))
+    assert(expectedRetired(m0, m1).size == 2) // one shard dir + the manifest
+    SnapshotMerge.evolveSharded(spark, dir, Seq("id"),
+      Seq((1L, "x", 1.0)).toDF("id", "name", "score"))
+    val m2 = SnapshotMerge.readManifest(spark, dir)
+    assert(m2.anchor != m1.anchor)
+    assert(retireLog(m2.version).contains(expectedRetired(m1, m2)))
+    assert(expectedRetired(m1, m2) ==
+      (m1.shards.values.toSet + m1.anchor).map(relative) + s"manifest-v${m1.version}")
     // concurrent CREATE: the second creator fails loudly too
     assertThrows[IllegalArgumentException] {
       SnapshotMerge.createSharded(base, Seq("id"), 4, dir)
@@ -870,41 +961,13 @@ class SnapshotMergeSpec extends SparkSpec {
     assert(SnapshotMerge.readSharded(spark, dir).count() == 3)
   }
 
-  test("legacy absolute manifest paths survive, including the single-slash file: spelling") {
-    val dir = tmp()
-    SnapshotMerge.createSharded(base, Seq("id"), 2, dir)
-    // rewrite the manifest in the pre-relative legacy form, with the
-    // Hadoop Path.toString spelling (file:/…, ONE slash) — a reader
-    // treating it as relative would resolve <dir>/file:/… and fail
-    val f = IndexFs.fs(spark, dir)
-    val ptr = new org.apache.hadoop.fs.Path(s"$dir/manifest.current")
-    val name = IndexFs.readSmallFile(f, ptr)
-    val mPath = new org.apache.hadoop.fs.Path(s"$dir/$name")
-    val lines = IndexFs.readSmallFile(f, mPath).split("\n").toSeq
-    val (shardLines, trailer) = lines.tail.partition(!_.startsWith("end\t"))
-    val legacy = ((lines.head +: shardLines.map { l =>
-      val Array(k, p) = l.split("\t", 2)
-      s"$k\t${f.makeQualified(new org.apache.hadoop.fs.Path(s"$dir/$p"))}"
-    }) ++ trailer).mkString("\n")
-    assert(legacy.contains("\tfile:/") && !legacy.contains("file:///"),
-      s"fixture must exercise the single-slash scheme spelling:\n$legacy")
-    val out = f.create(mPath, true)
-    try out.write(legacy.getBytes("UTF-8")) finally out.close()
-    assert(SnapshotMerge.readSharded(spark, dir).count() == 3)
-    // and maintenance keeps resolving them (vacuum liveness, upsert)
-    SnapshotMerge.upsertSharded(
-      Seq((2L, "b2", 21.0)).toDF("id", "name", "score"), Seq("id"), dir)
-    assert(SnapshotMerge.vacuumSharded(spark, dir, minAgeMs = 3600L * 1000) == 0)
-    assert(SnapshotMerge.readSharded(spark, dir).count() == 3)
-  }
-
   test("windowed vacuum never reaps an unlogged superseded dir on its write mtime") {
     val dir = tmp()
     SnapshotMerge.createSharded(base, Seq("id"), 2, dir)
     SnapshotMerge.upsertSharded(
       Seq((2L, "b2", 21.0)).toDF("id", "name", "score"), Seq("id"), dir)
-    // simulate the crash window: the pointer swapped but the retire log
-    // never landed — the superseded v1 dirs are now unlogged dead dirs
+    // simulate the crash window: the manifest committed but the retire
+    // log never landed — the superseded v1 dirs are now unlogged dead dirs
     // whose WRITE mtime is arbitrarily older than the supersession
     val f = IndexFs.fs(spark, dir)
     val rDir = new org.apache.hadoop.fs.Path(s"$dir/_retired")
@@ -987,37 +1050,39 @@ class SnapshotMergeSpec extends SparkSpec {
     assert(SnapshotMerge.readSharded(spark, dir).count() == 3)
   }
 
-  test("pre-flag manifests (no trailer, no header flag) still read") {
+  test("a manifest off the one format fails loudly, naming it") {
     val dir = tmp()
     SnapshotMerge.createSharded(base, Seq("id"), 4, dir)
     val f = IndexFs.fs(spark, dir)
     val mPath = new org.apache.hadoop.fs.Path(s"$dir/manifest-v1")
-    val lines = IndexFs.readSmallFile(f, mPath).split("\n")
-    // rewrite in the pre-r16 format: header without the t1 flag field,
-    // body without the end trailer — an existing snapshot written by an
-    // older build must stay readable after the library upgrade
-    val meta = lines.head.split("\t")
-    assert(meta.length >= 6 && meta(5) == "t1",
-      "fixture expects the current flagged header")
-    val legacyHeader = meta.take(if (meta(4).isEmpty) 4 else 5).mkString("\t")
-    val legacy = (legacyHeader +: lines.tail.filterNot(_.startsWith("end\t")))
-      .mkString("\n")
-    val o = f.create(mPath, true)
-    try o.write(legacy.getBytes("UTF-8")) finally o.close()
+    val good = IndexFs.readSmallFile(f, mPath)
+    def put(body: String): Unit = {
+      val o = f.create(mPath, true)
+      try o.write(body.getBytes("UTF-8")) finally o.close()
+    }
+    val lines = good.split("\n").toSeq
+    val meta = lines.head.split("\t").toSeq
+    assert(meta.length == 6 && meta(3) == "h1" && meta(4).nonEmpty &&
+      meta(5) == "t1", s"fixture expects the one header format: ${lines.head}")
+    assert(lines.last == s"end\t${lines.length - 2}")
+    def withHeader(fields: Seq[String]) =
+      (fields.mkString("\t") +: lines.tail).mkString("\n")
+    val forged = Seq(
+      "empty anchor" -> withHeader(meta.updated(4, "")),
+      "no anchor field" -> withHeader(meta.patch(4, Nil, 1)),
+      "no hash version" -> withHeader(meta.patch(3, Nil, 1)),
+      "foreign hash version" -> withHeader(meta.updated(3, "h0")),
+      "no t1 flag" -> withHeader(meta.take(5)),
+      "no trailer" -> lines.init.mkString("\n"))
+    forged.foreach { case (what, body) =>
+      put(body)
+      val e = intercept[IllegalArgumentException] {
+        SnapshotMerge.readSharded(spark, dir)
+      }
+      assert(e.getMessage.contains("manifest-v1"), s"$what: ${e.getMessage}")
+    }
+    put(good)
     assert(SnapshotMerge.readSharded(spark, dir).count() == 3)
-    // and the interim trailer-without-flag form (written between the
-    // trailer landing and the flag landing) reads too: the end line is
-    // skipped, never parsed as a shard entry
-    val interim = (legacyHeader +: lines.tail).mkString("\n")
-    val o2 = f.create(mPath, true)
-    try o2.write(interim.getBytes("UTF-8")) finally o2.close()
-    assert(SnapshotMerge.readSharded(spark, dir).count() == 3)
-    // a later commit re-stamps the current flagged format
-    SnapshotMerge.upsertSharded(
-      Seq((2L, "b2", 21.0)).toDF("id", "name", "score"), Seq("id"), dir)
-    val m2 = IndexFs.readSmallFile(f,
-      new org.apache.hadoop.fs.Path(s"$dir/manifest-v2")).split("\n")
-    assert(m2.head.split("\t")(5) == "t1" && m2.last.startsWith("end\t"))
   }
 
   test("marker protocol: version swap leaves a resolvable snapshot at every step") {
@@ -1035,4 +1100,23 @@ class SnapshotMergeSpec extends SparkSpec {
         .filter(col("id") === 2L).select("name").as[String].head() == "b9")
     } finally spark.conf.unset(IndexFs.CommitProtocolKey)
   }
+}
+
+/** Test-only file commit protocol: runs [[RacingCommitProtocol.afterCommit]]
+  * with the output path once a write's job commit lands — the
+  * deterministic window between a sharded writer's delta write and its
+  * manifest CAS. */
+class RacingCommitProtocol(jobId: String, path: String,
+    dynamicPartitionOverwrite: Boolean)
+  extends org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol(
+    jobId, path, dynamicPartitionOverwrite) {
+  override def commitJob(job: org.apache.hadoop.mapreduce.JobContext,
+      taskCommits: Seq[org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage]): Unit = {
+    super.commitJob(job, taskCommits)
+    RacingCommitProtocol.afterCommit(path)
+  }
+}
+
+object RacingCommitProtocol {
+  @volatile var afterCommit: String => Unit = _ => ()
 }
