@@ -1,7 +1,11 @@
 package graft.meta
 
+import java.io.ByteArrayOutputStream
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import com.fasterxml.jackson.core.JsonToken
 
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -50,24 +54,65 @@ object RunLedger {
 
   /** D3: dedupe JSONL lines by `run_id`, LAST occurrence wins; lines with
     * missing/empty ids are all kept (`_dedupe_jsonl_inplace`,
-    * `utils/paths.py:75-96`). In-place rewrite, original order of the
-    * surviving lines preserved. */
+    * `utils/paths.py:75-96`). Original order of the surviving lines is
+    * preserved. The id is the top-level `run_id` string, read from the
+    * line's bytes with a streaming parser; a line that is not a
+    * well-formed JSON object, or whose `run_id` is absent, empty, repeated
+    * or not a string, is kept as its own key (`paths.py:87-89`). Lines
+    * end at '\n' (a '\r' before it is whitespace to the parser). The
+    * file is rewritten in place only when that changes its lines: a line
+    * dropped, a blank line removed, or the final newline restored. */
   def dedupeKeepLast(ledgerPath: String): Int = {
     val p = Paths.get(ledgerPath)
     if (!Files.exists(p)) return 0
-    val lines = Files.readAllLines(p).asScala.filter(_.trim.nonEmpty).toVector
-    val keyed = lines.zipWithIndex.map { case (l, i) =>
-      val id = scala.util.Try(JsonMethods.parse(l) \ "run_id").toOption match {
-        case Some(JString(s)) if s.nonEmpty => s
-        case _ => s"__idx_$i" // empty/missing id → unique per line (paths.py:87-89)
-      }
-      (id, i, l)
+    val bytes = Files.readAllBytes(p)
+    val spans = lineSpans(bytes)
+    val lines = spans.filter { case (s, e) => (s until e).exists(i => (bytes(i) & 0xff) > ' ') }
+    val ids = lines.map { case (s, e) => topLevelRunId(bytes, s, e - s) }
+    val lastIdx = ids.zipWithIndex.collect { case (Some(id), i) => id -> i }.toMap
+    val kept = lines.indices.collect { case i if ids(i).forall(lastIdx(_) == i) => lines(i) }
+    if (kept.size != spans.size || (bytes.nonEmpty && bytes.last != '\n')) {
+      val out = new ByteArrayOutputStream(bytes.length)
+      kept.foreach { case (s, e) => out.write(bytes, s, e - s); out.write('\n') }
+      Files.write(p, out.toByteArray)
     }
-    val lastIdx = keyed.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).max }
-    val kept = keyed.collect { case (k, i, l) if lastIdx(k) == i => l }
-    Files.write(p, (kept.mkString("\n") + "\n").getBytes("UTF-8"))
     lines.size - kept.size
   }
+
+  /** (start, end) of each line, the last one possibly unterminated. */
+  private def lineSpans(bytes: Array[Byte]): Vector[(Int, Int)] = {
+    val spans = Vector.newBuilder[(Int, Int)]
+    var start = 0
+    var i = 0
+    while (i < bytes.length) {
+      if (bytes(i) == '\n') { spans += (start -> i); start = i + 1 }
+      i += 1
+    }
+    if (start < bytes.length) spans += (start -> bytes.length)
+    spans.result()
+  }
+
+  private def topLevelRunId(bytes: Array[Byte], offset: Int, length: Int): Option[String] = Try {
+    val parser = JsonMethods.mapper.getFactory.createParser(bytes, offset, length)
+    try {
+      if (parser.nextToken() != JsonToken.START_OBJECT) None
+      else {
+        var ids = List.empty[Option[String]]
+        while (parser.nextToken() == JsonToken.FIELD_NAME) {
+          val name = parser.currentName()
+          val value = parser.nextToken()
+          if (name == "run_id")
+            ids ::= (if (value == JsonToken.VALUE_STRING) Some(parser.getText) else None)
+          parser.skipChildren()
+        }
+        require(parser.currentToken() == JsonToken.END_OBJECT)
+        ids match {
+          case List(id) => id.filter(_.nonEmpty)
+          case _ => None
+        }
+      }
+    } finally parser.close()
+  }.toOption.flatten
 
   /** D2: merge a legacy JSONL file into the canonical one (append lines,
     * delete legacy) — `_merge_jsonl`, `utils/paths.py:57-72`. */

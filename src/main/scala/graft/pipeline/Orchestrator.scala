@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.util.UUID
+import java.security.SecureRandom
 import java.time.format.DateTimeFormatter
 import java.time.{ZoneOffset, ZonedDateTime}
 import scala.util.{Failure, Success, Try}
@@ -114,13 +114,34 @@ object Orchestrator {
     "latest_json" -> s"$baseDir/meta/latest_run.json",
     "global_json" -> s"$baseDir/meta/all_runs_pretty.json")
 
-  /** Timestamped raw path + 8-char run id — clobber-safe concurrent
-    * writes (T4 ≙ `flow:30-47`). */
+  /** Timestamped raw path + run id — clobber-safe concurrent writes
+    * (T4 ≙ `flow:30-47`). */
   private def timestampedRaw(base: String, runId: String): String = {
     val ts = ZonedDateTime.now(ZoneOffset.UTC)
       .format(DateTimeFormatter.ofPattern("yyyyMMdd-HHmmss"))
     s"${base}_${ts}_$runId"
   }
+
+  /** Raw materialization: the file hand-off both branches read back. The
+    * parquet medium is read under the schema it was just written with,
+    * which spares a footer-inference job; the csv medium re-infers it,
+    * as the reference does. */
+  private[pipeline] def materializeRaw(
+      spark: SparkSession, scanned: DataFrame, rawPath: String, rawFormat: String): DataFrame =
+    if (rawFormat == "csv") {
+      Sinks.csv(Normalize.temporalsToString(scanned), rawPath)
+      Scan.csv(spark, rawPath, scanned.schema)
+    } else {
+      Sinks.parquetSnappy(scanned, rawPath)
+      spark.read.schema(scanned.schema).parquet(rawPath)
+    }
+
+  private val runIds = new SecureRandom()
+
+  /** 16 hex characters (64 random bits). The ledger keeps the last record
+    * per run id, so ids must not collide over a rotation's worth of runs
+    * (~70k records): at 32 bits they do with ~43% odds. */
+  private def newRunId(): String = f"${runIds.nextLong()}%016x"
 
   /** Runs the full DAG for one object over a source relation.
     *
@@ -139,7 +160,7 @@ object Orchestrator {
     require(Set("parquet", "csv")(opts.rawFormat),
       s"rawFormat must be 'parquet' or 'csv', got '${opts.rawFormat}'")
     val spec = specOverride.getOrElse(SpecRegistry(objectName))
-    val runId = UUID.randomUUID().toString.take(8)
+    val runId = newRunId()
     val paths = buildPaths(baseDir, objectName)
     val rawPath =
       if (opts.timestampRaw) timestampedRaw(paths("raw"), runId) else paths("raw")
@@ -165,16 +186,7 @@ object Orchestrator {
         require(complex.isEmpty,
           s"rawFormat=csv supports flat schemas only; non-atomic columns: ${complex.mkString(", ")}")
       }
-      retry(3, opts.extractRetryDelayMs) {
-        // raw materialization: the file hand-off both branches read back
-        if (opts.rawFormat == "csv") {
-          Sinks.csv(Normalize.temporalsToString(scanned), rawPath)
-          Scan.csv(spark, rawPath, scanned.schema)
-        } else {
-          Sinks.parquetSnappy(scanned, rawPath)
-          spark.read.parquet(rawPath)
-        }
-      }
+      retry(3, opts.extractRetryDelayMs)(materializeRaw(spark, scanned, rawPath, opts.rawFormat))
     }
 
     // ---- ETL branch (strict; process retried 2×5s ≙ process.py:56) ----
@@ -286,31 +298,39 @@ object Orchestrator {
     * on disk, not from in-memory return values — a corrupted or
     * clobbered file shows up as a count mismatch in the ledger, exactly
     * as the reference's `_safe_count_json` does
-    * (`tasks/metadata.py:35-42,195-197`). */
+    * (`tasks/metadata.py:35-42,195-197`). The three recounts run as
+    * concurrent legs; each catches its own failure as -1, so a missing
+    * or corrupt artifact never cancels the other counts. */
   def recordMetadata(
       spark: SparkSession, report: RunReport, paths: Map[String, String],
       rawFormat: String = "parquet"): Unit = {
-    def safeCount(f: => Long): Long = Try(f).getOrElse(-1L)
-    val rawCount =
-      if (rawFormat == "csv")
-        safeCount(spark.read.option("header", "true").option("multiLine", "true")
-          .csv(report.rawPath).count())
-      else safeCount(spark.read.parquet(report.rawPath).count())
-    // multiLine here too: a quoted embedded newline in a group-key value
-    // must count as one row, consistent with the raw recount and Scan.csv.
-    val processedCount = safeCount(
-      spark.read.option("header", "true").option("multiLine", "true")
-        .csv(report.processedCsv).count())
-    // The JSON artifact is a single records ARRAY (K2) — aggregate-sized
-    // by construction, so a driver parse is O(groups), not a data path.
-    val jsonCount = safeCount {
-      val txt = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(report.outputJson))
-      org.json4s.jackson.JsonMethods.parse(txt) match {
-        case JArray(xs) => xs.length.toLong
-        case _ => -1L
-      }
-    }
+    def safeCount(f: => Long): () => Long = () => Try(f).getOrElse(-1L)
+    val Seq(rawCount, processedCount, jsonCount) =
+      GraftSession.concurrently(spark, 3)(Seq(
+        safeCount {
+          if (rawFormat == "csv")
+            spark.read.option("header", "true").option("multiLine", "true")
+              .csv(report.rawPath).count()
+          else spark.read.parquet(report.rawPath).count()
+        },
+        // multiLine here too: a quoted embedded newline in a group-key
+        // value must count as one row, consistent with the raw recount
+        // and Scan.csv.
+        safeCount {
+          spark.read.option("header", "true").option("multiLine", "true")
+            .csv(report.processedCsv).count()
+        },
+        // The JSON artifact is a single records ARRAY (K2) — aggregate-
+        // sized by construction, so a driver parse is O(groups), not a
+        // data path.
+        safeCount {
+          val txt = java.nio.file.Files.readString(
+            java.nio.file.Paths.get(report.outputJson))
+          org.json4s.jackson.JsonMethods.parse(txt) match {
+            case JArray(xs) => xs.length.toLong
+            case _ => -1L
+          }
+        }))
 
     val record: JObject =
       ("run_id" -> report.runId) ~

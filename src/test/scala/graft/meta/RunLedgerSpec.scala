@@ -66,4 +66,49 @@ class RunLedgerSpec extends AnyFunSuite {
     assert(arr.arr.size == 3)
     assert((arr.arr.head \ "run_id") == JString("r3"))
   }
+
+  test("dedupeKeepLast keys on the top-level string run_id only, as the json4s keying did") {
+    import org.json4s.jackson.JsonMethods
+    val lines = Seq(
+      """{"run_id":"a","n":1}""",
+      """{"meta":{"run_id":"a"},"n":2}""", // nested: not the record's id
+      """{"run_id":"b","n":3}""",
+      """{"n":4}""",
+      """{"run_id":"","n":5}""",
+      """{"run_id":7,"n":6}""",
+      """{"run_id":null,"n":7}""",
+      """{"run_id":{"v":"a"},"n":8}""",
+      """{"run_id":"b","run_id":"b","n":9}""", // repeated key
+      """{"run_id":"a","n":}""", // malformed after the id
+      """{"run_id":"a","n":11""", // truncated
+      """["run_id","a"]""",
+      "not json",
+      """{"run_id":"c"} {"run_id":"a"}""", // trailing content is ignored
+      """{"run_id":"a","n":14}""",
+      """{"run_id":"b","n":15}  """)
+    // the keying dedupeKeepLast had with a full json4s parse per line
+    val keys = lines.zipWithIndex.map { case (l, i) =>
+      scala.util.Try(JsonMethods.parse(l) \ "run_id").toOption match {
+        case Some(JString(s)) if s.nonEmpty => s
+        case _ => s"__idx_$i"
+      }
+    }
+    val expected = lines.indices.filter(i => keys.lastIndexOf(keys(i)) == i).map(lines(_))
+    assert(expected.size == lines.size - 2) // only n=1 and n=3 are superseded
+    val p = tmp().resolve("runs.jsonl")
+    Files.write(p, (lines.mkString("\n") + "\n").getBytes("UTF-8"))
+    assert(RunLedger.dedupeKeepLast(p.toString) == lines.size - expected.size)
+    assert(new String(Files.readAllBytes(p), "UTF-8") == expected.mkString("\n") + "\n")
+  }
+
+  test("dedupeKeepLast leaves the file untouched when nothing is dropped") {
+    import java.nio.file.attribute.FileTime
+    val p = tmp().resolve("runs.jsonl")
+    (1 to 3).foreach(i => RunLedger.append(p.toString, rec(s"r$i", i)))
+    val before = Files.readAllBytes(p)
+    Files.setLastModifiedTime(p, FileTime.fromMillis(0L))
+    assert(RunLedger.dedupeKeepLast(p.toString) == 0)
+    assert(Files.getLastModifiedTime(p).toMillis == 0L)
+    assert(Files.readAllBytes(p).sameElements(before))
+  }
 }

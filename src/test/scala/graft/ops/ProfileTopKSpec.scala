@@ -1,36 +1,63 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
+
 import graft.SparkSpec
 
 class ProfileTopKSpec extends SparkSpec {
 
   private lazy val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
 
-  test("single-pass profile (TopKFreq aggregate) matches the two-job profile") {
-    val twoJob = Profile.profile(orders, topK = 5)
-      .map(p => p.name -> p).toMap
-    val onePass = Profile.profileSinglePass(orders, topK = 5)
-      .map(p => p.name -> p).toMap
-
-    assert(twoJob.keySet == onePass.keySet)
-    twoJob.foreach { case (name, a) =>
-      val b = onePass(name)
-      assert(a.nullCount == b.nullCount, s"col=$name")
-      assert(a.nUnique == b.nUnique, s"col=$name")
-      // top-k values: identical sets and counts (tie order identical:
-      // cnt desc, value asc on both paths)
-      assert(a.topValues == b.topValues, s"col=$name: ${a.topValues} vs ${b.topValues}")
-    }
+  private def assertMatchesReference(
+      df: DataFrame, topK: Int, cap: Long = Profile.DefaultCardinalityCap): Unit = {
+    val onePass = Profile.profile(df, topK, cap)
+    val reference = ProfileReference.profile(df, topK, cap)
+    assert(onePass == reference, s"topK=$topK cap=$cap")
   }
 
-  test("single-pass profile ranks null as a value (Polars parity) like the two-job path") {
+  test("one-pass profile matches the two-action reference on orders") {
+    assertMatchesReference(orders, topK = 5)
+  }
+
+  test("one-pass profile ranks null as a value, as the reference does") {
     import spark.implicits._
     val df = Seq(Some("a"), Some("a"), Some("a"), None, None, Some("b"))
       .toDF("cat")
-    val twoJob = Profile.profile(df, topK = 3).head.topValues
-    val onePass = Profile.profileSinglePass(df, topK = 3).head.topValues
-    assert(twoJob == onePass, s"$twoJob vs $onePass")
-    assert(onePass == Seq(("a", 3L), (null, 2L), ("b", 1L)))
+    assertMatchesReference(df, topK = 3)
+    assert(Profile.profile(df, topK = 3).head.topValues == Seq(("a", 3L), (null, 2L), ("b", 1L)))
+  }
+
+  test("one-pass profile matches the reference on edge cases") {
+    import spark.implicits._
+    val ts = java.sql.Timestamp.valueOf(_: String)
+    val mixed = Seq(
+      (Some("b"), Some("x"), Some(ts("2024-01-01 00:00:00")), Option.empty[String], 1),
+      (Some("a"), Some("x"), Some(ts("2024-01-01 00:00:00")), None, 2),
+      (Some("b"), None, Some(ts("2024-03-05 12:30:00")), None, 3),
+      (Some("a"), None, None, None, 4),
+      (Some("c"), Some("y"), Some(ts("2024-03-05 12:30:00")), None, 5)
+    ).toDF("tied", "null_tied", "ts", "all_null", "n")
+    // topK below, above, and with a cap every column but all_null exceeds
+    for ((topK, cap) <- Seq((2, Profile.DefaultCardinalityCap), (10, Profile.DefaultCardinalityCap), (2, 2L)))
+      assertMatchesReference(mixed, topK, cap)
+    val byName = Profile.profile(mixed, topK = 2).map(p => p.name -> p).toMap
+    assert(byName("tied").topValues == Seq(("a", 2L), ("b", 2L)))
+    assert(byName("null_tied").topValues == Seq(("x", 2L), (null, 2L)))
+    assert(byName("all_null").topValues == Seq((null, 5L)) && byName("all_null").nUnique == 1)
+    assert(Profile.profile(mixed, topK = 2, cardinalityCap = 2L)
+      .filter(_.topValues.nonEmpty).map(_.name) == Seq("all_null"))
+
+    assertMatchesReference(mixed.limit(0), topK = 2)
+    assert(Profile.profile(mixed.limit(0)).forall(p => p.nUnique == 0 && p.topValues.isEmpty))
+
+    // -0.0 and 0.0 are one value to count_distinct; the string form must
+    // not split them (they stay below the top-2 here, where the reference
+    // would list them apart)
+    val zeros = Seq(1.0, 1.0, 1.0, 1.0, 2.0, 2.0, 2.0, 0.0, -0.0).toDF("d")
+    val distinct = zeros.agg(org.apache.spark.sql.functions.count_distinct($"d")).head.getLong(0)
+    assert(distinct == 3L)
+    assert(Profile.profile(zeros, topK = 2).head.nUnique == distinct)
+    assertMatchesReference(zeros, topK = 2)
   }
 
   test("TopKFreq handles >64KB string values (length-prefixed serialization)") {

@@ -19,6 +19,10 @@ class OrchestratorSpec extends SparkSpec {
     "Order", Seq("Id", "Status", "TotalAmount"), Seq("Id", "Status"),
     Seq("Status"), ListMap("TotalAmount" -> Seq("sum", "mean", "count")))
 
+  /** Spark jobs one run of [[source]] may start: the run's fixed cost,
+    * which dominates at cron sizes, may not creep back up. */
+  private val JobBudget = 24
+
   private def fullDag(opts: Orchestrator.RunOptions): Unit = {
     val base = Files.createTempDirectory("orch").toString
     val report = Orchestrator.run(spark, "Order", source, base, opts,
@@ -43,7 +47,9 @@ class OrchestratorSpec extends SparkSpec {
     val report2 = Orchestrator.run(spark, "Order", source, base, opts,
       specOverride = Some(orderSpec))
     assert(report2.driftAlert.isEmpty) // same rowcount → no drift
-    assert(RunLedger.read(s"$base/meta/runs.jsonl").size == 2)
+    assert(Seq(report, report2).forall(_.runId.matches("[0-9a-f]{16}")))
+    assert(RunLedger.read(s"$base/meta/runs.jsonl").map(_ \ "run_id") ==
+      Seq(report.runId, report2.runId).map(org.json4s.JString(_)))
   }
 
   test("full DAG: artifacts written, states COMPLETED, ledger appended") {
@@ -212,6 +218,50 @@ class OrchestratorSpec extends SparkSpec {
     Files.write(Paths.get(report.outputJson), "not json".getBytes("UTF-8"))
     Orchestrator.recordMetadata(spark, report, paths)
     assert(lastCounts()._1 == BigInt(-1))
+  }
+
+  test("a failed recount writes -1 without cancelling the other recounts") {
+    import org.json4s._
+    val base = Files.createTempDirectory("orchRecount").toString
+    val paths = Orchestrator.buildPaths(base, "Order")
+    val report = Orchestrator.run(spark, "Order", source, base,
+      Orchestrator.RunOptions(limit = None, timestampRaw = false),
+      specOverride = Some(orderSpec))
+    Files.walk(Paths.get(report.rawPath)).sorted(java.util.Comparator.reverseOrder())
+      .forEach(Files.delete(_))
+    Orchestrator.recordMetadata(spark, report, paths)
+    val last = RunLedger.read(paths("runs_jsonl")).last
+    assert((last \ "raw_rows_recounted") == JInt(-1))
+    assert((last \ "processed_rows_recounted") == JInt(2))
+    assert((last \ "json_records") == JInt(2))
+  }
+
+  test("one run stays within its job budget; the parquet hand-off keeps the inferred schema") {
+    import org.apache.spark.scheduler.{DagProbe, SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = s"orch-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag))) jobs.incrementAndGet()
+    }
+    val base = Files.createTempDirectory("orchJobs").toString
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    try Orchestrator.run(spark, "Order", source, base,
+      Orchestrator.RunOptions(limit = None, timestampRaw = false),
+      specOverride = Some(orderSpec))
+    finally {
+      sc.removeJobTag(tag)
+      DagProbe.drainListeners(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get <= JobBudget, s"${jobs.get} jobs for one run")
+
+    val rawPath = s"$base/handoff"
+    val raw = Orchestrator.materializeRaw(spark, source, rawPath, "parquet")
+    assert(raw.schema == spark.read.parquet(rawPath).schema)
   }
 
   test("limit is applied at extract (source-pushed P3)") {

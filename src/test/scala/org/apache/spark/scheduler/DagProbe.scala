@@ -8,4 +8,7 @@ import org.apache.spark.SparkContext
   * that has returned from its jobs sees them gone at once. */
 object DagProbe {
   def activeJobs(sc: SparkContext): Int = sc.dagScheduler.activeJobs.size
+
+  /** Blocks until every event posted so far has reached the listeners. */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
