@@ -36,28 +36,27 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: ONE keyed join of the (tiny) revisit batch's 304
   * slice against the snapshot for the carry-forward, then one
-  * [[SnapshotMerge.upsert]] — batch keys broadcast, snapshot never
-  * shuffles; with `sharded = true` only the touched shards rewrite
-  * (the steady-state 100 TB shape). `commitTag` gives the fold
-  * exactly-once semantics per fetch wave — a replayed wave finds its
-  * tag and skips, the [[graft.streaming.StreamingOps.mergeStream]]
-  * posture.
+  * [[SnapshotMerge.upsertSharded]] — batch keys broadcast, only the
+  * touched shards rewrite. `commitTag` gives the fold exactly-once
+  * semantics per fetch wave, first contact included — a replayed wave
+  * finds its tag and skips, the
+  * [[graft.streaming.StreamingOps.mergeStream]] posture.
   */
 object Revisit {
 
   /** Fold one wave of revisit outcomes into the page snapshot at
-    * `snapshotDir` (schema `(url, body, last_fetch_ts)` — created on
-    * first contact when absent). Returns the number of rows the
-    * merge batch carried per outcome class, so callers can ledger
-    * the wave. */
+    * `snapshotDir` (schema `(url, body, last_fetch_ts)` — created with
+    * 16 shards on first contact when absent). Returns the number of
+    * rows the merge batch carried per outcome class, so callers can
+    * ledger the wave. */
   def applyRevisitOutcomes(spark: SparkSession, snapshotDir: String,
       revisits: DataFrame, urlCol: String, tsCol: String,
       statusCol: String, bodyCol: String,
-      sharded: Boolean = false,
       commitTag: Option[String] = None): Map[String, Long] = {
     import graft.GraftSession.Pinnable
     Seq(urlCol, tsCol, statusCol, bodyCol).foreach(c =>
       require(revisits.columns.contains(c), s"column $c absent"))
+    commitTag.foreach(IndexFs.requireValidTag)
     // one outcome per canonical URL: latest fetch wins, status breaks
     // exact-timestamp ties deterministically
     val keyed = revisits.select(
@@ -79,9 +78,7 @@ object Revisit {
         col("__ts").as("last_fetch_ts"), lit(true).as("__rv_del"))
     val notModified0 = keyed.filter(col("__st") === 304)
       .select(col("url"), col("__ts"))
-    val present =
-      if (sharded) SnapshotMerge.existsSharded(spark, snapshotDir)
-      else SnapshotMerge.exists(spark, snapshotDir)
+    val present = SnapshotMerge.existsSharded(spark, snapshotDir)
     // 304 carries the CURRENT content forward — an inner join against
     // the snapshot (a 304 for a never-held URL has nothing to refresh)
     val notModified =
@@ -89,15 +86,12 @@ object Revisit {
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           fresh.schema)
-      else {
-        val cur =
-          if (sharded) SnapshotMerge.readSharded(spark, snapshotDir)
-          else SnapshotMerge.read(spark, snapshotDir)
-        cur.select(col("url"), col("body"))
+      else
+        SnapshotMerge.readSharded(spark, snapshotDir)
+          .select(col("url"), col("body"))
           .join(notModified0, Seq("url"))
           .select(col("url"), col("body"), col("__ts").as("last_fetch_ts"),
             lit(false).as("__rv_del"))
-      }
     val carried = notModified.pinScratch() // counted AND unioned
     val batch = fresh.unionByName(carried).unionByName(gone)
       .pinScratch() // counted AND merged
@@ -106,18 +100,12 @@ object Revisit {
       "carried" -> carried.count(),
       "deleted" -> gone.count())
     if (!present) {
-      if (sharded)
-        SnapshotMerge.createSharded(
-          batch.filter(!col("__rv_del")).drop("__rv_del"),
-          Seq("url"), nShards = 16, dir = snapshotDir)
-      else
-        SnapshotMerge.upsert(batch, Seq("url"), snapshotDir,
-          deleteCol = Some("__rv_del"), commitTag = commitTag)
-    } else if (sharded)
+      SnapshotMerge.createSharded(
+        batch.filter(!col("__rv_del")).drop("__rv_del"),
+        Seq("url"), nShards = 16, dir = snapshotDir)
+      commitTag.foreach(t => IndexFs.markCommitted(spark, snapshotDir, t))
+    } else
       SnapshotMerge.upsertSharded(batch, Seq("url"), snapshotDir,
-        deleteCol = Some("__rv_del"), commitTag = commitTag)
-    else
-      SnapshotMerge.upsert(batch, Seq("url"), snapshotDir,
         deleteCol = Some("__rv_del"), commitTag = commitTag)
     counts
   }

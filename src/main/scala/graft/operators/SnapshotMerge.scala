@@ -18,19 +18,21 @@ import graft.GraftSession
 final class ConcurrentCommitException(msg: String)
   extends RuntimeException(msg)
 
-/** Keyed MERGE (upsert + delete) into a published parquet snapshot —
+/** Keyed MERGE (upsert + delete) into a versioned parquet snapshot —
   * the CDC/crawl-loop generalization of the reference's keep-last
   * dedup (`utils/paths.py:75-96`, last write per key wins) from a JSONL
   * ledger to a table-sized snapshot with atomic publication.
   *
-  * A batch of updates is folded into the snapshot at `dir` in one pass:
-  * rows whose key exists REPLACE the current row, new keys are
-  * inserted, and rows flagged in `deleteCol` remove their key. The new
-  * snapshot is swapped in with [[IndexFs.publishRelation]] — readers
-  * see the complete old version or the complete new one, never a
-  * partial mix, under either commit protocol (rename swap /
-  * object-store version pointer), and a crash mid-merge leaves the old
-  * snapshot intact and resolvable.
+  * The snapshot lives as key-hash shard directories behind a versioned
+  * manifest ([[createSharded]]). A batch of updates is folded in by
+  * [[upsertSharded]] in one pass: rows whose key exists REPLACE the
+  * current row, new keys are inserted, and rows flagged in `deleteCol`
+  * remove their key. Only the shards the batch's keys hash into are
+  * read and rewritten; the new version goes live with one manifest
+  * create, so readers see the complete old version or the complete new
+  * one, and a crash mid-merge leaves the old version intact. A
+  * one-shard snapshot is the unpartitioned case: every batch rewrites
+  * the whole snapshot.
   *
   * Key semantics are NULL-SAFE: a null key component matches itself
   * (the anti-join uses `<=>`), consistent with how
@@ -40,18 +42,10 @@ final class ConcurrentCommitException(msg: String)
   *
   * Scale shape: the updates' KEY SET is broadcast (a CDC batch is
   * batch-sized by contract) so the survivor anti-join is map-side —
-  * the snapshot never shuffles; the merge cost is one snapshot scan +
-  * one snapshot write. That full rewrite is the honest lower bound for
-  * an UNPARTITIONED snapshot; at 100 TB the snapshot should be
-  * key-sharded ([[Sharding.writeShards]]) so a batch rewrites only the
-  * shards its keys touch — the same "rewrite what changed" contract,
-  * committed through a versioned manifest. Set `broadcastKeys = false`
-  * for backfill-sized batches (the join then shuffles both sides at the
-  * corpus-tracked width) — both the flat and the sharded path take the
-  * flag.
+  * the touched shards never shuffle.
   *
   * Replay: `commitTag` short-circuits an already-committed tag
-  * (at-most-once per tag); a crash AFTER publish but BEFORE the tag
+  * (at-most-once per tag); a crash AFTER the commit but BEFORE the tag
   * marker lands re-runs the merge on replay, which is harmless —
   * upserting the same batch twice is idempotent by construction (the
   * anti-join removes what the re-insert re-adds).
@@ -68,19 +62,6 @@ object SnapshotMerge {
     * `dir/` must address the same snapshot as `dir`). */
   private def norm(dir: String): String =
     if (dir.length > 1 && dir.endsWith("/")) dir.dropRight(1) else dir
-
-  /** The snapshot's data relation (published — read through
-    * [[IndexFs.resolveDir]]). */
-  private def dataDir(dir: String): String = s"${norm(dir)}/data"
-
-  /** True when the snapshot has been published at least once. */
-  def exists(spark: SparkSession, dir: String): Boolean =
-    IndexFs.exists(spark, IndexFs.resolveDir(spark, dataDir(dir)))
-
-  /** The current snapshot content — a lazy scan of the resolved
-    * published relation. */
-  def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(IndexFs.resolveDir(spark, dataDir(dir)))
 
   /** The EXACT column names [[survivorAntiJoin]] reserves for the
     * given keys — the only spellings that can collide (a snapshot
@@ -107,122 +88,26 @@ object SnapshotMerge {
     * survive its own replacement (nulls never `=` each other) and the
     * re-insert would duplicate it. Spark hash joins support
     * EqualNullSafe keys, so the broadcast shape is preserved.
-    * Factored out so the plan (broadcast vs shuffle) is directly
-    * spec-assertable. */
+    * Factored out so the broadcast plan is directly spec-assertable. */
   private[operators] def survivorAntiJoin(current: DataFrame,
-      touchedKeys: DataFrame, keyCols: Seq[String],
-      broadcastKeys: Boolean): DataFrame = {
+      touchedKeys: DataFrame, keyCols: Seq[String]): DataFrame = {
     // same reserved-name discipline as __shard, scoped to the EXACT
     // names this merge renames to — a snapshot column colliding with
     // them would make the join condition ambiguous with an error that
     // names neither cause
     requireNoReservedKeyNames(current, keyCols, "snapshot")
     val keyed = touchedKeys.toDF(keyCols.map(c => s"__mergekey_$c"): _*)
-    val rhs = if (broadcastKeys) broadcast(keyed) else keyed
     val cond = keyCols.map(c => col(c) <=> col(s"__mergekey_$c"))
       .reduce(_ && _)
-    current.join(rhs, cond, "left_anti")
-  }
-
-  /** Batch preparation shared by [[upsert]] and [[upsertSharded]]:
-    * validates the key columns, `deleteCol` and reserved names, and
-    * returns None when `commitTag` is already committed. Otherwise
-    * returns the keep-last `ranked` batch (every one of its keys, deleted
-    * or not, knocks its current row out) and its insert side (deleted
-    * rows and `deleteCol` dropped). */
-  private def prepareBatch(updates: DataFrame, keyCols: Seq[String],
-      dir: String, deleteCol: Option[String],
-      updateOrder: Option[Seq[Column]],
-      commitTag: Option[String]): Option[(DataFrame, DataFrame)] = {
-    require(keyCols.nonEmpty, "upsert needs at least one key column")
-    require(keyCols.forall(updates.columns.contains),
-      s"key columns ${keyCols.filterNot(updates.columns.contains)} absent from updates")
-    deleteCol.foreach(c => require(updates.columns.contains(c),
-      s"deleteCol $c absent from updates"))
-    requireNoReservedKeyNames(updates, keyCols, "updates")
-    commitTag.foreach(IndexFs.requireValidTag)
-    if (commitTag.exists(t => IndexFs.isCommitted(updates.sparkSession, dir, t)))
-      None
-    else {
-      val ranked = updateOrder.fold(updates)(
-        graft.ops.Dedup.keepLast(updates, keyCols, _))
-      val inserts = deleteCol.fold(ranked)(c =>
-        ranked.filter(!coalesce(col(c), lit(false))).drop(c))
-      Some((ranked, inserts))
-    }
-  }
-
-  /** Merge `updates` into the snapshot at `dir` by `keyCols`.
-    *
-    * @param deleteCol boolean column in `updates` marking rows whose
-    *        key is REMOVED (the column itself never reaches the
-    *        snapshot); null reads as false
-    * @param updateOrder when the batch can carry several rows per key,
-    *        the within-batch precedence: LAST under this order wins
-    *        (the reference's ledger rule, [[graft.ops.Dedup.keepLast]]
-    *        spelling). None = the caller guarantees one row per key
-    * @param commitTag exactly-once handle: an already-committed tag
-    *        skips the merge entirely
-    * @param broadcastKeys broadcast the batch key set into the
-    *        survivor anti-join (the CDC default); disable for
-    *        backfill-sized batches
-    * @param allowSchemaEvolution accept a batch whose non-key columns
-    *        differ from the snapshot's (the Delta `mergeSchema`
-    *        posture): the published snapshot's schema becomes the UNION
-    *        — survivors null-fill columns only the batch brings, batch
-    *        rows null-fill columns only the snapshot has. Key columns
-    *        must exist on both sides regardless. Off by default: an
-    *        unannounced schema change is usually a bug, and the loud
-    *        mismatch error is the guard. FLAT snapshots only — the
-    *        sharded layout's untouched shards are carried by reference
-    *        (never rewritten), so their files would keep the old
-    *        physical schema and every read would need file-level schema
-    *        merging; evolving a sharded snapshot is the explicit
-    *        [[evolveSharded]] maintenance op (full per-shard rewrite),
-    *        enforced loudly in [[upsertSharded]].
-    * @return true if this call merged the batch; false on an
-    *         idempotent replay skip */
-  def upsert(updates: DataFrame, keyCols: Seq[String], dir: String,
-      deleteCol: Option[String] = None,
-      updateOrder: Option[Seq[Column]] = None,
-      commitTag: Option[String] = None,
-      broadcastKeys: Boolean = true,
-      allowSchemaEvolution: Boolean = false): Boolean = {
-    val spark = updates.sparkSession
-    val (ranked, inserts) = prepareBatch(updates, keyCols, dir, deleteCol,
-      updateOrder, commitTag).getOrElse(return false)
-    // both updates AND deletes knock their key out of the current rows
-    val touchedKeys = ranked.select(keyCols.map(col): _*).distinct()
-
-    val merged =
-      if (!exists(spark, dir)) inserts
-      else {
-        val current = read(spark, dir)
-        if (allowSchemaEvolution)
-          require(keyCols.forall(current.columns.contains),
-            s"key columns ${keyCols.filterNot(current.columns.contains)} " +
-              s"absent from the snapshot at $dir")
-        else
-          require(current.columns.sorted.toSeq == inserts.columns.sorted.toSeq,
-            s"upsert schema mismatch: snapshot has ${current.columns.sorted.mkString(",")}, " +
-              s"updates bring ${inserts.columns.sorted.mkString(",")} " +
-              "(set allowSchemaEvolution = true to union the schemas)")
-        survivorAntiJoin(current, touchedKeys, keyCols, broadcastKeys)
-          .unionByName(inserts, allowMissingColumns = allowSchemaEvolution)
-      }
-    IndexFs.publishRelation(merged, dataDir(dir))
-    commitTag.foreach(t => IndexFs.markCommitted(spark, dir, t))
-    true
+    current.join(broadcast(keyed), cond, "left_anti")
   }
 
   // ------------------------------------------------------------------
-  // Sharded variant — the 100 TB shape: the snapshot lives as key-hash
-  // shard directories behind a MANIFEST (shard → physical dir), and a
-  // batch rewrites ONLY the shards its keys touch. Untouched shards are
-  // not read, not rewritten, not even listed — merge cost tracks the
-  // TOUCHED fraction, not the snapshot (measured in ScaleBench
-  // `merge_upsert` vs `merge_upsert_sharded`). Unchanged data is
-  // REFERENCED by the next manifest, not copied — what a table
+  // Layout: key-hash shard directories behind a MANIFEST (shard →
+  // physical dir), and a batch rewrites ONLY the shards its keys touch.
+  // Untouched shards are not read, not rewritten, not even listed —
+  // merge cost tracks the TOUCHED fraction, not the snapshot. Unchanged
+  // data is REFERENCED by the next manifest, not copied — what a table
   // format's metadata layer does, in one small file.
   //
   // The commit record is `manifest-v<N>`, one file per version, in one
@@ -545,17 +430,18 @@ object SnapshotMerge {
       version: Long): DataFrame =
     scan(spark, requireReadableVersion(spark, dir, version))
 
-  /** [[upsert]] against a sharded snapshot: reads and rewrites ONLY the
-    * shards the batch's keys hash into; everything else is carried into
-    * the new manifest by REFERENCE. Commit = a CAS-create of the target
-    * version's manifest file (atomic, no-clobber); superseded dirs are
-    * NOT deleted here — they are logged to `_retired/` and reaped by
-    * [[vacuumSharded]] behind its retention window, so a reader that
-    * resolved the old manifest keeps a complete old snapshot. A crash
-    * before the commit leaves the old manifest resolving the complete
-    * old snapshot, and the half-written delta dirs are inert until
-    * [[vacuumSharded]] reaps them. Same merge/delete/precedence/replay/
-    * broadcast contract as [[upsert]].
+  /** Merge `updates` into the snapshot at `dir` by `keyCols`: reads
+    * and rewrites ONLY the shards the batch's keys hash into;
+    * everything else is carried into the new manifest by REFERENCE.
+    * Commit = a CAS-create of the target version's manifest file
+    * (atomic, no-clobber); superseded dirs are NOT deleted here — they
+    * are logged to `_retired/` and reaped by [[vacuumSharded]] behind
+    * its retention window, so a reader that resolved the old manifest
+    * keeps a complete old snapshot. A crash before the commit leaves
+    * the old manifest resolving the complete old snapshot, and the
+    * half-written delta dirs are inert until [[vacuumSharded]] reaps
+    * them. The batch must carry the snapshot's exact columns (plus
+    * `deleteCol`); widening is the explicit [[evolveSharded]] op.
     *
     * CONCURRENT writers are safe (optimistic concurrency): a writer
     * that read version N can commit N+1 only if nobody else has — a
@@ -567,21 +453,43 @@ object SnapshotMerge {
     * spinning against a sustained hotter writer (the batch stays
     * replayable — nothing was committed and the tag was not marked).
     *
+    * @param deleteCol boolean column in `updates` marking rows whose
+    *        key is REMOVED (the column itself never reaches the
+    *        snapshot); null reads as false
+    * @param updateOrder when the batch can carry several rows per key,
+    *        the within-batch precedence: LAST under this order wins
+    *        (the reference's ledger rule, [[graft.ops.Dedup.keepLast]]
+    *        spelling). None = the caller guarantees one row per key
+    * @param commitTag exactly-once handle: an already-committed tag
+    *        skips the merge entirely
     * @param onCommitAttempt hook invoked on EVERY attempt, after the
     *        delta write and immediately before the commit CAS — the
     *        observability/test seam for the race window (count commit
     *        retries, or interleave a competing writer deterministically
     *        the way SnapshotMergeSpec does). Must not mutate this
-    *        writer's inputs. */
+    *        writer's inputs.
+    * @return true if this call merged the batch; false on an
+    *         idempotent replay skip */
   def upsertSharded(updates: DataFrame, keyCols: Seq[String], dir: String,
       deleteCol: Option[String] = None,
       updateOrder: Option[Seq[Column]] = None,
       commitTag: Option[String] = None,
-      broadcastKeys: Boolean = true,
       onCommitAttempt: () => Unit = () => ()): Boolean = {
     val spark = updates.sparkSession
-    val (ranked, insertRows) = prepareBatch(updates, keyCols, dir, deleteCol,
-      updateOrder, commitTag).getOrElse(return false)
+    require(keyCols.nonEmpty, "upsert needs at least one key column")
+    require(keyCols.forall(updates.columns.contains),
+      s"key columns ${keyCols.filterNot(updates.columns.contains)} absent from updates")
+    deleteCol.foreach(c => require(updates.columns.contains(c),
+      s"deleteCol $c absent from updates"))
+    requireNoReservedKeyNames(updates, keyCols, "updates")
+    commitTag.foreach(IndexFs.requireValidTag)
+    if (commitTag.exists(t => IndexFs.isCommitted(spark, dir, t))) return false
+    // every key of the keep-last batch, deleted or not, knocks its
+    // current row out; deleted rows and deleteCol never reach the inserts
+    val ranked = updateOrder.fold(updates)(
+      graft.ops.Dedup.keepLast(updates, keyCols, _))
+    val insertRows = deleteCol.fold(ranked)(c =>
+      ranked.filter(!coalesce(col(c), lit(false))).drop(c))
 
     // everything below depends on the manifest just read, so a lost CAS
     // restarts from here against the moved snapshot: the shard → dir
@@ -624,7 +532,7 @@ object SnapshotMerge {
         if (currentTouchedDirs.isEmpty) inserts.limit(0)
         else {
           val current = spark.read.parquet(currentTouchedDirs: _*)
-          survivorAntiJoin(current, keySide, keyCols, broadcastKeys)
+          survivorAntiJoin(current, keySide, keyCols)
             .withColumn("__shard", shard)
         }
 

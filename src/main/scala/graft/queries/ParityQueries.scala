@@ -122,35 +122,39 @@ object ParityQueries {
       .orderBy(col("user_id"))
   }
 
-  // --- MERGE: keyed upsert + delete into a published snapshot — the
+  // --- MERGE: keyed upsert + delete into a one-shard snapshot — the
   // D3 keep-last rule lifted from the JSONL ledger to a table-sized
   // snapshot with atomic publication. Built INSIDE the measured query:
   // baseline snapshot (even keys) → one CDC batch (every 3rd key
-  // re-priced, every 9th deleted) → read the published result back.
-  // Rerun-stable: a replay of the same two upserts converges to the
-  // same fixed point, so the bench's repeat runs and the Verify dump
-  // agree. A lost survivor, a delete that missed, a replaced row
-  // surviving, or a torn publish all fail the hash. ---
+  // re-priced, every 9th deleted) → read the committed result back.
+  // One shard makes every batch rewrite the whole snapshot, the
+  // unpartitioned case. Rerun-stable: create is skipped when the
+  // snapshot exists and the repeated batch is a fixed point, so the
+  // bench's repeat runs and the Verify dump agree. A lost survivor, a
+  // delete that missed, a replaced row surviving, or a torn commit all
+  // fail the hash. ---
   val mergeUpsert: Q = (s, dir) => {
     val orders = t(s, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"),
         col("o_orderstatus"), col("o_totalprice"))
     val path = SnapshotPaths.dirFor("merge_snapshot", dir, s)
-    graft.operators.SnapshotMerge.upsert(
-      orders.filter(col("o_orderkey") % 2 === 0), Seq("o_orderkey"), path)
+    if (!graft.operators.SnapshotMerge.existsSharded(s, path))
+      graft.operators.SnapshotMerge.createSharded(
+        orders.filter(col("o_orderkey") % 2 === 0), Seq("o_orderkey"),
+        nShards = 1, path)
     val batch = orders.filter(col("o_orderkey") % 3 === 0)
       .withColumn("o_totalprice", col("o_totalprice") + 1000.0)
       .withColumn("is_deleted", col("o_orderkey") % 9 === 0)
-    graft.operators.SnapshotMerge.upsert(batch, Seq("o_orderkey"), path,
-      deleteCol = Some("is_deleted"))
-    graft.operators.SnapshotMerge.read(s, path).orderBy(col("o_orderkey"))
+    graft.operators.SnapshotMerge.upsertSharded(batch, Seq("o_orderkey"),
+      path, deleteCol = Some("is_deleted"))
+    graft.operators.SnapshotMerge.readSharded(s, path)
+      .orderBy(col("o_orderkey"))
   }
 
-  // --- MERGE through the SHARDED snapshot — the 100 TB layout: the
-  // same fixture and batch as q_merge_upsert, but the snapshot lives
-  // as key-hash shard dirs behind a manifest and the batch rewrites
-  // only the shards it touches. Shares q_merge_upsert's oracle
-  // verbatim: layout must never change the merged content. Rerun-safe:
+  // --- MERGE through a 16-shard snapshot: the same fixture and batch
+  // as q_merge_upsert, but the batch rewrites only the shards it
+  // touches. Shares q_merge_upsert's oracle verbatim: the shard count
+  // must never change the merged content. Rerun-safe:
   // create is skipped when the snapshot exists and the repeated batch
   // is a fixed point. ---
   val mergeUpsertSharded: Q = (s, dir) => {
@@ -172,12 +176,12 @@ object ParityQueries {
       .orderBy(col("o_orderkey"))
   }
 
-  // --- The STREAMING CDC loop under the hard gate: the same snapshot
-  // and batch as q_merge_upsert, but the batch ARRIVES as two
+  // --- The STREAMING CDC loop under the hard gate: the same one-shard
+  // snapshot and batch as q_merge_upsert, but the batch ARRIVES as two
   // micro-batch files through mergeStream (foreachBatch →
-  // SnapshotMerge.upsert, commitTag = batch id). Keys are unique in
-  // the batch, so the two-file split applies to the same fixed point
-  // regardless of arrival order — the flat query's oracle verbatim.
+  // SnapshotMerge.upsertSharded, commitTag = batch id). Keys are unique
+  // in the batch, so the two-file split applies to the same fixed point
+  // regardless of arrival order — q_merge_upsert's oracle verbatim.
   // Fresh-run semantics (checkpoint + snapshot wiped first), like
   // q_stream_incremental_dedup; restart-with-checkpoint is spec-proven
   // in StreamingOpsSpec. ---
@@ -190,8 +194,9 @@ object ParityQueries {
     val ckptDir = SnapshotPaths.dirFor("merge_stream_ckpt", dir, s)
     graft.operators.IndexFs.deleteRecursively(s, snapDir)
     graft.operators.IndexFs.deleteRecursively(s, ckptDir)
-    graft.operators.SnapshotMerge.upsert(
-      orders.filter(col("o_orderkey") % 2 === 0), Seq("o_orderkey"), snapDir)
+    graft.operators.SnapshotMerge.createSharded(
+      orders.filter(col("o_orderkey") % 2 === 0), Seq("o_orderkey"),
+      nShards = 1, snapDir)
     orders.filter(col("o_orderkey") % 3 === 0)
       .withColumn("o_totalprice", col("o_totalprice") + 1000.0)
       .withColumn("is_deleted", col("o_orderkey") % 9 === 0)
@@ -201,7 +206,8 @@ object ParityQueries {
     graft.streaming.StreamingOps.mergeStream(stream, snapDir,
         Seq("o_orderkey"), ckptDir, deleteCol = Some("is_deleted"))
       .awaitTermination()
-    graft.operators.SnapshotMerge.read(s, snapDir).orderBy(col("o_orderkey"))
+    graft.operators.SnapshotMerge.readSharded(s, snapDir)
+      .orderBy(col("o_orderkey"))
   }
 
   // --- JSONL source under the hard gate: the documents table
@@ -426,32 +432,35 @@ object ParityQueries {
       .orderBy("record_id", "corrupt")
   }
 
-  // --- SCHEMA EVOLUTION on the flat MERGE (the Delta mergeSchema
-  // posture): the snapshot starts WITHOUT o_totalprice; the batch
-  // brings it with allowSchemaEvolution = true, so the published
-  // schema becomes the union — survivors carry NULL for the new
-  // column, batch rows carry their values, deletes still apply. The
+  // --- SCHEMA EVOLUTION (the Delta mergeSchema posture): the one-shard
+  // snapshot starts WITHOUT o_totalprice; evolveSharded widens it to
+  // the batch's columns, so survivors carry NULL for the new column,
+  // then the batch merges with its values and deletes still apply. The
   // oracle spells the same union with an explicit CAST(NULL): a
   // survivor row dropped or mis-filled, or the evolved column leaking
   // into deletes, fails the hash. Rerun-stable: the evolved snapshot
-  // re-accepts the same batch as a fixed point. ---
+  // skips the widening and re-accepts the same batch as a fixed
+  // point. ---
   val mergeSchemaEvolution: Q = (s, dir) => {
     import graft.operators.SnapshotMerge
     val orders = t(s, dir, "orders")
     val path = SnapshotPaths.dirFor("merge_schema_evo", dir, s)
-    if (!SnapshotMerge.exists(s, path)) {
-      SnapshotMerge.upsert(
+    if (!SnapshotMerge.existsSharded(s, path)) {
+      SnapshotMerge.createSharded(
         orders.filter(col("o_orderkey") % 2 === 0)
           .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus")),
-        Seq("o_orderkey"), path)
+        Seq("o_orderkey"), nShards = 1, path)
     }
     val batch = orders.filter(col("o_orderkey") % 3 === 0)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         (col("o_totalprice") + 1000.0).as("o_totalprice"),
         (col("o_orderkey") % 9 === 0).as("is_deleted"))
-    SnapshotMerge.upsert(batch, Seq("o_orderkey"), path,
-      deleteCol = Some("is_deleted"), allowSchemaEvolution = true)
-    SnapshotMerge.read(s, path)
+    if (!SnapshotMerge.readSharded(s, path).columns.contains("o_totalprice"))
+      SnapshotMerge.evolveSharded(s, path, Seq("o_orderkey"),
+        batch.drop("is_deleted"))
+    SnapshotMerge.upsertSharded(batch, Seq("o_orderkey"), path,
+      deleteCol = Some("is_deleted"))
+    SnapshotMerge.readSharded(s, path)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         col("o_totalprice"))
       .orderBy(col("o_orderkey"))
@@ -639,12 +648,11 @@ object ParityQueries {
       .orderBy(col("o_orderkey"), col("_change_type"))
   }
 
-  // --- STREAMING CDC through the SHARDED layout: the same micro-batch
-  // feed as q_stream_merge_upsert applied via mergeStream(sharded =
-  // true) — exactly-once per batch THROUGH the manifest commits,
-  // each micro-batch rewriting only its touched shards. Shares the flat
-  // query's oracle verbatim: arrival mode and layout must never change
-  // the merged content. ---
+  // --- STREAMING CDC into an 8-shard snapshot: the same micro-batch
+  // feed as q_stream_merge_upsert — exactly-once per batch THROUGH the
+  // manifest commits, each micro-batch rewriting only its touched
+  // shards. Shares q_merge_upsert's oracle verbatim: arrival mode and
+  // shard count must never change the merged content. ---
   val streamMergeUpsertSharded: Q = (s, dir) => {
     val orders = t(s, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"),
@@ -665,7 +673,7 @@ object ParityQueries {
       .option("maxFilesPerTrigger", 1).parquet(srcDir)
     graft.streaming.StreamingOps.mergeStream(stream, snapDir,
         Seq("o_orderkey"), ckptDir, deleteCol = Some("is_deleted"),
-        sharded = true, streamName = "cdc_sharded")
+        streamName = "cdc_sharded")
       .awaitTermination()
     graft.operators.SnapshotMerge.readSharded(s, snapDir)
       .orderBy(col("o_orderkey"))
@@ -1008,8 +1016,8 @@ object ParityQueries {
     "q_profile_orders" -> profileOrders
   )
 
-  /** Shared by q_merge_upsert (flat published snapshot) and
-    * q_merge_upsert_sharded (manifest-committed shard layout): layout
+  /** Shared by q_merge_upsert (one shard), q_merge_upsert_sharded (16
+    * shards) and both streaming twins: the shard count and arrival mode
     * must never change the merged content. */
   private lazy val mergeUpsertSql: String =
     """WITH snap AS (SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice

@@ -1058,13 +1058,13 @@ object UrlQueries {
     val id = col("doc_id")
     val path = SnapshotPaths.dirFor("revisit_snapshot", dir, s)
     val docs = Scan.table(s, dir, "documents")
-    if (!SnapshotMerge.exists(s, path))
-      SnapshotMerge.upsert(
+    if (!SnapshotMerge.existsSharded(s, path))
+      SnapshotMerge.createSharded(
         docs.select(
           concat(lit("http://v.example.com/p/"), id).as("url"),
           col("text").as("body"),
           timestamp_seconds(lit(1767225600L) + id).as("last_fetch_ts")),
-        Seq("url"), path)
+        Seq("url"), nShards = 1, path)
     val revisits = docs.select(
         concat(lit("http://v.example.com/p/"), id).as("url"),
         timestamp_seconds(lit(1767325600L) + id).as("fetch_ts"),
@@ -1085,7 +1085,7 @@ object UrlQueries {
         lit(null).cast("string").as("body")))
     Revisit.applyRevisitOutcomes(s, path, revisits, "url", "fetch_ts",
       "http_status", "body", commitTag = Some("revisit_wave_1"))
-    SnapshotMerge.read(s, path)
+    SnapshotMerge.readSharded(s, path)
       .select("url", "body", "last_fetch_ts")
       .orderBy("url")
   }
@@ -1108,14 +1108,14 @@ object UrlQueries {
     import graft.operators.{Revisit, SnapshotMerge}
     val hist = fetchHistory(s, dir).pinScratch()
     val path = SnapshotPaths.dirFor("crawl_maintain_snapshot", dir, s)
-    if (!SnapshotMerge.exists(s, path))
-      SnapshotMerge.upsert(
+    if (!SnapshotMerge.existsSharded(s, path))
+      SnapshotMerge.createSharded(
         hist.groupBy(col("url"))
           .agg(max(col("fetch_ts")).as("last_fetch_ts"))
           .select(col("url"),
             concat(lit("page "), col("url")).as("body"),
             col("last_fetch_ts")),
-        Seq("url"), path)
+        Seq("url"), nShards = 1, path)
     val k = regexp_extract(col("url"), "/p/([0-9]+)$", 1).cast("long")
     val wave = hist.select(col("url")).distinct().select(
       col("url"),
@@ -1129,7 +1129,7 @@ object UrlQueries {
       "http_status", "body", commitTag = Some("maintain_wave_1"))
     val rates = UrlCuration.estimateChangeRate(hist, "url", "fetch_ts",
       "content_hash")
-    val fresh = SnapshotMerge.read(s, path)
+    val fresh = SnapshotMerge.readSharded(s, path)
       .select(col("url"), col("last_fetch_ts"))
       .join(rates.select(col("url"), col("change_rate_per_day")),
         Seq("url"), "left")

@@ -327,24 +327,20 @@ object StreamingOps {
   }
 
   /** Streaming CDC apply — the crawl/change feed folded into a keyed
-    * snapshot: every micro-batch is one [[graft.operators.SnapshotMerge]]
-    * merge (replace / insert / delete by key) with `commitTag =
-    * batch_<id>`, so a replayed micro-batch is skipped and the stream
-    * is exactly-once per batch id. Replay ordering is safe by
+    * snapshot (`createSharded` first): every micro-batch is one
+    * [[graft.operators.SnapshotMerge.upsertSharded]] merge (replace /
+    * insert / delete by key, rewriting only the shards it touches) with
+    * a per-batch `commitTag`, so a replayed micro-batch is skipped and
+    * the stream is exactly-once per batch id. Replay ordering is safe by
     * construction: a batch can only replay at restart, BEFORE any
     * later batch runs, so a re-applied merge never overwrites newer
-    * data — and an untagged-window crash (publish landed, tag didn't)
+    * data — and an untagged-window crash (commit landed, tag didn't)
     * re-applies the same batch idempotently.
     *
     * `checkpointDir` is REQUIRED for the same reason as
     * [[incrementalDedupStream]]: batch identity lives in the
     * checkpoint; a temp checkpoint would renumber batches from 0 on
     * restart and the tag scheme would read old commits as this run's.
-    *
-    * `sharded = true` merges through the manifest layout
-    * ([[graft.operators.SnapshotMerge.upsertSharded]] — the snapshot
-    * must have been `createSharded` first): the steady-state 100 TB
-    * shape, each micro-batch rewriting only the shards it touches.
     *
     * `streamName` namespaces the commit tags
     * (`stream_<name>_batch_<id>`) — batch ids alone are NOT a stream
@@ -354,27 +350,18 @@ object StreamingOps {
     * previously committed one. Two streams feeding one snapshot MUST
     * use distinct names; re-creating a checkpoint from scratch for the
     * same logical stream means its already-committed prefix is
-    * deliberately skipped — pick a NEW name to replay from zero.
-    *
-    * Upgrade note: tags were `batch_<id>` before the namespace
-    * existed. A checkpointed stream crossing that format change will
-    * NOT recognize a pre-upgrade commit, so a crash-window batch (tag
-    * landed, checkpoint didn't) re-merges once on restart — harmless
-    * (the merge is content-idempotent for the same batch), and the
-    * stale bare tags are inert; delete them from `<snapshot>/commits`
-    * if the clutter matters. */
+    * deliberately skipped — pick a NEW name to replay from zero. */
   def mergeStream(updates: DataFrame, snapshotDir: String,
       keyCols: Seq[String], checkpointDir: String,
       deleteCol: Option[String] = None,
       updateOrder: Option[Seq[org.apache.spark.sql.Column]] = None,
-      sharded: Boolean = false,
       streamName: String = "default",
       trigger: Trigger = Trigger.AvailableNow()): org.apache.spark.sql.streaming.StreamingQuery =
     updates.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         applyMergeBatch(batch.toDF(), batchId, snapshotDir, keyCols,
-          deleteCol, updateOrder, sharded, streamName)
+          deleteCol, updateOrder, streamName)
         ()
       }
       .trigger(trigger)
@@ -386,15 +373,11 @@ object StreamingOps {
   private[graft] def applyMergeBatch(batchDf: DataFrame, batchId: Long,
       snapshotDir: String, keyCols: Seq[String], deleteCol: Option[String],
       updateOrder: Option[Seq[org.apache.spark.sql.Column]],
-      sharded: Boolean, streamName: String = "default"): Unit =
+      streamName: String = "default"): Unit =
     graft.GraftSession.releasingScratch(batchDf.sparkSession) {
-      val tag = s"stream_${streamName}_batch_$batchId"
-      if (sharded)
-        graft.operators.SnapshotMerge.upsertSharded(batchDf, keyCols,
-          snapshotDir, deleteCol, updateOrder, commitTag = Some(tag))
-      else
-        graft.operators.SnapshotMerge.upsert(batchDf, keyCols,
-          snapshotDir, deleteCol, updateOrder, commitTag = Some(tag))
+      graft.operators.SnapshotMerge.upsertSharded(batchDf, keyCols,
+        snapshotDir, deleteCol, updateOrder,
+        commitTag = Some(s"stream_${streamName}_batch_$batchId"))
       ()
     }
 

@@ -177,18 +177,12 @@ object ScaleBench {
       // rotates the refit row's plane seed so every timed run is a
       // genuine family change (see the embedding_refit comment)
       var refitSeedCounter = 0L
-      // MERGE fixtures: the docs corpus as a keyed snapshot in both
-      // layouts (offline — build once per scale point), and a FIXED
-      // 50-key correction batch (constant at every scale: the
+      // MERGE fixtures: the docs corpus as a 256-shard keyed snapshot
+      // (offline — build once per scale point), and a FIXED 50-key
+      // correction batch (constant at every scale: the
       // key-cardinality ≪ shards regime where sharding pays)
       val mergeBatch = docs.filter(col("doc_id") < 50)
         .withColumn("text", concat(lit("corrected "), col("text")))
-      lazy val mergeFlatFixture: Unit = {
-        if (!graft.operators.SnapshotMerge.exists(spark, s"$dir/merge_flat"))
-          graft.operators.SnapshotMerge.upsert(
-            docs, Seq("doc_id"), s"$dir/merge_flat")
-        ()
-      }
       lazy val mergeShardedFixture: Unit = {
         if (!graft.operators.SnapshotMerge.existsSharded(
             spark, s"$dir/merge_sharded"))
@@ -574,23 +568,15 @@ object ScaleBench {
             docs.filter(col("doc_id") >= baseDocs * m / 5), "doc_id", "text",
             docs.filter(col("doc_id") < baseDocs * m / 5), "doc_id", "text",
             n = 3, threshold = 0.5).count()),
-        // Keyed MERGE, both layouts, same fixed 50-key correction
-        // batch (the GDPR-delete / hot-fix shape — key cardinality ≪
-        // shards, where rewrite-what-changed pays). Unsharded: every
-        // batch rewrites the WHOLE published snapshot — corpus-linear
-        // by design, the honest unpartitioned lower bound. Sharded
-        // (256 shards): only the ≤50 touched shards rewrite — cost
-        // must track the touched fraction, opening a gap that widens
-        // with the corpus. Fixtures build the snapshots outside the
-        // timed loop; the repeated batch is a fixed point, so run 2
-        // measures the same merge.
-        // (upsert/upsertSharded are EAGER — the merge write happens
-        // inside the call; the count only reports the batch size)
-        "merge_upsert" -> (() => {
-          graft.operators.SnapshotMerge.upsert(
-            mergeBatch, Seq("doc_id"), s"$dir/merge_flat")
-          mergeBatch.count()
-        }),
+        // Keyed MERGE of a fixed 50-key correction batch (the
+        // GDPR-delete / hot-fix shape — key cardinality ≪ shards, where
+        // rewrite-what-changed pays): only the ≤50 touched shards of
+        // 256 rewrite, so cost must track the touched fraction, not the
+        // corpus. The fixture builds the snapshot outside the timed
+        // loop; the repeated batch is a fixed point, so run 2 measures
+        // the same merge. (upsertSharded is EAGER — the merge write
+        // happens inside the call; the count only reports the batch
+        // size)
         "merge_upsert_sharded" -> (() => {
           graft.operators.SnapshotMerge.upsertSharded(
             mergeBatch, Seq("doc_id"), s"$dir/merge_sharded")
@@ -1145,16 +1131,17 @@ object ScaleBench {
         // revisit folding: one keyed-down outcome aggregate + the 304
         // carry join + ONE SnapshotMerge upsert — the merge dominates
         // (already scaled by the merge rows); snapshot seeded per run
+        // at Revisit's first-contact 16 shards
         "revisit_merge" -> (() => {
           val snap = s"$dir/revisit_snap"
           graft.operators.IndexFs.deleteRecursively(spark, snap)
-          graft.operators.SnapshotMerge.upsert(
+          graft.operators.SnapshotMerge.createSharded(
             docs.select(
               concat(lit("http://v.ex.com/p/"), col("doc_id")).as("url"),
               col("text").as("body"),
               timestamp_seconds(lit(1767225600L) + col("doc_id"))
                 .as("last_fetch_ts")),
-            Seq("url"), snap)
+            Seq("url"), nShards = 16, snap)
           val m = pmod(col("doc_id"), lit(5L))
           val revisits = docs.select(
             concat(lit("http://v.ex.com/p/"), col("doc_id")).as("url"),
@@ -1182,12 +1169,12 @@ object ScaleBench {
               .as("content_hash"))
           val snap = s"$dir/maintain_snap"
           graft.operators.IndexFs.deleteRecursively(spark, snap)
-          graft.operators.SnapshotMerge.upsert(
+          graft.operators.SnapshotMerge.createSharded(
             hist.groupBy(col("url"))
               .agg(max(col("fetch_ts")).as("last_fetch_ts"))
               .select(col("url"), col("url").as("body"),
                 col("last_fetch_ts")),
-            Seq("url"), snap)
+            Seq("url"), nShards = 16, snap)
           val k = regexp_extract(col("url"), "/p/([0-9]+)$", 1)
             .cast("long")
           val wave = hist.select(col("url")).distinct().select(
@@ -1202,7 +1189,7 @@ object ScaleBench {
             wave, "url", "fetch_ts", "http_status", "body")
           val rates = graft.operators.UrlCuration.estimateChangeRate(
             hist, "url", "fetch_ts", "content_hash")
-          val fresh = graft.operators.SnapshotMerge.read(spark, snap)
+          val fresh = graft.operators.SnapshotMerge.readSharded(spark, snap)
             .select(col("url"), col("last_fetch_ts"))
             .join(rates.select(col("url"), col("change_rate_per_day")),
               Seq("url"), "left")
@@ -1585,7 +1572,6 @@ object ScaleBench {
       // "deliberately outside the timed op" contract). Keyed per op so
       // an op-filtered invocation still builds exactly what it needs.
       val fixtureOf: Map[String, () => Any] = Map(
-        "merge_upsert" -> (() => mergeFlatFixture),
         "merge_upsert_sharded" -> (() => mergeShardedFixture),
         "merge_optimize_sharded" -> (() => mergeShardedFixture),
         "merge_cdf" -> (() => mergeCdfFixture),

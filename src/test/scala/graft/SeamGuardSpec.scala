@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * in `GraftSession.scala` ([[GraftSession.concurrently]],
   * [[GraftSession.localPin]]); shard-partitioned writes, manifest
   * commits and retire logs only in the commit seam of
-  * `SnapshotMerge.scala` (`writeDelta` / `commit`). */
+  * `SnapshotMerge.scala` (`writeDelta` / `commit`), and the keyed
+  * snapshot has that one format — `SnapshotMerge.scala` and
+  * `Revisit.scala` never publish or resolve a flat relation. */
 class SeamGuardSpec extends AnyFunSuite {
 
   private val banned =
@@ -42,6 +44,8 @@ class SeamGuardSpec extends AnyFunSuite {
   private val commitTokens =
     Seq(""".partitionBy("__shard")""", "tryCommitManifest(", "writeRetireLog(")
 
+  private val flatSnapshotTokens = Seq("publishRelation(", "resolveDir(")
+
   test("shard-partitioned writes, manifest commits and retire logs live only in the commit seam") {
     val files = sources()
     val merge = files.filter(_.getFileName.toString == "SnapshotMerge.scala")
@@ -63,5 +67,16 @@ class SeamGuardSpec extends AnyFunSuite {
       token <- commitTokens if line.contains(token)
     } yield s"$f:${n + 1}: $token"
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+    val snapshotFiles = files.filter(f =>
+      Set("SnapshotMerge.scala", "Revisit.scala")(f.getFileName.toString))
+    assert(snapshotFiles.size == 2, "the scan must see SnapshotMerge.scala and Revisit.scala")
+    val flatOffenders = for {
+      f <- snapshotFiles
+      (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
+      token <- flatSnapshotTokens if line.contains(token)
+    } yield s"$f:${n + 1}: $token"
+    assert(flatOffenders.isEmpty,
+      "the keyed snapshot commits only through the manifest:" +
+        flatOffenders.mkString("\n", "\n", ""))
   }
 }

@@ -10,16 +10,16 @@ class RevisitSpec extends SparkSpec {
   private def ts(s: Long): java.sql.Timestamp =
     java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(1767225600L + s))
 
+  private def seedRows = Seq(
+      ("http://v.com/a", "body a", ts(0)),
+      ("http://v.com/b", "body b", ts(0)),
+      ("http://v.com/c", "body c", ts(0)),
+      ("http://v.com/d", "body d", ts(0)),
+      ("http://v.com/e", "body e", ts(0)))
+    .toDF("url", "body", "last_fetch_ts")
+
   private def seed(path: String): Unit =
-    SnapshotMerge.upsert(
-      Seq(
-        ("http://v.com/a", "body a", ts(0)),
-        ("http://v.com/b", "body b", ts(0)),
-        ("http://v.com/c", "body c", ts(0)),
-        ("http://v.com/d", "body d", ts(0)),
-        ("http://v.com/e", "body e", ts(0)))
-        .toDF("url", "body", "last_fetch_ts"),
-      Seq("url"), path)
+    SnapshotMerge.createSharded(seedRows, Seq("url"), 4, path)
 
   test("every outcome class folds correctly; counts are per class") {
     val path = java.nio.file.Files.createTempDirectory("rv").toString + "/snap"
@@ -36,7 +36,7 @@ class RevisitSpec extends SparkSpec {
     val counts = Revisit.applyRevisitOutcomes(spark, path, revisits,
       "url", "fetch_ts", "http_status", "body")
     assert(counts == Map("written" -> 2L, "carried" -> 1L, "deleted" -> 2L))
-    val back = SnapshotMerge.read(spark, path)
+    val back = SnapshotMerge.readSharded(spark, path)
       .orderBy("url").collect()
       .map(r => r.getString(0) -> ((r.getString(1),
         r.getAs[java.sql.Timestamp](2)))).toMap
@@ -60,34 +60,61 @@ class RevisitSpec extends SparkSpec {
       .toDF("url", "fetch_ts", "http_status", "body")
     Revisit.applyRevisitOutcomes(spark, path, revisits,
       "url", "fetch_ts", "http_status", "body")
-    val back = SnapshotMerge.read(spark, path).orderBy("url").collect()
+    val back = SnapshotMerge.readSharded(spark, path).orderBy("url").collect()
     assert(back.find(_.getString(0) == "http://v.com/a")
       .get.getString(1) == "wave2")
     assert(!back.exists(_.getString(0) == "http://v.com/b"))
   }
 
-  test("a tagged wave replays as a no-op; sharded path folds identically") {
-    val flat = java.nio.file.Files.createTempDirectory("rv3").toString + "/f"
-    val shrd = java.nio.file.Files.createTempDirectory("rv3").toString + "/s"
-    seed(flat)
-    SnapshotMerge.createSharded(
-      SnapshotMerge.read(spark, flat), Seq("url"), 4, shrd)
+  test("a tagged wave replays as a no-op; the fold ≡ the keep-last oracle") {
+    val path = java.nio.file.Files.createTempDirectory("rv3").toString + "/s"
+    seed(path)
     val revisits = Seq(
       ("http://v.com/a", ts(100), 200, "v2"),
       ("http://v.com/b", ts(100), 404, null))
       .toDF("url", "fetch_ts", "http_status", "body")
-    Revisit.applyRevisitOutcomes(spark, flat, revisits, "url",
+    Revisit.applyRevisitOutcomes(spark, path, revisits, "url",
       "fetch_ts", "http_status", "body", commitTag = Some("w1"))
-    Revisit.applyRevisitOutcomes(spark, shrd, revisits, "url",
-      "fetch_ts", "http_status", "body", sharded = true,
-      commitTag = Some("w1"))
-    val f1 = SnapshotMerge.read(spark, flat).orderBy("url").collect()
-    val s1 = SnapshotMerge.readSharded(spark, shrd).orderBy("url").collect()
-    assert(f1.map(_.toString).toSeq == s1.map(_.toString).toSeq)
-    // replay: the tag short-circuits — state unchanged
-    Revisit.applyRevisitOutcomes(spark, flat, revisits, "url",
+    // keep-last over (seed, wave) by url: a replaced, b deleted
+    val wave = Seq(
+      ("http://v.com/a", "v2", ts(100), false),
+      ("http://v.com/b", null, ts(100), true))
+      .toDF("url", "body", "last_fetch_ts", "del")
+    val expected = graft.ops.Dedup.keepLast(
+        seedRows.withColumn("del", lit(false)).withColumn("seq", lit(1))
+          .unionByName(wave.withColumn("seq", lit(2))),
+        Seq("url"), Seq(col("seq")))
+      .filter(!col("del")).drop("seq", "del")
+    val s1 = SnapshotMerge.readSharded(spark, path)
+    assert(s1.exceptAll(expected).count() == 0 &&
+      expected.exceptAll(s1).count() == 0)
+    // replay: the tag short-circuits — state and versions unchanged
+    val rows1 = s1.orderBy("url").collect().map(_.toString).toSeq
+    val versions1 = SnapshotMerge.shardedVersions(spark, path)
+    Revisit.applyRevisitOutcomes(spark, path, revisits, "url",
       "fetch_ts", "http_status", "body", commitTag = Some("w1"))
-    val f2 = SnapshotMerge.read(spark, flat).orderBy("url").collect()
-    assert(f1.map(_.toString).toSeq == f2.map(_.toString).toSeq)
+    assert(SnapshotMerge.shardedVersions(spark, path) == versions1)
+    assert(SnapshotMerge.readSharded(spark, path).orderBy("url").collect()
+      .map(_.toString).toSeq == rows1)
+  }
+
+  test("a tagged first-contact wave marks its tag; a replay commits nothing") {
+    val path = java.nio.file.Files.createTempDirectory("rv4").toString + "/s"
+    val revisits = Seq(
+      ("http://v.com/a", ts(100), 200, "first"),
+      ("http://v.com/b", ts(100), 404, null))
+      .toDF("url", "fetch_ts", "http_status", "body")
+    Revisit.applyRevisitOutcomes(spark, path, revisits, "url",
+      "fetch_ts", "http_status", "body", commitTag = Some("w0"))
+    assert(IndexFs.isCommitted(spark, path, "w0"))
+    val versions1 = SnapshotMerge.shardedVersions(spark, path)
+    val rows1 = SnapshotMerge.readSharded(spark, path).orderBy("url")
+      .collect().map(_.toString).toSeq
+    assert(rows1 == Seq(s"[http://v.com/a,first,${ts(100)}]"))
+    Revisit.applyRevisitOutcomes(spark, path, revisits, "url",
+      "fetch_ts", "http_status", "body", commitTag = Some("w0"))
+    assert(SnapshotMerge.shardedVersions(spark, path) == versions1)
+    assert(SnapshotMerge.readSharded(spark, path).orderBy("url").collect()
+      .map(_.toString).toSeq == rows1)
   }
 }

@@ -14,26 +14,30 @@ class SnapshotMergeSpec extends SparkSpec {
     (1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0)
   ).toDF("id", "name", "score")
 
-  test("first upsert creates the snapshot; read returns it") {
+  test("createSharded creates the snapshot; readSharded returns it") {
     val dir = tmp()
-    assert(!SnapshotMerge.exists(spark, dir))
-    assert(SnapshotMerge.upsert(base, Seq("id"), dir))
-    assert(SnapshotMerge.exists(spark, dir))
-    val got = SnapshotMerge.read(spark, dir).orderBy("id").collect()
+    assert(!SnapshotMerge.existsSharded(spark, dir))
+    SnapshotMerge.createSharded(base, Seq("id"), 4, dir)
+    assert(SnapshotMerge.existsSharded(spark, dir))
+    val got = SnapshotMerge.readSharded(spark, dir).orderBy("id").collect()
     assert(got.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
+    // a second create never clobbers the live snapshot
+    assertThrows[IllegalArgumentException] {
+      SnapshotMerge.createSharded(base, Seq("id"), 4, dir)
+    }
   }
 
   test("merge semantics: replace, insert, delete in one batch") {
     val dir = tmp()
-    SnapshotMerge.upsert(base, Seq("id"), dir)
+    SnapshotMerge.createSharded(base, Seq("id"), 4, dir)
     val batch = Seq(
       (2L, "b2", 21.0, false), // replace id 2
       (4L, "d", 40.0, false),  // insert id 4
       (3L, "x", 0.0, true)     // delete id 3 (payload ignored)
     ).toDF("id", "name", "score", "is_deleted")
-    assert(SnapshotMerge.upsert(batch, Seq("id"), dir,
+    assert(SnapshotMerge.upsertSharded(batch, Seq("id"), dir,
       deleteCol = Some("is_deleted")))
-    val got = SnapshotMerge.read(spark, dir).orderBy("id")
+    val got = SnapshotMerge.readSharded(spark, dir).orderBy("id")
       .as[(Long, String, Double)].collect().toSeq
     assert(got == Seq((1L, "a", 10.0), (2L, "b2", 21.0), (4L, "d", 40.0)))
   }
@@ -43,41 +47,49 @@ class SnapshotMergeSpec extends SparkSpec {
     val batch = Seq(
       (1L, "old", 1.0, 100L), (1L, "new", 2.0, 200L), (2L, "only", 3.0, 50L)
     ).toDF("id", "name", "score", "version")
-    SnapshotMerge.upsert(batch, Seq("id"), dir,
+    SnapshotMerge.createSharded(batch.limit(0), Seq("id"), 4, dir)
+    SnapshotMerge.upsertSharded(batch, Seq("id"), dir,
       updateOrder = Some(Seq(col("version"))))
-    val got = SnapshotMerge.read(spark, dir).orderBy("id")
+    val got = SnapshotMerge.readSharded(spark, dir).orderBy("id")
       .select("name").as[String].collect().toSeq
     assert(got == Seq("new", "only"))
   }
 
   test("commitTag: replay skips, content unchanged; untagged replay is idempotent") {
     val dir = tmp()
-    SnapshotMerge.upsert(base, Seq("id"), dir)
+    SnapshotMerge.createSharded(base, Seq("id"), 4, dir)
     val batch = Seq((2L, "b2", 21.0)).toDF("id", "name", "score")
-    assert(SnapshotMerge.upsert(batch, Seq("id"), dir,
+    assert(SnapshotMerge.upsertSharded(batch, Seq("id"), dir,
       commitTag = Some("batch_1")))
-    val after1 = SnapshotMerge.read(spark, dir).orderBy("id").collect().toSeq
+    val after1 = SnapshotMerge.readSharded(spark, dir).orderBy("id").collect().toSeq
+    val versions1 = SnapshotMerge.shardedVersions(spark, dir)
     // tagged replay: short-circuits without touching the snapshot
-    assert(!SnapshotMerge.upsert(batch, Seq("id"), dir,
+    assert(!SnapshotMerge.upsertSharded(batch, Seq("id"), dir,
       commitTag = Some("batch_1")))
-    assert(SnapshotMerge.read(spark, dir).orderBy("id").collect().toSeq == after1)
+    assert(SnapshotMerge.shardedVersions(spark, dir) == versions1)
+    assert(SnapshotMerge.readSharded(spark, dir).orderBy("id").collect().toSeq == after1)
     // untagged replay of the SAME batch: merges again, same fixed point
-    assert(SnapshotMerge.upsert(batch, Seq("id"), dir))
-    assert(SnapshotMerge.read(spark, dir).orderBy("id").collect().toSeq == after1)
+    assert(SnapshotMerge.upsertSharded(batch, Seq("id"), dir))
+    assert(SnapshotMerge.readSharded(spark, dir).orderBy("id").collect().toSeq == after1)
   }
 
   test("schema mismatch and bad inputs fail loudly") {
     val dir = tmp()
-    SnapshotMerge.upsert(base, Seq("id"), dir)
+    SnapshotMerge.createSharded(base, Seq("id"), 4, dir)
     val wrong = Seq((1L, "z")).toDF("id", "name")
+    val e = intercept[IllegalArgumentException] {
+      SnapshotMerge.upsertSharded(wrong, Seq("id"), dir)
+    }
+    assert(e.getMessage.contains("evolveSharded"))
     assertThrows[IllegalArgumentException] {
-      SnapshotMerge.upsert(wrong, Seq("id"), dir)
+      SnapshotMerge.upsertSharded(base, Seq("absent"), dir)
     }
     assertThrows[IllegalArgumentException] {
-      SnapshotMerge.upsert(base, Seq("absent"), tmp())
+      SnapshotMerge.upsertSharded(base, Seq("id"), dir, deleteCol = Some("nope"))
     }
+    // no snapshot yet: the batch never creates one
     assertThrows[IllegalArgumentException] {
-      SnapshotMerge.upsert(base, Seq("id"), tmp(), deleteCol = Some("nope"))
+      SnapshotMerge.upsertSharded(base, Seq("id"), tmp())
     }
   }
 
@@ -89,32 +101,37 @@ class SnapshotMergeSpec extends SparkSpec {
     val b1 = Seq((1L, "a1"), (2L, "b1")).toDF("id", "v")
     val b2 = Seq((2L, "b2"), (3L, "c2")).toDF("id", "v")
     val b3 = Seq((1L, "a3"), (4L, "d3")).toDF("id", "v")
-    Seq(b1, b2, b3).foreach(b => SnapshotMerge.upsert(b, Seq("id"), dir))
+    SnapshotMerge.createSharded(b1, Seq("id"), 4, dir)
+    Seq(b2, b3).foreach(b => SnapshotMerge.upsertSharded(b, Seq("id"), dir))
     val expected = graft.ops.Dedup.keepLast(
       b1.withColumn("seq", lit(1)).unionByName(b2.withColumn("seq", lit(2)))
         .unionByName(b3.withColumn("seq", lit(3))),
       Seq("id"), Seq(col("seq"))).drop("seq")
-    val got = SnapshotMerge.read(spark, dir)
+    val got = SnapshotMerge.readSharded(spark, dir)
     assert(got.exceptAll(expected).count() == 0)
     assert(expected.exceptAll(got).count() == 0)
   }
 
-  test("sharded: create/read round-trip and merge ≡ the unsharded operator") {
-    val flat = tmp(); val sharded = tmp()
+  test("sharded: create/read round-trip and merge ≡ the keep-last oracle") {
+    val dir = tmp()
     val big = spark.range(0, 500)
       .select(col("id"), concat(lit("n"), col("id")).as("name"),
         (col("id") * 1.5).as("score"))
-    SnapshotMerge.upsert(big, Seq("id"), flat)
-    SnapshotMerge.createSharded(big, Seq("id"), 8, sharded)
-    assert(SnapshotMerge.readSharded(spark, sharded).count() == 500)
+    SnapshotMerge.createSharded(big, Seq("id"), 8, dir)
+    assert(SnapshotMerge.readSharded(spark, dir).count() == 500)
     val batch = spark.range(0, 500, 7) // touches a subset of keys
       .select(col("id"), lit("upd").as("name"), lit(-1.0).as("score"),
         (col("id") % 3 === 0).as("del"))
-    SnapshotMerge.upsert(batch, Seq("id"), flat, deleteCol = Some("del"))
-    SnapshotMerge.upsertSharded(batch, Seq("id"), sharded, deleteCol = Some("del"))
-    val a = SnapshotMerge.read(spark, flat)
-    val b = SnapshotMerge.readSharded(spark, sharded)
-    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
+    SnapshotMerge.upsertSharded(batch, Seq("id"), dir, deleteCol = Some("del"))
+    // keep-last over (snapshot, batch) by key, then drop the deletes
+    val expected = graft.ops.Dedup.keepLast(
+        big.withColumn("del", lit(false)).withColumn("seq", lit(1))
+          .unionByName(batch.withColumn("seq", lit(2))),
+        Seq("id"), Seq(col("seq")))
+      .filter(!col("del")).drop("seq", "del")
+    val got = SnapshotMerge.readSharded(spark, dir)
+    assert(got.exceptAll(expected).count() == 0 &&
+      expected.exceptAll(got).count() == 0)
   }
 
   test("sharded: untouched shards are carried by reference, not rewritten") {
@@ -168,61 +185,58 @@ class SnapshotMergeSpec extends SparkSpec {
     val dir = tmp()
     val withNull = Seq((Some(1L), "a", 10.0), (None, "nullkey", 20.0))
       .toDF("id", "name", "score")
-    SnapshotMerge.upsert(withNull, Seq("id"), dir)
+    SnapshotMerge.createSharded(withNull, Seq("id"), 4, dir)
     // upsert the null key again with a new payload: one row, new value
+    // (shardExpr routes nulls deterministically to the same shard)
     val update = Seq((Option.empty[Long], "nullkey2", 21.0))
       .toDF("id", "name", "score")
-    SnapshotMerge.upsert(update, Seq("id"), dir)
-    val got = SnapshotMerge.read(spark, dir)
+    SnapshotMerge.upsertSharded(update, Seq("id"), dir)
+    val got = SnapshotMerge.readSharded(spark, dir)
     assert(got.count() == 2, "null-keyed row duplicated instead of replaced")
     assert(got.filter(col("id").isNull).select("name").as[String].head() == "nullkey2")
     // and a null-keyed DELETE removes it
-    SnapshotMerge.upsert(
+    SnapshotMerge.upsertSharded(
       Seq((Option.empty[Long], "x", 0.0, true)).toDF("id", "name", "score", "del"),
       Seq("id"), dir, deleteCol = Some("del"))
-    assert(SnapshotMerge.read(spark, dir).filter(col("id").isNull).count() == 0)
-    // sharded path: same contract (shardExpr routes nulls deterministically)
-    val sDir = tmp()
-    SnapshotMerge.createSharded(withNull, Seq("id"), 4, sDir)
-    SnapshotMerge.upsertSharded(update, Seq("id"), sDir)
-    val gotS = SnapshotMerge.readSharded(spark, sDir)
-    assert(gotS.count() == 2)
-    assert(gotS.filter(col("id").isNull).select("name").as[String].head() == "nullkey2")
+    assert(SnapshotMerge.readSharded(spark, dir).filter(col("id").isNull).count() == 0)
   }
 
-  test("broadcastKeys=false: backfill regime shuffles instead of broadcasting") {
+  test("the merge broadcasts the batch key set into the survivor anti-join") {
     val current = spark.range(0, 1000)
       .select(col("id"), concat(lit("n"), col("id")).as("name"))
     val keys = spark.range(0, 1000, 2).select(col("id"))
-    def planOf(broadcastKeys: Boolean): String =
-      SnapshotMerge.survivorAntiJoin(current, keys, Seq("id"), broadcastKeys)
-        .queryExecution.executedPlan.toString
-    assert(planOf(true).contains("BroadcastHashJoin"),
-      "CDC default must broadcast the key set")
-    // without the hint AND below the auto-broadcast size cutoff the
-    // planner may still pick broadcast on its own (fine in practice);
-    // the flag's contract is that it never FORCES one — assert with
-    // auto-broadcast off, the backfill regime where the flag matters
+    val dir = tmp()
+    SnapshotMerge.createSharded(current, Seq("id"), 8, dir)
+    // auto-broadcast off: only the merge's own hint can broadcast
     val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
     val saved = spark.conf.get(thresholdKey)
-    val shuffled = try { spark.conf.set(thresholdKey, "-1"); planOf(false) }
-    finally spark.conf.set(thresholdKey, saved)
-    assert(!shuffled.contains("BroadcastHashJoin") &&
-      !shuffled.contains("BroadcastExchange"),
-      s"broadcastKeys=false must not broadcast:\n$shuffled")
-    // end-to-end: both regimes reach the identical snapshot (sharded too)
-    val a = tmp(); val b = tmp()
-    val big = spark.range(0, 300)
-      .select(col("id"), concat(lit("n"), col("id")).as("name"))
-    val batch = spark.range(0, 300, 3)
-      .select(col("id"), lit("upd").as("name"))
-    SnapshotMerge.upsert(big, Seq("id"), a)
-    SnapshotMerge.upsert(batch, Seq("id"), a, broadcastKeys = false)
-    SnapshotMerge.createSharded(big, Seq("id"), 8, b)
-    SnapshotMerge.upsertSharded(batch, Seq("id"), b, broadcastKeys = false)
-    val fa = SnapshotMerge.read(spark, a)
-    val fb = SnapshotMerge.readSharded(spark, b)
-    assert(fa.exceptAll(fb).count() == 0 && fb.exceptAll(fa).count() == 0)
+    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan.toString }
+      def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    try {
+      spark.conf.set(thresholdKey, "-1")
+      val antiJoin = SnapshotMerge.survivorAntiJoin(current, keys, Seq("id"))
+        .queryExecution.executedPlan.toString
+      assert(antiJoin.contains("BroadcastHashJoin"),
+        s"the key set must be broadcast:\n$antiJoin")
+      spark.listenerManager.register(listener)
+      SnapshotMerge.upsertSharded(keys.select(col("id"), lit("upd").as("name")),
+        Seq("id"), dir)
+      org.apache.spark.scheduler.DagProbe.drainListeners(spark.sparkContext)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.conf.set(thresholdKey, saved)
+    }
+    assert(plans.synchronized(plans.exists(_.contains("BroadcastHashJoin"))),
+      s"upsertSharded's write must broadcast the key set:\n${plans.mkString("\n")}")
+    val got = SnapshotMerge.readSharded(spark, dir)
+    assert(got.count() == 1000 && got.filter(col("name") === "upd").count() == 500)
   }
 
   test("a reader on the old manifest survives a concurrent upsert (deferred retire)") {
@@ -294,64 +308,61 @@ class SnapshotMergeSpec extends SparkSpec {
 
   test("reserved __mergekey_<key> names fail loudly AT CREATION, exact-match only") {
     val dir = tmp()
-    // the colliding spelling is rejected on the very first upsert —
-    // letting it persist would brick every later incremental merge
+    // the colliding spelling is rejected at creation — letting it
+    // persist would brick every later incremental merge
     val e = intercept[IllegalArgumentException] {
-      SnapshotMerge.upsert(
-        Seq((1L, "x")).toDF("id", "__mergekey_id"), Seq("id"), dir)
-    }
-    assert(e.getMessage.contains("__mergekey_id"))
-    assertThrows[IllegalArgumentException] {
       SnapshotMerge.createSharded(
         Seq((1L, "x")).toDF("id", "__mergekey_id"), Seq("id"), 4, dir)
     }
+    assert(e.getMessage.contains("__mergekey_id"))
     // but only the EXACT renamed-key spellings are reserved: a column
     // merely sharing the prefix merges fine, forever
-    SnapshotMerge.upsert(
-      Seq((1L, "n1")).toDF("id", "__mergekey_notes"), Seq("id"), dir)
-    SnapshotMerge.upsert(
+    SnapshotMerge.createSharded(
+      Seq((1L, "n1")).toDF("id", "__mergekey_notes"), Seq("id"), 4, dir)
+    assertThrows[IllegalArgumentException] {
+      SnapshotMerge.upsertSharded(
+        Seq((1L, "x")).toDF("id", "__mergekey_id"), Seq("id"), dir)
+    }
+    SnapshotMerge.upsertSharded(
       Seq((1L, "n2"), (2L, "n3")).toDF("id", "__mergekey_notes"),
       Seq("id"), dir)
-    val got = SnapshotMerge.read(spark, dir).orderBy("id")
+    val got = SnapshotMerge.readSharded(spark, dir).orderBy("id")
       .select("__mergekey_notes").as[String].collect().toSeq
     assert(got == Seq("n2", "n3"))
   }
 
   test("schema evolution: union schema with null fill; off by default; sharded declines") {
     val dir = tmp()
-    SnapshotMerge.upsert(
-      Seq((1L, "a"), (2L, "b")).toDF("id", "name"), Seq("id"), dir)
+    SnapshotMerge.createSharded(
+      Seq((1L, "a"), (2L, "b")).toDF("id", "name"), Seq("id"), 4, dir)
     val widened = Seq((2L, "b2", 21.0), (3L, "c", 30.0))
       .toDF("id", "name", "score")
     // off by default: the mismatch is loud and names the escape hatch
     val e = intercept[IllegalArgumentException] {
-      SnapshotMerge.upsert(widened, Seq("id"), dir)
+      SnapshotMerge.upsertSharded(widened, Seq("id"), dir)
     }
-    assert(e.getMessage.contains("allowSchemaEvolution"))
-    // on: survivors null-fill the new column, batch rows carry it
-    SnapshotMerge.upsert(widened, Seq("id"), dir, allowSchemaEvolution = true)
-    val got = SnapshotMerge.read(spark, dir).orderBy("id")
+    assert(e.getMessage.contains("evolveSharded"))
+    // on: survivors null-fill the new column, batch rows carry it; a
+    // column the template lacks is kept (evolution only widens)
+    SnapshotMerge.evolveSharded(spark, dir, Seq("id"),
+      Seq((0L, 0.0)).toDF("id", "score"))
+    SnapshotMerge.upsertSharded(widened, Seq("id"), dir)
+    val got = SnapshotMerge.readSharded(spark, dir)
+      .select("id", "name", "score").orderBy("id")
       .collect().map(r => (r.getLong(0), r.getString(1),
         if (r.isNullAt(2)) None else Some(r.getDouble(2))))
     assert(got.toSeq == Seq((1L, "a", None), (2L, "b2", Some(21.0)),
       (3L, "c", Some(30.0))))
-    // the reverse direction: a batch MISSING a column null-fills it
-    SnapshotMerge.upsert(Seq((4L, "d")).toDF("id", "name"), Seq("id"), dir,
-      allowSchemaEvolution = true)
-    assert(SnapshotMerge.read(spark, dir)
-      .filter(col("id") === 4L && col("score").isNull).count() == 1)
     // evolution never relaxes the key requirement
     assertThrows[IllegalArgumentException] {
-      SnapshotMerge.upsert(
-        Seq((1, "x")).toDF("other", "name"), Seq("other"), dir,
-        allowSchemaEvolution = true)
+      SnapshotMerge.evolveSharded(spark, dir, Seq("other"),
+        Seq((1, "x")).toDF("other", "extra"))
     }
-    // sharded: divergent schema is a loud error even when the batch
-    // touches only EMPTY shards (the anchor relation is the gate, not
-    // the touched dirs)
+    // the gate is the zero-row anchor, not the touched dirs: a batch
+    // landing only in EMPTY shards is refused just the same
     val sDir = tmp()
     SnapshotMerge.createSharded(
-      Seq((1L, "a")).toDF("id", "name"), Seq("id"), 4, sDir)
+      Seq((1L, "a")).toDF("id", "name").limit(0), Seq("id"), 4, sDir)
     val sE = intercept[IllegalArgumentException] {
       SnapshotMerge.upsertSharded(
         Seq((99L, "z", 1.0)).toDF("id", "name", "score"), Seq("id"), sDir)
@@ -922,8 +933,8 @@ class SnapshotMergeSpec extends SparkSpec {
     SnapshotMerge.createSharded(big, Seq("id"), 8, dir) // v1
     // a replica bootstrapped from v1…
     val replica = tmp()
-    SnapshotMerge.upsert(SnapshotMerge.readShardedVersion(spark, dir, 1L),
-      Seq("id"), replica)
+    SnapshotMerge.createSharded(SnapshotMerge.readShardedVersion(spark, dir, 1L),
+      Seq("id"), 4, replica)
     // …then the source moves on (updates + inserts + deletes)
     SnapshotMerge.upsertSharded(
       spark.range(0, 300, 7)
@@ -936,13 +947,13 @@ class SnapshotMergeSpec extends SparkSpec {
     // the CDF span IS the incremental maintenance feed: postimages +
     // inserts upsert, deletes delete — no source rescan
     val feed = SnapshotMerge.readShardedChanges(spark, dir, Seq("id"), 1L, 3L)
-    SnapshotMerge.upsert(
+    SnapshotMerge.upsertSharded(
       feed.filter(col("_change_type").isin("insert", "update_postimage", "delete"))
         .withColumn("__is_del", col("_change_type") === "delete")
         .drop("_change_type"),
       Seq("id"), replica, deleteCol = Some("__is_del"))
     val want = SnapshotMerge.readSharded(spark, dir)
-    val got = SnapshotMerge.read(spark, replica)
+    val got = SnapshotMerge.readSharded(spark, replica)
     assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
       "CDF-driven replica must equal the source's live state")
   }
@@ -1083,22 +1094,6 @@ class SnapshotMergeSpec extends SparkSpec {
     }
     put(good)
     assert(SnapshotMerge.readSharded(spark, dir).count() == 3)
-  }
-
-  test("marker protocol: version swap leaves a resolvable snapshot at every step") {
-    val dir = tmp()
-    spark.conf.set(IndexFs.CommitProtocolKey, "marker")
-    try {
-      SnapshotMerge.upsert(base, Seq("id"), dir)
-      val v1 = IndexFs.resolveDir(spark, s"$dir/data")
-      assert(v1.matches(".*data\\.v\\d+$"), s"expected versioned dir, got $v1")
-      SnapshotMerge.upsert(Seq((2L, "b9", 99.0)).toDF("id", "name", "score"),
-        Seq("id"), dir)
-      val v2 = IndexFs.resolveDir(spark, s"$dir/data")
-      assert(v2 != v1, "publish must supersede the version dir")
-      assert(SnapshotMerge.read(spark, dir)
-        .filter(col("id") === 2L).select("name").as[String].head() == "b9")
-    } finally spark.conf.unset(IndexFs.CommitProtocolKey)
   }
 }
 

@@ -412,10 +412,10 @@ class StreamingOpsSpec extends SparkSpec {
       org.apache.spark.sql.types.StructField("del",
         org.apache.spark.sql.types.BooleanType)))
     val snapDir = java.nio.file.Files.createTempDirectory("merge_snap").toString
-    graft.operators.SnapshotMerge.upsert(
+    graft.operators.SnapshotMerge.createSharded(
       Seq((1L, "a", false), (2L, "b", false), (3L, "c", false))
         .toDF("id", "name", "del").drop("del"),
-      Seq("id"), snapDir)
+      Seq("id"), 4, snapDir)
 
     val srcDir = java.nio.file.Files.createTempDirectory("cdc_src")
     def writeFile(name: String, rows: Seq[(Long, String, Boolean)],
@@ -442,7 +442,7 @@ class StreamingOpsSpec extends SparkSpec {
     StreamingOps.mergeStream(stream(), snapDir, Seq("id"), ckpt,
       deleteCol = Some("del")).awaitTermination()
     def state(): Map[Long, String] =
-      graft.operators.SnapshotMerge.read(spark, snapDir)
+      graft.operators.SnapshotMerge.readSharded(spark, snapDir)
         .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val s1 = state()
     assert(s1 == Map(1L -> "a-v2", 3L -> "c", 10L -> "new-v2"))
@@ -450,7 +450,7 @@ class StreamingOpsSpec extends SparkSpec {
     // committed tag short-circuits — snapshot untouched
     StreamingOps.applyMergeBatch(
       Seq((1L, "a-v2", false), (10L, "new", false)).toDF("id", "name", "del"),
-      0L, snapDir, Seq("id"), Some("del"), None, sharded = false)
+      0L, snapDir, Seq("id"), Some("del"), None)
     assert(state() == s1)
     // restart on the SAME checkpoint with one NEW file: only the new
     // batch applies (batch numbering resumes, no re-apply of b0/b1)
@@ -460,52 +460,56 @@ class StreamingOpsSpec extends SparkSpec {
     assert(state() == Map(1L -> "a-v2", 3L -> "c-v2", 10L -> "new-v2"))
   }
 
-  test("mergeStream sharded ≡ flat over the same CDC feed") {
+  test("mergeStream ≡ the keep-last oracle over the same CDC feed") {
     import spark.implicits._
-    val flat = java.nio.file.Files.createTempDirectory("cdc_flat").toString
-    val sharded = java.nio.file.Files.createTempDirectory("cdc_shard").toString
+    val snap = java.nio.file.Files.createTempDirectory("cdc_shard").toString
     val base = spark.range(0, 100)
       .select(col("id"), concat(lit("n"), col("id")).as("name"))
-    graft.operators.SnapshotMerge.upsert(base, Seq("id"), flat)
-    graft.operators.SnapshotMerge.createSharded(base, Seq("id"), 8, sharded)
-    // same three batches through both layouts, via the testable seam
+    graft.operators.SnapshotMerge.createSharded(base, Seq("id"), 8, snap)
+    // three batches through the testable seam
     val batches = Seq(
       Seq((5L, "u5", false), (100L, "ins", false)),
       Seq((100L, "upd", false), (6L, "", true)),
       Seq((5L, "u5b", false)))
-    batches.zipWithIndex.foreach { case (rows, i) =>
-      val b = rows.toDF("id", "name", "del")
-      StreamingOps.applyMergeBatch(b, i.toLong, flat, Seq("id"),
-        Some("del"), None, sharded = false)
-      StreamingOps.applyMergeBatch(b, i.toLong, sharded, Seq("id"),
-        Some("del"), None, sharded = true)
+      .map(_.toDF("id", "name", "del"))
+    batches.zipWithIndex.foreach { case (b, i) =>
+      StreamingOps.applyMergeBatch(b, i.toLong, snap, Seq("id"),
+        Some("del"), None)
     }
-    val a = graft.operators.SnapshotMerge.read(spark, flat)
-    val b = graft.operators.SnapshotMerge.readSharded(spark, sharded)
-    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
-    assert(a.count() == 100) // 100 base − 1 delete + 1 insert
+    // keep-last by (batch sequence) over base + every batch, minus deletes
+    val expected = graft.ops.Dedup.keepLast(
+        batches.zipWithIndex.foldLeft(
+            base.withColumn("del", lit(false)).withColumn("seq", lit(-1))) {
+          case (acc, (b, i)) => acc.unionByName(b.withColumn("seq", lit(i)))
+        },
+        Seq("id"), Seq(col("seq")))
+      .filter(!col("del")).drop("seq", "del")
+    val got = graft.operators.SnapshotMerge.readSharded(spark, snap)
+    assert(got.exceptAll(expected).count() == 0 &&
+      expected.exceptAll(got).count() == 0)
+    assert(got.count() == 100) // 100 base − 1 delete + 1 insert
   }
 
   test("mergeStream: commit tags are namespaced per stream — no cross-stream skips") {
     import spark.implicits._
     val snap = java.nio.file.Files.createTempDirectory("cdc_two").toString
-    graft.operators.SnapshotMerge.upsert(
-      Seq((1L, "a")).toDF("id", "name"), Seq("id"), snap)
+    graft.operators.SnapshotMerge.createSharded(
+      Seq((1L, "a")).toDF("id", "name"), Seq("id"), 4, snap)
     // two DISTINCT streams feed the same snapshot; both start at batch 0.
     // Under bare batch_<id> tags stream B's batch 0 would read stream
     // A's commit as its own and silently drop the batch.
     StreamingOps.applyMergeBatch(Seq((2L, "fromA")).toDF("id", "name"),
-      0L, snap, Seq("id"), None, None, sharded = false, streamName = "a")
+      0L, snap, Seq("id"), None, None, streamName = "a")
     StreamingOps.applyMergeBatch(Seq((3L, "fromB")).toDF("id", "name"),
-      0L, snap, Seq("id"), None, None, sharded = false, streamName = "b")
-    val state = graft.operators.SnapshotMerge.read(spark, snap)
+      0L, snap, Seq("id"), None, None, streamName = "b")
+    val state = graft.operators.SnapshotMerge.readSharded(spark, snap)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(state == Map(1L -> "a", 2L -> "fromA", 3L -> "fromB"),
       s"stream B's batch 0 was skipped: $state")
     // replay WITHIN a stream still short-circuits
     StreamingOps.applyMergeBatch(Seq((2L, "replayed")).toDF("id", "name"),
-      0L, snap, Seq("id"), None, None, sharded = false, streamName = "a")
-    assert(graft.operators.SnapshotMerge.read(spark, snap)
+      0L, snap, Seq("id"), None, None, streamName = "a")
+    assert(graft.operators.SnapshotMerge.readSharded(spark, snap)
       .filter(col("id") === 2L).select("name").as[String].head() == "fromA")
   }
 
