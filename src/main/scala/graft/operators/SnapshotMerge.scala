@@ -82,6 +82,26 @@ object SnapshotMerge {
         s"(the merge renames key columns to __mergekey_<key> internally)")
   }
 
+  /** Refuses key names the manifest header cannot persist: a tab or
+    * line break frames the header, [[KeySep]] separates the names. */
+  private def requireEncodableKeys(keyCols: Seq[String]): Unit = {
+    val bad = keyCols.filter(k => Seq(KeySep, "\t", "\n", "\r").exists(k.contains))
+    require(bad.isEmpty,
+      s"key name(s) ${bad.map(k => s"'$k'").mkString(", ")} hold a tab, line " +
+        "break or \\u001f, which the snapshot manifest cannot persist")
+  }
+
+  /** Every writer that routes rows by key names the snapshot's merge
+    * keys, in order, exactly as the manifest records them: other keys
+    * (or the same keys reordered) hash rows into other shards, and the
+    * next merge would then keep two rows for one key. */
+  private def requireManifestKeys(op: String, dir: String, m: Manifest,
+      keyCols: Seq[String]): Unit =
+    require(keyCols == m.keys,
+      s"$op at $dir: keyCols ${keyCols.mkString("[", ", ", "]")} are not the " +
+        s"snapshot's merge keys ${m.keys.mkString("[", ", ", "]")} (in order) " +
+        "— rows would route by a different hash; nothing was committed")
+
   /** The survivor side of a merge: current rows whose key does NOT
     * appear in the batch's key set. NULL-SAFE equality (`<=>`) on every
     * key component — plain equality would let a null-keyed current row
@@ -152,18 +172,27 @@ object SnapshotMerge {
     * trailer (manifest self-validation — see [[tryCommitManifest]]). */
   private val TrailerFlag = "t1"
 
-  /** (version, nShards, salt, shard → physical dir, anchor dir).
-    * In-memory paths are always rooted at the snapshot dir the caller
-    * named; on disk they are stored RELATIVE to the root, so the
-    * snapshot survives being moved/mounted under a different spelling
-    * and no maintenance op ever compares paths across spellings.
+  /** Separator of the key-name list in the manifest header: a name
+    * holding it (or a tab or line break, which frame the header) cannot
+    * be persisted and is refused at [[createSharded]]. */
+  private val KeySep = "\u001f"
+
+  /** The default hash salt of [[createSharded]]. */
+  private val DefaultSalt = "merge"
+
+  /** (version, nShards, salt, merge key names in order, shard →
+    * physical dir, anchor dir). In-memory paths are always rooted at
+    * the snapshot dir the caller named; on disk they are stored
+    * RELATIVE to the root, so the snapshot survives being
+    * moved/mounted under a different spelling and no maintenance op
+    * ever compares paths across spellings.
     * `anchor` is the zero-row schema relation THIS version reads with:
     * schema changes write a fresh `schema-v<N>-<uid>` dir, every other
     * commit carries the anchor forward by reference, and a restore
     * across a schema change rolls the schema back with the data. */
   private[operators] final case class Manifest(
-      version: Long, nShards: Int, salt: String, shards: Map[Long, String],
-      anchor: String)
+      version: Long, nShards: Int, salt: String, keys: Seq[String],
+      shards: Map[Long, String], anchor: String)
 
   /** A stored (relative) path, resolved against the snapshot root. */
   private def resolveShardPath(dir: String, p: String): String =
@@ -201,8 +230,9 @@ object SnapshotMerge {
   /** CAS-creates `manifest-v<version>` — no-clobber, so at most one
     * writer per version number ever wins; false when the version is
     * already committed. The format is the only one readers accept
-    * ([[readManifestFile]]): a six-field tab-separated header
-    * `meta, nShards, salt, hash version, anchor, trailer flag`, one
+    * ([[readManifestFile]]): a seven-field tab-separated header
+    * `meta, nShards, salt, hash version, anchor, key names, trailer
+    * flag` (key names in order, [[KeySep]]-separated), one
     * `shard, path` line per shard (paths relative to the root), and an
     * `end\t<shard-line count>` trailer. The trailer makes the body
     * SELF-VALIDATING: on schemes where writeSmallFileNoClobber falls
@@ -212,7 +242,8 @@ object SnapshotMerge {
   private[operators] def tryCommitManifest(spark: SparkSession, dir: String,
       m: Manifest): Boolean = {
     val header = Seq("meta", m.nShards.toString, m.salt, ShardHashVersion,
-      relativizeShardPath(dir, m.anchor), TrailerFlag).mkString("\t")
+      relativizeShardPath(dir, m.anchor), m.keys.mkString(KeySep),
+      TrailerFlag).mkString("\t")
     val shardLines = m.shards.toSeq.sortBy(_._1)
       .map { case (k, p) => s"$k\t${relativizeShardPath(dir, p)}" }
     val body = ((header +: shardLines) :+ s"end\t${shardLines.length}")
@@ -279,6 +310,33 @@ object SnapshotMerge {
     Delta(deltaDir, shards, anchorDir)
   }
 
+  /** The file-level twin of [[writeDelta]]: version `version`'s delta
+    * made by COPYING committed dirs of another snapshot (`shards`: shard
+    * id → source shard dir, plus an optional source anchor dir) into the
+    * same writer-unique `shards-v<N>-<uid>/__shard=<K>` and
+    * `schema-v<N>-<uid>` layout. Driver-side file copies overlapped
+    * [[MetadataFanOut]] wide, no Spark job. Copies, never references:
+    * the copy outlives the source's vacuum. */
+  private[operators] def copyDelta(spark: SparkSession, dir: String,
+      version: Long, shards: Map[Long, String],
+      anchor: Option[String] = None): Delta = {
+    val uid = writerUid()
+    val deltaDir = s"${norm(dir)}/shards-v$version-$uid"
+    val anchorDir = anchor.map(_ => s"${norm(dir)}/schema-v$version-$uid")
+    val copied = shards.map { case (k, _) => k -> s"$deltaDir/__shard=$k" }
+    val conf = spark.sparkContext.hadoopConfiguration
+    GraftSession.concurrently(spark, MetadataFanOut)(
+      (shards.toSeq.sortBy(_._1).map { case (k, src) => src -> copied(k) } ++
+        anchor.zip(anchorDir)).map { case (src, dst) => () =>
+        val (from, to) = (new org.apache.hadoop.fs.Path(src),
+          new org.apache.hadoop.fs.Path(dst))
+        require(org.apache.hadoop.fs.FileUtil.copy(from.getFileSystem(conf), from,
+          to.getFileSystem(conf), to, false, false, conf),
+          s"copying $src to $dst failed")
+      })
+    Delta(deltaDir, copied, anchorDir)
+  }
+
   /** Commits `next` over `base` (None only for the first version). A
     * lost CAS deletes every dir in `written` and returns false —
     * committed state is untouched and the caller decides what a lost
@@ -323,7 +381,8 @@ object SnapshotMerge {
     * time-travel path. Anything but the [[tryCommitManifest]] format
     * fails loudly and names the file: a torn tail (the header promises
     * a trailer, and a torn read can lose the tail but never the first
-    * line), a foreign hash version, or a header missing a field. */
+    * line), a foreign hash version, or a header missing a field or
+    * carrying an empty one. */
   private def readManifestFile(spark: SparkSession, dir: String,
       name: String): Manifest = {
     val lines = IndexFs.readSmallFile(IndexFs.fs(spark, dir),
@@ -332,10 +391,10 @@ object SnapshotMerge {
     def corrupt(why: String) = s"corrupt or torn manifest $name at $dir: $why"
     val header = lines.headOption.getOrElse("")
     val meta = header.split("\t", -1)
-    require(meta.length == 6 && meta(0) == "meta" && meta(4).nonEmpty &&
-      meta(5) == TrailerFlag,
+    require(meta.length == 7 && meta(0) == "meta" && meta(4).nonEmpty &&
+      meta(5).split(KeySep, -1).forall(_.nonEmpty) && meta(6) == TrailerFlag,
       corrupt(s"header '$header' is not " +
-        s"meta/nShards/salt/hash version/anchor/$TrailerFlag"))
+        s"meta/nShards/salt/hash version/anchor/key names/$TrailerFlag"))
     require(meta(3) == ShardHashVersion,
       s"$name at $dir was sharded under hash version ${meta(3)}, " +
         s"this build uses $ShardHashVersion — rebuild it (createSharded) " +
@@ -348,6 +407,7 @@ object SnapshotMerge {
       corrupt(s"trailer '${body.last}' does not match ${body.init.length} " +
         "shard lines (concurrent read of an in-flight commit? retry)"))
     Manifest(name.stripPrefix("manifest-v").toLong, meta(1).toInt, meta(2),
+      meta(5).split(KeySep, -1).toSeq,
       body.init.map { l =>
         val Array(k, p) = l.split("\t", 2)
         k.toLong -> resolveShardPath(dir, p)
@@ -372,12 +432,14 @@ object SnapshotMerge {
     * key, like any clustered write), plus the zero-row anchor so an
     * all-deleted snapshot stays readable. `nShards` and the hash salt
     * are persisted in the manifest — every later batch derives the
-    * IDENTICAL assignment from there, never from its own params. */
+    * IDENTICAL assignment from there, never from its own params — and
+    * so are the key names, which every later keyed writer must repeat. */
   def createSharded(df: DataFrame, keyCols: Seq[String], nShards: Int,
-      dir: String, salt: String = "merge"): Unit = {
+      dir: String, salt: String = DefaultSalt): Unit = {
     val spark = df.sparkSession
     require(keyCols.nonEmpty && keyCols.forall(df.columns.contains),
       s"bad key columns $keyCols for ${df.columns.mkString(",")}")
+    requireEncodableKeys(keyCols)
     require(nShards > 0, s"nShards=$nShards must be positive")
     require(!df.columns.contains("__shard"),
       "reserved internal column name in input: __shard")
@@ -389,7 +451,7 @@ object SnapshotMerge {
         .repartition(col("__shard")),
       anchor = Some(df.limit(0)))
     if (!commit(spark, dir, None,
-        Manifest(1L, nShards, salt, d.shards, d.anchor.get), d.written))
+        Manifest(1L, nShards, salt, keyCols, d.shards, d.anchor.get), d.written))
       throw new ConcurrentCommitException(
         s"sharded snapshot at $dir was created concurrently (version 1 " +
           "already committed) — upsertSharded into it instead")
@@ -498,6 +560,7 @@ object SnapshotMerge {
     val maxCommitAttempts = 5
     for (_ <- 1 to maxCommitAttempts) {
       val m = readManifest(spark, dir)
+      requireManifestKeys("upsertSharded", dir, m, keyCols)
       val shard = shardExpr(keyCols, m.nShards, m.salt)
       val inserts = insertRows.withColumn("__shard", shard)
       // the key set stays a plan-side distinct: collecting it to the
@@ -571,21 +634,19 @@ object SnapshotMerge {
     * moved snapshot is an operator decision, not something to spin on
     * silently. Maintenance-window cost: one full snapshot
     * read + clustered write — the same posture as [[Layout.optimize]]
-    * and the index refits. `keyCols` are the snapshot's merge keys (the
-    * manifest persists the hash params but not the key column NAMES —
-    * schema-level knowledge the caller owns, same as
-    * [[upsertSharded]]); the shard assignment is recomputed from them,
-    * deterministically identical to every batch's. */
+    * and the index refits. `keyCols` must be the snapshot's merge keys
+    * in order, as the manifest persists them; the shard assignment is
+    * recomputed from them, deterministically identical to every
+    * batch's. */
   def optimizeSharded(spark: SparkSession, dir: String,
       keyCols: Seq[String], clusterCols: Seq[String],
       filesPerShard: Int = 1, curve: String = "morton",
       rankMode: String = "equiwidth"): Unit = {
     require(filesPerShard > 0, s"filesPerShard=$filesPerShard must be positive")
     val m = readManifest(spark, dir)
+    requireManifestKeys("optimizeSharded", dir, m, keyCols)
     require(m.shards.nonEmpty, s"nothing to optimize at $dir (empty snapshot)")
     val current = scan(spark, m)
-    require(keyCols.nonEmpty && keyCols.forall(current.columns.contains),
-      s"bad key columns $keyCols for ${current.columns.mkString(",")}")
     require(clusterCols.nonEmpty && clusterCols.forall(current.columns.contains),
       s"bad cluster columns $clusterCols for ${current.columns.mkString(",")}")
     val withShard = current.withColumn("__shard",
@@ -682,9 +743,8 @@ object SnapshotMerge {
   def evolveSharded(spark: SparkSession, dir: String,
       keyCols: Seq[String], template: DataFrame): Unit = {
     val m = readManifest(spark, dir)
+    requireManifestKeys("evolveSharded", dir, m, keyCols)
     val anchor = spark.read.parquet(m.anchor)
-    require(keyCols.nonEmpty && keyCols.forall(anchor.columns.contains),
-      s"bad key columns $keyCols for ${anchor.columns.mkString(",")}")
     require(!template.columns.contains("__shard"),
       "reserved internal column name in template: __shard")
     // same guard as every other entry point: a __mergekey_<key> column
@@ -723,11 +783,12 @@ object SnapshotMerge {
     * paths are never reaped, whatever named them).
     *
     * Composes with the other maintenance ops: the restored manifest
-    * carries ITS OWN nShards/salt AND its own schema anchor, so
+    * carries ITS OWN nShards/salt/key names AND its own schema anchor, so
     * restoring across a [[reshardSharded]] boundary re-activates the
     * old assignment, and restoring across an
-    * [[evolveSharded]]/[[migrateSharded]] rolls the SCHEMA back with
-    * the data — the next upsert merges under the restored schema.
+    * [[evolveSharded]]/[[migrateSharded]] rolls the SCHEMA (and a
+    * migration's key renames) back with the data — the next upsert
+    * merges under the restored schema and keys.
     * Returns the new (restored) version number. */
   def restoreSharded(spark: SparkSession, dir: String,
       version: Long): Long = {
@@ -760,12 +821,10 @@ object SnapshotMerge {
       keyCols: Seq[String], newNShards: Int): Boolean = {
     require(newNShards > 0, s"newNShards=$newNShards must be positive")
     val m = readManifest(spark, dir)
+    requireManifestKeys("reshardSharded", dir, m, keyCols)
     if (newNShards == m.nShards) return false
-    val current = scan(spark, m)
-    require(keyCols.nonEmpty && keyCols.forall(current.columns.contains),
-      s"bad key columns $keyCols for ${current.columns.mkString(",")}")
     val d = writeDelta(spark, dir, m.version + 1,
-      current.withColumn("__shard", shardExpr(keyCols, newNShards, m.salt))
+      scan(spark, m).withColumn("__shard", shardExpr(keyCols, newNShards, m.salt))
         .repartition(col("__shard")))
     if (!commit(spark, dir, Some(m),
         d.over(m, replaced = m.shards.keySet).copy(nShards = newNShards),
@@ -783,7 +842,8 @@ object SnapshotMerge {
     * schema: shard files are immutable and time travel reads them as
     * written, so a `readShardedVersion` before the migration still
     * shows the dropped column. After it, batches must arrive in the NEW
-    * spelling and callers address the snapshot with the NEW key names.
+    * spelling and callers address the snapshot with the NEW key names,
+    * which the new manifest records.
     *
     * Renaming a KEY column is legal — the shard assignment hashes key
     * VALUES, which don't move (the assignment is recomputed under the
@@ -796,10 +856,9 @@ object SnapshotMerge {
       renames: Map[String, String] = Map.empty,
       drops: Seq[String] = Nil): Unit = {
     val m = readManifest(spark, dir)
+    requireManifestKeys("migrateSharded", dir, m, keyCols)
     val anchor = spark.read.parquet(m.anchor)
     val cols = anchor.columns.toSeq
-    require(keyCols.nonEmpty && keyCols.forall(cols.contains),
-      s"bad key columns $keyCols for ${cols.mkString(",")}")
     require(renames.nonEmpty || drops.nonEmpty,
       s"nothing to migrate at $dir: no renames, no drops")
     val absent = (renames.keys ++ drops).filterNot(cols.contains).toSeq
@@ -812,6 +871,7 @@ object SnapshotMerge {
     require(!renames.keys.exists(drops.contains),
       "a column cannot be both renamed and dropped")
     val newKeyCols = keyCols.map(c => renames.getOrElse(c, c))
+    requireEncodableKeys(newKeyCols)
     // the target anchor carries every remaining validation: duplicate
     // targets fail in withColumnsRenamed, reserved names in the guards
     val newAnchor = renames.foldLeft(
@@ -838,7 +898,8 @@ object SnapshotMerge {
     // new one the new anchor, and no crash point mixes them
     val d = writeDelta(spark, dir, m.version + 1,
       rewrittenRows.repartition(col("__shard")), anchor = Some(newAnchor))
-    if (!commit(spark, dir, Some(m), d.over(m), d.written))
+    if (!commit(spark, dir, Some(m), d.over(m).copy(keys = newKeyCols),
+        d.written))
       throw lostRace("migrateSharded", dir, m.version + 1)
   }
 
@@ -936,6 +997,81 @@ object SnapshotMerge {
       (keyCols.map(col) ++
         dataCols.map(c => col(s"__c.p.$c").as(c))) :+
         col("__c.t").as(changeTypeCol): _*)
+  }
+
+  /** REPLICATES one change-feed span by copying files — the fast path
+    * of [[graft.streaming.StreamingOps.replicateSharded]]. The copy rule:
+    * when the replica holds the source's content at `fromVersion` (the
+    * replication invariant; an absent replica holds version 0, the
+    * empty snapshot) and the replica, the source at `fromVersion` and
+    * the source at `toVersion` share one layout — `nShards`, salt,
+    * ordered key names (both manifests passed the hash-version gate)
+    * and anchor, the replica's anchor schema equal to the source's —
+    * then replica shard K holds exactly source shard K. The span is
+    * then applied as: copy the `__shard=K` dirs whose physical path
+    * differs between the two source manifests ([[copyDelta]]), drop the
+    * ids that left the `to` manifest, and commit the replica's next
+    * version (a bootstrap also copies the anchor and commits version 1
+    * under the source's layout). No Spark job runs.
+    *
+    * A committed `commitTag` skips the span first; a committed span
+    * marks it. Returns false, having read only manifests and two anchor
+    * footers and written nothing, when the rule does not hold: the
+    * caller then applies the span's change rows instead. A lost commit
+    * race throws [[ConcurrentCommitException]] with the copy deleted.
+    * `replicaShards` is the layout a bootstrap would otherwise create;
+    * `onCommitAttempt` runs just before the commit CAS. */
+  private[graft] def copySpan(spark: SparkSession, srcDir: String,
+      replicaDir: String, keyCols: Seq[String], replicaShards: Int,
+      fromVersion: Long, toVersion: Long, commitTag: String,
+      onCommitAttempt: () => Unit = () => ()): Boolean = {
+    IndexFs.requireValidTag(commitTag)
+    val base = if (existsSharded(spark, replicaDir))
+      Some(readManifest(spark, replicaDir)) else None
+    if (base.nonEmpty && IndexFs.isCommitted(spark, replicaDir, commitTag))
+      return true
+    val to = requireReadableVersion(spark, srcDir, toVersion)
+    val from = if (fromVersion == 0L) None
+      else Some(requireReadableVersion(spark, srcDir, fromVersion))
+    def layout(m: Manifest) = (m.nShards, m.salt, m.keys)
+    val holds = (base, from) match {
+      case (None, None) => (replicaShards, DefaultSalt, keyCols) == layout(to)
+      case (Some(r), Some(f)) =>
+        r.keys == keyCols && layout(r) == layout(to) &&
+          layout(f) == layout(to) && f.anchor == to.anchor &&
+          anchorSchema(spark, r.anchor)
+            .exists(anchorSchema(spark, to.anchor).contains)
+      case _ => false
+    }
+    if (!holds) return false
+    val empty = to.copy(version = 0L, shards = Map.empty)
+    val fromShards = from.getOrElse(empty).shards
+    val changed = (fromShards.keySet ++ to.shards.keySet)
+      .filter(k => fromShards.get(k) != to.shards.get(k))
+    val b = base.getOrElse(empty)
+    val d = copyDelta(spark, replicaDir, b.version + 1,
+      to.shards.filter { case (k, _) => changed(k) },
+      anchor = if (base.isEmpty) Some(to.anchor) else None)
+    onCommitAttempt()
+    if (!commit(spark, replicaDir, base, d.over(b, changed), d.written))
+      throw lostRace("replicateSharded", replicaDir, b.version + 1)
+    IndexFs.markCommitted(spark, replicaDir, commitTag)
+    true
+  }
+
+  /** The Spark schema an anchor was written with, read from its parquet
+    * footer on the driver (reading it through `spark.read` would infer
+    * it with a job); None when no footer records one. */
+  private def anchorSchema(spark: SparkSession, anchor: String): Option[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    IndexFs.fs(spark, anchor).listStatus(new org.apache.hadoop.fs.Path(anchor))
+      .map(_.getPath).filter(_.getName.endsWith(".parquet"))
+      .sortBy(_.getName).headOption.flatMap { p =>
+        Option(org.apache.parquet.hadoop.ParquetFileReader.readFooter(conf, p,
+            org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+          .getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+      }
   }
 
   /** Loud readable-version gate shared by [[readShardedVersion]] and

@@ -388,18 +388,20 @@ object StreamingOps {
     * insert / delete / update_preimage / update_postimage, plus one
     * BOOTSTRAP batch of the oldest readable version's full content as
     * inserts on first contact) to `process(changes, fromVersion,
-    * toVersion)` in version order. The checkpoint (one small file,
-    * atomically replaced) advances only AFTER `process` returns, so
-    * delivery is at-least-once across crashes; a `process` that
-    * commits under a toVersion-derived tag (the [[replicateSharded]]
-    * pattern) upgrades that to exactly-once EFFECTS — the crash-window
-    * redelivery finds its tag and skips. Downstream replicas must
-    * poll no slower than the source's vacuum retention: a reaped
-    * checkpoint version fails LOUDLY here (re-bootstrap deliberately
-    * by clearing the checkpoint), never silently skips a span.
+    * toVersion)` in version order ([[walkShardedVersions]]). The
+    * checkpoint advances only AFTER `process` returns, so delivery is
+    * at-least-once across crashes; a `process` that commits under a
+    * toVersion-derived tag (the [[replicateSharded]] pattern) upgrades
+    * that to exactly-once EFFECTS — the crash-window redelivery finds
+    * its tag and skips. Downstream replicas must poll no slower than
+    * the source's vacuum retention: a reaped checkpoint version fails
+    * LOUDLY here (re-bootstrap deliberately by clearing the
+    * checkpoint), never silently skips a span. Every span handed to
+    * `process` carries its change rows; [[replicateSharded]] walks the
+    * same spans but builds them only when its copy rule does not hold.
     *
     * Scale shape: one O(1) root listing of the source per call, one
-    * manifest read + changed-shard diff join per consumed version
+    * manifest read + changed-shard diff join per consumed span
     * (reference-carried shards stay unread — the [[graft.operators
     * .SnapshotMerge.readShardedChanges]] contract), checkpoint IO is
     * one small file. Versions between calls batch up and drain in
@@ -413,17 +415,32 @@ object StreamingOps {
       maxVersionsPerCall: Int = Int.MaxValue,
       /** When true, every pending version this call drains is handed
         * to `process` as ONE coalesced span (`readShardedChanges(last,
-        * newest)`) instead of one call per version — the batch-CDC
-        * consumer shape (r22, guide §2.4: one diff join + one
-        * downstream apply instead of K). Row-level intermediate states
-        * that a later pending version supersedes are composed away by
-        * the span diff, so consumers that apply EFFECTS (the
-        * [[replicateSharded]] pattern) converge to the identical
-        * replica; consumers that need every intermediate image keep
-        * the default per-version pacing. The checkpoint still advances
-        * only after `process` returns — at-least-once, span-sized. */
+        * newest)`) instead of one call per version. Row-level
+        * intermediate states that a later pending version supersedes
+        * are composed away by the span diff, so a consumer that applies
+        * EFFECTS (the [[replicateSharded]] pattern) converges to the
+        * identical state with one diff and one apply instead of K;
+        * consumers that need every intermediate image keep the default
+        * per-version pacing. The checkpoint still advances only after
+        * `process` returns — at-least-once, span-sized. */
       coalesceSpans: Boolean = false)(
-      process: (DataFrame, Long, Long) => Unit): Long = {
+      process: (DataFrame, Long, Long) => Unit): Long =
+    walkShardedVersions(spark, srcDir, checkpointDir, maxVersionsPerCall,
+        coalesceSpans) { (from, to) =>
+      process(spanChanges(spark, srcDir, keyCols, from, to), from, to)
+    }
+
+  /** The version walk under [[consumeShardedChanges]] and
+    * [[replicateSharded]], free of any change-row `DataFrame`: calls
+    * `apply(from, to)` once per span in version order — first contact
+    * is the bootstrap span `(0, oldest readable version)`, which spends
+    * one unit of the call's `maxVersionsPerCall` budget — and writes
+    * `to` to the durable checkpoint only after `apply` returns. A
+    * checkpointed version the source has since vacuumed fails loudly
+    * before any pending span is applied. */
+  private def walkShardedVersions(spark: SparkSession, srcDir: String,
+      checkpointDir: String, maxVersionsPerCall: Int,
+      coalesceSpans: Boolean)(apply: (Long, Long) => Unit): Long = {
     import graft.operators.{IndexFs, SnapshotMerge}
     require(maxVersionsPerCall >= 1,
       s"maxVersionsPerCall=$maxVersionsPerCall must be >= 1")
@@ -437,13 +454,8 @@ object StreamingOps {
     var last: Long =
       if (f.exists(ckpt)) IndexFs.readSmallFile(f, ckpt).trim.toLong
       else {
-        // first contact: bootstrap with the oldest readable version's
-        // full content as inserts, then advance durably (the bootstrap
-        // spends one unit of the call's version budget)
         val v0 = versions.min
-        val full = SnapshotMerge.readShardedVersion(spark, srcDir, v0)
-          .withColumn("_change_type", lit("insert"))
-        process(full, 0L, v0)
+        apply(0L, v0)
         IndexFs.atomicWriteSmallFile(spark, f, ckpt, v0.toString)
         budget -= 1
         v0
@@ -459,64 +471,91 @@ object StreamingOps {
       if (coalesceSpans && pending.nonEmpty) Seq(pending.max)
       else pending
     spans.foreach { v =>
-      val changes =
-        SnapshotMerge.readShardedChanges(spark, srcDir, keyCols, last, v)
-      process(changes, last, v)
+      apply(last, v)
       IndexFs.atomicWriteSmallFile(spark, f, ckpt, v.toString)
       last = v
     }
     last
   }
 
-  /** CDF REPLICATION — the produce-consume round trip, closed: apply a
-    * source snapshot's change feed to a REPLICA sharded snapshot,
-    * exactly once per source version ([[consumeShardedChanges]] with a
-    * `cdf_<name>_v<version>` commit tag per applied span — crash
-    * redelivery finds the tag and skips). The replica bootstraps from
-    * the oldest readable source version and then applies per-version
-    * diffs: post-images upsert, deletes delete; preimages are dropped
-    * (the replica needs effects, not history). The replica's shard
-    * layout is its OWN choice (`nShards` — a replica may legitimately
-    * shard differently than its source); only content is replicated.
-    * Incremental by construction: each call costs the NEW versions'
-    * changed shards, never a source rescan — the polling loop a
-    * downstream mirror runs between vacuum windows.
+  /** The change rows of span `(from, to)`: the bootstrap span (`from`
+    * = 0) is version `to`'s full content as inserts, any other span
+    * the typed diff between the two versions. */
+  private def spanChanges(spark: SparkSession, srcDir: String,
+      keyCols: Seq[String], from: Long, to: Long): DataFrame = {
+    import graft.operators.SnapshotMerge
+    if (from == 0L)
+      SnapshotMerge.readShardedVersion(spark, srcDir, to)
+        .withColumn("_change_type", lit("insert"))
+    else SnapshotMerge.readShardedChanges(spark, srcDir, keyCols, from, to)
+  }
+
+  /** CDF REPLICATION — the produce-consume round trip, closed: mirror a
+    * source snapshot into a REPLICA sharded snapshot, exactly once per
+    * source span ([[walkShardedVersions]]; each span commits one
+    * replica version and, but for a diff-path bootstrap, a
+    * `cdf_<name>_v<to>` commit tag, so crash redelivery finds the tag
+    * and skips). Two invariants choose how a
+    * span is applied, from what the manifests say alone:
+    *
+    *  - COPY: when the replica and the source share one layout
+    *    (`nShards`, salt, hash version, ordered key names, anchor
+    *    schema) and the span moves neither layout nor anchor, replica
+    *    shard K holds exactly source shard K, so the span is applied by
+    *    copying the source's changed shard dirs
+    *    ([[graft.operators.SnapshotMerge.copySpan]]) — no Spark job, no
+    *    change rows. A bootstrap whose requested layout (`nShards`, the
+    *    default salt, `keyCols`) equals the source's copies every shard
+    *    plus the anchor. The replica holds copies, not references, so a
+    *    source vacuum never breaks it.
+    *  - DIFF: otherwise (a replica sharded differently — its layout is
+    *    its own choice — or keyed differently, or a span that reshards,
+    *    evolves or migrates the source) the span's change rows are
+    *    applied: the bootstrap creates the replica from the full
+    *    insert batch, later spans upsert post-images and delete deletes;
+    *    preimages are dropped (the replica needs effects, not history).
+    *
+    * Both paths leave identical replica content and version sequences.
+    * Incremental either way: each call costs the NEW versions' changed
+    * shards, never a source rescan — the polling loop a downstream
+    * mirror runs between vacuum windows.
     *
     * @return the source version the replica now reflects */
   def replicateSharded(spark: SparkSession, srcDir: String,
       replicaDir: String, keyCols: Seq[String], checkpointDir: String,
       nShards: Int = 16, streamName: String = "cdf",
       maxVersionsPerCall: Int = Int.MaxValue,
-      /** Apply every pending version as ONE coalesced span-diff merge
+      /** Apply every pending version as ONE coalesced span
         * ([[consumeShardedChanges]]'s knob) — safe here by
-        * construction: the replica applies post-image/delete EFFECTS,
-        * and a span diff composes the per-version effects exactly
-        * (upsert∘upsert = upsert of the later image; insert∘delete =
-        * absent), so the replica content is identical at one
-        * diff+merge per call instead of one per version. The commit
-        * tag keys on the span END version, so crash redelivery of the
-        * same span still short-circuits. */
+        * construction: a span copy takes each changed shard's state at
+        * the span end, and a span diff composes the per-version effects
+        * exactly (upsert∘upsert = upsert of the later image;
+        * insert∘delete = absent), so the replica content is identical
+        * at one replica version per call instead of one per source
+        * version. The commit tag keys on the span END version, so crash
+        * redelivery of the same span still short-circuits. */
       coalesceSpans: Boolean = false): Long = {
     import graft.operators.SnapshotMerge
-    consumeShardedChanges(spark, srcDir, keyCols, checkpointDir,
-        maxVersionsPerCall, coalesceSpans) { (changes, _, to) =>
-      graft.GraftSession.releasingScratch(spark) {
-        val tag = s"cdf_${streamName}_v$to"
-        val batch = changes
-          .filter(col("_change_type") =!= "update_preimage")
-          .withColumn("__cdf_delete", col("_change_type") === "delete")
-          .drop("_change_type")
-        if (!SnapshotMerge.existsSharded(spark, replicaDir)) {
-          // bootstrap: version-1 replica from the full-insert batch
-          SnapshotMerge.createSharded(
-            batch.filter(!col("__cdf_delete")).drop("__cdf_delete"),
-            keyCols, nShards, replicaDir)
-        } else {
-          SnapshotMerge.upsertSharded(batch, keyCols, replicaDir,
-            deleteCol = Some("__cdf_delete"), commitTag = Some(tag))
+    walkShardedVersions(spark, srcDir, checkpointDir, maxVersionsPerCall,
+        coalesceSpans) { (from, to) =>
+      val tag = s"cdf_${streamName}_v$to"
+      if (!SnapshotMerge.copySpan(spark, srcDir, replicaDir, keyCols,
+          nShards, from, to, tag))
+        graft.GraftSession.releasingScratch(spark) {
+          val batch = spanChanges(spark, srcDir, keyCols, from, to)
+            .filter(col("_change_type") =!= "update_preimage")
+            .withColumn("__cdf_delete", col("_change_type") === "delete")
+            .drop("_change_type")
+          if (!SnapshotMerge.existsSharded(spark, replicaDir)) {
+            SnapshotMerge.createSharded(
+              batch.filter(!col("__cdf_delete")).drop("__cdf_delete"),
+              keyCols, nShards, replicaDir)
+          } else {
+            SnapshotMerge.upsertSharded(batch, keyCols, replicaDir,
+              deleteCol = Some("__cdf_delete"), commitTag = Some(tag))
+          }
+          ()
         }
-        ()
-      }
     }
   }
 

@@ -9,9 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Keeps cross-cutting seams single: thread pools, execution contexts,
   * persisted-RDD registry reads and local checkpoints are spelled only
   * in `GraftSession.scala` ([[GraftSession.concurrently]],
-  * [[GraftSession.localPin]]); shard-partitioned writes, manifest
-  * commits and retire logs only in the commit seam of
-  * `SnapshotMerge.scala` (`writeDelta` / `commit`), and the keyed
+  * [[GraftSession.localPin]]); shard-partitioned writes, shard-dir
+  * copies, manifest commits and retire logs only in the commit seam of
+  * `SnapshotMerge.scala` (`writeDelta` / `copyDelta` / `commit`), and the keyed
   * snapshot has that one format — `SnapshotMerge.scala` and
   * `Revisit.scala` never publish or resolve a flat relation. */
 class SeamGuardSpec extends AnyFunSuite {
@@ -42,7 +42,8 @@ class SeamGuardSpec extends AnyFunSuite {
   }
 
   private val commitTokens =
-    Seq(""".partitionBy("__shard")""", "tryCommitManifest(", "writeRetireLog(")
+    Seq(""".partitionBy("__shard")""", "FileUtil.copy(", "tryCommitManifest(",
+      "writeRetireLog(")
 
   private val flatSnapshotTokens = Seq("publishRelation(", "resolveDir(")
 

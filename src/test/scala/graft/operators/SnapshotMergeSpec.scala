@@ -1073,8 +1073,9 @@ class SnapshotMergeSpec extends SparkSpec {
     }
     val lines = good.split("\n").toSeq
     val meta = lines.head.split("\t").toSeq
-    assert(meta.length == 6 && meta(3) == "h1" && meta(4).nonEmpty &&
-      meta(5) == "t1", s"fixture expects the one header format: ${lines.head}")
+    assert(meta.length == 7 && meta(3) == "h1" && meta(4).nonEmpty &&
+      meta(5) == "id" && meta(6) == "t1",
+      s"fixture expects the one header format: ${lines.head}")
     assert(lines.last == s"end\t${lines.length - 2}")
     def withHeader(fields: Seq[String]) =
       (fields.mkString("\t") +: lines.tail).mkString("\n")
@@ -1083,7 +1084,9 @@ class SnapshotMergeSpec extends SparkSpec {
       "no anchor field" -> withHeader(meta.patch(4, Nil, 1)),
       "no hash version" -> withHeader(meta.patch(3, Nil, 1)),
       "foreign hash version" -> withHeader(meta.updated(3, "h0")),
-      "no t1 flag" -> withHeader(meta.take(5)),
+      "no key names field" -> withHeader(meta.patch(5, Nil, 1)),
+      "empty key list" -> withHeader(meta.updated(5, "")),
+      "no t1 flag" -> withHeader(meta.take(6)),
       "no trailer" -> lines.init.mkString("\n"))
     forged.foreach { case (what, body) =>
       put(body)
@@ -1094,6 +1097,60 @@ class SnapshotMergeSpec extends SparkSpec {
     }
     put(good)
     assert(SnapshotMerge.readSharded(spark, dir).count() == 3)
+  }
+
+  test("the manifest persists the key names: a comma round-trips, an unencodable name is refused") {
+    val dir = tmp()
+    val df = Seq((1L, "a", 10.0), (2L, "b", 20.0)).toDF("id,part", "name", "score")
+    SnapshotMerge.createSharded(df, Seq("name", "id,part"), 4, dir)
+    assert(SnapshotMerge.readManifest(spark, dir).keys == Seq("name", "id,part"))
+    val refused = tmp()
+    Seq("id\tx", "id\nx", "id\u001fx").foreach { k =>
+      val e = intercept[IllegalArgumentException] {
+        SnapshotMerge.createSharded(df.withColumnRenamed("name", k),
+          Seq(k), 4, refused)
+      }
+      assert(e.getMessage.contains("cannot persist"), e.getMessage)
+    }
+    assert(!SnapshotMerge.existsSharded(spark, refused))
+  }
+
+  test("a mis-keyed write fails loudly, naming both key lists, and commits nothing") {
+    val dir = tmp()
+    SnapshotMerge.createSharded(base, Seq("id"), 4, dir)
+    val v1 = SnapshotMerge.readManifest(spark, dir)
+    // routed by (id, name), this batch missed the row it replaces and
+    // left two rows for id 1
+    val e = intercept[IllegalArgumentException] {
+      SnapshotMerge.upsertSharded(Seq((1L, "a2", 11.0)).toDF("id", "name", "score"),
+        Seq("id", "name"), dir)
+    }
+    assert(e.getMessage.contains("[id, name]") && e.getMessage.contains("[id]"),
+      e.getMessage)
+    val misKeyed: Seq[(String, () => Any)] = Seq(
+      "optimizeSharded" -> (() =>
+        SnapshotMerge.optimizeSharded(spark, dir, Seq("name"), Seq("id"))),
+      "evolveSharded" -> (() => SnapshotMerge.evolveSharded(spark, dir,
+        Seq("name"), Seq((1L, "x", 1.0, 1)).toDF("id", "name", "score", "extra"))),
+      "reshardSharded" -> (() =>
+        SnapshotMerge.reshardSharded(spark, dir, Seq("name"), 8)),
+      "migrateSharded" -> (() => SnapshotMerge.migrateSharded(spark, dir,
+        Seq("name"), renames = Map("score" -> "points"))))
+    misKeyed.foreach { case (op, run) =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains(op) && e.getMessage.contains("[name]") &&
+        e.getMessage.contains("[id]"), e.getMessage)
+    }
+    assert(SnapshotMerge.readManifest(spark, dir) == v1, "nothing may commit")
+    assert(SnapshotMerge.readSharded(spark, dir).count() == 3)
+    // a key rename is recorded; a restore carries its version's keys
+    SnapshotMerge.migrateSharded(spark, dir, Seq("id"), renames = Map("id" -> "key"))
+    assert(SnapshotMerge.readManifest(spark, dir).keys == Seq("key"))
+    SnapshotMerge.upsertSharded(Seq((1L, "a2", 11.0)).toDF("key", "name", "score"),
+      Seq("key"), dir)
+    assert(SnapshotMerge.readSharded(spark, dir).count() == 3)
+    SnapshotMerge.restoreSharded(spark, dir, v1.version)
+    assert(SnapshotMerge.readManifest(spark, dir).keys == Seq("id"))
   }
 }
 

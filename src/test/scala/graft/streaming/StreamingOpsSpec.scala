@@ -644,4 +644,162 @@ class StreamingOpsSpec extends SparkSpec {
     assert(SnapshotMerge.shardedVersions(spark, rep).max == 2L,
       "replayed coalesced span must be tag-skipped")
   }
+
+  /** Runs `body`, counting the Spark jobs it starts (the OrchestratorSpec
+    * job-tag listener). */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{DagProbe, SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = s"replica-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag))) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    val out = try body finally {
+      sc.removeJobTag(tag)
+      DagProbe.drainListeners(sc)
+      sc.removeSparkListener(listener)
+    }
+    (out, jobs.get)
+  }
+
+  private def sameRows(a: org.apache.spark.sql.DataFrame,
+      b: org.apache.spark.sql.DataFrame): Boolean = {
+    val cols = a.columns.sorted.toSeq
+    val (x, y) = (a.select(cols.map(col): _*), b.select(cols.map(col): _*))
+    x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty
+  }
+
+  test("replicateSharded: the shard-copy path ≡ the diff+merge path, per version and coalesced") {
+    import graft.operators.SnapshotMerge
+    def rows(lo: Long, hi: Long, tag: String) = spark.range(lo, hi)
+      .select(col("id"), concat(lit(tag), col("id")).as("name"),
+        (col("id") % 7).as("g"))
+    for (coalesced <- Seq(false, true)) {
+      def tmp(n: String) =
+        java.nio.file.Files.createTempDirectory(n).toString + "/t"
+      val src = tmp("rep_src")
+      val (copyRep, copyCk) = (tmp("rep_copy"), tmp("rep_copy_ck"))
+      val (diffRep, diffCk) = (tmp("rep_diff"), tmp("rep_diff_ck"))
+      // multi-file shards, so every compaction has work
+      spark.conf.set("spark.sql.files.maxRecordsPerFile", "20")
+      try {
+        SnapshotMerge.createSharded(rows(0, 200, "n"), Seq("id"), 4, src)
+        // copy replica: the source's layout; diff replica: its own
+        def replicateBoth(): Int = {
+          val (_, jobs) = jobsDuring(StreamingOps.replicateSharded(spark, src,
+            copyRep, Seq("id"), copyCk, nShards = 4, coalesceSpans = coalesced))
+          StreamingOps.replicateSharded(spark, src, diffRep, Seq("id"), diffCk,
+            nShards = 2, coalesceSpans = coalesced)
+          val source = SnapshotMerge.readSharded(spark, src)
+          assert(sameRows(SnapshotMerge.readSharded(spark, copyRep), source))
+          assert(sameRows(SnapshotMerge.readSharded(spark, diffRep), source))
+          assert(SnapshotMerge.shardedVersions(spark, copyRep) ==
+            SnapshotMerge.shardedVersions(spark, diffRep))
+          jobs
+        }
+        assert(replicateBoth() == 0, "the copy bootstrap must run no Spark job")
+        val spans: Seq[(String, () => Any)] = Seq(
+          "upsert" -> (() => SnapshotMerge.upsertSharded(rows(150, 260, "u"),
+            Seq("id"), src)),
+          "delete" -> (() => SnapshotMerge.upsertSharded(
+            rows(0, 40, "d").withColumn("del", col("id") % 2 === 0),
+            Seq("id"), src, deleteCol = Some("del"))),
+          "compact" -> (() => assert(SnapshotMerge.compactSharded(spark, src) > 0)),
+          "optimize" -> (() =>
+            SnapshotMerge.optimizeSharded(spark, src, Seq("id"), Seq("g"))),
+          "reshard" -> (() =>
+            assert(SnapshotMerge.reshardSharded(spark, src, Seq("id"), 6))))
+        // per version: replicate after every span; coalesced: after
+        // every second one, so each replicated span holds two versions
+        spans.zipWithIndex.foreach { case ((what, run), i) =>
+          run()
+          if (!coalesced || i % 2 == 1 || i == spans.size - 1) {
+            val jobs = replicateBoth()
+            if (what == "reshard")
+              assert(jobs > 0, "a span that reshards the source takes the diff path")
+            else assert(jobs == 0, s"the copy span over $what ran $jobs Spark jobs")
+          }
+        }
+        // after the reshard the copy replica no longer matches: later
+        // spans take the diff path, still in step with the other replica
+        SnapshotMerge.upsertSharded(rows(300, 320, "z"), Seq("id"), src)
+        assert(replicateBoth() > 0)
+      } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    }
+  }
+
+  test("replicateSharded copy path: a foreign salt, key list or anchor schema falls back; copies outlive a source vacuum; a lost CAS leaves nothing") {
+    import spark.implicits._
+    import graft.operators.{ConcurrentCommitException, IndexFs, SnapshotMerge}
+    def tmp(n: String) =
+      java.nio.file.Files.createTempDirectory(n).toString + "/t"
+    def df(rows: (Long, String)*) = rows.toDF("id", "name")
+
+    // each mismatch keeps the diff path for the bootstrap and every span
+    val cases: Seq[(String, String => Unit, Seq[String], Boolean)] = Seq(
+      ("salt", dir => SnapshotMerge.createSharded(
+        df((1L, "a"), (2L, "b")), Seq("id"), 4, dir, salt = "pepper"),
+        Seq("id"), false),
+      ("key order", dir => SnapshotMerge.createSharded(
+        df((1L, "a"), (2L, "b")), Seq("id", "name"), 4, dir),
+        Seq("name", "id"), false),
+      ("anchor schema", dir => SnapshotMerge.createSharded(
+        df((1L, "a"), (2L, "b")), Seq("id"), 4, dir),
+        Seq("id"), true))
+    cases.foreach { case (what, create, replicaKeys, reorderedReplica) =>
+      val (src, rep, ck) = (tmp("fb_src"), tmp("fb_rep"), tmp("fb_ck"))
+      create(src)
+      if (reorderedReplica) {
+        // same layout and keys, columns in another order, at version 1
+        SnapshotMerge.createSharded(SnapshotMerge.readSharded(spark, src)
+          .select("name", "id"), replicaKeys, 4, rep)
+        IndexFs.atomicWriteSmallFile(spark, IndexFs.fs(spark, ck),
+          new org.apache.hadoop.fs.Path(s"$ck/cdf.version"), "1")
+      } else {
+        val (_, jobs) = jobsDuring(StreamingOps.replicateSharded(spark, src,
+          rep, replicaKeys, ck, nShards = 4))
+        assert(jobs > 0, s"$what: the bootstrap must take the diff path")
+      }
+      SnapshotMerge.upsertSharded(df((2L, "b2"), (3L, "c")),
+        if (what == "key order") Seq("id", "name") else Seq("id"), src)
+      val (_, jobs) = jobsDuring(StreamingOps.replicateSharded(spark, src,
+        rep, replicaKeys, ck, nShards = 4))
+      assert(jobs > 0, s"$what: the span must take the diff path")
+      assert(sameRows(SnapshotMerge.readSharded(spark, rep),
+        SnapshotMerge.readSharded(spark, src)), what)
+    }
+
+    // a matching replica holds copies: a source vacuum never breaks it
+    val (src, rep, ck) = (tmp("cp_src"), tmp("cp_rep"), tmp("cp_ck"))
+    SnapshotMerge.createSharded(df((1L, "a"), (2L, "b"), (3L, "c")),
+      Seq("id"), 4, src)
+    StreamingOps.replicateSharded(spark, src, rep, Seq("id"), ck, nShards = 4)
+    SnapshotMerge.upsertSharded(df((1L, "a2"), (4L, "d")), Seq("id"), src)
+    val (_, jobs) = jobsDuring(
+      StreamingOps.replicateSharded(spark, src, rep, Seq("id"), ck, nShards = 4))
+    assert(jobs == 0)
+    assert(SnapshotMerge.vacuumSharded(spark, src, minAgeMs = 0) > 0)
+    assert(SnapshotMerge.readSharded(spark, rep).as[(Long, String)].collect().toMap ==
+      Map(1L -> "a2", 2L -> "b", 3L -> "c", 4L -> "d"))
+
+    // a lost CAS at the commit seam: the copy is deleted, no tag lands
+    SnapshotMerge.upsertSharded(df((5L, "e")), Seq("id"), src)
+    val (from, to) = (SnapshotMerge.shardedVersions(spark, src).init.last,
+      SnapshotMerge.shardedVersions(spark, src).last)
+    val next = SnapshotMerge.shardedVersions(spark, rep).last + 1
+    val tag = s"cdf_cdf_v$to"
+    val e = intercept[ConcurrentCommitException] {
+      SnapshotMerge.copySpan(spark, src, rep, Seq("id"), 4, from, to, tag,
+        onCommitAttempt = () => SnapshotMerge.restoreSharded(spark, rep, 1L))
+    }
+    assert(e.getMessage.contains(s"version $next"), e.getMessage)
+    assert(!IndexFs.listDirNames(spark, rep).exists(_.startsWith(s"shards-v$next-")),
+      IndexFs.listDirNames(spark, rep).mkString(","))
+    assert(!IndexFs.isCommitted(spark, rep, tag))
+  }
 }
