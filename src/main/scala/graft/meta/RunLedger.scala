@@ -1,9 +1,13 @@
 package graft.meta
 
 import java.io.ByteArrayOutputStream
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.util.concurrent.TimeUnit
 import scala.jdk.CollectionConverters._
 import scala.util.Try
+import scala.util.hashing.MurmurHash3
 
 import com.fasterxml.jackson.core.JsonToken
 
@@ -16,7 +20,11 @@ import org.json4s.jackson.JsonMethods
   *
   * Driver-side IO by design: the ledger holds O(1 row) per pipeline run
   * (`tasks/metadata.py`, `utils/paths.py:57-144`) — putting a Spark job in
-  * front of a one-line append would be pure overhead at any scale.
+  * front of a one-line append would be pure overhead at any scale. The
+  * pipeline's keep-last upkeep ([[appendKeepLast]]) reads the run-id
+  * sidecar's few slots, not the ledger, unless the sidecar cannot vouch
+  * for it; the run counts it records come from the artifacts on disk
+  * (`Orchestrator.recordMetadata`).
   */
 object RunLedger {
 
@@ -32,17 +40,123 @@ object RunLedger {
   /** K4: append one compact JSON line, rotating first if the file exceeds
     * `maxBytes` (`_rotate_if_big` `metadata.py:76-91`, `_append_jsonl_line`
     * `metadata.py:94-99`). */
-  def append(ledgerPath: String, record: JObject, cfg: Config = Config()): Unit = {
-    val p = Paths.get(ledgerPath)
+  def append(ledgerPath: String, record: JObject, cfg: Config = Config()): Unit =
+    appendLine(Paths.get(ledgerPath), record, cfg)
+
+  /** [[append]]: whether it rotated first, and the line it wrote. */
+  private def appendLine(p: Path, record: JObject, cfg: Config): (Boolean, Array[Byte]) = {
     parent(p)
-    rotateIfBig(p, cfg)
-    val line = JsonMethods.compact(JsonMethods.render(record)) + "\n"
-    Files.write(p, line.getBytes("UTF-8"),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    val rotated = rotateIfBig(p, cfg)
+    val line = (JsonMethods.compact(JsonMethods.render(record)) + "\n").getBytes("UTF-8")
+    Files.write(p, line, StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    (rotated, line)
   }
 
-  private def rotateIfBig(p: Path, cfg: Config): Unit = {
-    if (!Files.exists(p) || Files.size(p) < cfg.maxBytes) return
+  /** K4 and D3 for one new record: [[append]], then keep-last upkeep in
+    * proportion to the append. The sidecar `<ledger>.ids` indexes the
+    * ledger's run ids as an on-disk hash set ([[IdSet]]), stamped with
+    * the byte length and modification time of the ledger it indexes.
+    * When the stamp matches the ledger as this append found it, only the
+    * new line's id is looked up, in a few slots: a new id is inserted and
+    * the stamp moved to the grown ledger. A missing or stale sidecar (the
+    * ledger was appended to or edited behind it), a rotation, a full set,
+    * or an id the set already holds (or whose hash it holds) runs the
+    * full [[dedupeKeepLast]] and rebuilds the sidecar from what it kept,
+    * so the ledger always ends as `append` then `dedupeKeepLast` leaves
+    * it. */
+  def appendKeepLast(ledgerPath: String, record: JObject, cfg: Config = Config()): Unit =
+    synchronized {
+      val p = Paths.get(ledgerPath)
+      val found = stamp(p)
+      val (rotated, line) = appendLine(p, record, cfg)
+      val id = topLevelRunId(line, 0, line.length - 1).map(IdSet.hash)
+      val sidecar = Paths.get(s"$p.ids")
+      val indexed = !rotated && found.nonEmpty && Files.exists(sidecar) &&
+        IdSet.insert(sidecar, found.get, stamp(p).get, id)
+      if (!indexed) {
+        val kept = keepLast(p)._2 // may rewrite the ledger: stamp it after
+        IdSet.write(sidecar, stamp(p).get, kept.map(IdSet.hash))
+      }
+    }
+
+  /** A ledger's byte length and modification time in nanoseconds; None
+    * when there is no ledger. */
+  private def stamp(p: Path): Option[(Long, Long)] =
+    if (!Files.exists(p)) None
+    else Some((Files.size(p), Files.getLastModifiedTime(p).to(TimeUnit.NANOSECONDS)))
+
+  /** The sidecar's on-disk hash set of 64-bit run-id hashes, as
+    * big-endian longs: the stamp of the ledger it indexes (length,
+    * modification time), the entry count, then a power-of-two table of
+    * hashes, linearly probed, 0 marking an empty slot, at most half
+    * full. */
+  private object IdSet {
+    private val Header = 3 * 8L
+
+    def hash(id: String): Long = {
+      val b = id.getBytes("UTF-8")
+      val h = (MurmurHash3.bytesHash(b, 0x5bd1e995).toLong << 32) |
+        (MurmurHash3.bytesHash(b, 0x1b873593) & 0xffffffffL)
+      if (h == 0) 1L else h
+    }
+
+    private def home(h: Long, n: Int): Int = (h & (n - 1)).toInt
+
+    /** Rewrites the sidecar `f` as the set of `hashes`, stamped `stamp`. */
+    def write(f: Path, stamp: (Long, Long), hashes: Seq[Long]): Unit = {
+      val set = hashes.distinct
+      var n = 1024
+      while (n < 2 * (set.size + 1)) n *= 2
+      val slots = new Array[Long](n)
+      set.foreach { h =>
+        var i = home(h, n)
+        while (slots(i) != 0) i = (i + 1) & (n - 1)
+        slots(i) = h
+      }
+      val buf = ByteBuffer.allocate(Header.toInt + 8 * n)
+      buf.putLong(stamp._1).putLong(stamp._2).putLong(set.size.toLong)
+      slots.foreach(buf.putLong)
+      Files.write(f, buf.array())
+    }
+
+    /** Adds `hash` (None: the line has no id) to the set in `f` and
+      * restamps it `next`, when `f` is stamped `found` and `hash` is
+      * absent with room to add it; otherwise changes nothing and returns
+      * false. The stamp is written last, so a set left half-updated reads
+      * stale. */
+    def insert(f: Path, found: (Long, Long), next: (Long, Long), hash: Option[Long]): Boolean = {
+      val ch = FileChannel.open(f, StandardOpenOption.READ, StandardOpenOption.WRITE)
+      def long(at: Long): Long = {
+        val b = ByteBuffer.allocate(8)
+        while (b.hasRemaining && ch.read(b, at + b.position()) >= 0) {}
+        b.flip().getLong
+      }
+      def put(at: Long, v: Long): Unit = ch.write(ByteBuffer.allocate(8).putLong(v).flip(), at)
+      try {
+        val n = ((ch.size() - Header) / 8).toInt
+        if (n < 2 || Integer.bitCount(n) != 1 || (long(0), long(8)) != found) return false
+        val entries = long(16)
+        for (h <- hash) {
+          if (2 * (entries + 2) > n) return false
+          var i = home(h, n)
+          var slot = long(Header + 8L * i)
+          while (slot != 0) {
+            if (slot == h) return false
+            i = (i + 1) & (n - 1)
+            slot = long(Header + 8L * i)
+          }
+          put(Header + 8L * i, h)
+          put(16, entries + 1)
+        }
+        put(0, next._1)
+        put(8, next._2)
+        true
+      } finally ch.close()
+    }
+  }
+
+  private def rotateIfBig(p: Path, cfg: Config): Boolean = {
+    if (!Files.exists(p) || Files.size(p) < cfg.maxBytes) return false
     // shift p.(n) → p.(n+1), dropping the oldest (metadata.py:82-90)
     (cfg.maxBackups - 1 to 1 by -1).foreach { i =>
       val src = Paths.get(s"$p.$i")
@@ -50,6 +164,7 @@ object RunLedger {
         Files.move(src, Paths.get(s"$p.${i + 1}"), StandardCopyOption.REPLACE_EXISTING)
     }
     Files.move(p, Paths.get(s"$p.1"), StandardCopyOption.REPLACE_EXISTING)
+    true
   }
 
   /** D3: dedupe JSONL lines by `run_id`, LAST occurrence wins; lines with
@@ -62,21 +177,24 @@ object RunLedger {
     * end at '\n' (a '\r' before it is whitespace to the parser). The
     * file is rewritten in place only when that changes its lines: a line
     * dropped, a blank line removed, or the final newline restored. */
-  def dedupeKeepLast(ledgerPath: String): Int = {
-    val p = Paths.get(ledgerPath)
-    if (!Files.exists(p)) return 0
+  def dedupeKeepLast(ledgerPath: String): Int = keepLast(Paths.get(ledgerPath))._1
+
+  /** [[dedupeKeepLast]]: the lines dropped, and the ids of the kept
+    * lines that have one. */
+  private def keepLast(p: Path): (Int, Seq[String]) = {
+    if (!Files.exists(p)) return (0, Nil)
     val bytes = Files.readAllBytes(p)
     val spans = lineSpans(bytes)
     val lines = spans.filter { case (s, e) => (s until e).exists(i => (bytes(i) & 0xff) > ' ') }
     val ids = lines.map { case (s, e) => topLevelRunId(bytes, s, e - s) }
     val lastIdx = ids.zipWithIndex.collect { case (Some(id), i) => id -> i }.toMap
-    val kept = lines.indices.collect { case i if ids(i).forall(lastIdx(_) == i) => lines(i) }
+    val kept = lines.indices.filter(i => ids(i).forall(lastIdx(_) == i))
     if (kept.size != spans.size || (bytes.nonEmpty && bytes.last != '\n')) {
       val out = new ByteArrayOutputStream(bytes.length)
-      kept.foreach { case (s, e) => out.write(bytes, s, e - s); out.write('\n') }
+      kept.map(lines).foreach { case (s, e) => out.write(bytes, s, e - s); out.write('\n') }
       Files.write(p, out.toByteArray)
     }
-    lines.size - kept.size
+    (lines.size - kept.size, kept.flatMap(ids))
   }
 
   /** (start, end) of each line, the last one possibly unterminated. */

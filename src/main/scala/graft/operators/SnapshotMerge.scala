@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
+import graft.sources.Footers
 
 /** A sharded-snapshot commit lost its compare-and-swap: another writer
   * committed the same target version first. Thrown by the maintenance
@@ -580,7 +581,9 @@ object SnapshotMerge {
       // does not evolve in place — untouched shards are carried by
       // reference with their old physical schema, so evolution is the
       // explicit evolveSharded/migrateSharded maintenance op
-      val anchorCols = spark.read.parquet(m.anchor).columns
+      val anchor = Footers.parquetSchema(spark, m.anchor).getOrElse(
+        throw new IllegalStateException(s"anchor ${m.anchor} of $dir records no schema"))
+      val anchorCols = anchor.fieldNames
       require(
         anchorCols.sorted.toSeq ==
           inserts.columns.filterNot(_ == "__shard").sorted.toSeq,
@@ -594,7 +597,10 @@ object SnapshotMerge {
       val survivors =
         if (currentTouchedDirs.isEmpty) inserts.limit(0)
         else {
-          val current = spark.read.parquet(currentTouchedDirs: _*)
+          // under the anchor's schema, which every shard file was
+          // written with (this gate; evolveSharded rewrites all rows):
+          // inferring it again from a shard footer costs a job
+          val current = spark.read.schema(anchor).parquet(currentTouchedDirs: _*)
           survivorAntiJoin(current, keySide, keyCols)
             .withColumn("__shard", shard)
         }
@@ -1039,8 +1045,8 @@ object SnapshotMerge {
       case (Some(r), Some(f)) =>
         r.keys == keyCols && layout(r) == layout(to) &&
           layout(f) == layout(to) && f.anchor == to.anchor &&
-          anchorSchema(spark, r.anchor)
-            .exists(anchorSchema(spark, to.anchor).contains)
+          Footers.parquetSchema(spark, r.anchor)
+            .exists(Footers.parquetSchema(spark, to.anchor).contains)
       case _ => false
     }
     if (!holds) return false
@@ -1057,21 +1063,6 @@ object SnapshotMerge {
       throw lostRace("replicateSharded", replicaDir, b.version + 1)
     IndexFs.markCommitted(spark, replicaDir, commitTag)
     true
-  }
-
-  /** The Spark schema an anchor was written with, read from its parquet
-    * footer on the driver (reading it through `spark.read` would infer
-    * it with a job); None when no footer records one. */
-  private def anchorSchema(spark: SparkSession, anchor: String): Option[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    IndexFs.fs(spark, anchor).listStatus(new org.apache.hadoop.fs.Path(anchor))
-      .map(_.getPath).filter(_.getName.endsWith(".parquet"))
-      .sortBy(_.getName).headOption.flatMap { p =>
-        Option(org.apache.parquet.hadoop.ParquetFileReader.readFooter(conf, p,
-            org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
-          .getFileMetaData.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata"))
-      }
   }
 
   /** Loud readable-version gate shared by [[readShardedVersion]] and

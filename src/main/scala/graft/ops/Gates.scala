@@ -26,12 +26,14 @@ object Gates {
     report
   }
 
-  /** Non-empty gate: count rows, raise on 0 (`precheck_nonempty`,
-    * `quality_parallel.py:54-73`). Returns the count — it feeds the drift
-    * check downstream (`flows/sf_etl_orchestrator_flow.py:156-157`). */
-  def nonEmptyGate(df: DataFrame): Long = {
-    val n = df.count()
-    if (n == 0) throw new GateFailure("No data to process")
-    n
+  /** Non-empty gate: raise on 0 rows (`precheck_nonempty`,
+    * `quality_parallel.py:54-73`). `rows` is the raw artifact's row count,
+    * which the pipeline observes while writing it (the reference counts
+    * the written file; the rows written to it are the same number), so
+    * the gate runs no job. Returns the count: it feeds the drift check
+    * downstream (`flows/sf_etl_orchestrator_flow.py:156-157`). */
+  def nonEmptyGate(rows: Long): Long = {
+    if (rows == 0) throw new GateFailure("No data to process")
+    rows
   }
 }

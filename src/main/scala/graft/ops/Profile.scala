@@ -32,28 +32,6 @@ object Profile {
   val DefaultTopK = 5
   val DefaultCardinalityCap = 5000L
 
-  /** Scale-path stats: HyperLogLog++ distinct estimates instead of exact
-    * distinct counts — no per-value shuffle, one straight aggregate even
-    * over thousands of columns of a 100 TB table. `rsd` is the HLL
-    * relative standard deviation (default 5%). Top-k is skipped (pair
-    * with [[graft.functions.TopKFreq]] when values are needed). */
-  def profileApproxStats(df: DataFrame, rsd: Double = 0.05): Seq[ColumnProfile] = {
-    val cols = df.columns.toSeq
-    if (cols.isEmpty) return Nil
-    val aggs = cols.flatMap { c =>
-      Seq(
-        count(when(col(c).isNull, 1)).as(s"__null__$c"),
-        approx_count_distinct(col(c), rsd).as(s"__uniq__$c"))
-    }
-    val row = df.agg(aggs.head, aggs.tail: _*).collect().head
-    val dtypes = df.dtypes.toMap
-    cols.map { c =>
-      val nulls = row.getLong(row.fieldIndex(s"__null__$c"))
-      val uniq = row.getLong(row.fieldIndex(s"__uniq__$c")) + (if (nulls > 0) 1 else 0)
-      ColumnProfile(c, dtypes(c), nulls, uniq, Nil)
-    }
-  }
-
   /** Exact profile of every column. `nUnique` counts null as a value
     * (Polars `n_unique`); `topValues` ranks null as a value too, ordered
     * by count desc, value asc with null last among equal counts (the

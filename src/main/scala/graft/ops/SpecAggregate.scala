@@ -25,11 +25,16 @@ object SpecAggregate {
     *  4. grouped (or global) aggregate with the compiled agg list;
     *  5. sort by the FIRST group key only (`tasks/process.py:107-108`).
     */
-  def run(spark: SparkSession, spec: ObjectSpec, input: DataFrame): DataFrame = {
-    if (input.isEmpty) {
-      // Empty short-circuit: spec-derived output schema (process.py:76-87).
-      return Scan.emptyRelation(spark, SpecCompiler.emptyOutputSchema(spec))
-    }
+  def run(spark: SparkSession, spec: ObjectSpec, input: DataFrame): DataFrame =
+    aggregate(spark, spec, input, empty = input.isEmpty)
+
+  /** [[run]] for a caller that already knows whether `input` is empty
+    * (the pipeline counts raw's rows while writing them), so no probe job
+    * runs: an empty input short-circuits to the spec-derived empty output
+    * (`process.py:76-87`). */
+  def aggregate(spark: SparkSession, spec: ObjectSpec, input: DataFrame,
+      empty: Boolean): DataFrame = {
+    if (empty) return Scan.emptyRelation(spark, SpecCompiler.emptyOutputSchema(spec))
     val withDerived =
       if (spec.metrics.contains(ObjectSpec.DurationHours) &&
           !input.columns.contains("duration_hours"))

@@ -14,7 +14,7 @@ import graft.GraftSession
 import graft.meta.RunLedger
 import graft.ops._
 import graft.sinks.Sinks
-import graft.sources.Scan
+import graft.sources.{Footers, Scan}
 import graft.spec.{ObjectSpec, SpecRegistry}
 
 /** The pipeline DAG (SURVEY §2.12 ≙ `flows/sf_etl_orchestrator_flow.py:85-250`):
@@ -35,6 +35,12 @@ import graft.spec.{ObjectSpec, SpecRegistry}
   * jobs. Error policy is two-tier: ETL failures always raise (cancelling
   * the QA branch), QA failures are advisory unless `failOnQaError`
   * (`flow:91,163-171`).
+  *
+  * Where a run's row counts come from: raw's is counted while raw is
+  * written ([[materializeRaw]]) and feeds the non-empty gate, drift and
+  * the ETL's empty short-circuit; the processed CSV's rows are counted
+  * while it is written; the ledger's recounts read the artifacts on disk
+  * ([[recordMetadata]]). Only the csv raw medium counts with a Spark job.
   */
 object Orchestrator {
 
@@ -75,13 +81,11 @@ object Orchestrator {
   /** Simple bounded retry (≙ Prefect task retries, `extract.py:61-62`,
     * `process.py:56`). */
   def retry[T](attempts: Int, delayMs: Long)(body: => T): T = {
-    // A while loop, NOT a foreach closure: `return` inside a lambda is
-    // compiled to a NonLocalReturnControl throwable, which a broad catch
-    // treats as a FAILED attempt — every call then runs its body
-    // `attempts` times and sleeps the whole delay schedule even on
-    // success (latent since round 1; surfaced when delays became the
-    // reference's 10 s/5 s). NonFatal also keeps control-flow and fatal
-    // throwables out of the retry path by construction.
+    // The body runs once per attempt and a success returns at once. So
+    // this is a while loop, not a foreach closure: `return` inside a
+    // lambda is a NonLocalReturnControl throwable, which the catch would
+    // take for a failed attempt. NonFatal keeps control-flow and fatal
+    // throwables out of the retry path.
     val n = math.max(attempts, 1)
     var last: Throwable = null
     var i = 0
@@ -122,18 +126,22 @@ object Orchestrator {
     s"${base}_${ts}_$runId"
   }
 
-  /** Raw materialization: the file hand-off both branches read back. The
-    * parquet medium is read under the schema it was just written with,
-    * which spares a footer-inference job; the csv medium re-infers it,
-    * as the reference does. */
-  private[pipeline] def materializeRaw(
-      spark: SparkSession, scanned: DataFrame, rawPath: String, rawFormat: String): DataFrame =
+  /** Raw materialization: the file hand-off both branches read back,
+    * and its row count. The parquet medium counts the rows while writing
+    * them ([[Sinks.counted]]) and is read back under the schema it was
+    * written with, which spares a footer-inference job. The csv medium
+    * re-infers the schema, as the reference does, and counts its
+    * read-back artifact: it is the reference-parity path, where a
+    * written row need not read back as one row. */
+  private[pipeline] def materializeRaw(spark: SparkSession, scanned: DataFrame,
+      rawPath: String, rawFormat: String): (DataFrame, Long) =
     if (rawFormat == "csv") {
       Sinks.csv(Normalize.temporalsToString(scanned), rawPath)
-      Scan.csv(spark, rawPath, scanned.schema)
+      val raw = Scan.csv(spark, rawPath, scanned.schema)
+      (raw, raw.count())
     } else {
-      Sinks.parquetSnappy(scanned, rawPath)
-      spark.read.schema(scanned.schema).parquet(rawPath)
+      val rows = Sinks.counted(scanned)(Sinks.parquetSnappy(_, rawPath))
+      (spark.read.schema(scanned.schema).parquet(rawPath), rows)
     }
 
   private val runIds = new SecureRandom()
@@ -173,7 +181,7 @@ object Orchestrator {
       }
 
     // ---- extract once (S1-S4; retried 3×10s ≙ extract.py:61-62) ----
-    val raw = recordState("extract") {
+    val (raw, rawRows) = recordState("extract") {
       val scanned = Scan.specScan(source, spec, opts.limit)
       if (opts.rawFormat == "csv") {
         // fail fast (outside the retry — deterministic) on schemas the
@@ -191,20 +199,21 @@ object Orchestrator {
 
     // ---- ETL branch (strict; process retried 2×5s ≙ process.py:56) ----
     def etl(): (Long, Long) = {
-      val processed = recordState("process") {
+      val (processed, written) = recordState("process") {
         retry(2, opts.processRetryDelayMs) {
-          val out = SpecAggregate.run(spark, spec, raw)
-          Sinks.csv(out, paths("processed_csv"), singleFile = true)
-          out
+          val out = SpecAggregate.aggregate(spark, spec, raw, empty = rawRows == 0)
+          (out, Sinks.counted(out)(Sinks.csv(_, paths("processed_csv"), singleFile = true)))
         }
       }
       val n = recordState("load_json") {
         // the reference's load task re-reads the PROCESSED CSV from disk
         // (`load_csv_to_json`, tasks/load.py:62) — keep that file
         // contract: the JSON is built from the materialized artifact,
-        // not the in-memory frame
-        val fromDisk = Scan.csv(spark, paths("processed_csv"), processed.schema)
-        Sinks.jsonRecords(fromDisk, paths("output_json"))
+        // not the in-memory frame. Zero rows written is the empty array.
+        Sinks.jsonRecords(
+          if (written == 0) Scan.emptyRelation(spark, processed.schema)
+          else Scan.inferredCsv(spark, paths("processed_csv")),
+          paths("output_json"))
       }
       // processed row count == JSON record count by construction (same
       // artifact, just collected) — don't relaunch the aggregate job
@@ -213,20 +222,17 @@ object Orchestrator {
 
     // ---- QA branch (advisory; ≙ flow:145-157): at most
     // `qaParallelism` of its legs run at a time ----
-    def qa(): (Map[String, Try[String]], Option[String], Long) = {
+    def qa(): (Map[String, Try[String]], Option[String]) = {
       states("start_gate") = "COMPLETED" // Q1: no-op barrier
-      val Seq(schema: Gates.SchemaReport, rows: Long) =
-        GraftSession.concurrently[Any](spark, opts.qaParallelism)(Seq(
-          () => recordState("precheck_schema") {
-            val report = Gates.schemaGate(raw, spec.requiredCols)
-            Sinks.textScalar(
-              org.json4s.jackson.JsonMethods.pretty(
-                ("columns_present" -> report.columnsPresent) ~ ("missing" -> report.missing)),
-              paths("schema_report"))
-            report
-          },
-          () => recordState("precheck_nonempty") { Gates.nonEmptyGate(raw) }))
-      require(schema.ok)
+      // both prechecks are driver-side, so they run in turn
+      recordState("precheck_schema") {
+        val report = Gates.schemaGate(raw, spec.requiredCols)
+        Sinks.textScalar(
+          org.json4s.jackson.JsonMethods.pretty(
+            ("columns_present" -> report.columnsPresent) ~ ("missing" -> report.missing)),
+          paths("schema_report"))
+      }
+      val rows = recordState("precheck_nonempty") { Gates.nonEmptyGate(rawRows) }
 
       // each task is advisory on its own: a failure is its result
       def task(name: String)(body: => String): () => Try[String] =
@@ -255,15 +261,15 @@ object Orchestrator {
             paths("profile_json")
           },
           task("snapshot_parquet") {
-            Sinks.parquetSnappy(raw, paths("parquet_snapshot"))
+            if (opts.rawFormat == "csv") Sinks.parquetSnappy(raw, paths("parquet_snapshot"))
+            else Sinks.parquetCopy(spark, rawPath, paths("parquet_snapshot"))
             paths("parquet_snapshot")
           }))
 
       val drift = recordState("drift") {
         Drift.checkRowcountDrift(rows, paths("rowcount_txt"), opts.driftThreshold)
       }
-      (Map("dedup" -> dedup, "profile" -> profile, "snapshot" -> snapshot),
-        drift.alert, rows)
+      (Map("dedup" -> dedup, "profile" -> profile, "snapshot" -> snapshot), drift.alert)
     }
 
     // ---- both branches beside each other, two-tier strictness
@@ -272,10 +278,9 @@ object Orchestrator {
     // only under failOnQaError ----
     val ((processedRows, jsonN), qaOutcome) =
       GraftSession.concurrently(spark)(etl(), Try(qa()))
-    val (qaResults, driftAlert, rawRows) = qaOutcome match {
+    val (qaResults, driftAlert) = qaOutcome match {
       case Success(v) => v
-      case Failure(_) if !opts.failOnQaError =>
-        (Map.empty[String, Try[String]], None, raw.count())
+      case Failure(_) if !opts.failOnQaError => (Map.empty[String, Try[String]], None)
       case Failure(e) => throw e
     }
     if (opts.failOnQaError)
@@ -293,44 +298,39 @@ object Orchestrator {
 
   /** Q6: run-metadata recorder — payload with params, artifact paths,
     * RE-counted artifact rows (`metadata.py:195-197`), task states and
-    * timing; appended to the JSONL ledger + pretty projections, then the
-    * store is normalized (Q7). All three counts come from the artifacts
-    * on disk, not from in-memory return values — a corrupted or
-    * clobbered file shows up as a count mismatch in the ledger, exactly
-    * as the reference's `_safe_count_json` does
-    * (`tasks/metadata.py:35-42,195-197`). The three recounts run as
-    * concurrent legs; each catches its own failure as -1, so a missing
-    * or corrupt artifact never cancels the other counts. */
+    * timing; appended to the JSONL ledger + pretty projections, with
+    * keep-last upkeep (Q7, [[RunLedger.appendKeepLast]]). All three counts
+    * come from the artifacts on disk, not from in-memory return values —
+    * a corrupted or clobbered file shows up as a count mismatch in the
+    * ledger, exactly as the reference's `_safe_count_json` does
+    * (`tasks/metadata.py:35-42,195-197`). Each recount catches its own
+    * failure as -1, so a missing or corrupt artifact never stops the
+    * other counts. Where each count comes from:
+    *  - raw, parquet medium: the row counts in the data files' footers
+    *    ([[Footers.parquetRows]]), read on the driver;
+    *  - raw, csv medium: a Spark count of the files, multiLine so a
+    *    quoted embedded newline stays one row, as [[Scan.csv]] reads it;
+    *  - processed CSV: the same header/multiLine reading, parsed on the
+    *    driver ([[Footers.csvRows]]) — the aggregate is O(groups) rows;
+    *  - JSON: the records array (K2) parsed on the driver, O(groups) too. */
   def recordMetadata(
       spark: SparkSession, report: RunReport, paths: Map[String, String],
       rawFormat: String = "parquet"): Unit = {
-    def safeCount(f: => Long): () => Long = () => Try(f).getOrElse(-1L)
-    val Seq(rawCount, processedCount, jsonCount) =
-      GraftSession.concurrently(spark, 3)(Seq(
-        safeCount {
-          if (rawFormat == "csv")
-            spark.read.option("header", "true").option("multiLine", "true")
-              .csv(report.rawPath).count()
-          else spark.read.parquet(report.rawPath).count()
-        },
-        // multiLine here too: a quoted embedded newline in a group-key
-        // value must count as one row, consistent with the raw recount
-        // and Scan.csv.
-        safeCount {
-          spark.read.option("header", "true").option("multiLine", "true")
-            .csv(report.processedCsv).count()
-        },
-        // The JSON artifact is a single records ARRAY (K2) — aggregate-
-        // sized by construction, so a driver parse is O(groups), not a
-        // data path.
-        safeCount {
-          val txt = java.nio.file.Files.readString(
-            java.nio.file.Paths.get(report.outputJson))
-          org.json4s.jackson.JsonMethods.parse(txt) match {
-            case JArray(xs) => xs.length.toLong
-            case _ => -1L
-          }
-        }))
+    def safeCount(f: => Long): Long = Try(f).getOrElse(-1L)
+    val rawCount = safeCount {
+      if (rawFormat == "csv")
+        spark.read.option("header", "true").option("multiLine", "true")
+          .csv(report.rawPath).count()
+      else Footers.parquetRows(spark, report.rawPath)
+    }
+    val processedCount = safeCount(Footers.csvRows(spark, report.processedCsv))
+    val jsonCount = safeCount {
+      val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(report.outputJson))
+      org.json4s.jackson.JsonMethods.parse(txt) match {
+        case JArray(xs) => xs.length.toLong
+        case _ => -1L
+      }
+    }
 
     val record: JObject =
       ("run_id" -> report.runId) ~
@@ -348,9 +348,8 @@ object Orchestrator {
         ("drift_alert" -> report.driftAlert) ~
         ("duration_seconds" -> report.durationSeconds)
 
-    RunLedger.append(paths("runs_jsonl"), record)
+    RunLedger.appendKeepLast(paths("runs_jsonl"), record)
     RunLedger.writePrettyLatest(paths("latest_json"), record)
     RunLedger.upsertGlobalPretty(paths("global_json"), record)
-    RunLedger.dedupeKeepLast(paths("runs_jsonl"))
   }
 }

@@ -2,9 +2,13 @@ package graft.sinks
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.IOUtils
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.ops.Normalize
+import graft.sources.Footers
 
 /** Materialization sinks (SURVEY §2.2).
   *
@@ -14,8 +18,21 @@ import graft.ops.Normalize
   * single file to preserve the observable contract; raw/large relations
   * keep Spark's parallel directory layout — at 100 TB a single-file sink
   * is the anti-pattern, so each sink documents which side it's on.
+  *
+  * Row counts of a write come from the write itself ([[counted]]), never
+  * from a second job over what was written.
   */
 object Sinks {
+
+  /** Runs `write` over `df` and returns the rows it wrote, counted by a
+    * fresh [[Observation]] that rides on the write's own job, so counting
+    * costs no job. Fresh per call: an observation reports only the first
+    * action over its frame, so a retried write needs a new one. */
+  def counted(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val rows = Observation()
+    write(df.observe(rows, count(lit(1)).as("rows")))
+    rows.get("rows").asInstanceOf[Long]
+  }
 
   /** Header CSV, overwrite (K1 ≙ `extract.py:99`, `process.py:110`).
     * Parallel directory write; `singleFile=true` coalesces to one part —
@@ -61,6 +78,23 @@ object Sinks {
     * `quality_parallel.py:143-156`). Parallel write. */
   def parquetSnappy(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").option("compression", "snappy").parquet(path)
+
+  /** Parquet snapshot of a directory [[parquetSnappy]] wrote (K3 over the
+    * parquet raw hand-off): its data files ([[Footers.dataFiles]]) are
+    * byte-copied into the cleared directory `path`. The snapshot holds the
+    * same rows under the same codec as a re-encode would, without the
+    * second encode or its job. */
+  def parquetCopy(spark: SparkSession, from: String, path: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dst = new Path(path)
+    val fs = dst.getFileSystem(conf)
+    fs.delete(dst, true)
+    fs.mkdirs(dst)
+    Footers.dataFiles(spark, from).foreach { p =>
+      IOUtils.copyBytes(p.getFileSystem(conf).open(p), fs.create(new Path(dst, p.getName)),
+        conf, true)
+    }
+  }
 
   /** Text scalar sink (K6 ≙ `quality_parallel.py:188`). */
   def textScalar(value: String, path: String): Unit = {

@@ -102,16 +102,22 @@ object Scan {
     val f = new java.io.File(path)
     if (!f.exists() || f.length() == 0) emptyRelation(spark, fallback)
     else {
-      val df = spark.read
-        .option("header", "true")
-        .option("inferSchema", "true")
-        // parse quoted embedded newlines — Spark's CSV writer quotes
-        // them, but the default reader splits records on every newline
-        .option("multiLine", "true")
-        .csv(path)
+      val df = inferredCsv(spark, path)
       if (df.columns.isEmpty || df.isEmpty) emptyRelation(spark, fallback) else df
     }
   }
+
+  /** The schema-inferred header CSV read inside [[csv]], without its
+    * empty-file tolerance: for a caller that knows `path` holds rows, so
+    * no emptiness probe has to run. */
+  private[graft] def inferredCsv(spark: SparkSession, path: String): DataFrame =
+    spark.read
+      .option("header", "true")
+      .option("inferSchema", "true")
+      // parse quoted embedded newlines — Spark's CSV writer quotes
+      // them, but the default reader splits records on every newline
+      .option("multiLine", "true")
+      .csv(path)
 
   /** Schema-FIRST JSONL scan with per-line corruption tolerance — the
     * training-data interchange format (crawl dumps, annotation exports

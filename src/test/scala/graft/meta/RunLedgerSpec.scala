@@ -111,4 +111,77 @@ class RunLedgerSpec extends AnyFunSuite {
     assert(Files.getLastModifiedTime(p).toMillis == 0L)
     assert(Files.readAllBytes(p).sameElements(before))
   }
+
+  private def lines(p: java.nio.file.Path): Seq[String] =
+    new String(Files.readAllBytes(p), "UTF-8").split("\n").toSeq.filter(_.nonEmpty)
+
+  test("appendKeepLast: a re-recorded id keeps only its last line") {
+    val p = tmp().resolve("runs.jsonl")
+    RunLedger.appendKeepLast(p.toString, rec("r1", 1))
+    RunLedger.appendKeepLast(p.toString, rec("r2", 2))
+    assert(Files.exists(Paths.get(s"$p.ids")))
+    RunLedger.appendKeepLast(p.toString, rec("r1", 3)) // the Q6 double record
+    val rows = RunLedger.read(p.toString)
+    assert(rows.map(r => (r \ "run_id", r \ "n")) ==
+      Seq((JString("r2"), JInt(2)), (JString("r1"), JInt(3))))
+    // the rebuilt sidecar is stamped with the rewritten ledger's length,
+    // so the next append is checked against the sidecar alone
+    val stamped = java.nio.ByteBuffer.wrap(Files.readAllBytes(Paths.get(s"$p.ids"))).getLong
+    assert(stamped == Files.size(p))
+  }
+
+  test("appendKeepLast ≡ append then dedupeKeepLast, with edits behind the sidecar's back") {
+    val rnd = new scala.util.Random(7)
+    val dir = tmp()
+    val kept = dir.resolve("kept.jsonl")
+    val plain = dir.resolve("plain.jsonl")
+    (1 to 300).foreach { n =>
+      val r: JObject = rnd.nextInt(10) match {
+        case 0 => ("n" -> n): JObject // no id: always kept
+        case _ => rec(s"r${rnd.nextInt(120)}", n)
+      }
+      RunLedger.appendKeepLast(kept.toString, r)
+      RunLedger.append(plain.toString, r)
+      RunLedger.dedupeKeepLast(plain.toString)
+      if (n % 50 == 0) { // appended to behind the sidecar's back
+        val extra = rec(s"r${rnd.nextInt(120)}", -n)
+        RunLedger.append(kept.toString, extra)
+        RunLedger.append(plain.toString, extra)
+      }
+      assert(lines(kept) == lines(plain), s"after record $n")
+    }
+  }
+
+  test("appendKeepLast: a ledger edited behind the sidecar's back is fully deduped") {
+    val p = tmp().resolve("runs.jsonl")
+    RunLedger.appendKeepLast(p.toString, rec("a", 1))
+    RunLedger.appendKeepLast(p.toString, rec("b", 2))
+    // an edit that re-adds an existing id, then a fresh id: the stale
+    // stamp forces the full pass, which drops the older "a"
+    Files.write(p, (lines(p) :+ """{"run_id":"a","n":3}""").mkString("", "\n", "\n")
+      .getBytes("UTF-8"))
+    RunLedger.appendKeepLast(p.toString, rec("c", 4))
+    assert(RunLedger.read(p.toString).map(r => r \ "n") == Seq(JInt(2), JInt(3), JInt(4)))
+    // a removed sidecar is rebuilt by the full pass too
+    Files.delete(Paths.get(s"$p.ids"))
+    RunLedger.appendKeepLast(p.toString, rec("b", 5))
+    assert(RunLedger.read(p.toString).map(r => r \ "n") == Seq(JInt(3), JInt(4), JInt(5)))
+    assert(Files.exists(Paths.get(s"$p.ids")))
+  }
+
+  test("appendKeepLast: rotation resets the sidecar to the new file's ids") {
+    val p = tmp().resolve("runs.jsonl")
+    val small = RunLedger.Config(maxBytes = 60, maxBackups = 2)
+    Seq("r1", "r2", "r3").zipWithIndex.foreach { case (id, i) =>
+      RunLedger.appendKeepLast(p.toString, rec(id, i + 1), small)
+    }
+    assert(!Files.exists(Paths.get(s"$p.1"))) // 3 lines of 22 bytes: not yet over
+    RunLedger.appendKeepLast(p.toString, rec("r1", 4), small) // rotates first
+    assert(lines(Paths.get(s"$p.1")).size == 3)
+    assert(RunLedger.read(p.toString).map(r => r \ "n") == Seq(JInt(4)))
+    // ids of the rotated file are not in the new index: r2 is simply added
+    RunLedger.appendKeepLast(p.toString, rec("r2", 5), small)
+    RunLedger.appendKeepLast(p.toString, rec("r1", 6), small) // indexed: deduped
+    assert(RunLedger.read(p.toString).map(r => r \ "n") == Seq(JInt(5), JInt(6)))
+  }
 }

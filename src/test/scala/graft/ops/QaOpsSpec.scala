@@ -22,8 +22,8 @@ class QaOpsSpec extends SparkSpec {
   }
 
   test("nonEmptyGate returns count or raises on empty") {
-    assert(Gates.nonEmptyGate(Seq(1, 2, 3).toDF("x")) == 3)
-    val e = intercept[Gates.GateFailure](Gates.nonEmptyGate(Seq.empty[Int].toDF("x")))
+    assert(Gates.nonEmptyGate(3L) == 3)
+    val e = intercept[Gates.GateFailure](Gates.nonEmptyGate(0L))
     assert(e.getMessage == "No data to process")
   }
 
@@ -47,18 +47,6 @@ class QaOpsSpec extends SparkSpec {
     val profiles = Profile.profile(df, topK = 5, cardinalityCap = 10)
     assert(profiles.find(_.name == "hi").get.topValues.isEmpty)
     assert(profiles.find(_.name == "lo").get.topValues.size == 3)
-  }
-
-  test("approx profile stats track exact within HLL tolerance") {
-    val df = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    val exact = Profile.profile(df).map(p => p.name -> p.nUnique).toMap
-    val approx = Profile.profileApproxStats(df, rsd = 0.05)
-    approx.foreach { p =>
-      val e = exact(p.name).toDouble
-      assert(math.abs(p.nUnique - e) <= math.max(3, e * 0.15),
-        s"col=${p.name}: approx=${p.nUnique} exact=$e")
-      assert(p.topValues.isEmpty)
-    }
   }
 
   test("drift: first run no alert, >=50% change alerts, state persisted") {

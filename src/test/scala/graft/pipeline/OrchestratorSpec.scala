@@ -5,6 +5,7 @@ import scala.collection.immutable.ListMap
 
 import graft.SparkSpec
 import graft.meta.RunLedger
+import graft.ops.Gates
 import graft.spec.ObjectSpec
 
 class OrchestratorSpec extends SparkSpec {
@@ -21,7 +22,7 @@ class OrchestratorSpec extends SparkSpec {
 
   /** Spark jobs one run of [[source]] may start: the run's fixed cost,
     * which dominates at cron sizes, may not creep back up. */
-  private val JobBudget = 24
+  private val JobBudget = 13
 
   private def fullDag(opts: Orchestrator.RunOptions): Unit = {
     val base = Files.createTempDirectory("orch").toString
@@ -260,8 +261,76 @@ class OrchestratorSpec extends SparkSpec {
     assert(jobs.get <= JobBudget, s"${jobs.get} jobs for one run")
 
     val rawPath = s"$base/handoff"
-    val raw = Orchestrator.materializeRaw(spark, source, rawPath, "parquet")
+    val (raw, rows) = Orchestrator.materializeRaw(spark, source, rawPath, "parquet")
     assert(raw.schema == spark.read.parquet(rawPath).schema)
+    assert(rows == 4) // counted while written
+  }
+
+  test("a zero-row extract fails precheck_nonempty and yields the spec-derived empty summary") {
+    val base = Files.createTempDirectory("orchEmpty").toString
+    val empty = source.limit(0)
+    val opts = Orchestrator.RunOptions(limit = None, timestampRaw = false)
+    val report = Orchestrator.run(spark, "Order", empty, base, opts,
+      specOverride = Some(orderSpec))
+    assert(report.taskStates.get("precheck_nonempty").contains("FAILED"))
+    // the gate stops the QA branch before drift, as it always has
+    assert(!report.taskStates.contains("drift"))
+    assert(report.rawRows == 0 && report.processedRows == 0 && report.jsonRecords == 0)
+    assert(new String(Files.readAllBytes(Paths.get(report.outputJson)), "UTF-8") == "[\n\n]")
+    assert(graft.sources.Footers.csvRows(spark, report.processedCsv) == 0)
+    val last = RunLedger.read(s"$base/meta/runs.jsonl").last
+    assert((last \ "raw_rows_recounted") == org.json4s.JInt(0))
+    assert((last \ "processed_rows_recounted") == org.json4s.JInt(0))
+    val e = intercept[Gates.GateFailure] {
+      Orchestrator.run(spark, "Order", empty, base, opts.copy(failOnQaError = true),
+        specOverride = Some(orderSpec))
+    }
+    assert(e.getMessage == "No data to process")
+  }
+
+  test("a truncated raw part file never recounts as the old row count") {
+    import org.json4s._
+    val base = Files.createTempDirectory("orchTrunc").toString
+    val paths = Orchestrator.buildPaths(base, "Order")
+    val report = Orchestrator.run(spark, "Order", source, base,
+      Orchestrator.RunOptions(limit = None, timestampRaw = false),
+      specOverride = Some(orderSpec))
+    val part = graft.sources.Footers.dataFiles(spark, report.rawPath).head
+    val file = Paths.get(part.toUri)
+    val bytes = Files.readAllBytes(file)
+    Files.write(file, bytes.take(bytes.length / 2))
+    Orchestrator.recordMetadata(spark, report, paths)
+    val JInt(n) = RunLedger.read(paths("runs_jsonl")).last \ "raw_rows_recounted"
+    assert(n != BigInt(report.rawRows))
+  }
+
+  test("the QA snapshot is a copy of raw's data files; the csv medium still writes one") {
+    val base = Files.createTempDirectory("orchSnap").toString
+    val opts = Orchestrator.RunOptions(limit = None, timestampRaw = false)
+    def snapshotMatchesRaw(r: Orchestrator.RunReport): Unit = {
+      val snap = spark.read.parquet(s"$base/output/Order/snapshot.parquet")
+      val raw = spark.read.parquet(r.rawPath)
+      assert(snap.schema == raw.schema)
+      assert(snap.collect().map(_.toString).sorted.toSeq ==
+        raw.collect().map(_.toString).sorted.toSeq)
+    }
+    val r1 = Orchestrator.run(spark, "Order", source.repartition(3), base, opts,
+      specOverride = Some(orderSpec))
+    snapshotMatchesRaw(r1)
+    // a second run over a smaller source: no part file of the first stays
+    val r2 = Orchestrator.run(spark, "Order", source.limit(1).coalesce(1), base, opts,
+      specOverride = Some(orderSpec))
+    snapshotMatchesRaw(r2)
+    val names = graft.sources.Footers.dataFiles(spark, _: String)
+    assert(names(s"$base/output/Order/snapshot.parquet").map(_.getName) ==
+      names(r2.rawPath).map(_.getName))
+    assert(spark.read.parquet(s"$base/output/Order/snapshot.parquet").count() == 1)
+
+    val baseC = Files.createTempDirectory("orchSnapC").toString
+    val rc = Orchestrator.run(spark, "Order", source, baseC, opts.copy(rawFormat = "csv"),
+      specOverride = Some(orderSpec))
+    assert(rc.qaArtifacts.contains("snapshot"))
+    assert(spark.read.parquet(s"$baseC/output/Order/snapshot.parquet").count() == 4)
   }
 
   test("limit is applied at extract (source-pushed P3)") {
