@@ -10,8 +10,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * tokens' xxhash64 values — bit b of the result is set when strictly
   * more than half the tokens have bit b set.
   *
-  * Same contract as the HOF composition in
-  * [[GraftFunctions.simhash64HOF]], but one tight loop per row instead of
+  * Same contract as the HOF composition `ReferenceHofs.simhash64HOF`
+  * (test sources), but one tight loop per row instead of
   * 64 interpreted lambda passes (~50× less per-row overhead — the
   * difference between a 1-scan fingerprint sweep and an interpreter at
   * corpus scale). Token hashing uses the same xxhash64(seed=42) as

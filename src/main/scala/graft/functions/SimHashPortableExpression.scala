@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 
 /** `simhash64_portable(tokens)` — the md5-based 60-bit SimHash as a
   * native expression, bit-for-bit equal to the HOF spelling
-  * ([[GraftFunctions.simhash64PortableHOF]], asserted in TextDedupSpec)
+  * (`ReferenceHofs.simhash64PortableHOF`, asserted in TextDedupSpec)
   * and therefore to the DuckDB oracle that recomputes the same
   * fingerprints in SQL.
   *

@@ -25,8 +25,8 @@ import org.apache.spark.sql.types._
   * (P₂, B₂) = (2147483629, 1000033); combined `key = k₁·P₂ + k₂` —
   * 62 effective bits, every intermediate product < 2⁶² so the SQL twin
   * needs no wrapping arithmetic (DuckDB BIGINT errors on overflow).
-  * Collision expectation at W windows is ~W²/2⁶³ — ≈10⁻⁴ even at the
-  * 100× ScaleBench corpus; a collision can only over-merge two
+  * Collision expectation at W windows is ~W²/2⁶³ — ≈10⁻⁴ even at a
+  * 500k-document corpus; a collision can only over-merge two
   * unrelated windows, never crash.
   *
   * Exists for the usual reason (SURVEY §7.3): the HOF spelling

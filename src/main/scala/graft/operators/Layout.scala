@@ -299,9 +299,7 @@ object Layout {
       p: org.apache.hadoop.fs.Path, cols: Seq[String]): FileStats = {
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.column.statistics.{IntStatistics, LongStatistics}
-    val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-      conf, p,
-      org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+    val footer = graft.sources.Footers.footer(conf, p)
     val blocks = footer.getBlocks.asScala.toSeq.map { block =>
       cols.map { c =>
         c -> (block.getColumns.asScala.find(_.getPath.toDotString == c) match {

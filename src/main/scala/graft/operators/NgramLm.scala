@@ -128,19 +128,4 @@ object NgramLm {
         roundPortable(avg(log10(col("__p"))), 4).as("avg_logprob"))
       .withColumnRenamed("__doc", idCol)
   }
-
-  /** The curation spelling: keep documents whose mean log-prob clears
-    * the threshold (CCNet keeps the best-perplexity fraction; a fixed
-    * threshold is the streaming-friendly variant — thresholds transfer
-    * across batches, quantile cuts need a corpus pass). Documents with
-    * fewer than two tokens have no score and are DROPPED — under a
-    * quality filter, unscorable is not a pass. One semi-join on the id:
-    * the kept frame keeps every input column. */
-  def filterByAvgLogProb(docs: DataFrame, idCol: String, textCol: String,
-      lm: BigramLm, minAvgLogProb: Double, alpha: Double = 0.4): DataFrame =
-    docs.join(
-      scoreAvgLogProb(docs, idCol, textCol, lm, alpha)
-        .filter(col("avg_logprob") >= minAvgLogProb)
-        .select(col(idCol)),
-      Seq(idCol), "left_semi")
 }

@@ -126,30 +126,4 @@ object QualityClassifier {
       .map { case (w, b) => (b, w) } :+ (-1, model.intercept))
       .toSeq.toDF("bucket", "weight")
   }
-
-  /** Rebuild a [[Model]] from a [[modelRelation]] snapshot. Bucket
-    * density is validated loudly: the weight vector is rebuilt by
-    * sorted bucket index AND `buckets = weights.length` is the scoring
-    * modulus, so a snapshot missing or duplicating a bucket row would
-    * silently shift every subsequent weight to the wrong index and
-    * change the modulus — every score wrong, nothing failing. */
-  def fromRelation(rel: DataFrame, salt: String = "qc"): Model = {
-    val rows = rel.select(col("bucket").cast("int"),
-      col("weight").cast("double")).collect()
-    val intercept = rows.find(_.getInt(0) == -1)
-      .map(_.getDouble(1)).getOrElse(0.0)
-    val byBucket = rows.filter(_.getInt(0) >= 0)
-      .map(r => r.getInt(0) -> r.getDouble(1))
-    require(byBucket.nonEmpty, "model relation has no bucket rows")
-    val dupes = byBucket.groupBy(_._1).collect {
-      case (b, vs) if vs.length > 1 => b
-    }
-    require(dupes.isEmpty,
-      s"duplicate bucket rows in model relation: ${dupes.toSeq.sorted.mkString(",")}")
-    val maxBucket = byBucket.map(_._1).max
-    require(byBucket.length == maxBucket + 1,
-      s"model relation is not bucket-dense: ${byBucket.length} rows for " +
-        s"max bucket $maxBucket (expected ${maxBucket + 1})")
-    Model(byBucket.sortBy(_._1).map(_._2), intercept, salt)
-  }
 }

@@ -40,7 +40,7 @@ import graft.spec.{ObjectSpec, SpecRegistry}
   * written ([[materializeRaw]]) and feeds the non-empty gate, drift and
   * the ETL's empty short-circuit; the processed CSV's rows are counted
   * while it is written; the ledger's recounts read the artifacts on disk
-  * ([[recordMetadata]]). Only the csv raw medium counts with a Spark job.
+  * ([[recordMetadata]]) without a Spark job.
   */
 object Orchestrator {
 
@@ -52,11 +52,6 @@ object Orchestrator {
       dedupKey: String = "Id",
       /** Thread bound for the QA branch's concurrent legs. */
       qaParallelism: Int = 8,
-      /** Raw hand-off format: `"parquet"` (typed, the scale default) or
-        * `"csv"` — the reference's medium, schema re-INFERRED on read
-        * (`pl.read_csv`, `tasks/process.py:72`), exercising the engine's
-        * schema tolerance exactly as the reference does. */
-      rawFormat: String = "parquet",
       /** Retry back-offs. Defaults are the reference's task decorators:
         * extract = 3 attempts × 10 s (`extract.py:61-62`), process (and
         * the QA tasks, which share its policy) = 2 × 5 s
@@ -126,23 +121,15 @@ object Orchestrator {
     s"${base}_${ts}_$runId"
   }
 
-  /** Raw materialization: the file hand-off both branches read back,
-    * and its row count. The parquet medium counts the rows while writing
-    * them ([[Sinks.counted]]) and is read back under the schema it was
-    * written with, which spares a footer-inference job. The csv medium
-    * re-infers the schema, as the reference does, and counts its
-    * read-back artifact: it is the reference-parity path, where a
-    * written row need not read back as one row. */
+  /** Raw materialization: the parquet hand-off both branches read back,
+    * and its row count. The rows are counted while written
+    * ([[Sinks.counted]]) and read back under the schema they were written
+    * with, which spares a footer-inference job. */
   private[pipeline] def materializeRaw(spark: SparkSession, scanned: DataFrame,
-      rawPath: String, rawFormat: String): (DataFrame, Long) =
-    if (rawFormat == "csv") {
-      Sinks.csv(Normalize.temporalsToString(scanned), rawPath)
-      val raw = Scan.csv(spark, rawPath, scanned.schema)
-      (raw, raw.count())
-    } else {
-      val rows = Sinks.counted(scanned)(Sinks.parquetSnappy(_, rawPath))
-      (spark.read.schema(scanned.schema).parquet(rawPath), rows)
-    }
+      rawPath: String): (DataFrame, Long) = {
+    val rows = Sinks.counted(scanned)(Sinks.parquetSnappy(_, rawPath))
+    (spark.read.schema(scanned.schema).parquet(rawPath), rows)
+  }
 
   private val runIds = new SecureRandom()
 
@@ -165,8 +152,6 @@ object Orchestrator {
       specOverride: Option[ObjectSpec] = None): RunReport = {
 
     val t0 = System.nanoTime()
-    require(Set("parquet", "csv")(opts.rawFormat),
-      s"rawFormat must be 'parquet' or 'csv', got '${opts.rawFormat}'")
     val spec = specOverride.getOrElse(SpecRegistry(objectName))
     val runId = newRunId()
     val paths = buildPaths(baseDir, objectName)
@@ -183,18 +168,7 @@ object Orchestrator {
     // ---- extract once (S1-S4; retried 3×10s ≙ extract.py:61-62) ----
     val (raw, rawRows) = recordState("extract") {
       val scanned = Scan.specScan(source, spec, opts.limit)
-      if (opts.rawFormat == "csv") {
-        // fail fast (outside the retry — deterministic) on schemas the
-        // CSV writer cannot represent
-        import org.apache.spark.sql.types.{ArrayType, MapType, NullType, StructType}
-        val complex = scanned.schema.fields.collect {
-          case f if f.dataType.isInstanceOf[StructType] || f.dataType.isInstanceOf[ArrayType] ||
-            f.dataType.isInstanceOf[MapType] || f.dataType == NullType => f.name
-        }
-        require(complex.isEmpty,
-          s"rawFormat=csv supports flat schemas only; non-atomic columns: ${complex.mkString(", ")}")
-      }
-      retry(3, opts.extractRetryDelayMs)(materializeRaw(spark, scanned, rawPath, opts.rawFormat))
+      retry(3, opts.extractRetryDelayMs)(materializeRaw(spark, scanned, rawPath))
     }
 
     // ---- ETL branch (strict; process retried 2×5s ≙ process.py:56) ----
@@ -261,8 +235,7 @@ object Orchestrator {
             paths("profile_json")
           },
           task("snapshot_parquet") {
-            if (opts.rawFormat == "csv") Sinks.parquetSnappy(raw, paths("parquet_snapshot"))
-            else Sinks.parquetCopy(spark, rawPath, paths("parquet_snapshot"))
+            Sinks.parquetCopy(spark, rawPath, paths("parquet_snapshot"))
             paths("parquet_snapshot")
           }))
 
@@ -292,7 +265,7 @@ object Orchestrator {
       qaResults.collect { case (k, Success(p)) => k -> p },
       states.toMap, driftAlert, rawRows, processedRows, jsonN, durationS)
 
-    recordMetadata(spark, report, paths, opts.rawFormat)
+    recordMetadata(spark, report, paths)
     report
   }
 
@@ -306,23 +279,16 @@ object Orchestrator {
     * (`tasks/metadata.py:35-42,195-197`). Each recount catches its own
     * failure as -1, so a missing or corrupt artifact never stops the
     * other counts. Where each count comes from:
-    *  - raw, parquet medium: the row counts in the data files' footers
+    *  - raw: the row counts in the data files' footers
     *    ([[Footers.parquetRows]]), read on the driver;
-    *  - raw, csv medium: a Spark count of the files, multiLine so a
-    *    quoted embedded newline stays one row, as [[Scan.csv]] reads it;
-    *  - processed CSV: the same header/multiLine reading, parsed on the
-    *    driver ([[Footers.csvRows]]) — the aggregate is O(groups) rows;
+    *  - processed CSV: header/multiLine reading, as [[Scan.csv]] reads
+    *    it, parsed on the driver ([[Footers.csvRows]]) — the aggregate
+    *    is O(groups) rows;
     *  - JSON: the records array (K2) parsed on the driver, O(groups) too. */
   def recordMetadata(
-      spark: SparkSession, report: RunReport, paths: Map[String, String],
-      rawFormat: String = "parquet"): Unit = {
+      spark: SparkSession, report: RunReport, paths: Map[String, String]): Unit = {
     def safeCount(f: => Long): Long = Try(f).getOrElse(-1L)
-    val rawCount = safeCount {
-      if (rawFormat == "csv")
-        spark.read.option("header", "true").option("multiLine", "true")
-          .csv(report.rawPath).count()
-      else Footers.parquetRows(spark, report.rawPath)
-    }
+    val rawCount = safeCount(Footers.parquetRows(spark, report.rawPath))
     val processedCount = safeCount(Footers.csvRows(spark, report.processedCsv))
     val jsonCount = safeCount {
       val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(report.outputJson))

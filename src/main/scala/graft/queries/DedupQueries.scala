@@ -36,7 +36,7 @@ object DedupQueries {
   /** Full-corpus near-dup sweep — the scale path. maxBucketSize = 100
     * bounds per-bucket candidate work (B²/2 ≤ 4950) against degenerate
     * templated-text buckets; measured zero recall loss on testdata at
-    * sf0.01 and sf0.1 (LshTune). Oracled against exact Jaccard: valid
+    * sf0.01 and sf0.1. Oracled against exact Jaccard: valid
     * exactly while LSH recall is 100%, so the oracle doubles as a recall
     * regression gate. */
   val minhashLshPairs: Q = (s, dir) =>
@@ -223,7 +223,7 @@ object DedupQueries {
     * are exactly what the defaults would compute, so the only delta vs
     * [[embeddingNearDupLsh]] is the join strategy. Same exact-cosine
     * oracle ⇒ a correctness or recall regression in the big-corpus
-    * branch fails the gate, not just ScaleBench. */
+    * branch fails the gate. */
   val embeddingNearDupLshShuffle: Q = (s, dir) => {
     val emb = Scan.table(s, dir, "embeddings")
     val n = emb.count()
@@ -511,8 +511,7 @@ object DedupQueries {
     * the codegen encode and ADC kernels preserving candidate identity,
     * the LUT/probe joins, and the full-vector re-rank semi-join. The
     * approximation regime (small nProbe/rerank) is covered by
-    * SimilaritySpec's recall bound; the 8-16× byte shrink by
-    * ScaleBench's ivfpq_index_bytes row. */
+    * SimilaritySpec's recall bound. */
   val annIvfPq: Q = (s, dir) => {
     val emb = Scan.table(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < 5)

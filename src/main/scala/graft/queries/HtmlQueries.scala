@@ -28,9 +28,8 @@ object HtmlQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** The messy page, Spark spelling (shared with the ScaleBench
-    * html rows). */
-  private[graft] def messyHtml(id: Column, source: Column, text: Column): Column = concat(
+  /** The messy page, Spark spelling. */
+  private def messyHtml(id: Column, source: Column, text: Column): Column = concat(
     lit("<!DOCTYPE html><html><head><title>Doc "), id, lit("</title>"),
     when(id % 3 === 0, lit("<style>body { color: #333; }</style>")).otherwise(lit("")),
     when(id % 4 === 0,

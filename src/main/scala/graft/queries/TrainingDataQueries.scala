@@ -45,12 +45,10 @@ object TrainingDataQueries {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** The flow itself, shared verbatim by the gated query and
-    * ScaleBench's `training_e2e` row (one spelling — the bench can
-    * never drift from what the oracle gates). Signs the even-id half
-    * into `idxPath`, ingests the two odd-id waves, returns the
-    * accepted set with split + packing columns (unordered — the query
-    * adds its total ORDER BY). */
+  /** The flow the gated query runs. Signs the even-id half into
+    * `idxPath`, ingests the two odd-id waves, returns the accepted set
+    * with split + packing columns (unordered — the query adds its total
+    * ORDER BY). */
   def ingestFlow(docs: DataFrame, idxPath: String): DataFrame = {
     val s = docs.sparkSession
     // The up-front legs share no data dependency — wave curation
@@ -119,10 +117,10 @@ object TrainingDataQueries {
     * generator so the two can never drift. */
   private val V2BlockTerms = Seq("dup")
   private val V2Tau = 0.3
-  private val V2ResampleK = 150
-  private val V2TempTotal = 12000L
+  private[graft] val V2ResampleK = 150
+  private[graft] val V2TempTotal = 12000L
   private val V2ChunkTokens = 64
-  private val V2ChunkStride = 48
+  private[graft] val V2ChunkStride = 48
   private val V2PackBudget = 2048L
 
   /** The MODERN-curation capstone (`q_training_data_v2`): every r16
@@ -160,9 +158,9 @@ object TrainingDataQueries {
       qcModelDir: String, assignDir: String,
       /** Cluster count for the SemDeDup stage — 8 fits the 500-doc
         * gate corpus; at scale pass [[SemDedup.clustersFor]] of the
-        * embedded-corpus size (the paper's fixed-target-size posture —
-        * the ScaleBench `training_v2` row does). The gate is cluster-
-        * count-agnostic: the oracle reads the assignment snapshot. */
+        * embedded-corpus size (the paper's fixed-target-size posture).
+        * The gate is cluster-count-agnostic: the oracle reads the
+        * assignment snapshot. */
       nClusters: Int = 8,
       /** Hot-cluster guard for the SemDeDup stage (see
         * [[SemDedup.semDedup]]); the gate keeps exact behavior. */

@@ -5,6 +5,7 @@ import java.nio.{ByteBuffer, ByteOrder}
 import scala.jdk.CollectionConverters._
 
 import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
@@ -39,14 +40,16 @@ object Footers {
   /** Rows in the parquet directory `dir`: the sum of its footers' block
     * row counts. A file without a readable footer (truncated, foreign)
     * throws. */
-  def parquetRows(spark: SparkSession, dir: String): Long =
-    dataFiles(spark, dir).map(footer(spark, _).getBlocks.asScala.map(_.getRowCount).sum).sum
+  def parquetRows(spark: SparkSession, dir: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    dataFiles(spark, dir).map(footer(conf, _).getBlocks.asScala.map(_.getRowCount).sum).sum
+  }
 
   /** The Spark schema the writer of the parquet directory `dir` recorded
     * in its first data file's footer; None when it recorded none. */
   def parquetSchema(spark: SparkSession, dir: String): Option[StructType] =
     dataFiles(spark, dir).headOption.flatMap { p =>
-      Option(footer(spark, p).getFileMetaData.getKeyValueMetaData
+      Option(footer(spark.sparkContext.hadoopConfiguration, p).getFileMetaData.getKeyValueMetaData
         .get("org.apache.spark.sql.parquet.row.metadata"))
         .map(DataType.fromJson(_).asInstanceOf[StructType])
     }
@@ -77,9 +80,10 @@ object Footers {
   /** `p`'s footer: the file ends with the footer, its 4-byte
     * little-endian length and the magic `PAR1`. Only those bytes are
     * read, through a small stream buffer (the session's 64 KB default,
-    * or a full reader's open, reads a hundred times the footer). */
-  private def footer(spark: SparkSession, p: Path): ParquetMetadata = {
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    * or a full reader's open, reads a hundred times the footer). The
+    * one parquet footer reader of `src/main`. */
+  private[graft] def footer(conf: Configuration, p: Path): ParquetMetadata = {
+    val fs = p.getFileSystem(conf)
     val length = fs.getFileStatus(p).getLen
     val in = fs.open(p, 4096)
     try {

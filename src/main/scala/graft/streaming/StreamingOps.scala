@@ -138,25 +138,6 @@ object StreamingOps {
         col("session_window.end").as("session_end"),
         col("user_id"), col("n_events"), col("total_value"))
 
-  /** Streaming twin of the key-dedup D1: exactly-once key emission
-    * across micro-batches.
-    *
-    * `boundedState = true` (default) uses `dropDuplicatesWithinWatermark`:
-    * the state store holds only keys within the watermark horizon —
-    * O(horizon) state at any stream volume, with the documented relaxation
-    * that a duplicate arriving later than the watermark delay after its
-    * first occurrence is re-emitted. `boundedState = false` gives exact
-    * all-time dedup via `dropDuplicates` — but (important) the watermark
-    * does NOT evict that state when the event-time column isn't part of
-    * the key: state grows with the number of distinct keys ever seen. */
-  def dedupEvents(
-      events: DataFrame, keyCols: Seq[String] = Seq("event_id"),
-      watermark: String = "1 hour", boundedState: Boolean = true): DataFrame = {
-    val marked = events.withWatermark("ts", watermark)
-    if (boundedState) marked.dropDuplicatesWithinWatermark(keyCols)
-    else marked.dropDuplicates(keyCols)
-  }
-
   /** Per-user running totals via explicit keyed state — the
     * `mapGroupsWithState` upgrade path for the reference's cross-run
     * rowcount baseline (SURVEY §2.9 T2). */
@@ -184,30 +165,6 @@ object StreamingOps {
           (userId, n, tot)
       }
   }
-
-  /** Streaming twin of the parquet-snapshot sink K3 + run-ledger Q6: each
-    * micro-batch is snapshotted to its own parquet dir and one ledger
-    * line is appended per batch (`foreachBatch` — arbitrary sinks with
-    * exactly-once-per-batch semantics via the batchId). */
-  def snapshotEachBatch(
-      events: DataFrame, outDir: String, ledgerPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        import org.json4s.JsonDSL._
-        val path = s"$outDir/batch_$batchId"
-        graft.sinks.Sinks.parquetSnappy(batch.toDF(), path)
-        // count the WRITTEN artifact (footer-stats count — cheap) rather
-        // than batch.count(), which would re-execute the batch plan from
-        // the source; also matches the ledger's Q6 recount-the-artifact
-        // semantics (tasks/metadata.py:195-197)
-        val rows = batch.sparkSession.read.parquet(path).count()
-        val record: org.json4s.JObject =
-          ("run_id" -> s"batch_$batchId") ~ ("rows" -> rows) ~ ("path" -> path)
-        graft.meta.RunLedger.append(ledgerPath, record)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
 
   /** Streaming incremental dedup — the reference's 15-minute-cron
     * micro-batch (T1, `deployments/serve_15min.py:7`) composed with the

@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * copies, manifest commits and retire logs only in the commit seam of
   * `SnapshotMerge.scala` (`writeDelta` / `copyDelta` / `commit`), and the keyed
   * snapshot has that one format — `SnapshotMerge.scala` and
-  * `Revisit.scala` never publish or resolve a flat relation. */
+  * `Revisit.scala` never publish or resolve a flat relation; parquet
+  * footers are read only by `Footers.footer`'s tail read. */
 class SeamGuardSpec extends AnyFunSuite {
 
   private val banned =
@@ -79,5 +80,21 @@ class SeamGuardSpec extends AnyFunSuite {
     assert(flatOffenders.isEmpty,
       "the keyed snapshot commits only through the manifest:" +
         flatOffenders.mkString("\n", "\n", ""))
+  }
+
+  private val footerTokens = Seq("ParquetFileReader", "readFooter")
+
+  test("parquet footers are read only in Footers") {
+    val files = sources()
+    val seam = files.filter(_.getFileName.toString == "Footers.scala")
+    assert(seam.size == 1, "the scan must see Footers.scala")
+    assert(new String(Files.readAllBytes(seam.head), "UTF-8").contains("def footer("),
+      "Footers.scala must hold the footer reader")
+    val offenders = for {
+      f <- files if f != seam.head
+      (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
+      token <- footerTokens if line.contains(token)
+    } yield s"$f:${n + 1}: $token"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.functions.GraftFunctions._
+import graft.functions.ReferenceHofs.simhash64HOF
 
 class VectorFunctionsSpec extends SparkSpec {
   import spark.implicits._

@@ -66,20 +66,6 @@ class NgramLmSpec extends SparkSpec {
     assert(math.abs(out.getDouble(2) - math.log10(0.4 / 6)) < 1e-4)
   }
 
-  test("filterByAvgLogProb keeps in-distribution docs, drops salad and unscorable shorts") {
-    val train = (0L until 40L).map(i =>
-      (i, "the quick brown fox jumps over the lazy dog near the river"))
-      .toDF("doc_id", "text")
-    val lm = NgramLm.fit(train, "doc_id", "text")
-    val kept = NgramLm.filterByAvgLogProb(Seq(
-        (100L, "the quick brown fox jumps over the lazy dog"),
-        (101L, "zxq vbn qwerty plm okn ijb uhb ygv tfc"),
-        (102L, "solo")).toDF("doc_id", "text"),
-      "doc_id", "text", lm, minAvgLogProb = -3.0)
-    assert(kept.columns.toSeq == Seq("doc_id", "text")) // input columns intact
-    assert(kept.select("doc_id").as[Long].collect().toSet == Set(100L))
-  }
-
   test("the gated query shape: fit on evens, score odds, oracle-style determinism") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val lm = NgramLm.fit(docs.filter(col("doc_id") % 2 === 0), "doc_id", "text")

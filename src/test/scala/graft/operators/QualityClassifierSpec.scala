@@ -63,30 +63,23 @@ class QualityClassifierSpec extends SparkSpec {
   }
 
   test("model relation round-trips bit-for-bit") {
-    val m = Model(Array(0.125, -2.5, 3.75), intercept = 0.0625, salt = "qc")
-    val rel = QualityClassifier.modelRelation(spark, m)
-    val back = QualityClassifier.fromRelation(rel)
-    assert(back.weights.toSeq == m.weights.toSeq)
-    assert(back.intercept == m.intercept)
+    val m = Model(Array(0.125, -2.5, 3.75, 1.0 / 3.0), intercept = 0.0625, salt = "qc")
+    val rows = QualityClassifier.modelRelation(spark, m)
+      .collect().map(r => r.getInt(0) -> r.getDouble(1))
+    def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToRawLongBits)
+    assert(bits(rows.filter(_._1 >= 0).sortBy(_._1).map(_._2).toSeq) ==
+      bits(m.weights.toSeq))
+    assert(bits(rows.filter(_._1 == -1).map(_._2).toSeq) == bits(Seq(m.intercept)))
   }
 
-  test("non-dense or duplicated bucket snapshots are rejected loudly") {
-    import spark.implicits._
-    // missing bucket 1 of {0,1,2}: would silently shift weights + modulus
-    val gap = Seq((0, 0.5), (2, 1.5), (-1, 0.25)).toDF("bucket", "weight")
-    val e1 = intercept[IllegalArgumentException] {
-      QualityClassifier.fromRelation(gap)
-    }
-    assert(e1.getMessage.contains("bucket-dense"))
-    val dup = Seq((0, 0.5), (1, 1.0), (1, 2.0)).toDF("bucket", "weight")
-    val e2 = intercept[IllegalArgumentException] {
-      QualityClassifier.fromRelation(dup)
-    }
-    assert(e2.getMessage.contains("duplicate bucket"))
-    intercept[IllegalArgumentException] {
-      QualityClassifier.fromRelation(
-        Seq((-1, 0.25)).toDF("bucket", "weight"))  // intercept only
-    }
+  test("a fitted model's relation is bucket-dense with one intercept") {
+    // the oracle rebuilds the weight vector by sorted bucket index with
+    // `buckets = rows` as the scoring modulus, so a missing or duplicated
+    // bucket row would shift every later weight
+    val m = QualityClassifier.fit(labeled, "text", "y", buckets = 64)
+    val buckets = QualityClassifier.modelRelation(spark, m)
+      .select("bucket").collect().map(_.getInt(0)).toSeq
+    assert(buckets.sorted == (-1 until 64))
   }
 
   test("array_bincount equals the aggregate/zip_with fold spelling") {

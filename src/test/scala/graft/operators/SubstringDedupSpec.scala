@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.functions.GraftFunctions
+import graft.functions.{GraftFunctions, ReferenceHofs}
 
 class SubstringDedupSpec extends SparkSpec {
 
@@ -26,7 +26,7 @@ class SubstringDedupSpec extends SparkSpec {
       Seq.empty[String]).toDF("ts")
     val got = df.select(
       GraftFunctions.substring_window_keys(col("ts"), 3).as("n"),
-      GraftFunctions.substringWindowKeysHOF(col("ts"), 3).as("h"))
+      ReferenceHofs.substringWindowKeysHOF(col("ts"), 3).as("h"))
       .collect()
     got.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1),
       s"native ${r.getSeq[Long](0)} != hof ${r.getSeq[Long](1)}"))

@@ -122,6 +122,7 @@ class TextDedupSpec extends SparkSpec {
 
   test("native simhash64Portable ≡ HOF spelling bit-for-bit on testdata") {
     import graft.functions.GraftFunctions._
+    import graft.functions.ReferenceHofs.simhash64PortableHOF
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val diff = d.select(
         simhash64Portable(split(col("text"), " ")).as("native"),

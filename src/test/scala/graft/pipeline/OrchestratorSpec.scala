@@ -96,50 +96,6 @@ class OrchestratorSpec extends SparkSpec {
     }
   }
 
-  test("csv raw hand-off (reference medium, schema re-inferred) matches parquet run") {
-    val baseP = Files.createTempDirectory("orchP").toString
-    val baseC = Files.createTempDirectory("orchC").toString
-    val opts = Orchestrator.RunOptions(limit = None, timestampRaw = false)
-    val rp = Orchestrator.run(spark, "Order", source, baseP, opts,
-      specOverride = Some(orderSpec))
-    val rc = Orchestrator.run(spark, "Order", source, baseC,
-      opts.copy(rawFormat = "csv"), specOverride = Some(orderSpec))
-    assert(rc.rawRows == rp.rawRows)
-    assert(rc.processedRows == rp.processedRows)
-    val pJson = new String(Files.readAllBytes(Paths.get(rp.outputJson)), "UTF-8")
-    val cJson = new String(Files.readAllBytes(Paths.get(rc.outputJson)), "UTF-8")
-    assert(pJson == cJson) // identical summary through either medium
-  }
-
-  test("csv hand-off round-trips embedded newlines intact (multiLine read)") {
-    val base = Files.createTempDirectory("orchNL").toString
-    val tricky = Seq(
-      ("o1", "OPEN", 10.0), ("o2", "line1\nline2", 20.0), ("o3", "CLOSED", 5.0)
-    ).toDF("Id", "Status", "TotalAmount")
-    val report = Orchestrator.run(spark, "Order", tricky, base,
-      Orchestrator.RunOptions(limit = None, timestampRaw = false, rawFormat = "csv"),
-      specOverride = Some(orderSpec))
-    assert(report.rawRows == 3) // NOT 4 — the quoted newline stays one record
-    assert(report.processedRows == 3)
-  }
-
-  test("invalid rawFormat and non-flat csv schemas fail fast with clear messages") {
-    val base = Files.createTempDirectory("orchBad").toString
-    val eTypo = intercept[IllegalArgumentException] {
-      Orchestrator.run(spark, "Order", source, base,
-        Orchestrator.RunOptions(rawFormat = "CSV"), specOverride = Some(orderSpec))
-    }
-    assert(eTypo.getMessage.contains("rawFormat"))
-    val nested = source.withColumn("meta",
-      org.apache.spark.sql.functions.struct(org.apache.spark.sql.functions.col("Id")))
-    val eNested = intercept[IllegalArgumentException] {
-      Orchestrator.run(spark, "Order", nested, base,
-        Orchestrator.RunOptions(limit = None, timestampRaw = false, rawFormat = "csv"),
-        specOverride = Some(orderSpec.copy(fields = Nil)))
-    }
-    assert(eNested.getMessage.contains("meta"))
-  }
-
   test("extract cache: input-hash key, TTL freshness, hit skips materialization") {
     val cacheDir = Files.createTempDirectory("xcache").toString
     val key = ExtractCache.keyFor("Account", "Id,Name", "", "100")
@@ -261,7 +217,7 @@ class OrchestratorSpec extends SparkSpec {
     assert(jobs.get <= JobBudget, s"${jobs.get} jobs for one run")
 
     val rawPath = s"$base/handoff"
-    val (raw, rows) = Orchestrator.materializeRaw(spark, source, rawPath, "parquet")
+    val (raw, rows) = Orchestrator.materializeRaw(spark, source, rawPath)
     assert(raw.schema == spark.read.parquet(rawPath).schema)
     assert(rows == 4) // counted while written
   }
@@ -304,7 +260,7 @@ class OrchestratorSpec extends SparkSpec {
     assert(n != BigInt(report.rawRows))
   }
 
-  test("the QA snapshot is a copy of raw's data files; the csv medium still writes one") {
+  test("the QA snapshot is a copy of raw's data files") {
     val base = Files.createTempDirectory("orchSnap").toString
     val opts = Orchestrator.RunOptions(limit = None, timestampRaw = false)
     def snapshotMatchesRaw(r: Orchestrator.RunReport): Unit = {
@@ -325,12 +281,6 @@ class OrchestratorSpec extends SparkSpec {
     assert(names(s"$base/output/Order/snapshot.parquet").map(_.getName) ==
       names(r2.rawPath).map(_.getName))
     assert(spark.read.parquet(s"$base/output/Order/snapshot.parquet").count() == 1)
-
-    val baseC = Files.createTempDirectory("orchSnapC").toString
-    val rc = Orchestrator.run(spark, "Order", source, baseC, opts.copy(rawFormat = "csv"),
-      specOverride = Some(orderSpec))
-    assert(rc.qaArtifacts.contains("snapshot"))
-    assert(spark.read.parquet(s"$baseC/output/Order/snapshot.parquet").count() == 4)
   }
 
   test("limit is applied at extract (source-pushed P3)") {

@@ -275,6 +275,90 @@ class PlanShapeSpec extends SparkSpec {
     assert(partitionsFor(1000L, 0) == 1)           // degenerate cores guarded
   }
 
+  /** The `Exchange` nodes of a plan, one per line of its tree string. */
+  private def exchanges(plan: String): Seq[String] =
+    plan.linesIterator.map(_.trim).filter(_.contains("Exchange ")).toSeq
+
+  private val HashExchange = """Exchange hashpartitioning\((.*), (\d+)\), """.r.unanchored
+
+  /** Runs `body` and returns the executed plan of every action it ran,
+    * the eager pins included. */
+  private def actionPlans(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try body
+    finally {
+      org.apache.spark.scheduler.DagProbe.drainListeners(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    plans.toArray(Array.empty[String]).toSeq
+  }
+
+  test("capstone v2 tail: range exchange widths come from the flow's own bounds") {
+    import graft.GraftSession.partitionsFor
+    import graft.queries.TrainingDataQueries.{V2ChunkStride, V2ResampleK, V2TempTotal}
+    // both widths come from flow constants, never from partitionsForPlan's
+    // byte estimate, which multiplies through the upstream joins and
+    // sizes these stages several times too wide; the v3 capstone runs
+    // the same curationFlowV2 tail
+    val plans = actionPlans {
+      graft.queries.TrainingDataQueries.trainingDataV2(
+        spark, "/root/testdata/sf0.001").count()
+    }
+    def widths(pattern: scala.util.matching.Regex): Set[Int] =
+      plans.flatMap(pattern.findAllMatchIn(_).map(_.group(1).toInt)).toSet
+    val take = widths("""rangepartitioning\(lang#[^)]*__order_hash#[^)]*, (\d+)\)""".r)
+    val pack = widths("""rangepartitioning\(chunk_uid#\d+L? ASC NULLS FIRST, (\d+)\)""".r)
+    assert(take == Set(partitionsFor(spark, V2ResampleK.toLong)),
+      s"take-budget range exchange widths $take")
+    assert(pack == Set(partitionsFor(spark, V2TempTotal / V2ChunkStride + V2ResampleK)),
+      s"chunk-packing range exchange widths $pack")
+  }
+
+  test("LSH at the 100x knob values: every hash exchange at that width") {
+    import graft.GraftSession.partitionsFor
+    import graft.operators.TextDedup
+    val cores = spark.sparkContext.defaultParallelism
+    def check(plan: String, width: Int, nExchanges: Int): Unit = {
+      val all = exchanges(plan)
+      assert(!plan.contains("CartesianProduct") &&
+        !plan.contains("BroadcastNestedLoopJoin"),
+        s"LSH candidate generation degraded to an all-pairs join:\n$plan")
+      val hashWidths = all.collect { case HashExchange(_, n) => n.toInt }
+      assert(hashWidths.nonEmpty && hashWidths.forall(_ == width),
+        s"hash exchanges not all at width $width:\n${all.mkString("\n")}")
+      assert(all.size == nExchanges,
+        s"expected $nExchanges exchanges, got ${all.size}:\n${all.mkString("\n")}")
+    }
+    // the width a 500k-document corpus gets. On the sf0.001 fixture the
+    // plan holds (band, bh) twice and (d1, d2) as hash exchanges, and
+    // three broadcasts: one side of the bucket self-join and both
+    // verify lookups
+    val docs = Scan.table(spark, "/root/testdata/sf0.001", "documents")
+    val mhWidth = partitionsFor(500000L, cores)
+    check(TextDedup.minhashLsh(docs, "doc_id", "text",
+        numPartitions = Some(mhWidth)).queryExecution.executedPlan.toString,
+      mhWidth, nExchanges = 6)
+    // the knobs 200k vectors get. Caller-supplied knobs take the shuffle
+    // verify branch: (t, bkt) twice, (d1, d2), d1 and d2 are hash
+    // exchanges, beside the same three broadcasts
+    val emb = Scan.table(spark, "/root/testdata/sf0.001", "embeddings")
+    val bits = TextDedup.srpBitsFor(200000L)
+    val tables = TextDedup.srpTablesFor(bits, 0.5)
+    val embWidth = partitionsFor(200000L * tables, cores)
+    check(TextDedup.embeddingNearDupPairsLsh(emb, "vec_id", "embedding", 0.5,
+        bits = bits, tables = tables, numPartitions = Some(embWidth))
+        .queryExecution.executedPlan.toString,
+      embWidth, nExchanges = 8)
+  }
+
   test("star rollup broadcasts the dimension tables (no shuffle join for dims)") {
     val plan = graft.queries.AnalyticsQueries.revenueBySegment(
       spark, "/root/testdata/sf0.001").queryExecution.executedPlan.toString

@@ -64,41 +64,6 @@ class StreamingOpsSpec extends SparkSpec {
     assert(totalEvents == Scan.table(spark, sfDir, "events").count())
   }
 
-  test("streaming dedup collapses duplicated input files to distinct events") {
-    // stage the events file TWICE — every event arrives duplicated
-    val staged = java.nio.file.Files.createTempDirectory("dup_events")
-    val src = java.nio.file.Paths.get(s"$sfDir/events.parquet")
-    Seq("a.parquet", "b.parquet").foreach { n =>
-      try java.nio.file.Files.createLink(staged.resolve(n), src)
-      catch { case _: Exception => java.nio.file.Files.copy(src, staged.resolve(n)) }
-    }
-    val stream = graft.sources.Scan.normalizeEventsTs(
-      spark.readStream
-        .schema(StreamingOps.eventsRawSchema(spark, staged.toString))
-        .parquet(staged.toString))
-    // bounded-state dedup: watermark covers the full 30-day event span,
-    // so every duplicate is within the horizon and collapses
-    val deduped = StreamingOps.runAvailableNow(
-      StreamingOps.dedupEvents(stream, watermark = "31 days"), "t_dedup")
-    val batchDistinct = Scan.table(spark, sfDir, "events").count()
-    assert(deduped.count() == batchDistinct) // 2N in, N out
-  }
-
-  test("foreachBatch snapshots each micro-batch to parquet and ledgers it") {
-    val out = java.nio.file.Files.createTempDirectory("snap").toString
-    val ledger = s"$out/runs.jsonl"
-    val q = StreamingOps.snapshotEachBatch(
-      StreamingOps.readEventsStream(spark, sfDir), out, ledger)
-    q.awaitTermination()
-    val entries = graft.meta.RunLedger.read(ledger)
-    assert(entries.nonEmpty)
-    val snapshotRows = entries.map { e =>
-      val org.json4s.JString(path) = (e \ "path"): @unchecked
-      spark.read.parquet(path).count()
-    }.sum
-    assert(snapshotRows == Scan.table(spark, sfDir, "events").count())
-  }
-
   test("readBatchOutputs: reads batch dirs; a zero-batch run fails LOUDLY with the source listing") {
     import spark.implicits._
     val out = java.nio.file.Files.createTempDirectory("rbo_out").toString
