@@ -34,10 +34,10 @@ object GraftSession {
     * (the measured 100× fix: per-task shuffle/agg state stays
     * heap-bounded only when partitions grow with rows; fixed-width
     * shuffles OOM'd the candidate-distinct at 100×). One partition per
-    * `rowsPerPartition` input rows, floored at `cores` (full parallelism
-    * on small inputs) and capped at 6 tasks/core — measured: past ~6
-    * tasks/core single-JVM scheduling overhead dominates (11.7 s →
-    * 55.8 s for the same sweep at 800 partitions). On a real cluster
+    * `rowsPerPartition` input rows, floored at `cores` (one task per 64
+    * rows below 64·cores rows) and capped at 6 tasks/core — measured:
+    * past ~6 tasks/core single-JVM scheduling overhead dominates
+    * (11.7 s → 55.8 s for the same sweep at 800 partitions). On a real cluster
     * `cores` is the executor-core total, so the cap scales with the
     * fleet. Operators consume this via their `numPartitions` default —
     * explicit repartition-by-key nodes, so the width binds in the plan
@@ -47,16 +47,12 @@ object GraftSession {
     val c = math.max(1, cores).toLong
     val rpp = math.max(1L, rowsPerPartition)
     def ceilDiv(a: Long, b: Long) = (a + b - 1) / b
-    // r22 (the 8-core-beats-32-core fix): sub-core-scale relations no
-    // longer saturate at `cores` — a few-hundred-row input paid a
-    // cores-wide exchange whose per-task fixed cost (~100 ms on these
-    // large plans) dwarfed the work, and the 8-core driver bench BEAT
-    // 32-core on exactly those queries. Width now also tracks the
-    // input below the cores floor (≥64 rows per task — tasks smaller
-    // than that are pure overhead), so it still GROWS with rows:
-    // identical to the old value for any input ≥ 64·cores rows, and
-    // the 6×cores cap + rows-per-partition bound (per-task state stays
-    // heap-bounded) are unchanged.
+    // below 64·cores rows the width is one task per 64 rows, not
+    // `cores`: a task's fixed cost (~100 ms on the large plans) outweighs
+    // a smaller task's work, and a cores-wide exchange over a few hundred
+    // rows made the driver bench slower at local[32] than at local[8].
+    // From 64·cores rows on, it is one task per `rowsPerPartition` rows,
+    // floored at `cores` and capped at 6×cores.
     val byRows = nRows / rpp
     math.max(math.min(c, ceilDiv(nRows, 64L)),
       math.min(6L * c, byRows)).max(1L).toInt
@@ -121,10 +117,9 @@ object GraftSession {
     val maxPart = math.max(1L, spark.sessionState.conf.filesMaxPartitionBytes)
     val leafBytes = df.queryExecution.optimizedPlan.collectLeaves()
       .map(_.stats.sizeInBytes).sum
-    // width = cores, deliberately (r22 re-measured): narrowing to 8
-    // helped the giant-plan crawl stages a little but REGRESSED the
-    // compute-dense DSIR fit 1.6× (its per-row explode+md5 work
-    // dominates per-task overhead) — the r21 full-width spread stays.
+    // width = cores: a width of 8 (measured) sped the large crawl stages
+    // up a little but slowed the compute-dense DSIR fit 1.6×, whose
+    // per-row explode+md5 work outweighs the per-task cost.
     if (leafBytes < BigInt(maxPart) * cores) df.repartition(cores)
     else df
   }
@@ -319,14 +314,10 @@ object GraftSession {
     // FileStreamSink.hasMetadata probes every batch-read GLOB path as a
     // literal file and logs the FileNotFoundException it catches — a
     // WARN whose message is byte-identical to a REAL empty-glob read
-    // failure ("File <dir>/batch_* does not exist"). That red herring
-    // is the r20 adjudication of the r19 "stream produced zero batches"
-    // flake: the message appears deterministically on EVERY healthy
-    // run's log (3× per bench query), while 318 instrumented
-    // same-session reruns produced zero actual failures. Silence the
-    // probe's logger so a log-tail reader can never again mistake the
-    // benign analysis-time probe for a query failure — a REAL zero-
-    // batch stream now fails loudly in
+    // failure ("File <dir>/batch_* does not exist"). It appears on every
+    // healthy run (3× per bench query; 318 instrumented same-session
+    // reruns showed no real failure behind it), so the probe's logger
+    // is silenced; a REAL zero-batch stream fails loudly in
     // [[graft.streaming.StreamingOps.readBatchOutputs]] instead.
     org.apache.logging.log4j.core.config.Configurator
       .setLevel(

@@ -97,8 +97,6 @@ object GraftFunctions {
   // expressions accept column operands (needed inside lambdas).
   def shiftL(v: Column, bits: Column): Column =
     c(org.apache.spark.sql.catalyst.expressions.ShiftLeft(e(v), e(bits)))
-  def shiftR(v: Column, bits: Column): Column =
-    c(org.apache.spark.sql.catalyst.expressions.ShiftRight(e(v), e(bits)))
   def shiftRUnsigned(v: Column, bits: Column): Column =
     c(org.apache.spark.sql.catalyst.expressions.ShiftRightUnsigned(e(v), e(bits)))
 

@@ -1005,64 +1005,71 @@ object SnapshotMerge {
         col("__c.t").as(changeTypeCol): _*)
   }
 
-  /** REPLICATES one change-feed span by copying files — the fast path
-    * of [[graft.streaming.StreamingOps.replicateSharded]]. The copy rule:
-    * when the replica holds the source's content at `fromVersion` (the
-    * replication invariant; an absent replica holds version 0, the
-    * empty snapshot) and the replica, the source at `fromVersion` and
-    * the source at `toVersion` share one layout — `nShards`, salt,
-    * ordered key names (both manifests passed the hash-version gate)
-    * and anchor, the replica's anchor schema equal to the source's —
-    * then replica shard K holds exactly source shard K. The span is
-    * then applied as: copy the `__shard=K` dirs whose physical path
-    * differs between the two source manifests ([[copyDelta]]), drop the
-    * ids that left the `to` manifest, and commit the replica's next
-    * version (a bootstrap also copies the anchor and commits version 1
-    * under the source's layout). No Spark job runs.
+  /** REPLICATES one change-feed span of `srcDir` into `replicaDir` —
+    * the one path of [[graft.streaming.StreamingOps.replicateSharded]].
+    * The invariant: the replica MIRRORS its source file for file. Once
+    * span `(fromVersion, toVersion)` commits, the replica's manifest
+    * carries the source's `toVersion` header (`nShards`, salt, ordered
+    * key names) and shard-id set, replica shard K is a copy of source
+    * shard K and its anchor a copy of the source's. The span copies the
+    * `__shard=K` dirs whose physical path differs between the two
+    * source manifests ([[copyDelta]]), plus the `toVersion` anchor when
+    * it differs from the `fromVersion` one, drops the ids that left,
+    * and commits the replica's next version through [[commit]]. The
+    * bootstrap (`fromVersion` = 0) copies every shard and the anchor
+    * and replaces whatever the replica held. No Spark job runs: only
+    * manifests and two anchor footers are read. Copies, never
+    * references, so a source vacuum never breaks the replica.
     *
     * A committed `commitTag` skips the span first; a committed span
-    * marks it. Returns false, having read only manifests and two anchor
-    * footers and written nothing, when the rule does not hold: the
-    * caller then applies the span's change rows instead. A lost commit
-    * race throws [[ConcurrentCommitException]] with the copy deleted.
-    * `replicaShards` is the layout a bootstrap would otherwise create;
+    * marks it. Any other span whose replica does not mirror
+    * `fromVersion` — absent, another header or shard-id set, or an
+    * anchor schema unequal to the source's — fails loudly before
+    * anything is written. A lost commit race throws
+    * [[ConcurrentCommitException]] with the copy deleted.
     * `onCommitAttempt` runs just before the commit CAS. */
   private[graft] def copySpan(spark: SparkSession, srcDir: String,
-      replicaDir: String, keyCols: Seq[String], replicaShards: Int,
-      fromVersion: Long, toVersion: Long, commitTag: String,
-      onCommitAttempt: () => Unit = () => ()): Boolean = {
+      replicaDir: String, fromVersion: Long, toVersion: Long,
+      commitTag: String, onCommitAttempt: () => Unit = () => ()): Unit = {
     IndexFs.requireValidTag(commitTag)
     val base = if (existsSharded(spark, replicaDir))
       Some(readManifest(spark, replicaDir)) else None
     if (base.nonEmpty && IndexFs.isCommitted(spark, replicaDir, commitTag))
-      return true
+      return
     val to = requireReadableVersion(spark, srcDir, toVersion)
     val from = if (fromVersion == 0L) None
       else Some(requireReadableVersion(spark, srcDir, fromVersion))
-    def layout(m: Manifest) = (m.nShards, m.salt, m.keys)
-    val holds = (base, from) match {
-      case (None, None) => (replicaShards, DefaultSalt, keyCols) == layout(to)
-      case (Some(r), Some(f)) =>
-        r.keys == keyCols && layout(r) == layout(to) &&
-          layout(f) == layout(to) && f.anchor == to.anchor &&
-          Footers.parquetSchema(spark, r.anchor)
-            .exists(Footers.parquetSchema(spark, to.anchor).contains)
-      case _ => false
-    }
-    if (!holds) return false
-    val empty = to.copy(version = 0L, shards = Map.empty)
-    val fromShards = from.getOrElse(empty).shards
-    val changed = (fromShards.keySet ++ to.shards.keySet)
-      .filter(k => fromShards.get(k) != to.shards.get(k))
-    val b = base.getOrElse(empty)
+    def layout(m: Manifest) = (m.nShards, m.salt, m.keys, m.shards.keySet)
+    for (f <- from) require(base.exists(r => layout(r) == layout(f) &&
+        Footers.parquetSchema(spark, r.anchor)
+          .exists(Footers.parquetSchema(spark, f.anchor).contains)),
+      s"replica $replicaDir does not mirror version $fromVersion of " +
+        s"$srcDir (replica ${base.map(layout).getOrElse("absent")}, " +
+        s"source ${layout(f)}, or another anchor schema) — nothing was " +
+        "written; clear its checkpoint to re-bootstrap it")
+    val fromShards = from.fold(Map.empty[Long, String])(_.shards)
+    val b = base.getOrElse(to.copy(version = 0L, shards = Map.empty))
     val d = copyDelta(spark, replicaDir, b.version + 1,
-      to.shards.filter { case (k, _) => changed(k) },
-      anchor = if (base.isEmpty) Some(to.anchor) else None)
+      to.shards.filter { case (k, p) => !fromShards.get(k).contains(p) },
+      anchor = Some(to.anchor).filterNot(a => from.exists(_.anchor == a)))
     onCommitAttempt()
-    if (!commit(spark, replicaDir, base, d.over(b, changed), d.written))
+    if (!commit(spark, replicaDir, base,
+        d.over(b, replaced = b.shards.keySet -- to.shards.keySet)
+          .copy(nShards = to.nShards, salt = to.salt, keys = to.keys),
+        d.written))
       throw lostRace("replicateSharded", replicaDir, b.version + 1)
     IndexFs.markCommitted(spark, replicaDir, commitTag)
-    true
+  }
+
+  /** Fails loudly, naming both layouts, unless version `version` of
+    * `dir` is sharded `nShards` ways on `keyCols` in order. */
+  private[graft] def requireLayout(spark: SparkSession, dir: String,
+      version: Long, keyCols: Seq[String], nShards: Int): Unit = {
+    val m = readManifestFile(spark, dir, s"manifest-v$version")
+    require(m.keys == keyCols && m.nShards == nShards,
+      s"version $version of $dir is sharded ${m.nShards} ways on " +
+        s"${m.keys.mkString("[", ", ", "]")}, not $nShards ways on " +
+        s"${keyCols.mkString("[", ", ", "]")} — nothing was written")
   }
 
   /** Loud readable-version gate shared by [[readShardedVersion]] and

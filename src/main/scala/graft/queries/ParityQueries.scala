@@ -682,17 +682,16 @@ object ParityQueries {
   // --- CDF REPLICATION round trip under the hard gate: a five-version
   // source snapshot (create → price bump with deletes → status rewrite
   // that reinserts, each batch committed as two key-disjoint halves) is
-  // mirrored into a REPLICA table purely through the change feed —
-  // consumeShardedChanges follows the manifest chain from a durable
-  // checkpoint (bootstrap inserts, then diffs), and replicateSharded
-  // applies each span under a version-derived commit tag (exactly-once
-  // effects). The replica bootstraps MID-chain (after v1 only), drains
-  // v2..v3 one version at a time, then v4..v5 as one coalesced span, so
-  // incremental pickup and both drain shapes run inside the measured
-  // query. The oracle recomputes the source's final keep-last state
-  // from the orders fixture; any change row lost, duplicated, or
-  // misapplied (or a bootstrap/diff boundary error) diverges the
-  // replica and fails the hash. ---
+  // mirrored into a REPLICA table through the manifest chain —
+  // replicateSharded follows it from a durable checkpoint and mirrors
+  // each span by copying the source's changed shard dirs under a
+  // version-derived commit tag (exactly-once effects). The replica
+  // bootstraps MID-chain (after v1 only), drains v2..v3 one version at
+  // a time, then v4..v5 as one coalesced span, so incremental pickup
+  // and both drain shapes run inside the measured query. The oracle
+  // recomputes the source's final keep-last state from the orders
+  // fixture; any shard lost, stale or duplicated (or a bootstrap/span
+  // boundary error) diverges the replica and fails the hash. ---
   val streamCdfReplica: Q = (s, dir) => {
     import graft.operators.SnapshotMerge
     import graft.streaming.StreamingOps
@@ -721,8 +720,8 @@ object ParityQueries {
     StreamingOps.replicateSharded(
       s, srcSnap, replica, Seq("o_orderkey"), ckptDir, nShards = 8)
     // status rewrite over the %5 keys, reinserting %45s: v4 = %10, v5 =
-    // the rest — drained as ONE coalesced span (one diff join + one
-    // merge), whose diff composes the two versions' effects exactly
+    // the rest — drained as ONE coalesced span, which copies each
+    // changed shard's state at v5
     val rewrite = orders.filter(col("o_orderkey") % 5 === 0)
       .withColumn("o_orderstatus", lit("R"))
     Seq(rewrite.filter(col("o_orderkey") % 10 === 0),

@@ -353,9 +353,7 @@ object StreamingOps {
     * its tag and skips. Downstream replicas must poll no slower than
     * the source's vacuum retention: a reaped checkpoint version fails
     * LOUDLY here (re-bootstrap deliberately by clearing the
-    * checkpoint), never silently skips a span. Every span handed to
-    * `process` carries its change rows; [[replicateSharded]] walks the
-    * same spans but builds them only when its copy rule does not hold.
+    * checkpoint), never silently skips a span.
     *
     * Scale shape: one O(1) root listing of the source per call, one
     * manifest read + changed-shard diff join per consumed span
@@ -375,17 +373,23 @@ object StreamingOps {
         * newest)`) instead of one call per version. Row-level
         * intermediate states that a later pending version supersedes
         * are composed away by the span diff, so a consumer that applies
-        * EFFECTS (the [[replicateSharded]] pattern) converges to the
+        * EFFECTS (upsert post-images, delete deletes) converges to the
         * identical state with one diff and one apply instead of K;
         * consumers that need every intermediate image keep the default
         * per-version pacing. The checkpoint still advances only after
         * `process` returns — at-least-once, span-sized. */
       coalesceSpans: Boolean = false)(
-      process: (DataFrame, Long, Long) => Unit): Long =
+      process: (DataFrame, Long, Long) => Unit): Long = {
+    import graft.operators.SnapshotMerge
     walkShardedVersions(spark, srcDir, checkpointDir, maxVersionsPerCall,
         coalesceSpans) { (from, to) =>
-      process(spanChanges(spark, srcDir, keyCols, from, to), from, to)
+      process(
+        if (from == 0L) SnapshotMerge.readShardedVersion(spark, srcDir, to)
+          .withColumn("_change_type", lit("insert"))
+        else SnapshotMerge.readShardedChanges(spark, srcDir, keyCols, from, to),
+        from, to)
     }
+  }
 
   /** The version walk under [[consumeShardedChanges]] and
     * [[replicateSharded]], free of any change-row `DataFrame`: calls
@@ -435,47 +439,25 @@ object StreamingOps {
     last
   }
 
-  /** The change rows of span `(from, to)`: the bootstrap span (`from`
-    * = 0) is version `to`'s full content as inserts, any other span
-    * the typed diff between the two versions. */
-  private def spanChanges(spark: SparkSession, srcDir: String,
-      keyCols: Seq[String], from: Long, to: Long): DataFrame = {
-    import graft.operators.SnapshotMerge
-    if (from == 0L)
-      SnapshotMerge.readShardedVersion(spark, srcDir, to)
-        .withColumn("_change_type", lit("insert"))
-    else SnapshotMerge.readShardedChanges(spark, srcDir, keyCols, from, to)
-  }
-
   /** CDF REPLICATION — the produce-consume round trip, closed: mirror a
     * source snapshot into a REPLICA sharded snapshot, exactly once per
-    * source span ([[walkShardedVersions]]; each span commits one
-    * replica version and, but for a diff-path bootstrap, a
-    * `cdf_<name>_v<to>` commit tag, so crash redelivery finds the tag
-    * and skips). Two invariants choose how a
-    * span is applied, from what the manifests say alone:
+    * source span ([[walkShardedVersions]]; each span commits one replica
+    * version and a `cdf_<name>_v<to>` commit tag, so crash redelivery
+    * finds the tag and skips). The replica is a file-level MIRROR of
+    * its source ([[graft.operators.SnapshotMerge.copySpan]]): every
+    * span — the bootstrap, upserts, deletes, compactions, optimizes,
+    * reshards, evolutions, migrations and restores alike — copies the
+    * source's changed shard dirs (and its anchor when the span moves
+    * it), drops the shards that left, and commits the source's header.
+    * No Spark job, no change rows; each call costs the NEW versions'
+    * changed shards, never a source rescan. A replica that does not
+    * mirror a span's start (written by anything but this replication)
+    * fails loudly before anything is written; clearing the checkpoint
+    * re-bootstraps it, replacing every shard.
     *
-    *  - COPY: when the replica and the source share one layout
-    *    (`nShards`, salt, hash version, ordered key names, anchor
-    *    schema) and the span moves neither layout nor anchor, replica
-    *    shard K holds exactly source shard K, so the span is applied by
-    *    copying the source's changed shard dirs
-    *    ([[graft.operators.SnapshotMerge.copySpan]]) — no Spark job, no
-    *    change rows. A bootstrap whose requested layout (`nShards`, the
-    *    default salt, `keyCols`) equals the source's copies every shard
-    *    plus the anchor. The replica holds copies, not references, so a
-    *    source vacuum never breaks it.
-    *  - DIFF: otherwise (a replica sharded differently — its layout is
-    *    its own choice — or keyed differently, or a span that reshards,
-    *    evolves or migrates the source) the span's change rows are
-    *    applied: the bootstrap creates the replica from the full
-    *    insert batch, later spans upsert post-images and delete deletes;
-    *    preimages are dropped (the replica needs effects, not history).
-    *
-    * Both paths leave identical replica content and version sequences.
-    * Incremental either way: each call costs the NEW versions' changed
-    * shards, never a source rescan — the polling loop a downstream
-    * mirror runs between vacuum windows.
+    * `keyCols` and `nShards` choose nothing: the bootstrap checks them
+    * against the source version it copies and fails loudly, naming
+    * both, when they differ.
     *
     * @return the source version the replica now reflects */
   def replicateSharded(spark: SparkSession, srcDir: String,
@@ -483,36 +465,20 @@ object StreamingOps {
       nShards: Int = 16, streamName: String = "cdf",
       maxVersionsPerCall: Int = Int.MaxValue,
       /** Apply every pending version as ONE coalesced span
-        * ([[consumeShardedChanges]]'s knob) — safe here by
-        * construction: a span copy takes each changed shard's state at
-        * the span end, and a span diff composes the per-version effects
-        * exactly (upsert∘upsert = upsert of the later image;
-        * insert∘delete = absent), so the replica content is identical
-        * at one replica version per call instead of one per source
-        * version. The commit tag keys on the span END version, so crash
-        * redelivery of the same span still short-circuits. */
+        * ([[consumeShardedChanges]]'s knob) — safe by construction: a
+        * span copy takes each changed shard's state at the span end, so
+        * the replica content is identical at one replica version per
+        * call instead of one per source version. The commit tag keys on
+        * the span END version, so crash redelivery of the same span
+        * still short-circuits. */
       coalesceSpans: Boolean = false): Long = {
     import graft.operators.SnapshotMerge
     walkShardedVersions(spark, srcDir, checkpointDir, maxVersionsPerCall,
         coalesceSpans) { (from, to) =>
-      val tag = s"cdf_${streamName}_v$to"
-      if (!SnapshotMerge.copySpan(spark, srcDir, replicaDir, keyCols,
-          nShards, from, to, tag))
-        graft.GraftSession.releasingScratch(spark) {
-          val batch = spanChanges(spark, srcDir, keyCols, from, to)
-            .filter(col("_change_type") =!= "update_preimage")
-            .withColumn("__cdf_delete", col("_change_type") === "delete")
-            .drop("_change_type")
-          if (!SnapshotMerge.existsSharded(spark, replicaDir)) {
-            SnapshotMerge.createSharded(
-              batch.filter(!col("__cdf_delete")).drop("__cdf_delete"),
-              keyCols, nShards, replicaDir)
-          } else {
-            SnapshotMerge.upsertSharded(batch, keyCols, replicaDir,
-              deleteCol = Some("__cdf_delete"), commitTag = Some(tag))
-          }
-          ()
-        }
+      if (from == 0L)
+        SnapshotMerge.requireLayout(spark, srcDir, to, keyCols, nShards)
+      SnapshotMerge.copySpan(spark, srcDir, replicaDir, from, to,
+        s"cdf_${streamName}_v$to")
     }
   }
 

@@ -1,13 +1,20 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.ShiftRight
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
-import graft.functions.GraftFunctions.{shiftL, shiftR}
+import graft.functions.GraftFunctions.shiftL
 
 /** Built-ins-only HOF spellings of the native fingerprint kernels: the
   * executable specs the native expressions are tested against. */
 object ReferenceHofs {
+
+  // functions.shiftright only takes an Int literal; the catalyst
+  // expression accepts a column operand (needed inside lambdas).
+  private def shiftR(v: Column, bits: Column): Column = ColumnBridge.column(
+    ShiftRight(ColumnBridge.expression(v), ColumnBridge.expression(bits)))
 
   /** Reference HOF composition of simhash64 (built-ins only). Agrees
     * bit-for-bit with the native form on null-free token arrays; kept as

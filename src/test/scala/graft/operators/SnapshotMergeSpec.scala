@@ -240,30 +240,15 @@ class SnapshotMergeSpec extends SparkSpec {
   }
 
   test("upsertSharded reads the anchor's schema from its footer: no inference job per attempt") {
-    import org.apache.spark.scheduler.{DagProbe, SparkListener, SparkListenerJobStart}
     val dir = tmp()
     SnapshotMerge.createSharded(spark.range(0, 100)
       .select(col("id"), concat(lit("n"), col("id")).as("name")), Seq("id"), 4, dir)
-    val sc = spark.sparkContext
-    val tag = s"upsert-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-            .exists(_.split(",").contains(tag))) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.addJobTag(tag)
-    try SnapshotMerge.upsertSharded(Seq((3L, "u3"), (500L, "i500")).toDF("id", "name"),
-      Seq("id"), dir)
-    finally {
-      sc.removeJobTag(tag)
-      DagProbe.drainListeners(sc)
-      sc.removeSparkListener(listener)
-    }
+    val (_, jobs) = org.apache.spark.scheduler.DagProbe.jobsDuring(spark.sparkContext)(
+      SnapshotMerge.upsertSharded(Seq((3L, "u3"), (500L, "i500")).toDF("id", "name"),
+        Seq("id"), dir))
     // 8 when the anchor's columns and the touched shards' schema were
     // each inferred through spark.read
-    assert(jobs.get == 6, s"${jobs.get} jobs for one upsertSharded")
+    assert(jobs == 6, s"$jobs jobs for one upsertSharded")
     val got = SnapshotMerge.readSharded(spark, dir)
     assert(got.count() == 101 && got.filter(col("name") === "u3").count() == 1)
   }

@@ -194,27 +194,12 @@ class OrchestratorSpec extends SparkSpec {
   }
 
   test("one run stays within its job budget; the parquet hand-off keeps the inferred schema") {
-    import org.apache.spark.scheduler.{DagProbe, SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val tag = s"orch-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-            .exists(_.split(",").contains(tag))) jobs.incrementAndGet()
-    }
     val base = Files.createTempDirectory("orchJobs").toString
-    sc.addSparkListener(listener)
-    sc.addJobTag(tag)
-    try Orchestrator.run(spark, "Order", source, base,
-      Orchestrator.RunOptions(limit = None, timestampRaw = false),
-      specOverride = Some(orderSpec))
-    finally {
-      sc.removeJobTag(tag)
-      DagProbe.drainListeners(sc)
-      sc.removeSparkListener(listener)
-    }
-    assert(jobs.get <= JobBudget, s"${jobs.get} jobs for one run")
+    val (_, jobs) = org.apache.spark.scheduler.DagProbe.jobsDuring(spark.sparkContext)(
+      Orchestrator.run(spark, "Order", source, base,
+        Orchestrator.RunOptions(limit = None, timestampRaw = false),
+        specOverride = Some(orderSpec)))
+    assert(jobs <= JobBudget, s"$jobs jobs for one run")
 
     val rawPath = s"$base/handoff"
     val (raw, rows) = Orchestrator.materializeRaw(spark, source, rawPath)

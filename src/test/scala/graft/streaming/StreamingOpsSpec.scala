@@ -481,8 +481,6 @@ class StreamingOpsSpec extends SparkSpec {
   test("consumeShardedChanges/replicateSharded: bootstrap, paced drain, replay, loud lag failure") {
     import spark.implicits._
     import graft.operators.{IndexFs, SnapshotMerge}
-    def tmp(n: String) =
-      java.nio.file.Files.createTempDirectory(n).toString + "/t"
     val src = tmp("cdf_src")
     val rep = tmp("cdf_rep")
     val ck = tmp("cdf_ck")
@@ -503,7 +501,7 @@ class StreamingOpsSpec extends SparkSpec {
       new org.apache.hadoop.fs.Path(s"$ck/cdf.version")).trim.toLong
 
     // paced drain: one source version per call — bootstrap first, then
-    // each diff; the checkpoint advances durably between calls (each
+    // each span; the checkpoint advances durably between calls (each
     // call is a fresh "restarted consumer" reading only the checkpoint)
     assert(StreamingOps.replicateSharded(spark, src, rep, Seq("id"), ck,
       nShards = 4, maxVersionsPerCall = 1) == 1L)
@@ -569,11 +567,9 @@ class StreamingOpsSpec extends SparkSpec {
       full + (5L -> "e") + (6L -> "f"))
   }
 
-  test("replicateSharded coalesceSpans: one span-diff merge, identical replica") {
+  test("replicateSharded coalesceSpans: one replica version per drained span, identical replica") {
     import spark.implicits._
     import graft.operators.{IndexFs, SnapshotMerge}
-    def tmp(n: String) =
-      java.nio.file.Files.createTempDirectory(n).toString + "/t"
     val src = tmp("cdfc_src")
     val rep = tmp("cdfc_rep")
     val ck = tmp("cdfc_ck")
@@ -610,27 +606,11 @@ class StreamingOpsSpec extends SparkSpec {
       "replayed coalesced span must be tag-skipped")
   }
 
-  /** Runs `body`, counting the Spark jobs it starts (the OrchestratorSpec
-    * job-tag listener). */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{DagProbe, SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val tag = s"replica-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-            .exists(_.split(",").contains(tag))) jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.addJobTag(tag)
-    val out = try body finally {
-      sc.removeJobTag(tag)
-      DagProbe.drainListeners(sc)
-      sc.removeSparkListener(listener)
-    }
-    (out, jobs.get)
-  }
+  private def jobsDuring[T](body: => T): (T, Int) =
+    org.apache.spark.scheduler.DagProbe.jobsDuring(spark.sparkContext)(body)
+
+  private def tmp(n: String) =
+    java.nio.file.Files.createTempDirectory(n).toString + "/t"
 
   private def sameRows(a: org.apache.spark.sql.DataFrame,
       b: org.apache.spark.sql.DataFrame): Boolean = {
@@ -639,35 +619,48 @@ class StreamingOpsSpec extends SparkSpec {
     x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty
   }
 
-  test("replicateSharded: the shard-copy path ≡ the diff+merge path, per version and coalesced") {
+  /** The live manifest's header fields but the anchor path (nShards,
+    * salt, hash version, key names, trailer flag), and its shard ids. */
+  private def layout(dir: String): (Seq[String], Set[String]) = {
+    import graft.operators.{IndexFs, SnapshotMerge}
+    val v = SnapshotMerge.shardedVersions(spark, dir).max
+    val lines = IndexFs.readSmallFile(IndexFs.fs(spark, dir),
+      new org.apache.hadoop.fs.Path(s"$dir/manifest-v$v")).split("\n").toSeq
+    (lines.head.split("\t", -1).toSeq.patch(4, Nil, 1),
+      lines.tail.init.map(_.split("\t")(0)).toSet)
+  }
+
+  /** Asserts the replica mirrors source version `v`: its rows and
+    * schema, and its manifest header and shard ids. */
+  private def assertMirrors(rep: String, src: String, v: Long, what: String): Unit = {
+    import graft.operators.SnapshotMerge
+    val (got, want) = (SnapshotMerge.readSharded(spark, rep),
+      SnapshotMerge.readShardedVersion(spark, src, v))
+    assert(got.schema == want.schema, s"$what: ${got.schema} vs ${want.schema}")
+    assert(sameRows(got, want), what)
+    assert(layout(rep) == layout(src), what)
+  }
+
+  test("replicateSharded: the mirror equals the source at every span, per version and coalesced") {
     import graft.operators.SnapshotMerge
     def rows(lo: Long, hi: Long, tag: String) = spark.range(lo, hi)
       .select(col("id"), concat(lit(tag), col("id")).as("name"),
         (col("id") % 7).as("g"))
     for (coalesced <- Seq(false, true)) {
-      def tmp(n: String) =
-        java.nio.file.Files.createTempDirectory(n).toString + "/t"
-      val src = tmp("rep_src")
-      val (copyRep, copyCk) = (tmp("rep_copy"), tmp("rep_copy_ck"))
-      val (diffRep, diffCk) = (tmp("rep_diff"), tmp("rep_diff_ck"))
+      val (src, rep, ck) = (tmp("rep_src"), tmp("rep_rep"), tmp("rep_ck"))
       // multi-file shards, so every compaction has work
       spark.conf.set("spark.sql.files.maxRecordsPerFile", "20")
       try {
         SnapshotMerge.createSharded(rows(0, 200, "n"), Seq("id"), 4, src)
-        // copy replica: the source's layout; diff replica: its own
-        def replicateBoth(): Int = {
-          val (_, jobs) = jobsDuring(StreamingOps.replicateSharded(spark, src,
-            copyRep, Seq("id"), copyCk, nShards = 4, coalesceSpans = coalesced))
-          StreamingOps.replicateSharded(spark, src, diffRep, Seq("id"), diffCk,
-            nShards = 2, coalesceSpans = coalesced)
-          val source = SnapshotMerge.readSharded(spark, src)
-          assert(sameRows(SnapshotMerge.readSharded(spark, copyRep), source))
-          assert(sameRows(SnapshotMerge.readSharded(spark, diffRep), source))
-          assert(SnapshotMerge.shardedVersions(spark, copyRep) ==
-            SnapshotMerge.shardedVersions(spark, diffRep))
-          jobs
+        def replicate(what: String): Unit = {
+          val (v, jobs) = jobsDuring(StreamingOps.replicateSharded(spark, src,
+            rep, Seq("id"), ck, nShards = 4, coalesceSpans = coalesced))
+          assert(jobs == 0, s"the span over $what ran $jobs Spark jobs")
+          assert(v == SnapshotMerge.shardedVersions(spark, src).max)
+          assertMirrors(rep, src, v, what)
         }
-        assert(replicateBoth() == 0, "the copy bootstrap must run no Spark job")
+        replicate("the bootstrap")
+        var reshardVersion = 0L
         val spans: Seq[(String, () => Any)] = Seq(
           "upsert" -> (() => SnapshotMerge.upsertSharded(rows(150, 260, "u"),
             Seq("id"), src)),
@@ -677,80 +670,120 @@ class StreamingOpsSpec extends SparkSpec {
           "compact" -> (() => assert(SnapshotMerge.compactSharded(spark, src) > 0)),
           "optimize" -> (() =>
             SnapshotMerge.optimizeSharded(spark, src, Seq("id"), Seq("g"))),
-          "reshard" -> (() =>
-            assert(SnapshotMerge.reshardSharded(spark, src, Seq("id"), 6))))
+          "reshard" -> { () =>
+            assert(SnapshotMerge.reshardSharded(spark, src, Seq("id"), 6))
+            reshardVersion = SnapshotMerge.shardedVersions(spark, src).max
+          },
+          "evolve" -> (() => SnapshotMerge.evolveSharded(spark, src, Seq("id"),
+            rows(0, 1, "t").withColumn("score", lit(1.5)))),
+          "migrate" -> (() => SnapshotMerge.migrateSharded(spark, src, Seq("id"),
+            renames = Map("id" -> "key"))),
+          "restore" -> (() => SnapshotMerge.restoreSharded(spark, src, reshardVersion)),
+          "upsert after the reshard" -> (() => SnapshotMerge.upsertSharded(
+            rows(300, 320, "z"), Seq("id"), src)))
         // per version: replicate after every span; coalesced: after
         // every second one, so each replicated span holds two versions
         spans.zipWithIndex.foreach { case ((what, run), i) =>
           run()
-          if (!coalesced || i % 2 == 1 || i == spans.size - 1) {
-            val jobs = replicateBoth()
-            if (what == "reshard")
-              assert(jobs > 0, "a span that reshards the source takes the diff path")
-            else assert(jobs == 0, s"the copy span over $what ran $jobs Spark jobs")
-          }
+          if (!coalesced || i % 2 == 1 || i == spans.size - 1) replicate(what)
         }
-        // after the reshard the copy replica no longer matches: later
-        // spans take the diff path, still in step with the other replica
-        SnapshotMerge.upsertSharded(rows(300, 320, "z"), Seq("id"), src)
-        assert(replicateBoth() > 0)
       } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
     }
   }
 
-  test("replicateSharded copy path: a foreign salt, key list or anchor schema falls back; copies outlive a source vacuum; a lost CAS leaves nothing") {
+  test("replicateSharded: clearing the checkpoint after a lag past vacuum re-bootstraps the same replica, replacing every shard") {
     import spark.implicits._
-    import graft.operators.{ConcurrentCommitException, IndexFs, SnapshotMerge}
-    def tmp(n: String) =
-      java.nio.file.Files.createTempDirectory(n).toString + "/t"
-    def df(rows: (Long, String)*) = rows.toDF("id", "name")
-
-    // each mismatch keeps the diff path for the bootstrap and every span
-    val cases: Seq[(String, String => Unit, Seq[String], Boolean)] = Seq(
-      ("salt", dir => SnapshotMerge.createSharded(
-        df((1L, "a"), (2L, "b")), Seq("id"), 4, dir, salt = "pepper"),
-        Seq("id"), false),
-      ("key order", dir => SnapshotMerge.createSharded(
-        df((1L, "a"), (2L, "b")), Seq("id", "name"), 4, dir),
-        Seq("name", "id"), false),
-      ("anchor schema", dir => SnapshotMerge.createSharded(
-        df((1L, "a"), (2L, "b")), Seq("id"), 4, dir),
-        Seq("id"), true))
-    cases.foreach { case (what, create, replicaKeys, reorderedReplica) =>
-      val (src, rep, ck) = (tmp("fb_src"), tmp("fb_rep"), tmp("fb_ck"))
-      create(src)
-      if (reorderedReplica) {
-        // same layout and keys, columns in another order, at version 1
-        SnapshotMerge.createSharded(SnapshotMerge.readSharded(spark, src)
-          .select("name", "id"), replicaKeys, 4, rep)
-        IndexFs.atomicWriteSmallFile(spark, IndexFs.fs(spark, ck),
-          new org.apache.hadoop.fs.Path(s"$ck/cdf.version"), "1")
-      } else {
-        val (_, jobs) = jobsDuring(StreamingOps.replicateSharded(spark, src,
-          rep, replicaKeys, ck, nShards = 4))
-        assert(jobs > 0, s"$what: the bootstrap must take the diff path")
-      }
-      SnapshotMerge.upsertSharded(df((2L, "b2"), (3L, "c")),
-        if (what == "key order") Seq("id", "name") else Seq("id"), src)
-      val (_, jobs) = jobsDuring(StreamingOps.replicateSharded(spark, src,
-        rep, replicaKeys, ck, nShards = 4))
-      assert(jobs > 0, s"$what: the span must take the diff path")
-      assert(sameRows(SnapshotMerge.readSharded(spark, rep),
-        SnapshotMerge.readSharded(spark, src)), what)
-    }
-
-    // a matching replica holds copies: a source vacuum never breaks it
-    val (src, rep, ck) = (tmp("cp_src"), tmp("cp_rep"), tmp("cp_ck"))
-    SnapshotMerge.createSharded(df((1L, "a"), (2L, "b"), (3L, "c")),
-      Seq("id"), 4, src)
+    import graft.operators.{IndexFs, SnapshotMerge}
+    def rows(lo: Long, hi: Long, tag: String) = spark.range(lo, hi)
+      .select(col("id"), concat(lit(tag), col("id")).as("name"))
+    val (src, rep, ck) = (tmp("reb_src"), tmp("reb_rep"), tmp("reb_ck"))
+    SnapshotMerge.createSharded(rows(0, 40, "a"), Seq("id"), 4, src)
     StreamingOps.replicateSharded(spark, src, rep, Seq("id"), ck, nShards = 4)
-    SnapshotMerge.upsertSharded(df((1L, "a2"), (4L, "d")), Seq("id"), src)
-    val (_, jobs) = jobsDuring(
+    SnapshotMerge.upsertSharded(rows(0, 10, "b"), Seq("id"), src)
+    StreamingOps.replicateSharded(spark, src, rep, Seq("id"), ck, nShards = 4)
+    assert(layout(rep)._2.size == 4)
+    // the gap: every key but 0 is deleted, which empties shards, then
+    // a source vacuum reaps the checkpointed version
+    SnapshotMerge.upsertSharded(rows(0, 40, "c").withColumn("del", col("id") > 0),
+      Seq("id"), src, deleteCol = Some("del"))
+    SnapshotMerge.upsertSharded(rows(100, 101, "d"), Seq("id"), src)
+    assert(SnapshotMerge.vacuumSharded(spark, src, minAgeMs = 0) > 0)
+    val e = intercept[IllegalArgumentException](
+      StreamingOps.replicateSharded(spark, src, rep, Seq("id"), ck, nShards = 4))
+    assert(e.getMessage.contains("vacuumed"), e.getMessage)
+    assert(layout(src)._2.size < 4)
+    IndexFs.fs(spark, ck).delete(new org.apache.hadoop.fs.Path(s"$ck/cdf.version"), false)
+    val (v, jobs) = jobsDuring(
       StreamingOps.replicateSharded(spark, src, rep, Seq("id"), ck, nShards = 4))
     assert(jobs == 0)
+    assertMirrors(rep, src, v, "the re-bootstrap")
+    assert(SnapshotMerge.readSharded(spark, rep).select("id").as[Long]
+      .collect().sorted.toSeq == Seq(0L, 100L))
+  }
+
+  test("replicateSharded: a non-mirror replica, or a bootstrap nShards/keys mismatch, fails loudly and writes nothing; copies outlive a source vacuum; a lost CAS leaves nothing") {
+    import spark.implicits._
+    import graft.operators.{ConcurrentCommitException, IndexFs, SnapshotMerge}
+    def df(rows: (Long, String)*) = rows.toDF("id", "name")
+    def ckpt(ck: String) = new org.apache.hadoop.fs.Path(s"$ck/cdf.version")
+    // every path under a tmp() dir
+    def tree(dir: String): Set[String] = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(java.nio.file.Paths.get(dir).getParent)
+        .iterator.asScala.map(_.toString).toSet
+    }
+
+    // the bootstrap checks the caller's layout against the source's
+    val (src, rep, ck) = (tmp("fl_src"), tmp("fl_rep"), tmp("fl_ck"))
+    SnapshotMerge.createSharded(df((1L, "a"), (2L, "b")), Seq("id"), 4, src)
+    Seq((Seq("id"), 2, "not 2 ways"), (Seq("id", "name"), 4, "[id, name]"))
+      .foreach { case (keys, n, named) =>
+        val e = intercept[IllegalArgumentException](
+          StreamingOps.replicateSharded(spark, src, rep, keys, ck, nShards = n))
+        assert(e.getMessage.contains("sharded 4 ways on [id]") &&
+          e.getMessage.contains(named), e.getMessage)
+        assert(tree(rep).size == 1 && tree(ck).size == 1)
+      }
+
+    // a foreign salt is the source's own: the mirror carries it
+    val (ssrc, srep, sck) = (tmp("fl_ssrc"), tmp("fl_srep"), tmp("fl_sck"))
+    SnapshotMerge.createSharded(df((1L, "a"), (2L, "b")), Seq("id"), 4, ssrc,
+      salt = "pepper")
+    StreamingOps.replicateSharded(spark, ssrc, srep, Seq("id"), sck, nShards = 4)
+    assert(layout(srep)._1(2) == "pepper")
+    assertMirrors(srep, ssrc, 1L, "salt")
+
+    // a replica this replication did not write fails the next span
+    val cases: Seq[(String, String => Unit)] = Seq(
+      ("absent", _ => ()),
+      ("nShards", dir => SnapshotMerge.createSharded(df((1L, "a"), (2L, "b")),
+        Seq("id"), 2, dir)),
+      ("salt", dir => SnapshotMerge.createSharded(df((1L, "a"), (2L, "b")),
+        Seq("id"), 4, dir, salt = "pepper")),
+      ("anchor schema", dir => SnapshotMerge.createSharded(
+        df((1L, "a"), (2L, "b")).select("name", "id"), Seq("id"), 4, dir)))
+    val (nsrc, nck) = (tmp("fl_nsrc"), tmp("fl_nck"))
+    SnapshotMerge.createSharded(df((1L, "a"), (2L, "b")), Seq("id"), 4, nsrc)
+    SnapshotMerge.upsertSharded(df((2L, "b2"), (3L, "c")), Seq("id"), nsrc)
+    IndexFs.atomicWriteSmallFile(spark, IndexFs.fs(spark, nck), ckpt(nck), "1")
+    cases.foreach { case (what, create) =>
+      val nrep = tmp("fl_nrep")
+      create(nrep)
+      val before = tree(nrep)
+      val e = intercept[IllegalArgumentException](
+        StreamingOps.replicateSharded(spark, nsrc, nrep, Seq("id"), nck, nShards = 4))
+      assert(e.getMessage.contains("does not mirror version 1"), s"$what: ${e.getMessage}")
+      assert(tree(nrep) == before, s"$what: wrote ${tree(nrep) -- before}")
+      assert(IndexFs.readSmallFile(IndexFs.fs(spark, nck), ckpt(nck)).trim == "1")
+    }
+
+    // the replica holds copies: a source vacuum never breaks it
+    StreamingOps.replicateSharded(spark, src, rep, Seq("id"), ck, nShards = 4)
+    SnapshotMerge.upsertSharded(df((1L, "a2"), (4L, "d")), Seq("id"), src)
+    StreamingOps.replicateSharded(spark, src, rep, Seq("id"), ck, nShards = 4)
     assert(SnapshotMerge.vacuumSharded(spark, src, minAgeMs = 0) > 0)
     assert(SnapshotMerge.readSharded(spark, rep).as[(Long, String)].collect().toMap ==
-      Map(1L -> "a2", 2L -> "b", 3L -> "c", 4L -> "d"))
+      Map(1L -> "a2", 2L -> "b", 4L -> "d"))
 
     // a lost CAS at the commit seam: the copy is deleted, no tag lands
     SnapshotMerge.upsertSharded(df((5L, "e")), Seq("id"), src)
@@ -759,7 +792,7 @@ class StreamingOpsSpec extends SparkSpec {
     val next = SnapshotMerge.shardedVersions(spark, rep).last + 1
     val tag = s"cdf_cdf_v$to"
     val e = intercept[ConcurrentCommitException] {
-      SnapshotMerge.copySpan(spark, src, rep, Seq("id"), 4, from, to, tag,
+      SnapshotMerge.copySpan(spark, src, rep, from, to, tag,
         onCommitAttempt = () => SnapshotMerge.restoreSharded(spark, rep, 1L))
     }
     assert(e.getMessage.contains(s"version $next"), e.getMessage)
