@@ -182,18 +182,22 @@ object SnapshotMerge {
   private val DefaultSalt = "merge"
 
   /** (version, nShards, salt, merge key names in order, shard →
-    * physical dir, anchor dir). In-memory paths are always rooted at
-    * the snapshot dir the caller named; on disk they are stored
-    * RELATIVE to the root, so the snapshot survives being
-    * moved/mounted under a different spelling and no maintenance op
-    * ever compares paths across spellings.
+    * physical dir, anchor dir, mirrored source version). In-memory
+    * paths are always rooted at the snapshot dir the caller named; on
+    * disk they are stored RELATIVE to the root, so the snapshot
+    * survives being moved/mounted under a different spelling and no
+    * maintenance op ever compares paths across spellings.
     * `anchor` is the zero-row schema relation THIS version reads with:
     * schema changes write a fresh `schema-v<N>-<uid>` dir, every other
     * commit carries the anchor forward by reference, and a restore
-    * across a schema change rolls the schema back with the data. */
+    * across a schema change rolls the schema back with the data.
+    * `mirrors` is the source version a replica's [[copySpan]] copied;
+    * only copySpan writes it, so a manifest that records version v holds
+    * exactly source version v, and every other writer drops it. */
   private[operators] final case class Manifest(
       version: Long, nShards: Int, salt: String, keys: Seq[String],
-      shards: Map[Long, String], anchor: String)
+      shards: Map[Long, String], anchor: String,
+      mirrors: Option[Long] = None)
 
   /** A stored (relative) path, resolved against the snapshot root. */
   private def resolveShardPath(dir: String, p: String): String =
@@ -231,9 +235,10 @@ object SnapshotMerge {
   /** CAS-creates `manifest-v<version>` — no-clobber, so at most one
     * writer per version number ever wins; false when the version is
     * already committed. The format is the only one readers accept
-    * ([[readManifestFile]]): a seven-field tab-separated header
-    * `meta, nShards, salt, hash version, anchor, key names, trailer
-    * flag` (key names in order, [[KeySep]]-separated), one
+    * ([[readManifestFile]]): an eight-field tab-separated header
+    * `meta, nShards, salt, hash version, anchor, key names, mirrored
+    * source version, trailer flag` (key names in order,
+    * [[KeySep]]-separated; `-` when the version mirrors nothing), one
     * `shard, path` line per shard (paths relative to the root), and an
     * `end\t<shard-line count>` trailer. The trailer makes the body
     * SELF-VALIDATING: on schemes where writeSmallFileNoClobber falls
@@ -244,7 +249,7 @@ object SnapshotMerge {
       m: Manifest): Boolean = {
     val header = Seq("meta", m.nShards.toString, m.salt, ShardHashVersion,
       relativizeShardPath(dir, m.anchor), m.keys.mkString(KeySep),
-      TrailerFlag).mkString("\t")
+      m.mirrors.fold("-")(_.toString), TrailerFlag).mkString("\t")
     val shardLines = m.shards.toSeq.sortBy(_._1)
       .map { case (k, p) => s"$k\t${relativizeShardPath(dir, p)}" }
     val body = ((header +: shardLines) :+ s"end\t${shardLines.length}")
@@ -281,16 +286,35 @@ object SnapshotMerge {
 
     /** The version after `base`: this delta's shards replace their own
       * ids and every id in `replaced`; every other shard is carried by
-      * reference, and so is the anchor unless this delta wrote one. */
+      * reference, and so is the anchor unless this delta wrote one. It
+      * mirrors no source version. */
     def over(base: Manifest, replaced: Set[Long] = Set.empty): Manifest =
       base.copy(version = base.version + 1,
         shards = (base.shards -- replaced) ++ shards,
-        anchor = anchor.getOrElse(base.anchor))
+        anchor = anchor.getOrElse(base.anchor), mirrors = None)
+  }
+
+  /** `rows` (carrying `__shard`) exchanged so that each of `shards` —
+    * the ids being written, which every caller holds on the driver —
+    * is one shuffle partition. The partition is the id's dense index,
+    * an exact map (a hash of ids 0–7 fills only 4 of 8 partitions), and
+    * AQE never coalesces an exchange of explicit width: it coalesced
+    * the hashed `__shard` exchange of an upsert rewriting 8 shards (50k
+    * rows) into one write task of 0.6–0.7 s. */
+  private def byShard(rows: DataFrame, shards: Iterable[Long]): DataFrame = {
+    val index = shards.toSeq.distinct.sorted.zipWithIndex.toMap
+    rows.repartitionById(math.max(1, index.size),
+      element_at(typedLit(index), col("__shard")))
   }
 
   /** Writes version `version`'s delta: `rows` (carrying `__shard`, laid
     * out as the caller wants the files) partitioned by shard, plus
-    * `anchor` as a zero-row schema relation when given. Shard files are
+    * `anchor` as a zero-row schema relation when given. The width
+    * invariant: every writer but [[optimizeSharded]] (whose (shard, z)
+    * range layout splits a shard into `filesPerShard` slices) lays
+    * `rows` out with [[byShard]], so the write runs one task per shard
+    * written, and a shard's file count under `maxRecordsPerFile` is that
+    * of a single-task write. Shard files are
     * internal — read back only through Spark — so they are written with
     * micros timestamps ([[Layout.withMicrosTimestamps]]), whose INT64
     * stats let a timestamp band prune in [[readShardedPruned]]. */
@@ -392,10 +416,11 @@ object SnapshotMerge {
     def corrupt(why: String) = s"corrupt or torn manifest $name at $dir: $why"
     val header = lines.headOption.getOrElse("")
     val meta = header.split("\t", -1)
-    require(meta.length == 7 && meta(0) == "meta" && meta(4).nonEmpty &&
-      meta(5).split(KeySep, -1).forall(_.nonEmpty) && meta(6) == TrailerFlag,
-      corrupt(s"header '$header' is not " +
-        s"meta/nShards/salt/hash version/anchor/key names/$TrailerFlag"))
+    require(meta.length == 8 && meta(0) == "meta" && meta(4).nonEmpty &&
+      meta(5).split(KeySep, -1).forall(_.nonEmpty) &&
+      meta(6).matches("-|\\d+") && meta(7) == TrailerFlag,
+      corrupt(s"header '$header' is not meta/nShards/salt/hash version/" +
+        s"anchor/key names/mirrored version/$TrailerFlag"))
     require(meta(3) == ShardHashVersion,
       s"$name at $dir was sharded under hash version ${meta(3)}, " +
         s"this build uses $ShardHashVersion — rebuild it (createSharded) " +
@@ -413,7 +438,8 @@ object SnapshotMerge {
         val Array(k, p) = l.split("\t", 2)
         k.toLong -> resolveShardPath(dir, p)
       }.toMap,
-      resolveShardPath(dir, meta(4)))
+      resolveShardPath(dir, meta(4)),
+      Some(meta(6)).filter(_ != "-").map(_.toLong))
   }
 
   /** A version's rows: the union scan of its shard dirs, or of its
@@ -448,8 +474,8 @@ object SnapshotMerge {
     require(!existsSharded(spark, dir),
       s"sharded snapshot already exists at $dir — upsertSharded into it")
     val d = writeDelta(spark, dir, 1L,
-      df.withColumn("__shard", shardExpr(keyCols, nShards, salt))
-        .repartition(col("__shard")),
+      byShard(df.withColumn("__shard", shardExpr(keyCols, nShards, salt)),
+        0L until nShards),
       anchor = Some(df.limit(0)))
     if (!commit(spark, dir, None,
         Manifest(1L, nShards, salt, keyCols, d.shards, d.anchor.get), d.written))
@@ -606,7 +632,7 @@ object SnapshotMerge {
         }
 
       val d = writeDelta(spark, dir, m.version + 1,
-        survivors.unionByName(inserts).repartition(col("__shard")))
+        byShard(survivors.unionByName(inserts), touched))
       onCommitAttempt()
       // touched shards remap to the delta (one rewritten to zero rows
       // drops out); the rest ride along by reference
@@ -719,9 +745,8 @@ object SnapshotMerge {
       .withColumn("__shard",
         regexp_extract(element_at(split(input_file_name(), "/"), -2),
           "^__shard=(\\d+)$", 1).cast("long"))
-    // all of a shard's rows → one task → one file
     val d = writeDelta(spark, dir, m.version + 1,
-      packed.repartition(col("__shard")))
+      byShard(packed, qualifying.map(_._1)))
     if (!commit(spark, dir, Some(m), d.over(m), d.written))
       throw lostRace("compactSharded", dir, m.version + 1)
     qualifying.size
@@ -768,7 +793,7 @@ object SnapshotMerge {
       .unionByName(widened.limit(0), allowMissingColumns = true)
       .withColumn("__shard", shardExpr(keyCols, m.nShards, m.salt))
     val d = writeDelta(spark, dir, m.version + 1,
-      rewrittenRows.repartition(col("__shard")), anchor = Some(widened))
+      byShard(rewrittenRows, m.shards.keys), anchor = Some(widened))
     if (!commit(spark, dir, Some(m), d.over(m), d.written))
       throw lostRace("evolveSharded", dir, m.version + 1)
   }
@@ -802,7 +827,7 @@ object SnapshotMerge {
     require(version != m.version,
       s"restoreSharded: version $version IS the live version of $dir")
     val next = requireReadableVersion(spark, dir, version)
-      .copy(version = m.version + 1)
+      .copy(version = m.version + 1, mirrors = None)
     if (!commit(spark, dir, Some(m), next, Nil))
       throw lostRace("restoreSharded", dir, next.version)
     next.version
@@ -830,8 +855,8 @@ object SnapshotMerge {
     requireManifestKeys("reshardSharded", dir, m, keyCols)
     if (newNShards == m.nShards) return false
     val d = writeDelta(spark, dir, m.version + 1,
-      scan(spark, m).withColumn("__shard", shardExpr(keyCols, newNShards, m.salt))
-        .repartition(col("__shard")))
+      byShard(scan(spark, m).withColumn("__shard",
+        shardExpr(keyCols, newNShards, m.salt)), 0L until newNShards))
     if (!commit(spark, dir, Some(m),
         d.over(m, replaced = m.shards.keySet).copy(nShards = newNShards),
         d.written))
@@ -903,7 +928,7 @@ object SnapshotMerge {
     // the same CAS: the old manifest keeps reading the old anchor, the
     // new one the new anchor, and no crash point mixes them
     val d = writeDelta(spark, dir, m.version + 1,
-      rewrittenRows.repartition(col("__shard")), anchor = Some(newAnchor))
+      byShard(rewrittenRows, m.shards.keys), anchor = Some(newAnchor))
     if (!commit(spark, dir, Some(m), d.over(m).copy(keys = newKeyCols),
         d.written))
       throw lostRace("migrateSharded", dir, m.version + 1)
@@ -1009,44 +1034,42 @@ object SnapshotMerge {
     * the one path of [[graft.streaming.StreamingOps.replicateSharded]].
     * The invariant: the replica MIRRORS its source file for file. Once
     * span `(fromVersion, toVersion)` commits, the replica's manifest
-    * carries the source's `toVersion` header (`nShards`, salt, ordered
-    * key names) and shard-id set, replica shard K is a copy of source
-    * shard K and its anchor a copy of the source's. The span copies the
-    * `__shard=K` dirs whose physical path differs between the two
-    * source manifests ([[copyDelta]]), plus the `toVersion` anchor when
-    * it differs from the `fromVersion` one, drops the ids that left,
-    * and commits the replica's next version through [[commit]]. The
-    * bootstrap (`fromVersion` = 0) copies every shard and the anchor
-    * and replaces whatever the replica held. No Spark job runs: only
-    * manifests and two anchor footers are read. Copies, never
-    * references, so a source vacuum never breaks the replica.
+    * records `toVersion` and carries the source's `toVersion` header
+    * (`nShards`, salt, ordered key names) and shard-id set, replica
+    * shard K is a copy of source shard K and its anchor a copy of the
+    * source's. The span copies the `__shard=K` dirs whose physical path
+    * differs between the two source manifests ([[copyDelta]]), plus the
+    * `toVersion` anchor when it differs from the `fromVersion` one,
+    * drops the ids that left, and commits the replica's next version
+    * through [[commit]]. The bootstrap (`fromVersion` = 0) copies every
+    * shard and the anchor and replaces whatever the replica held. No
+    * Spark job runs: only manifests are read. Copies, never references,
+    * so a source vacuum never breaks the replica.
     *
-    * A committed `commitTag` skips the span first; a committed span
-    * marks it. Any other span whose replica does not mirror
-    * `fromVersion` — absent, another header or shard-id set, or an
-    * anchor schema unequal to the source's — fails loudly before
-    * anything is written. A lost commit race throws
-    * [[ConcurrentCommitException]] with the copy deleted.
+    * A span whose `toVersion` the replica's head already records is
+    * done, and skips (a crash between the commit and the caller's
+    * checkpoint replays as this skip). Any other span copies only onto
+    * a head that records `fromVersion` with `fromVersion`'s header and
+    * shard ids — a replica that something else wrote, or one at another
+    * version, fails loudly before anything is written. A lost commit
+    * race throws [[ConcurrentCommitException]] with the copy deleted.
     * `onCommitAttempt` runs just before the commit CAS. */
   private[graft] def copySpan(spark: SparkSession, srcDir: String,
       replicaDir: String, fromVersion: Long, toVersion: Long,
-      commitTag: String, onCommitAttempt: () => Unit = () => ()): Unit = {
-    IndexFs.requireValidTag(commitTag)
+      onCommitAttempt: () => Unit = () => ()): Unit = {
     val base = if (existsSharded(spark, replicaDir))
       Some(readManifest(spark, replicaDir)) else None
-    if (base.nonEmpty && IndexFs.isCommitted(spark, replicaDir, commitTag))
-      return
+    if (base.exists(_.mirrors.contains(toVersion))) return
     val to = requireReadableVersion(spark, srcDir, toVersion)
     val from = if (fromVersion == 0L) None
       else Some(requireReadableVersion(spark, srcDir, fromVersion))
     def layout(m: Manifest) = (m.nShards, m.salt, m.keys, m.shards.keySet)
-    for (f <- from) require(base.exists(r => layout(r) == layout(f) &&
-        Footers.parquetSchema(spark, r.anchor)
-          .exists(Footers.parquetSchema(spark, f.anchor).contains)),
-      s"replica $replicaDir does not mirror version $fromVersion of " +
-        s"$srcDir (replica ${base.map(layout).getOrElse("absent")}, " +
-        s"source ${layout(f)}, or another anchor schema) — nothing was " +
-        "written; clear its checkpoint to re-bootstrap it")
+    for (f <- from) require(
+      base.exists(r => r.mirrors.contains(fromVersion) && layout(r) == layout(f)),
+      s"replica $replicaDir does not mirror version $fromVersion of $srcDir " +
+        s"(replica ${base.map(r => (r.mirrors, layout(r))).getOrElse("absent")}, " +
+        s"source ${layout(f)}) — nothing was written; clear its checkpoint " +
+        "to re-bootstrap it")
     val fromShards = from.fold(Map.empty[Long, String])(_.shards)
     val b = base.getOrElse(to.copy(version = 0L, shards = Map.empty))
     val d = copyDelta(spark, replicaDir, b.version + 1,
@@ -1055,10 +1078,10 @@ object SnapshotMerge {
     onCommitAttempt()
     if (!commit(spark, replicaDir, base,
         d.over(b, replaced = b.shards.keySet -- to.shards.keySet)
-          .copy(nShards = to.nShards, salt = to.salt, keys = to.keys),
+          .copy(nShards = to.nShards, salt = to.salt, keys = to.keys,
+            mirrors = Some(toVersion)),
         d.written))
       throw lostRace("replicateSharded", replicaDir, b.version + 1)
-    IndexFs.markCommitted(spark, replicaDir, commitTag)
   }
 
   /** Fails loudly, naming both layouts, unless version `version` of

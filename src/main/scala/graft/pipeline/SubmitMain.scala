@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.SQLConf
 
+import graft.GraftSession
 import graft.sources.Scan
 
 /** The deployment unit: a `spark-submit`-able main running the full
@@ -57,6 +58,21 @@ object SubmitMain {
     }.toMap
   }
 
+  /** The tick's master and shuffle width. Launched bare (no `--master`
+    * and no `spark.master`: sbt runMain / IDE) it runs `local[*]` at one
+    * shuffle partition per driver core. Given a master (`--master`, else
+    * spark-submit's), the width is spark-submit's
+    * `spark.sql.shuffle.partitions`, else Spark's default: on a cluster
+    * the driver's cores say nothing of the executors', and AQE can only
+    * merge partitions, never split them. */
+  private[pipeline] def sessionShape(master: Option[String],
+      props: Map[String, String]): (String, Int) =
+    master.orElse(props.get("spark.master")) match {
+      case None => ("local[*]", Runtime.getRuntime.availableProcessors())
+      case Some(m) => (m, props.get(SQLConf.SHUFFLE_PARTITIONS.key).map(_.toInt)
+        .getOrElse(SQLConf.SHUFFLE_PARTITIONS.defaultValue.get))
+    }
+
   def main(args: Array[String]): Unit = {
     val a = parseArgs(args)
     val objectName = a.getOrElse("object",
@@ -64,17 +80,10 @@ object SubmitMain {
     val baseDir = a.getOrElse("base-dir",
       throw new IllegalArgumentException("--base-dir <dir> is required"))
 
-    // spark-submit provides the master (cluster deploy); default to
-    // local[*] only when launched bare (sbt runMain / IDE)
-    val builder = SparkSession.builder().appName(s"graft-$objectName")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if (sys.props.get("spark.master").isEmpty && a.get("master").isEmpty)
-      builder.master("local[*]").config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors().toString)
-    a.get("master").foreach(builder.master)
-    val spark = builder.getOrCreate()
+    val (master, width) = sessionShape(a.get("master"), sys.props.toMap)
+    val spark = GraftSession.builder(master, width)
+      .appName(s"graft-$objectName")
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val source = () => (a.get("sf-dir"), a.get("table")) match {

@@ -684,8 +684,9 @@ object ParityQueries {
   // that reinserts, each batch committed as two key-disjoint halves) is
   // mirrored into a REPLICA table through the manifest chain —
   // replicateSharded follows it from a durable checkpoint and mirrors
-  // each span by copying the source's changed shard dirs under a
-  // version-derived commit tag (exactly-once effects). The replica
+  // each span by copying the source's changed shard dirs, each replica
+  // version recording the source version it mirrors (exactly-once
+  // effects). The replica
   // bootstraps MID-chain (after v1 only), drains v2..v3 one version at
   // a time, then v4..v5 as one coalesced span, so incremental pickup
   // and both drain shapes run inside the measured query. The oracle

@@ -347,10 +347,10 @@ object StreamingOps {
     * inserts on first contact) to `process(changes, fromVersion,
     * toVersion)` in version order ([[walkShardedVersions]]). The
     * checkpoint advances only AFTER `process` returns, so delivery is
-    * at-least-once across crashes; a `process` that commits under a
-    * toVersion-derived tag (the [[replicateSharded]] pattern) upgrades
-    * that to exactly-once EFFECTS — the crash-window redelivery finds
-    * its tag and skips. Downstream replicas must poll no slower than
+    * at-least-once across crashes; a `process` whose commit records
+    * `toVersion` durably (as [[replicateSharded]]'s replica manifest
+    * does) upgrades that to exactly-once EFFECTS — the crash-window
+    * redelivery finds `toVersion` recorded and skips. Downstream replicas must poll no slower than
     * the source's vacuum retention: a reaped checkpoint version fails
     * LOUDLY here (re-bootstrap deliberately by clearing the
     * checkpoint), never silently skips a span.
@@ -442,9 +442,10 @@ object StreamingOps {
   /** CDF REPLICATION — the produce-consume round trip, closed: mirror a
     * source snapshot into a REPLICA sharded snapshot, exactly once per
     * source span ([[walkShardedVersions]]; each span commits one replica
-    * version and a `cdf_<name>_v<to>` commit tag, so crash redelivery
-    * finds the tag and skips). The replica is a file-level MIRROR of
-    * its source ([[graft.operators.SnapshotMerge.copySpan]]): every
+    * version that records the source version it mirrors, so crash
+    * redelivery finds the span's end recorded and skips). The replica
+    * is a file-level MIRROR of its source
+    * ([[graft.operators.SnapshotMerge.copySpan]]): every
     * span — the bootstrap, upserts, deletes, compactions, optimizes,
     * reshards, evolutions, migrations and restores alike — copies the
     * source's changed shard dirs (and its anchor when the span moves
@@ -462,13 +463,12 @@ object StreamingOps {
     * @return the source version the replica now reflects */
   def replicateSharded(spark: SparkSession, srcDir: String,
       replicaDir: String, keyCols: Seq[String], checkpointDir: String,
-      nShards: Int = 16, streamName: String = "cdf",
-      maxVersionsPerCall: Int = Int.MaxValue,
+      nShards: Int = 16, maxVersionsPerCall: Int = Int.MaxValue,
       /** Apply every pending version as ONE coalesced span
         * ([[consumeShardedChanges]]'s knob) — safe by construction: a
         * span copy takes each changed shard's state at the span end, so
         * the replica content is identical at one replica version per
-        * call instead of one per source version. The commit tag keys on
+        * call instead of one per source version. The replica records
         * the span END version, so crash redelivery of the same span
         * still short-circuits. */
       coalesceSpans: Boolean = false): Long = {
@@ -477,8 +477,7 @@ object StreamingOps {
         coalesceSpans) { (from, to) =>
       if (from == 0L)
         SnapshotMerge.requireLayout(spark, srcDir, to, keyCols, nShards)
-      SnapshotMerge.copySpan(spark, srcDir, replicaDir, from, to,
-        s"cdf_${streamName}_v$to")
+      SnapshotMerge.copySpan(spark, srcDir, replicaDir, from, to)
     }
   }
 

@@ -186,6 +186,25 @@ class GraftSessionSpec extends SparkSpec {
       assert(jobs.get() == 0, s"partitionsForPlan ran ${jobs.get()} job(s)")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  test("a read of 40 partition dirs lists them on the driver: no job, on a builder session and a configured one") {
+    import org.apache.spark.scheduler.DagProbe
+    val root = java.nio.file.Files.createTempDirectory("graft_listing").toString + "/t"
+    spark.range(0, 40).select(col("id").as("b"), col("id").as("v"))
+      .write.partitionBy("b").parquet(root)
+    val schema = new org.apache.spark.sql.types.StructType()
+      .add("v", "long").add("b", "long")
+    def listingJobs(s: org.apache.spark.sql.SparkSession): Int =
+      DagProbe.jobsDuring(spark.sparkContext)(s.read.schema(schema).parquet(root))._2
+    assert(listingJobs(spark) == 0, "the builder's session")
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val other = spark.newSession()
+    other.conf.unset(key)
+    assert(listingJobs(other) == 1, "at Spark's default threshold the read lists in a job")
+    GraftSession.configure(other)
+    assert(listingJobs(other) == 0, "a configured session")
+    assert(other.read.schema(schema).parquet(root).count() == 40)
+  }
 }
 
 object GraftSessionSpec {

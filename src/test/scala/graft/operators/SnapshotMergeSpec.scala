@@ -253,6 +253,47 @@ class SnapshotMergeSpec extends SparkSpec {
     assert(got.count() == 101 && got.filter(col("name") === "u3").count() == 1)
   }
 
+  test("a sharded write runs one task per shard it writes, with a one-task write's files per shard") {
+    def writeStages[T](body: => T): (T, Seq[(Int, Int)]) =
+      org.apache.spark.scheduler.DagProbe.writeStagesDuring(spark.sparkContext)(body)
+    val dir = tmp()
+    def perShard(): Seq[(Long, Long, Long)] =
+      SnapshotMerge.describeSharded(spark, dir).select("shard", "path", "files")
+        .as[(Long, String, Long)].collect().toSeq.sortBy(_._1)
+        .map { case (k, p, files) => (k, spark.read.parquet(p).count(), files) }
+    // a one-task write splits each shard's rows into ceil(rows / cap) files
+    def assertFiles(cap: Long, what: String): Unit = perShard().foreach {
+      case (k, rows, files) =>
+        assert(files == (rows + cap - 1) / cap, s"$what: shard $k has $rows rows in $files files")
+    }
+    val rows = spark.range(0, 400).select(col("id"), concat(lit("n"), col("id")).as("name"))
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "15")
+    try {
+      val (_, created) = writeStages(SnapshotMerge.createSharded(rows, Seq("id"), 8, dir))
+      assert(created == Seq((8, 8)), "createSharded")
+      assertFiles(15, "createSharded")
+      // a batch whose keys hash into 3 of the 8 shards
+      val byShard = SnapshotMerge.readSharded(spark, dir)
+        .withColumn("k", regexp_extract(input_file_name(), "__shard=(\\d+)", 1).cast("long"))
+      val three = byShard.select("k").distinct().as[Long].collect().sorted.take(3).toSet
+      val batch = byShard.filter(col("k").isin(three.toSeq: _*)).drop("k")
+        .withColumn("name", lit("upd"))
+      val (_, upserted) = writeStages(SnapshotMerge.upsertSharded(batch, Seq("id"), dir))
+      assert(upserted == Seq((3, 3)), s"upsertSharded touching shards $three")
+      assertFiles(15, "upsertSharded")
+      assert(SnapshotMerge.readSharded(spark, dir).filter(col("name") === "upd").count() ==
+        batch.count())
+      val (n, compacted) = writeStages(SnapshotMerge.compactSharded(spark, dir))
+      assert(n == 8 && compacted == Seq((8, 8)), s"compactSharded of $n shards")
+      assertFiles(15, "compactSharded")
+    } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    // uncapped, compaction leaves one file per shard
+    val (n, compacted) = writeStages(SnapshotMerge.compactSharded(spark, dir))
+    assert(n == 8 && compacted == Seq((8, 8)), s"compactSharded of $n shards")
+    assert(perShard().forall(_._3 == 1), perShard().mkString(", "))
+    assert(SnapshotMerge.readSharded(spark, dir).count() == 400)
+  }
+
   test("a reader on the old manifest survives a concurrent upsert (deferred retire)") {
     val dir = tmp()
     val big = spark.range(0, 400)
@@ -1087,8 +1128,8 @@ class SnapshotMergeSpec extends SparkSpec {
     }
     val lines = good.split("\n").toSeq
     val meta = lines.head.split("\t").toSeq
-    assert(meta.length == 7 && meta(3) == "h1" && meta(4).nonEmpty &&
-      meta(5) == "id" && meta(6) == "t1",
+    assert(meta.length == 8 && meta(3) == "h1" && meta(4).nonEmpty &&
+      meta(5) == "id" && meta(6) == "-" && meta(7) == "t1",
       s"fixture expects the one header format: ${lines.head}")
     assert(lines.last == s"end\t${lines.length - 2}")
     def withHeader(fields: Seq[String]) =
@@ -1100,7 +1141,9 @@ class SnapshotMergeSpec extends SparkSpec {
       "foreign hash version" -> withHeader(meta.updated(3, "h0")),
       "no key names field" -> withHeader(meta.patch(5, Nil, 1)),
       "empty key list" -> withHeader(meta.updated(5, "")),
-      "no t1 flag" -> withHeader(meta.take(6)),
+      "the seven-field header, no mirrored version" -> withHeader(meta.patch(6, Nil, 1)),
+      "a mirrored version that is not a number" -> withHeader(meta.updated(6, "v3")),
+      "no t1 flag" -> withHeader(meta.take(7)),
       "no trailer" -> lines.init.mkString("\n"))
     forged.foreach { case (what, body) =>
       put(body)

@@ -520,15 +520,15 @@ class StreamingOpsSpec extends SparkSpec {
     assert(replicaState() == full)
 
     // crash-window replay: roll the checkpoint back one version (the
-    // process-ran-checkpoint-didn't crash) — the version-derived commit
-    // tag short-circuits the re-applied span, replica unchanged
+    // process-ran-checkpoint-didn't crash) — the replica's head records
+    // the span's end, which short-circuits it, replica unchanged
     IndexFs.atomicWriteSmallFile(spark, IndexFs.fs(spark, ck),
       new org.apache.hadoop.fs.Path(s"$ck/cdf.version"), "2")
     assert(StreamingOps.replicateSharded(spark, src, rep, Seq("id"), ck,
       nShards = 4) == 3L)
     assert(replicaState() == full)
     assert(SnapshotMerge.shardedVersions(spark, rep).max == 3L,
-      "replayed span must be tag-skipped, not re-committed")
+      "replayed span must be skipped, not re-committed")
 
     // a process failure leaves the checkpoint unmoved → redelivery
     SnapshotMerge.upsertSharded(df((5L, "e", false)).drop("del"),
@@ -597,13 +597,13 @@ class StreamingOpsSpec extends SparkSpec {
     assert(SnapshotMerge.shardedVersions(spark, rep).max == 2L,
       "the coalesced span must commit as one replica version")
     // checkpoint is at the span END; crash-window replay of the same
-    // span is tag-skipped (tag keys on the span end version)
+    // span is skipped (the replica's head records the span end)
     IndexFs.atomicWriteSmallFile(spark, IndexFs.fs(spark, ck),
       new org.apache.hadoop.fs.Path(s"$ck/cdf.version"), "1")
     assert(StreamingOps.replicateSharded(spark, src, rep, Seq("id"), ck,
       nShards = 4, coalesceSpans = true) == 3L)
     assert(SnapshotMerge.shardedVersions(spark, rep).max == 2L,
-      "replayed coalesced span must be tag-skipped")
+      "replayed coalesced span must be skipped")
   }
 
   private def jobsDuring[T](body: => T): (T, Int) =
@@ -619,19 +619,30 @@ class StreamingOpsSpec extends SparkSpec {
     x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty
   }
 
-  /** The live manifest's header fields but the anchor path (nShards,
-    * salt, hash version, key names, trailer flag), and its shard ids. */
-  private def layout(dir: String): (Seq[String], Set[String]) = {
+  /** Version `v`'s manifest lines (the live version's by default). */
+  private def manifestLines(dir: String, v: Option[Long] = None): Seq[String] = {
     import graft.operators.{IndexFs, SnapshotMerge}
-    val v = SnapshotMerge.shardedVersions(spark, dir).max
-    val lines = IndexFs.readSmallFile(IndexFs.fs(spark, dir),
-      new org.apache.hadoop.fs.Path(s"$dir/manifest-v$v")).split("\n").toSeq
-    (lines.head.split("\t", -1).toSeq.patch(4, Nil, 1),
+    val version = v.getOrElse(SnapshotMerge.shardedVersions(spark, dir).max)
+    IndexFs.readSmallFile(IndexFs.fs(spark, dir),
+      new org.apache.hadoop.fs.Path(s"$dir/manifest-v$version")).split("\n").toSeq
+  }
+
+  /** The source version a manifest records as mirrored (`-`: none). */
+  private def recorded(dir: String, v: Option[Long] = None): String =
+    manifestLines(dir, v).head.split("\t", -1)(6)
+
+  /** The live manifest's header fields but the anchor path and the
+    * mirrored version (nShards, salt, hash version, key names, trailer
+    * flag), and its shard ids. */
+  private def layout(dir: String): (Seq[String], Set[String]) = {
+    val lines = manifestLines(dir)
+    (lines.head.split("\t", -1).toSeq.patch(6, Nil, 1).patch(4, Nil, 1),
       lines.tail.init.map(_.split("\t")(0)).toSet)
   }
 
   /** Asserts the replica mirrors source version `v`: its rows and
-    * schema, and its manifest header and shard ids. */
+    * schema, its manifest header and shard ids, and the version its
+    * head records. */
   private def assertMirrors(rep: String, src: String, v: Long, what: String): Unit = {
     import graft.operators.SnapshotMerge
     val (got, want) = (SnapshotMerge.readSharded(spark, rep),
@@ -639,6 +650,7 @@ class StreamingOpsSpec extends SparkSpec {
     assert(got.schema == want.schema, s"$what: ${got.schema} vs ${want.schema}")
     assert(sameRows(got, want), what)
     assert(layout(rep) == layout(src), what)
+    assert(recorded(rep) == v.toString, what)
   }
 
   test("replicateSharded: the mirror equals the source at every span, per version and coalesced") {
@@ -721,6 +733,33 @@ class StreamingOpsSpec extends SparkSpec {
       .collect().sorted.toSeq == Seq(0L, 100L))
   }
 
+  test("replicateSharded: a re-bootstrap to an older source version copies the later spans again, per version and coalesced") {
+    import graft.operators.{IndexFs, SnapshotMerge}
+    def rows(lo: Long, hi: Long, tag: String) = spark.range(lo, hi)
+      .select(col("id"), concat(lit(tag), col("id")).as("name"))
+    for (coalesced <- Seq(false, true)) {
+      val (src, rep, ck) = (tmp("old_src"), tmp("old_rep"), tmp("old_ck"))
+      def replicate(): (Long, Int) = jobsDuring(StreamingOps.replicateSharded(
+        spark, src, rep, Seq("id"), ck, nShards = 4, coalesceSpans = coalesced))
+      SnapshotMerge.createSharded(rows(0, 40, "a"), Seq("id"), 4, src) // v1
+      replicate()
+      SnapshotMerge.upsertSharded(rows(0, 10, "b"), Seq("id"), src) // v2
+      SnapshotMerge.upsertSharded(rows(0, 10, "c"), Seq("id"), src) // v3
+      assert(replicate()._1 == 3L)
+      // the source loses v1 and the checkpoint is cleared: the
+      // re-bootstrap copies v2, older than what the replica holds, and
+      // the span to v3 must be copied again, not skipped
+      IndexFs.fs(spark, src).delete(new org.apache.hadoop.fs.Path(s"$src/manifest-v1"), false)
+      IndexFs.fs(spark, ck).delete(new org.apache.hadoop.fs.Path(s"$ck/cdf.version"), false)
+      val (v, jobs) = replicate()
+      val what = s"coalesced = $coalesced"
+      assert(v == 3L && jobs == 0, s"$what: v$v, $jobs jobs")
+      assertMirrors(rep, src, 3L, what)
+      assert(SnapshotMerge.readSharded(spark, rep).filter(col("name").startsWith("c"))
+        .count() == 10, what)
+    }
+  }
+
   test("replicateSharded: a non-mirror replica, or a bootstrap nShards/keys mismatch, fails loudly and writes nothing; copies outlive a source vacuum; a lost CAS leaves nothing") {
     import spark.implicits._
     import graft.operators.{ConcurrentCommitException, IndexFs, SnapshotMerge}
@@ -785,19 +824,24 @@ class StreamingOpsSpec extends SparkSpec {
     assert(SnapshotMerge.readSharded(spark, rep).as[(Long, String)].collect().toMap ==
       Map(1L -> "a2", 2L -> "b", 4L -> "d"))
 
-    // a lost CAS at the commit seam: the copy is deleted, no tag lands
+    // a lost CAS at the commit seam: the copy is deleted, and no replica
+    // version records the span's end — the head the loser read still
+    // records the old version, and the winner (a restore) records none
     SnapshotMerge.upsertSharded(df((5L, "e")), Seq("id"), src)
     val (from, to) = (SnapshotMerge.shardedVersions(spark, src).init.last,
       SnapshotMerge.shardedVersions(spark, src).last)
     val next = SnapshotMerge.shardedVersions(spark, rep).last + 1
-    val tag = s"cdf_cdf_v$to"
+    assert(recorded(rep) == from.toString)
     val e = intercept[ConcurrentCommitException] {
-      SnapshotMerge.copySpan(spark, src, rep, from, to, tag,
+      SnapshotMerge.copySpan(spark, src, rep, from, to,
         onCommitAttempt = () => SnapshotMerge.restoreSharded(spark, rep, 1L))
     }
     assert(e.getMessage.contains(s"version $next"), e.getMessage)
     assert(!IndexFs.listDirNames(spark, rep).exists(_.startsWith(s"shards-v$next-")),
       IndexFs.listDirNames(spark, rep).mkString(","))
-    assert(!IndexFs.isCommitted(spark, rep, tag))
+    assert(recorded(rep, Some(next - 1)) == from.toString)
+    assert(recorded(rep) == "-")
+    assert(!SnapshotMerge.shardedVersions(spark, rep)
+      .exists(v => recorded(rep, Some(v)) == to.toString))
   }
 }
