@@ -4,27 +4,17 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.SparkSession
 
 /** Filesystem plumbing for persisted-index maintenance, routed through
-  * the Hadoop `FileSystem` API so every operation works on any scheme
-  * Spark itself can write (`file://`, `hdfs://`, `s3a://`, ...). The
-  * r7 version used `java.nio.file`, which silently supported ONLY the
-  * local filesystem while the write half of the very same operators
-  * already went through Hadoop via parquet — on a cluster the index
-  * lives on HDFS/S3 and compaction would throw after writing its tmp
-  * dir.
+  * the Hadoop `FileSystem` API, so the session's Hadoop configuration
+  * (`fs.defaultFS`, scheme bindings) applies to every operation.
   *
-  * Semantics that maintenance protocols lean on: on HDFS-like
-  * filesystems (HDFS, local, ABFS) `rename` of a directory is a single
-  * atomic metadata operation — the commit primitive of both the
-  * relation publish and the staged append. Object stores (S3A) emulate
-  * rename as an O(data) copy-and-delete with NO atomicity; for them
-  * [[publishRelation]] implements the versioned-dir + marker-file
-  * protocol (write `<dir>.v<N>/`, then PUT a tiny `<dir>.current`
-  * pointer naming it — the pointer PUT is the atomic step, and readers
-  * resolve through [[resolveDir]]), selected per deployment by
-  * [[CommitProtocolKey]] or by scheme. The two protocols share one
-  * read path but are NOT interchangeable on the same index: pick one
-  * per deployment (spec-proven equivalent on the same data —
-  * IndexFsSpec / TextDedupSpec protocol twins).
+  * One commit protocol, built on directory rename. A relation publish
+  * writes a tmp sibling and swaps it in with two renames
+  * ([[publishRelation]]); a tagged append stages its batch under
+  * `staged/<tag>/` and lands it with one no-clobber rename to
+  * `commits/<tag>/` ([[stagedAppend]]). A directory rename is one atomic
+  * metadata operation on the local file system and on HDFS, the file
+  * systems this protocol is atomic on; object stores emulate rename as
+  * a non-atomic copy-and-delete and are not supported.
   */
 private[graft] object IndexFs {
 
@@ -135,7 +125,7 @@ private[graft] object IndexFs {
     * re-appended its rows (duplicates) and, load-side, could no longer
     * exclude its own folded-in data. */
   def isCommitted(spark: SparkSession, path: String, tag: String): Boolean =
-    commitLanded(spark, path, tag) ||
+    exists(spark, s"$path/commits/$tag") ||
       exists(spark, s"$path/committed/$tag") ||
       foldedTags(spark, path).contains(tag)
 
@@ -246,175 +236,53 @@ private[graft] object IndexFs {
     * namespace) but NOT a valid fold-file name, so readers ignore it. */
   private val FoldTmpName = "_folding-tmp"
 
-  /** Conf key selecting the relation-publish protocol:
-    *  - `rename` — write a tmp sibling, swap it in with directory
-    *    renames (atomic on HDFS-like filesystems; the default there).
-    *  - `marker` — write a fresh VERSIONED dir (`<dir>.v<N>`), then
-    *    atomically overwrite a tiny `<dir>.current` pointer file naming
-    *    it; the pointer PUT is the commit step. The right protocol for
-    *    object stores, where rename is a non-atomic O(data)
-    *    copy-and-delete: data dirs are never mutated in place, only
-    *    superseded, and a reader resolves through the pointer.
-    * Unset, the protocol is chosen by scheme: marker for known
-    * object-store schemes, rename otherwise. The setting is
-    * per-deployment — an index written under one protocol must be read
-    * under the same one. */
-  val CommitProtocolKey = "spark.graft.commitProtocol"
-
-  /** Schemes whose `rename` is an emulated copy (no atomicity, O(data))
-    * — these default to the marker protocol. ABFS/HDFS-like stores keep
-    * real renames. */
-  private val objectStoreSchemes = Set("s3", "s3a", "s3n", "gs", "oss", "cos")
-
-  private def useMarker(spark: SparkSession, path: String): Boolean =
-    spark.conf.getOption(CommitProtocolKey) match {
-      case Some("marker") => true
-      case Some("rename") => false
-      case Some(other) => throw new IllegalArgumentException(
-        s"$CommitProtocolKey must be 'rename' or 'marker', got '$other'")
-      case None =>
-        val scheme = new HPath(path).toUri.getScheme
-        scheme != null && objectStoreSchemes.contains(scheme.toLowerCase)
-    }
-
   private[graft] def readSmallFile(f: FileSystem, p: HPath): String = {
     val in = f.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
     finally in.close()
   }
 
-  /** The CURRENT physical dir of a published relation: the versioned
-    * dir the `<dir>.current` pointer names when one exists (marker
-    * protocol), else `dir` itself — every relation read goes through
-    * this, so the two protocols share one read path. */
-  def resolveDir(spark: SparkSession, dir: String): String = {
-    val ptr = new HPath(dir + ".current")
-    val f = fs(spark, dir)
-    if (!f.exists(ptr)) dir else dir + "." + readSmallFile(f, ptr)
-  }
-
-  /** When set (milliseconds), marker-protocol [[publishRelation]] does
-    * NOT retire the superseded version dir inline: it stays on disk and
-    * [[vacuumPublished]] reaps versions older than the window — so a
-    * long-running reader that resolved the OLD pointer keeps a
-    * complete, scannable old version for at least this long after the
-    * publish that superseded it (the same commit-vs-retire split
-    * [[graft.operators.SnapshotMerge.vacuumSharded]] gives the sharded
-    * snapshot). Unset (the default): retire stays inline — single-
-    * reader/short-query deployments keep today's storage footprint. */
-  val PublishRetentionKey = "spark.graft.publishRetention.ms"
-
-  private def publishRetention(spark: SparkSession): Option[Long] =
-    spark.conf.getOption(PublishRetentionKey).map(_.toLong)
-
-  /** Publish `df` as the new content of relation `dir` under the
-    * selected protocol ([[CommitProtocolKey]]). Rename protocol: durable
-    * write-then-swap (tmp sibling, two renames — a crash leaves old or
-    * new data intact, never neither; the two final renames are not one
-    * atomic step, so a concurrent reader can see a missing dir — an
-    * error, never partial data). Marker protocol: write `<dir>.v<N+1>`,
-    * atomically overwrite the `<dir>.current` pointer, THEN retire the
-    * superseded version — a reader that resolved before the PUT keeps
-    * reading a complete old version; one that resolves after sees the
-    * complete new one; there is no missing-dir window at all (the
-    * marker protocol is strictly stronger — it is the default only on
-    * object stores because it leaves pointer files and doubles
-    * transient storage). With [[PublishRetentionKey]] set the retire is
-    * DEFERRED to [[vacuumPublished]] behind that window, protecting
-    * long-running readers of the old version too. */
+  /** Publish `df` as the new content of relation `dir`: write a tmp
+    * sibling, then swap it in with two renames (`dir` to `.old-publish`,
+    * the tmp sibling to `dir`). A crash leaves the old or the new data
+    * complete, never neither; one that stops between the two renames
+    * leaves no `dir`, which [[rollForwardPublish]] mends before the next
+    * write. The two renames are not one atomic step, so a concurrent
+    * reader can see a missing dir: an error, never partial data. */
   def publishRelation(df: org.apache.spark.sql.DataFrame, dir: String): Unit = {
     val spark = df.sparkSession
-    if (!useMarker(spark, dir)) {
-      if (!exists(spark, dir)) { df.write.mode("overwrite").parquet(dir); return }
-      val tmp = dir + ".tmp-publish"
-      val old = dir + ".old-publish"
-      df.write.mode("overwrite").parquet(tmp)
-      deleteRecursively(spark, old)
-      rename(spark, dir, old)
+    rollForwardPublish(spark, dir)
+    if (!exists(spark, dir)) { df.write.mode("overwrite").parquet(dir); return }
+    val tmp = dir + ".tmp-publish"
+    val old = dir + ".old-publish"
+    df.write.mode("overwrite").parquet(tmp)
+    deleteRecursively(spark, old)
+    rename(spark, dir, old)
+    rename(spark, tmp, dir)
+    deleteRecursively(spark, old)
+  }
+
+  /** Finish a [[publishRelation]] that stopped between its two renames:
+    * `dir` is absent and its replacement lies complete (`_SUCCESS`
+    * written) in the tmp sibling, so rename it in and drop the old copy.
+    * Every writer that reads or appends to a relation calls this first;
+    * without it an untagged append writes a fresh `dir` holding only its
+    * batch, and the next compaction deletes the base with `.old-publish`.
+    * Readers never call it: a reader racing a live publish would take
+    * the tmp sibling from under the publisher's second rename. */
+  private[operators] def rollForwardPublish(spark: SparkSession, dir: String): Unit = {
+    val tmp = dir + ".tmp-publish"
+    if (!exists(spark, dir) && exists(spark, s"$tmp/_SUCCESS")) {
       rename(spark, tmp, dir)
-      deleteRecursively(spark, old)
-    } else {
-      val f = fs(spark, dir)
-      val ptr = new HPath(dir + ".current")
-      val cur: Option[Long] =
-        if (f.exists(ptr)) Some(readSmallFile(f, ptr).stripPrefix("v").toLong)
-        else None
-      val next = cur.getOrElse(0L) + 1
-      df.write.mode("overwrite").parquet(s"$dir.v$next")
-      atomicWriteSmallFile(spark, f, ptr, s"v$next") // the atomic commit
-      if (publishRetention(spark).isEmpty)
-        cur.foreach(k => deleteRecursively(spark, s"$dir.v$k"))
-      else cur.foreach { k =>
-        // tombstone mtime = the SUPERSESSION instant — what the
-        // retention window must measure from (the version dir's own
-        // mtime is its write time, arbitrarily older than the publish
-        // that superseded it: a version current for a day would be
-        // reapable seconds after supersession)
-        val t = f.create(new HPath(s"$dir.retired-v$k"), true)
-        try t.write(s"v$k".getBytes("UTF-8")) finally t.close()
-      }
-      if (cur.isEmpty) deleteRecursively(spark, dir) // pre-marker plain dir
+      deleteRecursively(spark, dir + ".old-publish")
     }
   }
 
-  /** Reaps superseded marker-protocol versions of relation `dir` older
-    * than `minAgeMs` (defaults to [[PublishRetentionKey]], else 0 =
-    * everything superseded). Age is measured from each version's
-    * `.retired-v<K>` tombstone — written at the SUPERSESSION instant by
-    * [[publishRelation]]'s deferred retire — so the window counts from
-    * when readers could last RESOLVE the version, not from when its
-    * bytes were written (a version current for a day must not become
-    * reapable seconds after supersession). Versions with no tombstone
-    * (crash debris, pre-tombstone leftovers) fall back to their newest
-    * mtime. The CURRENT version is never touched. Returns dirs reaped.
-    * No-op under the rename protocol (no versioned dirs exist). */
-  def vacuumPublished(spark: SparkSession, dir: String,
-      minAgeMs: Option[Long] = None): Int = {
-    val f = fs(spark, dir)
-    val ptr = new HPath(dir + ".current")
-    if (!f.exists(ptr)) return 0
-    val curName = dir + "." + readSmallFile(f, ptr)
-    val p = new HPath(dir)
-    val parent = p.getParent
-    if (parent == null || !f.exists(parent)) return 0
-    val window = minAgeMs.orElse(publishRetention(spark)).getOrElse(0L)
-    val cutoff = System.currentTimeMillis() - window
-    // digits-only suffix: a sibling relation named e.g. `<name>.vectors`
-    // must never match
-    val versioned = java.util.regex.Pattern
-      .compile(java.util.regex.Pattern.quote(p.getName + ".v") + "\\d+")
-    var reaped = 0
-    f.listStatus(parent)
-      .filter(st => st.isDirectory
-        && versioned.matcher(st.getPath.getName).matches()
-        && st.getPath.toString != f.makeQualified(new HPath(curName)).toString)
-      .foreach { st =>
-        val ver = st.getPath.getName.stripPrefix(p.getName + ".v")
-        val tomb = new HPath(parent, s"${p.getName}.retired-v$ver")
-        // one RPC, not exists+getFileStatus: absent tombstone (crash
-        // debris, pre-tombstone leftovers) falls back to write mtime
-        val retiredAt =
-          try f.getFileStatus(tomb).getModificationTime
-          catch { case _: java.io.FileNotFoundException =>
-            newestMtime(spark, st.getPath.toString) }
-        if (retiredAt <= cutoff) {
-          // tombstone FIRST: a crash between the two deletes then
-          // leaves a dir with no tombstone, which the next vacuum
-          // self-heals via the mtime fallback (already past the
-          // window) — dir-first would orphan the tombstone forever
-          f.delete(tomb, false)
-          deleteRecursively(spark, st.getPath.toString)
-          reaped += 1
-        }
-      }
-    reaped
-  }
-
-  /** Replace a tiny control file (the publish pointer) with NO
+  /** Replace a tiny control file (a checkpoint, a stats sidecar) with NO
     * truncation window: write a temp sibling, rename over with
     * `Options.Rename.OVERWRITE` (atomic on any FS with an
     * `AbstractFileSystem` binding — a bare `create(overwrite = true)`
-    * would truncate the LIVE pointer first, so a crash or a concurrent
+    * would truncate the LIVE file first, so a crash or a concurrent
     * read in that window sees an empty file and the whole read path
     * bricks). Schemes without a binding are the true object stores,
     * where the direct overwrite PUT is itself atomic — there the PUT is
@@ -482,28 +350,6 @@ private[graft] object IndexFs {
     }
   }
 
-  /** Remove a relation's marker-protocol state (pointer + every
-    * versioned dir) — part of a `save*Index` full rebuild, which writes
-    * the plain base dir fresh: a stale pointer from a previous
-    * incarnation's compactions must not shadow it. */
-  private[graft] def clearPublished(spark: SparkSession, dir: String): Unit = {
-    val f = fs(spark, dir)
-    val p = new HPath(dir)
-    val parent = p.getParent
-    deleteRecursively(spark, dir + ".current")
-    deleteRecursively(spark, dir + ".current.tmp")
-    if (parent != null && f.exists(parent)) {
-      // digits-anchored, like vacuumPublished: a sibling relation named
-      // `<name>.vectors` (and ITS versions/pointer) must never match a
-      // rebuild of `<name>`
-      val versioned = java.util.regex.Pattern.compile(
-        java.util.regex.Pattern.quote(p.getName) + "\\.(retired-)?v\\d+")
-      f.listStatus(parent)
-        .filter(s => versioned.matcher(s.getPath.getName).matches())
-        .foreach(s => f.delete(s.getPath, true))
-    }
-  }
-
   /** Newest modification time (epoch ms) across `path` and its children
     * two levels deep — the recency signal the staged-orphan reaper uses.
     * One level is not enough: a staged dir's relation subdirs are
@@ -549,7 +395,7 @@ private[graft] object IndexFs {
   /** Valid NEW commit tags are single path segments — a `/` or `..`
     * would escape the index's `commits/` namespace — and may not start
     * with `_`, which is reserved for index metadata files (the folded
-    * tombstones under `committed/`, the `_OK` commit marker). Applied
+    * tombstones under `committed/`). Applied
     * at append time; maintenance of already-landed names is more
     * permissive ([[markCommitted]]). */
   def requireValidTag(tag: String): Unit = {
@@ -557,33 +403,6 @@ private[graft] object IndexFs {
     require(!tag.startsWith("_"),
       s"commit tag must not start with '_' (reserved for index metadata), " +
         s"got '$tag'")
-  }
-
-  /** Marker file that makes a commit dir COUNT under the marker
-    * protocol: relations are written directly into `commits/<tag>/`
-    * (invisible to readers, which enumerate landed commits only) and
-    * the exclusive creation of this zero-byte file is the commit step —
-    * atomic where the store supports conditional PUT (S3 conditional
-    * writes; exists-check + create elsewhere, best-effort like the
-    * rename fallback). Reserved name: relations cannot be called this
-    * (`_` prefix, filtered from relation listings by parquet anyway). */
-  private val CommitMarker = "_OK"
-
-  /** Is `commits/<tag>` a LANDED commit? Rename protocol: existence is
-    * landing (the rename was the commit). Marker protocol: only with
-    * its [[CommitMarker]] — a dir without one is an in-flight or
-    * crashed append, invisible to readers and maintenance. */
-  private def commitLanded(spark: SparkSession, path: String, tag: String): Boolean =
-    exists(spark, s"$path/commits/$tag") &&
-      (!useMarker(spark, path) || exists(spark, s"$path/commits/$tag/$CommitMarker"))
-
-  /** Tags of every LANDED commit at `path` — the single enumeration
-    * every reader and maintenance pass uses, so in-flight marker-mode
-    * appends are invisible everywhere at once. */
-  private[graft] def landedCommits(spark: SparkSession, path: String): Seq[String] = {
-    val all = listDirNames(spark, s"$path/commits")
-    if (!useMarker(spark, path)) all
-    else all.filter(t => exists(spark, s"$path/commits/$t/$CommitMarker"))
   }
 
   /** Marker file a refit creates before its first family-changing write
@@ -626,21 +445,17 @@ private[graft] object IndexFs {
         "healthy). Re-run the refit to converge, then retry.")
 
   /** The commit-namespace snapshot every maintenance pass (compaction,
-    * refit) takes FIRST: the landed tags it will fold, plus the
-    * staged/unlanded dirs present at start — the only dirs the orphan
-    * reap may later consider (anything appearing AFTER the snapshot is
-    * a live concurrent append, untouchable). */
+    * refit) takes FIRST: the landed tags it will fold, plus the staged
+    * dirs present at start — the only dirs the orphan reap may later
+    * consider (anything appearing AFTER the snapshot is a live
+    * concurrent append, untouchable). */
   private[graft] final case class MaintenanceSnapshot(
-      landed: Seq[String], stagedAtStart: Seq[String],
-      unlandedAtStart: Seq[String])
+      landed: Seq[String], stagedAtStart: Seq[String])
 
   private[graft] def maintenanceSnapshot(
-      spark: SparkSession, path: String): MaintenanceSnapshot = {
-    val landed = landedCommits(spark, path)
-    MaintenanceSnapshot(landed,
-      listDirNames(spark, s"$path/staged"),
-      listDirNames(spark, s"$path/commits").diff(landed))
-  }
+      spark: SparkSession, path: String): MaintenanceSnapshot =
+    MaintenanceSnapshot(listDirNames(spark, s"$path/commits"),
+      listDirNames(spark, s"$path/staged"))
 
   /** Retire commit tags whose rows a maintenance pass just folded into
     * the rebuilt/compacted base: tombstone BEFORE delete — a replay
@@ -670,10 +485,7 @@ private[graft] object IndexFs {
     * committed (stagedAppend early-returns on those forever — the
     * staged copy can never be consumed), or (b) dirs whose newest
     * mtime, part-files included, is older than the TTL — far longer
-    * than any plausible append. The marker-protocol twin applies the
-    * same discipline to commit dirs that were already unmarked at
-    * snapshot, are STILL unlanded now, and have gone stale (a crashed
-    * marker-mode append — never committed, never retried). */
+    * than any plausible append. */
   private[graft] def reapDeadOrphans(spark: SparkSession, path: String,
       snapshot: MaintenanceSnapshot,
       stagedOrphanTtlMs: Long = DefaultStagedOrphanTtlMs): Unit = {
@@ -682,11 +494,6 @@ private[graft] object IndexFs {
       .filter(t => isCommitted(spark, path, t) ||
         now - newestMtime(spark, s"$path/staged/$t") > stagedOrphanTtlMs)
       .foreach(t => deleteRecursively(spark, s"$path/staged/$t"))
-    snapshot.unlandedAtStart
-      .filterNot(t => isCommitted(spark, path, t))
-      .filter(t =>
-        now - newestMtime(spark, s"$path/commits/$t") > stagedOrphanTtlMs)
-      .foreach(t => deleteRecursively(spark, s"$path/commits/$t"))
     foldTombstones(spark, path)
   }
 
@@ -695,76 +502,53 @@ private[graft] object IndexFs {
     * — reaping is a space reclaim, never a correctness need. */
   private[graft] val DefaultStagedOrphanTtlMs: Long = 24L * 3600 * 1000
 
-  /** The exactly-once half of index appends. Rename protocol (HDFS-like
-    * stores): write every relation of the batch under `staged/<tag>/`,
-    * then commit with ONE no-clobber directory rename to
-    * `commits/<tag>/`. Marker protocol (object stores, where that
-    * rename is a non-atomic O(data) copy): write the relations directly
-    * into `commits/<tag>/` — invisible until landed, because every
-    * reader enumerates [[landedCommits]] — then commit by EXCLUSIVELY
-    * creating the `_OK` marker inside it. Both spellings are idempotent
-    * per tag ACROSS compactions: if the tag [[isCommitted]] — its
-    * commit landed, or only its tombstone survives a fold — the batch
-    * landed in a prior attempt and NOTHING is written (returns false);
-    * a crash before the commit step leaves only an orphan (a `staged/`
-    * dir, or an unmarked commit dir) that the next attempt overwrites
-    * and compaction eventually reaps. There is no half-appended state —
-    * either every relation of the batch is visible or none is.
+  /** The exactly-once half of index appends: write every relation of
+    * the batch under `staged/<tag>/`, then commit with ONE no-clobber
+    * directory rename to `commits/<tag>/`. Idempotent per tag ACROSS
+    * compactions: if the tag [[isCommitted]] — its commit landed, or
+    * only its tombstone survives a fold — the batch landed in a prior
+    * attempt and NOTHING is written (returns false); a crash before the
+    * rename leaves only a `staged/` orphan that the next attempt
+    * overwrites and compaction eventually reaps. There is no
+    * half-appended state — either every relation of the batch is
+    * visible or none is.
     *
     * Concurrency: writers of DISTINCT tags never share a staged or
     * commit dir and may run fully concurrently (spec-proven). Two
     * writers of the SAME tag are formally out of contract (they would
-    * interleave inside one dir); the commit step still resolves the
-    * detectable outcomes — the rename loser gets `false` (never the
-    * nested `commits/<tag>/<tag>` layout — see [[renameNoClobber]]) and
-    * its staged copy is discarded; the marker loser's exclusive create
-    * fails and returns `false` (though under the marker protocol its
-    * interleaved relation writes may have mixed with the winner's —
-    * single-writer-per-tag is a hard requirement there, not just a
-    * formality). */
+    * interleave inside one staged dir); the rename still resolves the
+    * detectable outcome — the loser gets `false` (never the nested
+    * `commits/<tag>/<tag>` layout — see [[renameNoClobber]]), its staged
+    * copy is discarded, and none of its data mixes into the winner's
+    * commit. */
   def stagedAppend(spark: SparkSession, path: String, tag: String,
       relations: Seq[(String, org.apache.spark.sql.DataFrame)],
       /** Test seam: runs after the relation writes, before the commit
-        * step — the window where external disturbance of the written
+        * rename — the window where external disturbance of the written
         * relations must be caught by the post-commit verification. */
       beforeCommitRename: () => Unit = () => ()): Boolean = {
     requireValidTag(tag)
     if (isCommitted(spark, path, tag)) return false
     val commitDir = s"$path/commits/$tag"
+    val stageDir = s"$path/staged/$tag"
+    deleteRecursively(spark, stageDir)
     // the batch's relations are independent projections — overlap their
-    // writes (guide §2.6); nothing is visible until the commit step
+    // writes (guide §2.6); nothing is visible until the commit rename
     // below, so the all-or-nothing contract is untouched
-    def writeRelations(base: String): Unit = relations match {
+    relations match {
       case Seq((n1, d1), (n2, d2)) =>
         graft.GraftSession.concurrently(spark)(
-          d1.write.mode("overwrite").parquet(s"$base/$n1"),
-          d2.write.mode("overwrite").parquet(s"$base/$n2"))
-        ()
+          d1.write.mode("overwrite").parquet(s"$stageDir/$n1"),
+          d2.write.mode("overwrite").parquet(s"$stageDir/$n2"))
       case rs => rs.foreach { case (name, df) =>
-        df.write.mode("overwrite").parquet(s"$base/$name")
+        df.write.mode("overwrite").parquet(s"$stageDir/$name")
       }
     }
-    val landed =
-      if (useMarker(spark, path)) {
-        writeRelations(commitDir)
-        beforeCommitRename()
-        val f = fs(spark, path)
-        try { f.create(new HPath(s"$commitDir/$CommitMarker"), false).close(); true }
-        catch {
-          case e: java.io.IOException => // incl. FileAlreadyExistsException
-            if (exists(spark, s"$commitDir/$CommitMarker")) false // lost the race
-            else throw e
-        }
-      } else {
-        val stageDir = s"$path/staged/$tag"
-        deleteRecursively(spark, stageDir)
-        writeRelations(stageDir)
-        beforeCommitRename()
-        val won = renameNoClobber(spark, stageDir, commitDir)
-        if (!won) deleteRecursively(spark, stageDir)
-        won
-      }
-    if (!landed) return false
+    beforeCommitRename()
+    if (!renameNoClobber(spark, stageDir, commitDir)) {
+      deleteRecursively(spark, stageDir)
+      return false
+    }
     // Post-commit verification that the commit carries EVERY relation of
     // the batch: anything that disturbed the written relations mid-write
     // (an out-of-contract concurrent writer; historically, the orphan
@@ -786,16 +570,13 @@ private[graft] object IndexFs {
   }
 
   /** Parquet dirs holding relation `name` of the index at `path`: the
-    * base dir (resolved through the publish pointer when the marker
-    * protocol owns it) plus every LANDED commit's copy, minus `exclude`
-    * — the read-side contract of the staged-append protocol. Excluding
-    * a tag is what makes a replayed batch deterministic: it reads the
-    * index exactly as its first execution did, blind to its own append.
-    * Commit dirs are never republished in place, so only the base
-    * resolves. */
+    * base dir plus every LANDED commit's copy, minus `exclude` — the
+    * read-side contract of the staged-append protocol. Excluding a tag
+    * is what makes a replayed batch deterministic: it reads the index
+    * exactly as its first execution did, blind to its own append. */
   def relationDirs(spark: SparkSession, path: String, name: String,
       exclude: Set[String]): Seq[String] =
-    resolveDir(spark, s"$path/$name") +: landedCommits(spark, path)
+    s"$path/$name" +: listDirNames(spark, s"$path/commits")
       .filterNot(exclude)
       .map(tag => s"$path/commits/$tag/$name")
 }

@@ -190,23 +190,17 @@ object Layout {
     * window is narrow in every z-dimension — the property
     * [[fileStats]] measures and the spec asserts.
     *
-    * Published via [[IndexFs.publishRelation]] (write-then-swap), for
-    * two reasons at once: a rewrite that crashes mid-write leaves the
-    * PREVIOUS dataset intact and resolvable (never neither — deleting
-    * first would destroy the only complete copy before the new one
-    * exists), and a stale marker-protocol pointer from a previous
-    * [[optimize]] is superseded rather than left shadowing the new
-    * data. Read the result through [[readPruned]] or
-    * [[IndexFs.resolveDir]] on marker-protocol deployments (rename
-    * protocol keeps the plain dir, so a direct read works there). */
+    * Published via [[IndexFs.publishRelation]] (write-then-swap): a
+    * rewrite that crashes mid-write leaves the PREVIOUS dataset intact
+    * at `path` (never neither — deleting first would destroy the only
+    * complete copy before the new one exists). */
   def writeZOrdered(df: DataFrame, cols: Seq[String], path: String,
       numFiles: Int, bits: Int = -1, curve: String = "morton",
       rankMode: String = "equiwidth"): Unit =
     withMicrosTimestamps(df.sparkSession) {
       IndexFs.publishRelation(
         clustered(df, cols, numFiles, bits, curve, rankMode), path)
-      writeStatsSidecar(df.sparkSession,
-        IndexFs.resolveDir(df.sparkSession, path), cols)
+      writeStatsSidecar(df.sparkSession, path, cols)
     }
 
   /** The cheap INGEST path of a clustered dataset: appends `df`'s rows
@@ -218,15 +212,15 @@ object Layout {
     * optimize, like the index plain appends. */
   def appendUnclustered(df: DataFrame, path: String): Unit =
     withMicrosTimestamps(df.sparkSession) {
-      df.write.mode("append")
-        .parquet(IndexFs.resolveDir(df.sparkSession, path))
+      IndexFs.rollForwardPublish(df.sparkSession, path)
+      df.write.mode("append").parquet(path)
     }
 
   /** The maintenance reset — Delta's OPTIMIZE ZORDER shape: reads the
     * CURRENT dataset (accumulated appends included), re-clusters the
-    * whole of it on `cols`, and swaps the result in atomically via
-    * [[IndexFs.publishRelation]] — readers resolve the complete old
-    * layout or the complete new one, never a mix, and a crash
+    * whole of it on `cols`, and swaps the result in via
+    * [[IndexFs.publishRelation]] — readers see the complete old layout
+    * or the complete new one, never a mix, and a crash
     * mid-optimize leaves the old one intact. Content-preserving by
     * construction (hash-gated in q_zorder_optimize); cost is one full
     * read + clustered write — dataset-linear, a deliberate maintenance
@@ -234,11 +228,12 @@ object Layout {
   def optimize(spark: org.apache.spark.sql.SparkSession, path: String,
       cols: Seq[String], numFiles: Int, bits: Int = -1,
       curve: String = "morton", rankMode: String = "equiwidth"): Unit = {
-    val all = spark.read.parquet(IndexFs.resolveDir(spark, path))
+    IndexFs.rollForwardPublish(spark, path)
+    val all = spark.read.parquet(path)
     withMicrosTimestamps(spark) {
       IndexFs.publishRelation(
         clustered(all, cols, numFiles, bits, curve, rankMode), path)
-      writeStatsSidecar(spark, IndexFs.resolveDir(spark, path), cols)
+      writeStatsSidecar(spark, path, cols)
     }
   }
 
@@ -324,7 +319,7 @@ object Layout {
   private[operators] val SidecarName = "_stats.tsv"
 
   /** Persists the (file → per-block per-column min/max) map as ONE
-    * small sidecar file inside `resolvedDir` — written once at
+    * small sidecar file inside `dir` — written once at
     * [[writeZOrdered]]/[[optimize]] time (when the files are fresh and
     * the footers are hot), so [[prunedFiles]] answers from a single
     * small read instead of O(files) serial driver footer GETs: the
@@ -334,11 +329,11 @@ object Layout {
     * have no entry and are footer-read at query time (and never
     * pruned away wrongly) — [[optimize]] rewrites the sidecar fresh. */
   private[operators] def writeStatsSidecar(
-      spark: org.apache.spark.sql.SparkSession, resolvedDir: String,
+      spark: org.apache.spark.sql.SparkSession, dir: String,
       cols: Seq[String]): Unit = {
-    val fs = IndexFs.fs(spark, resolvedDir)
+    val fs = IndexFs.fs(spark, dir)
     val conf = spark.sparkContext.hadoopConfiguration
-    val files = fs.listStatus(new org.apache.hadoop.fs.Path(resolvedDir))
+    val files = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       .map(_.getPath).sortBy(_.getName)
     val kindOf: ColStat => String = {
@@ -366,16 +361,16 @@ object Layout {
         }
       }
     IndexFs.atomicWriteSmallFile(spark, fs,
-      new org.apache.hadoop.fs.Path(s"$resolvedDir/$SidecarName"),
+      new org.apache.hadoop.fs.Path(s"$dir/$SidecarName"),
       lines.mkString("\n"))
   }
 
   /** Parses a sidecar into (covered columns, file name → stats);
     * None when absent or unparseable (→ footer fallback). */
   private def readSidecar(spark: org.apache.spark.sql.SparkSession,
-      resolvedDir: String): Option[(Set[String], Map[String, FileStats])] = {
-    val fs = IndexFs.fs(spark, resolvedDir)
-    val p = new org.apache.hadoop.fs.Path(s"$resolvedDir/$SidecarName")
+      dir: String): Option[(Set[String], Map[String, FileStats])] = {
+    val fs = IndexFs.fs(spark, dir)
+    val p = new org.apache.hadoop.fs.Path(s"$dir/$SidecarName")
     if (!fs.exists(p)) return None
     // ANY parse failure (a torn write on a scheme without an atomic
     // rename binding, external corruption) degrades to None → the
@@ -399,7 +394,7 @@ object Layout {
               })
             }.toMap
           }
-        name -> FileStats(s"$resolvedDir/$name", blocks)
+        name -> FileStats(s"$dir/$name", blocks)
       }
       Some((cols.toSet, stats))
     } catch {
@@ -407,22 +402,22 @@ object Layout {
     }
   }
 
-  /** The files under a single RESOLVED dir whose stats admit every
+  /** The files under a single data dir whose stats admit every
     * band. Answers from the [[writeStatsSidecar]] sidecar when it
     * exists and covers every banded column — one small read, zero
     * footer GETs; files the sidecar doesn't know (later appends) and
     * datasets without a sidecar fall back to per-file footer reads.
     * Returns (selected paths, total file count). */
   private[operators] def prunedFilesInDir(
-      spark: org.apache.spark.sql.SparkSession, resolvedDir: String,
+      spark: org.apache.spark.sql.SparkSession, dir: String,
       bands: Seq[Band]): (Seq[String], Int) = {
     require(bands.nonEmpty, "pruning needs at least one band")
-    val fs = IndexFs.fs(spark, resolvedDir)
+    val fs = IndexFs.fs(spark, dir)
     val conf = spark.sparkContext.hadoopConfiguration
-    val files = fs.listStatus(new org.apache.hadoop.fs.Path(resolvedDir))
+    val files = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       .map(_.getPath).sortBy(_.getName)
-    val sidecar = readSidecar(spark, resolvedDir)
+    val sidecar = readSidecar(spark, dir)
       .filter { case (cols, _) => bands.forall(b => cols.contains(b.column)) }
     val statsFor: org.apache.hadoop.fs.Path => FileStats = p =>
       sidecar.flatMap(_._2.get(p.getName))
@@ -457,7 +452,7 @@ object Layout {
     * Returns (selected, total). */
   def prunedFiles(spark: org.apache.spark.sql.SparkSession, path: String,
       bands: Seq[Band]): (Seq[String], Int) =
-    prunedFilesInDir(spark, IndexFs.resolveDir(spark, path), bands)
+    prunedFilesInDir(spark, path, bands)
 
   /** Single-band [[prunedFiles]]. */
   def prunedFiles(spark: org.apache.spark.sql.SparkSession, path: String,
@@ -471,7 +466,7 @@ object Layout {
       bands: Seq[Band]): DataFrame = {
     val (selected, _) = prunedFiles(spark, path, bands)
     if (selected.isEmpty)
-      spark.read.parquet(IndexFs.resolveDir(spark, path)).limit(0)
+      spark.read.parquet(path).limit(0)
     else spark.read.parquet(selected: _*)
   }
 

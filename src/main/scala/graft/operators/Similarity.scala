@@ -193,7 +193,6 @@ object Similarity {
     IndexFs.deleteRecursively(spark, s"$path/commits")
     IndexFs.deleteRecursively(spark, s"$path/staged")
     IndexFs.deleteRecursively(spark, s"$path/committed")
-    IndexFs.clearPublished(spark, s"$path/cells")
     IndexFs.endRefit(spark, path) // full rebuild supersedes a crashed refit
     saveIndex(
       kmeansCentroids(corpus, corpusVec, nCentroids, seed, maxIter, sampleRows),
@@ -246,10 +245,8 @@ object Similarity {
     commitTag match {
       case Some(tag) => IndexFs.stagedAppend(spark, path, tag, Seq("cells" -> cells))
       case None =>
-        // resolved dir — see appendToMinhashIndex: a plain-dir append is
-        // invisible once the marker protocol owns the base relation
-        cells.write.mode("append")
-          .parquet(IndexFs.resolveDir(spark, s"$path/cells"))
+        IndexFs.rollForwardPublish(spark, s"$path/cells")
+        cells.write.mode("append").parquet(s"$path/cells")
         true
     }
   }
@@ -296,9 +293,10 @@ object Similarity {
     *    tombstoned in the compact ordering (tombstone BEFORE the
     *    commit dir is deleted), so exactly-once replay of an absorbed
     *    append stays an idempotent no-op forever;
-    *  - unlanded/crashed commit dirs are dropped from the rebuild and
-    *    deliberately NOT tombstoned — their tag may legitimately
-    *    re-append later, and will assign under the NEW family;
+    *  - crashed appends (`staged/` orphans) are dropped from the
+    *    rebuild and deliberately NOT tombstoned — their tag may
+    *    legitimately re-append later, and will assign under the NEW
+    *    family;
     *  - replayed UNTAGGED appends collapse via distinct on (id, vec),
     *    exactly like compaction.
     * The vectors are pinned through the scratch seam BEFORE any dir is
@@ -312,12 +310,13 @@ object Similarity {
       seed: Long = 42L, maxIter: Int = 20,
       sampleRows: Int = 100000): Unit = {
     import graft.GraftSession.Pinnable
+    IndexFs.rollForwardPublish(spark, s"$path/cells")
     val snapshot = IndexFs.maintenanceSnapshot(spark, path)
     val useCentroids =
       if (nCentroids != -1) nCentroids
       else loadIndex(spark, s"$path/centroids").count().toInt
     val vectors = spark.read.parquet(
-        IndexFs.resolveDir(spark, s"$path/cells") +:
+        s"$path/cells" +:
           snapshot.landed.map(t => s"$path/commits/$t/cells"): _*)
       .select(col("id"), col("vec")).distinct()
       .pinScratch()

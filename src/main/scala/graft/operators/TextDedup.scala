@@ -254,10 +254,6 @@ object TextDedup {
     IndexFs.deleteRecursively(spark, s"$path/commits")
     IndexFs.deleteRecursively(spark, s"$path/staged")
     IndexFs.deleteRecursively(spark, s"$path/committed")
-    // the rebuild writes plain base dirs: a stale publish pointer from a
-    // previous incarnation's compactions must not shadow them
-    IndexFs.clearPublished(spark, s"$path/bands")
-    IndexFs.clearPublished(spark, s"$path/shingles")
     val idx = buildMinhashIndex(docs, idCol, textCol, n, k, bands)
     idx.bands.write.mode("overwrite").parquet(s"$path/bands")
     idx.shingles.write.mode("overwrite").parquet(s"$path/shingles")
@@ -265,19 +261,6 @@ object TextDedup {
       .select(lit(n).as("n"), lit(k).as("k"), lit(bands).as("bands"))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
-
-  /** Staged exactly-once append and commit-aware relation reads live in
-    * [[IndexFs]] (shared with the IVF index); aliased here so the
-    * surrounding maintenance code reads naturally. The minhash-specific
-    * semantics (which relations, what a half-append would have lost)
-    * are documented on [[appendToMinhashIndex]]. */
-  private def stagedAppend(spark: SparkSession, path: String, tag: String,
-      relations: Seq[(String, DataFrame)]): Boolean =
-    IndexFs.stagedAppend(spark, path, tag, relations)
-
-  private def relationDirs(spark: SparkSession, path: String, name: String,
-      exclude: Set[String]): Seq[String] =
-    IndexFs.relationDirs(spark, path, name, exclude)
 
   /** Fold an ACCEPTED batch into a persisted index: sign the batch with
     * the index's own persisted parameters (meta row — the caller cannot
@@ -297,7 +280,8 @@ object TextDedup {
     * end-to-end by q_minhash_index_append.
     *
     * Two append regimes, chosen by `commitTag`:
-    *  - `Some(tag)` — EXACTLY-ONCE per tag via [[stagedAppend]]: the
+    *  - `Some(tag)` — EXACTLY-ONCE per tag via
+    *    [[graft.operators.IndexFs.stagedAppend]]: the
     *    batch's relations stage under `staged/<tag>/` and land with one
     *    atomic directory rename to `commits/<tag>/`; a replay of an
     *    already-landed tag writes nothing and returns false — INCLUDING
@@ -336,17 +320,13 @@ object TextDedup {
       m.getAs[Int]("n"), m.getAs[Int]("k"), m.getAs[Int]("bands"))
     commitTag match {
       case Some(tag) =>
-        stagedAppend(spark, path, tag,
+        IndexFs.stagedAppend(spark, path, tag,
           Seq("bands" -> idx.bands, "shingles" -> idx.shingles))
       case None =>
-        // append into the RESOLVED dirs: under the marker protocol the
-        // plain base dir is retired after the first compaction, and an
-        // append into it would be invisible to every pointer-following
-        // reader — silent data loss, not duplicates
-        idx.shingles.write.mode("append")
-          .parquet(IndexFs.resolveDir(spark, s"$path/shingles"))
-        idx.bands.write.mode("append")
-          .parquet(IndexFs.resolveDir(spark, s"$path/bands"))
+        Seq("shingles", "bands").foreach(r =>
+          IndexFs.rollForwardPublish(spark, s"$path/$r"))
+        idx.shingles.write.mode("append").parquet(s"$path/shingles")
+        idx.bands.write.mode("append").parquet(s"$path/bands")
         true
     }
   }
@@ -377,9 +357,8 @@ object TextDedup {
     * TextDedupSpec "a tagged append landing mid-compact survives").
     * UNTAGGED (direct) appends are NOT safe against a concurrent
     * compact: their rows land in the very base dirs the swap replaces.
-    * Crash-safe via [[graft.operators.IndexFs.publishRelation]] (r10:
-    * write-then-swap on HDFS-like filesystems, versioned-dir + marker
-    * pointer on object stores): a crash mid-compact leaves every row
+    * Crash-safe via [[graft.operators.IndexFs.publishRelation]]
+    * (write-then-swap): a crash mid-compact leaves every row
     * reachable (at worst both in the new base and in a not-yet-deleted
     * commit dir — duplicates, collapsed by the next compact). */
   def compactMinhashIndex(spark: SparkSession, path: String): Unit =
@@ -409,21 +388,19 @@ object TextDedup {
       relations: Seq[String], widths: Long => Seq[Int],
       afterSnapshot: () => Unit = () => (),
       beforeCommitDelete: String => Unit = _ => (),
-      stagedOrphanTtlMs: Long = DefaultStagedOrphanTtlMs): Unit = {
+      stagedOrphanTtlMs: Long = IndexFs.DefaultStagedOrphanTtlMs): Unit = {
     // a crashed refit leaves family metadata and bucket/cell rows that
     // may disagree — folding commits into that base would entrench the
     // mixed-family state; converge with a refit re-run first
     IndexFs.requireNoCrashedRefit(spark, path)
-    // LANDED commits only: under the marker protocol an in-flight
-    // append's commit dir exists before its _OK marker does — folding
-    // it would commit a half-written batch. The snapshot / fold /
-    // orphan-reap machinery is shared with the index refits
-    // (IndexFs.maintenanceSnapshot / retireFoldedCommits /
-    // reapDeadOrphans — one spec-proven copy of the ordering).
+    relations.foreach(r => IndexFs.rollForwardPublish(spark, s"$path/$r"))
+    // the snapshot / fold / orphan-reap machinery is shared with the
+    // index refits (IndexFs.maintenanceSnapshot / retireFoldedCommits /
+    // reapDeadOrphans — one spec-proven copy of the ordering)
     val snapshot = IndexFs.maintenanceSnapshot(spark, path)
     afterSnapshot()
     def read(name: String): DataFrame = spark.read.parquet(
-      (IndexFs.resolveDir(spark, s"$path/$name") +:
+      (s"$path/$name" +:
         snapshot.landed.map(t => s"$path/commits/$t/$name")): _*)
     val ws = widths(read(relations.head).count())
     relations.zip(ws).foreach { case (name, w) =>
@@ -432,11 +409,6 @@ object TextDedup {
     IndexFs.retireFoldedCommits(spark, path, snapshot.landed, beforeCommitDelete)
     IndexFs.reapDeadOrphans(spark, path, snapshot, stagedOrphanTtlMs)
   }
-
-  /** Alias of [[IndexFs.DefaultStagedOrphanTtlMs]] (the historical
-    * public spelling). */
-  private[graft] val DefaultStagedOrphanTtlMs: Long =
-    IndexFs.DefaultStagedOrphanTtlMs
 
   /** Reload a [[saveMinhashIndex]]-written index (base relations plus
     * every landed commit); parameters come from the persisted meta row,
@@ -459,8 +431,8 @@ object TextDedup {
       excludeCommits: Set[String] = Set.empty): MinhashIndex = {
     val m = spark.read.parquet(s"$path/meta").head()
     MinhashIndex(
-      spark.read.parquet(relationDirs(spark, path, "bands", excludeCommits): _*),
-      spark.read.parquet(relationDirs(spark, path, "shingles", excludeCommits): _*),
+      spark.read.parquet(IndexFs.relationDirs(spark, path, "bands", excludeCommits): _*),
+      spark.read.parquet(IndexFs.relationDirs(spark, path, "shingles", excludeCommits): _*),
       m.getAs[Int]("n"), m.getAs[Int]("k"), m.getAs[Int]("bands"))
   }
 
@@ -1163,8 +1135,6 @@ object TextDedup {
     IndexFs.deleteRecursively(vecs.sparkSession, s"$path/commits")
     IndexFs.deleteRecursively(vecs.sparkSession, s"$path/staged")
     IndexFs.deleteRecursively(vecs.sparkSession, s"$path/committed")
-    IndexFs.clearPublished(vecs.sparkSession, s"$path/buckets")
-    IndexFs.clearPublished(vecs.sparkSession, s"$path/vectors")
     IndexFs.endRefit(vecs.sparkSession, path) // full rebuild supersedes a crashed refit
     val idx = buildEmbeddingIndex(vecs, idCol, vecCol, threshold, bits, tables,
       seed, dim, requireRecallTarget)
@@ -1213,6 +1183,9 @@ object TextDedup {
     if (commitTag.exists(t => IndexFs.isCommitted(spark, path, t)))
       return false // already landed (live commit OR folded tombstone) —
                    // skip even the batch bucketing
+    if (commitTag.isEmpty) // the load below reads the base this append writes
+      Seq("vectors", "buckets").foreach(r =>
+        IndexFs.rollForwardPublish(spark, s"$path/$r"))
     val idx = loadEmbeddingIndex(spark, path)
     // spread-small seam (guide §2.5): a sub-split-size batch pays the
     // tables×bits×dim SRP fold on one task otherwise; no-op at scale
@@ -1223,15 +1196,11 @@ object TextDedup {
     val vectors = newVecs.select(col(idCol).as("id"), col(vecCol).as("vec"))
     commitTag match {
       case Some(tag) =>
-        stagedAppend(spark, path, tag,
+        IndexFs.stagedAppend(spark, path, tag,
           Seq("buckets" -> buckets, "vectors" -> vectors))
       case None =>
-        // resolved dirs — see the minhash twin: a plain-dir append is
-        // invisible once the marker protocol owns the base relation
-        vectors.write.mode("append")
-          .parquet(IndexFs.resolveDir(spark, s"$path/vectors"))
-        buckets.write.mode("append")
-          .parquet(IndexFs.resolveDir(spark, s"$path/buckets"))
+        vectors.write.mode("append").parquet(s"$path/vectors")
+        buckets.write.mode("append").parquet(s"$path/buckets")
         true
     }
   }
@@ -1268,9 +1237,9 @@ object TextDedup {
     * the old family and landing mid-refit would insert
     * foreign-family bucket rows. Landed commit tags fold into the
     * rebuilt base and are tombstoned BEFORE their commit dirs are
-    * deleted (exactly-once replay survives, forever); unlanded crashed
-    * commit dirs are dropped and deliberately NOT tombstoned — their
-    * tag may re-append later under the new family. Replayed untagged
+    * deleted (exactly-once replay survives, forever); crashed appends
+    * (`staged/` orphans) are dropped and deliberately NOT tombstoned —
+    * their tag may re-append later under the new family. Replayed untagged
     * appends collapse via distinct, like compaction. Vectors are
     * pinned through the scratch seam before any dir is rewritten. */
   def refitEmbeddingIndex(spark: SparkSession, path: String,
@@ -1290,6 +1259,8 @@ object TextDedup {
       seedOverride: Long = -1L,
       requireRecallTarget: Boolean = false): Unit = {
     import graft.GraftSession.Pinnable
+    Seq("buckets", "vectors").foreach(r =>
+      IndexFs.rollForwardPublish(spark, s"$path/$r"))
     val snapshot = IndexFs.maintenanceSnapshot(spark, path)
     val meta = spark.read.parquet(s"$path/meta").head()
     val dim = meta.getAs[Int]("dim")
@@ -1305,7 +1276,7 @@ object TextDedup {
       }
     val crashed = IndexFs.refitCrashed(spark, path)
     val vectors = spark.read.parquet(
-        IndexFs.resolveDir(spark, s"$path/vectors") +:
+        s"$path/vectors" +:
           snapshot.landed.map(t => s"$path/commits/$t/vectors"): _*)
       .distinct()
       .pinScratch()
@@ -1367,8 +1338,8 @@ object TextDedup {
     IndexFs.requireNoCrashedRefit(spark, path)
     val m = spark.read.parquet(s"$path/meta").head()
     EmbeddingIndex(
-      spark.read.parquet(relationDirs(spark, path, "buckets", excludeCommits): _*),
-      spark.read.parquet(relationDirs(spark, path, "vectors", excludeCommits): _*),
+      spark.read.parquet(IndexFs.relationDirs(spark, path, "buckets", excludeCommits): _*),
+      spark.read.parquet(IndexFs.relationDirs(spark, path, "vectors", excludeCommits): _*),
       m.getAs[Int]("bits"), m.getAs[Int]("tables"),
       m.getAs[Long]("seed"), m.getAs[Int]("dim"))
   }

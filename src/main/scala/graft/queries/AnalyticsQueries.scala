@@ -132,9 +132,7 @@ object AnalyticsQueries {
     val path = SnapshotPaths.dirFor("zorder_layout", dir, s)
     graft.operators.Layout.writeZOrdered(
       events, Seq("user_id", "ts"), path, numFiles = 8)
-    // read through the publish pointer: on marker-protocol deployments
-    // the data lives at path.vN and the plain dir does not exist
-    s.read.parquet(graft.operators.IndexFs.resolveDir(s, path))
+    s.read.parquet(path)
       .select(col("event_id"), col("user_id"), col("ts"),
         col("event_type"), col("value"), col("props"))
       .orderBy(col("event_id"))
@@ -229,7 +227,7 @@ object AnalyticsQueries {
     val path = SnapshotPaths.dirFor("hilbert_layout", dir, s)
     graft.operators.Layout.writeZOrdered(
       events, Seq("user_id", "ts"), path, numFiles = 8, curve = "hilbert")
-    s.read.parquet(graft.operators.IndexFs.resolveDir(s, path))
+    s.read.parquet(path)
       .select(col("event_id"), col("user_id"), col("ts"),
         col("event_type"), col("value"), col("props"))
       .orderBy(col("event_id"))

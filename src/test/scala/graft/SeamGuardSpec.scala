@@ -15,7 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `copyDelta` / `commit`), and the keyed
   * snapshot has that one format — `SnapshotMerge.scala` and
   * `Revisit.scala` never publish or resolve a flat relation; parquet
-  * footers are read only by `Footers.footer`'s tail read. */
+  * footers are read only by `Footers.footer`'s tail read; and no
+  * `spark.graft.*` conf key but the scratch dir exists. */
 class SeamGuardSpec extends AnyFunSuite {
 
   private val banned =
@@ -104,6 +105,24 @@ class SeamGuardSpec extends AnyFunSuite {
       (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
       token <- footerTokens if line.contains(token)
     } yield s"$f:${n + 1}: $token"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  /** Engine behaviour is chosen by code, not by `spark.graft.*` conf
+    * knobs; the one key allowed names a deployment path. */
+  private val allowedGraftKeys = Set("\"spark.graft.scratchDir\"")
+
+  test("no spark.graft conf key in src/main but the scratch dir") {
+    val literal = "\"spark\\.graft\\.[^\"]*\"?".r
+    val found = for {
+      f <- sources()
+      (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
+      key <- literal.findAllIn(line)
+    } yield (s"$f:${n + 1}", key)
+    assert(found.exists(x => allowedGraftKeys(x._2)),
+      "the scan must see the scratch dir key")
+    val offenders = found.filterNot(x => allowedGraftKeys(x._2))
+      .map { case (at, key) => s"$at: $key" }
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
 }

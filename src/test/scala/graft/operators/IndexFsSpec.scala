@@ -171,134 +171,6 @@ class IndexFsSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/commits/t1/r").count() == 1)
   }
 
-  private def withMarkerProtocol[T](body: => T): T = {
-    spark.conf.set(IndexFs.CommitProtocolKey, "marker")
-    try body finally spark.conf.unset(IndexFs.CommitProtocolKey)
-  }
-
-  test("publishRelation marker protocol: versioned dirs, pointer commit, superseded version retired") {
-    import spark.implicits._
-    withMarkerProtocol {
-      val dir = tmp("idxfs_marker") + "/rel"
-      IndexFs.publishRelation(Seq((1L, "a")).toDF("id", "v"), dir)
-      assert(IndexFs.resolveDir(spark, dir) == s"$dir.v1")
-      assert(spark.read.parquet(IndexFs.resolveDir(spark, dir))
-        .collect().map(_.getLong(0)).toSeq == Seq(1L))
-      // a republish bumps the version, moves the pointer, retires v1 —
-      // and at NO point does a resolved dir go missing (the window the
-      // rename swap has; the marker protocol's reason to exist)
-      IndexFs.publishRelation(Seq((2L, "b")).toDF("id", "v"), dir)
-      assert(IndexFs.resolveDir(spark, dir) == s"$dir.v2")
-      assert(spark.read.parquet(IndexFs.resolveDir(spark, dir))
-        .collect().map(_.getLong(0)).toSeq == Seq(2L))
-      assert(!IndexFs.exists(spark, s"$dir.v1"))
-      assert(!IndexFs.exists(spark, dir)) // no stale plain dir either
-    }
-  }
-
-  test("publish retention: deferred retire keeps old versions for readers; vacuumPublished reaps behind the window") {
-    import spark.implicits._
-    withMarkerProtocol {
-      val root = tmp("idxfs_retention")
-      val dir = s"$root/rel"
-      spark.conf.set(IndexFs.PublishRetentionKey, "3600000")
-      try {
-        IndexFs.publishRelation(Seq((1L, "a")).toDF("id", "v"), dir)
-        // the long-running reader resolves v1…
-        val oldResolved = IndexFs.resolveDir(spark, dir)
-        val oldReader = spark.read.parquet(oldResolved)
-        // …then a republish supersedes it WITHOUT deleting it
-        IndexFs.publishRelation(Seq((2L, "b")).toDF("id", "v"), dir)
-        assert(IndexFs.resolveDir(spark, dir) == s"$dir.v2")
-        assert(IndexFs.exists(spark, s"$dir.v1"),
-          "retention must defer the retire")
-        assert(oldReader.collect().map(_.getLong(0)).toSeq == Seq(1L))
-        // a sibling relation whose name shares the `<name>.v` prefix is
-        // never a vacuum candidate
-        IndexFs.publishRelation(Seq((9L, "z")).toDF("id", "v"), s"$dir.vectors")
-        // the supersession tombstone exists, and the window measures
-        // from ITS mtime, not the version dir's write time: age the
-        // DIR far past the window — a version that was current for
-        // days must not become reapable seconds after supersession
-        assert(IndexFs.exists(spark, s"$dir.retired-v1"))
-        val old = java.nio.file.attribute.FileTime.fromMillis(
-          System.currentTimeMillis() - 100L * 3600 * 1000)
-        java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir.v1"))
-          .forEach(p => java.nio.file.Files.setLastModifiedTime(p, old))
-        assert(IndexFs.vacuumPublished(spark, dir) == 0,
-          "window must count from supersession (tombstone), not write mtime")
-        assert(IndexFs.exists(spark, s"$dir.v1"))
-        // expired window: v1 + its tombstone reaped, current + sibling
-        // untouched
-        assert(IndexFs.vacuumPublished(spark, dir, Some(0L)) == 1)
-        assert(!IndexFs.exists(spark, s"$dir.v1"))
-        assert(!IndexFs.exists(spark, s"$dir.retired-v1"))
-        assert(spark.read.parquet(IndexFs.resolveDir(spark, dir))
-          .collect().map(_.getLong(0)).toSeq == Seq(2L))
-        assert(IndexFs.exists(spark, IndexFs.resolveDir(spark, s"$dir.vectors")))
-      } finally spark.conf.unset(IndexFs.PublishRetentionKey)
-      // with the conf unset the inline retire is back (the default)
-      IndexFs.publishRelation(Seq((3L, "c")).toDF("id", "v"), dir)
-      assert(!IndexFs.exists(spark, s"$dir.v2"))
-    }
-  }
-
-  test("stagedAppend marker protocol: the _OK marker IS the commit; crashed appends stay invisible and retry cleanly") {
-    import spark.implicits._
-    withMarkerProtocol {
-      val dir = tmp("idxfs_mkcommit")
-      val rel = Seq((1L, "a")).toDF("id", "v")
-      // a crash after the relation writes but before the marker:
-      // the commit dir exists, but no reader or maintenance pass
-      // counts it (the marker-protocol analog of a staged/ orphan)
-      rel.write.mode("overwrite").parquet(s"$dir/commits/t1/r")
-      assert(IndexFs.landedCommits(spark, dir).isEmpty)
-      assert(!IndexFs.isCommitted(spark, dir, "t1"))
-      assert(IndexFs.relationDirs(spark, dir, "r", Set.empty).size == 1) // base only
-      // the retry overwrites the orphan and lands with the marker
-      assert(IndexFs.stagedAppend(spark, dir, "t1", Seq("r" -> rel)))
-      assert(IndexFs.exists(spark, s"$dir/commits/t1/_OK"))
-      assert(IndexFs.landedCommits(spark, dir) == Seq("t1"))
-      assert(IndexFs.isCommitted(spark, dir, "t1"))
-      assert(IndexFs.relationDirs(spark, dir, "r", Set.empty).size == 2)
-      // replay is a no-op; no staged/ dir ever exists in marker mode
-      assert(!IndexFs.stagedAppend(spark, dir, "t1", Seq("r" -> rel)))
-      assert(!IndexFs.exists(spark, s"$dir/staged"))
-      // same-tag loser: a marker that appears inside the commit window
-      // makes the exclusive create fail → false, winner's marker stands
-      assert(!IndexFs.stagedAppend(spark, dir + "2", "t1", Seq("r" -> rel),
-        beforeCommitRename = () =>
-          touch(s"${dir}2/commits/t1/_OK")))
-    }
-  }
-
-  test("publishRelation adopts a plain pre-marker dir; clearPublished resets for a rebuild") {
-    import spark.implicits._
-    val dir = tmp("idxfs_adopt") + "/rel"
-    // rename protocol first (the default on file://): plain dir
-    IndexFs.publishRelation(Seq((1L, "a")).toDF("id", "v"), dir)
-    assert(IndexFs.resolveDir(spark, dir) == dir)
-    withMarkerProtocol {
-      // marker publish over a plain dir: v1 + pointer, plain retired
-      IndexFs.publishRelation(Seq((2L, "b")).toDF("id", "v"), dir)
-      assert(IndexFs.resolveDir(spark, dir) == s"$dir.v1")
-      assert(!IndexFs.exists(spark, dir))
-    }
-    // a save*-style rebuild clears pointer + versions so its fresh plain
-    // dir cannot be shadowed by the stale pointer — and ONLY this
-    // relation's: a sibling sharing the name prefix must survive
-    withMarkerProtocol {
-      IndexFs.publishRelation(Seq((9L, "z")).toDF("id", "v"), s"$dir.vectors")
-    }
-    IndexFs.clearPublished(spark, dir)
-    assert(IndexFs.resolveDir(spark, dir) == dir)
-    assert(!IndexFs.exists(spark, s"$dir.v1") &&
-      !IndexFs.exists(spark, s"$dir.current"))
-    assert(IndexFs.exists(spark,
-      IndexFs.resolveDir(spark, s"$dir.vectors")),
-      "clearPublished must never touch a sibling relation")
-  }
-
   test("writeSmallFileNoClobber: exactly one writer per target wins; body is complete") {
     val dir = tmp("idxfs_cas")
     val f = IndexFs.fs(spark, dir)

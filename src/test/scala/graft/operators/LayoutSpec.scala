@@ -172,7 +172,7 @@ class LayoutSpec extends SparkSpec {
       s"append should widen the selection: ${selFresh.length} → ${selDrift.length}")
     // the maintenance reset: re-cluster everything, atomic swap
     Layout.optimize(spark, s"$dir/z", Seq("user_id", "ts"), numFiles = 12)
-    val back = spark.read.parquet(graft.operators.IndexFs.resolveDir(spark, s"$dir/z"))
+    val back = spark.read.parquet(s"$dir/z")
     val a = events.select(events.columns.sorted.map(col): _*)
     val b = back.select(back.columns.sorted.map(col): _*)
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
@@ -257,8 +257,7 @@ class LayoutSpec extends SparkSpec {
   test("a failed rewrite leaves the previous dataset intact (write-then-swap)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_zcrash").toString
     Layout.writeZOrdered(events, Seq("user_id", "ts"), s"$dir/z", numFiles = 4)
-    val before = spark.read.parquet(
-      IndexFs.resolveDir(spark, s"$dir/z")).count()
+    val before = spark.read.parquet(s"$dir/z").count()
     assert(before > 0)
     // a rewrite whose job dies mid-write (simulated: a poisoned column
     // that throws during evaluation) must NOT have deleted the only
@@ -269,8 +268,7 @@ class LayoutSpec extends SparkSpec {
     intercept[Exception] {
       Layout.writeZOrdered(poison, Seq("user_id", "ts"), s"$dir/z", numFiles = 4)
     }
-    assert(spark.read.parquet(
-      IndexFs.resolveDir(spark, s"$dir/z")).count() == before)
+    assert(spark.read.parquet(s"$dir/z").count() == before)
   }
 
   test("stats sidecar: written at write time, answers ≡ footers exactly") {

@@ -197,35 +197,30 @@ class SimilaritySpec extends SparkSpec {
       queries, "query_id", "qvec", k = 3, nCentroids = 4, nProbe = 2,
       centroids = Some(after.centroids)))
     assert(served == fresh && served.nonEmpty)
-    // an UNLANDED (crashed marker-mode) commit dir is dropped from the
-    // rebuild and NOT tombstoned — its tag may re-append later under
-    // the new family. Protocols are per-deployment (never mixed on one
-    // index), so this sub-scenario runs on its own marker-mode index.
-    spark.conf.set(IndexFs.CommitProtocolKey, "marker")
-    try {
-      val mDir = java.nio.file.Files.createTempDirectory("ivf_refit_m").toString
-      Similarity.saveIvfIndex(partA, "vec_id", "embedding", mDir,
-        nCentroids = 4, maxIter = 5)
-      val baseVecs = Similarity.loadIvfIndex(spark, mDir)
-        .cells.select("id", "vec").collect().toSet
-      // stage a commit dir, then delete its _OK marker = a crashed append
-      val crashed = emb.filter(col("vec_id") % 3 === 1 && col("vec_id") < 10)
-      assert(Similarity.appendToIvfIndex(crashed, "vec_id", "embedding", mDir,
-        commitTag = Some("b2")))
-      val okMarker = new org.apache.hadoop.fs.Path(s"$mDir/commits/b2/_OK")
-      val fsys = okMarker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fsys.delete(okMarker, false)
-      Similarity.refitIvfIndex(spark, mDir, nCentroids = 4, seed = 9L, maxIter = 5)
-      assert(Similarity.loadIvfIndex(spark, mDir)
-        .cells.select("id", "vec").collect().toSet == baseVecs,
-        "an unlanded commit must not leak into the rebuild")
-      assert(Similarity.appendToIvfIndex(crashed, "vec_id", "embedding", mDir,
-        commitTag = Some("b2")), "a crashed tag must stay re-appendable")
-      assert(Similarity.loadIvfIndex(spark, mDir)
-        .cells.select("id", "vec").collect().toSet ==
-          baseVecs ++ crashed.select(col("vec_id").cast("long"),
-            col("embedding").cast("array<float>")).collect().toSet)
-    } finally spark.conf.unset(IndexFs.CommitProtocolKey)
+    // a crashed append (its `staged/` orphan, never renamed in) is
+    // dropped from the rebuild and NOT tombstoned — its tag may
+    // re-append later under the new family. A fresh index, so the
+    // crashed rows are new to it.
+    val cDir = java.nio.file.Files.createTempDirectory("ivf_refit_crash").toString
+    Similarity.saveIvfIndex(partA, "vec_id", "embedding", cDir,
+      nCentroids = 4, maxIter = 5)
+    val baseVecs = Similarity.loadIvfIndex(spark, cDir)
+      .cells.select("id", "vec").collect().toSet
+    val crashed = emb.filter(col("vec_id") % 3 === 1 && col("vec_id") < 10)
+    crashed.select(col("vec_id").cast("long").as("id"),
+        col("embedding").cast("array<float>").as("vec"), lit(0L).as("cluster_id"))
+      .write.parquet(s"$cDir/staged/b2/cells")
+    Similarity.refitIvfIndex(spark, cDir, nCentroids = 4, seed = 9L, maxIter = 5)
+    assert(Similarity.loadIvfIndex(spark, cDir)
+      .cells.select("id", "vec").collect().toSet == baseVecs,
+      "a crashed append must not leak into the rebuild")
+    assert(!IndexFs.isCommitted(spark, cDir, "b2"))
+    assert(Similarity.appendToIvfIndex(crashed, "vec_id", "embedding", cDir,
+      commitTag = Some("b2")), "a crashed tag must stay re-appendable")
+    assert(Similarity.loadIvfIndex(spark, cDir)
+      .cells.select("id", "vec").collect().toSet ==
+        baseVecs ++ crashed.select(col("vec_id").cast("long"),
+          col("embedding").cast("array<float>")).collect().toSet)
   }
 
   test("refitIvfIndex measurably resets append-induced cell imbalance") {

@@ -717,41 +717,38 @@ class SnapshotMergeSpec extends SparkSpec {
       "exactly the touched shard should point at a new physical dir")
   }
 
-  test("marker protocol: the full sharded lifecycle composes (create→merge→evolve→optimize→vacuum→time-travel)") {
+  test("the full sharded lifecycle composes (create→merge→evolve→optimize→vacuum→time-travel)") {
     val dir = tmp()
-    spark.conf.set(IndexFs.CommitProtocolKey, "marker")
-    try {
-      val big = spark.range(0, 300)
-        .select(col("id"), concat(lit("n"), col("id")).as("name"))
-      SnapshotMerge.createSharded(big, Seq("id"), 8, dir) // v1
-      SnapshotMerge.upsertSharded(
-        spark.range(0, 300, 3).select(col("id"), lit("upd").as("name")),
-        Seq("id"), dir) // v2
-      SnapshotMerge.evolveSharded(spark, dir, Seq("id"),
-        big.limit(0).withColumn("score", lit(0.0))) // v3 — anchor republished
-      SnapshotMerge.upsertSharded(
-        Seq((5L, "wide", 5.5)).toDF("id", "name", "score"),
-        Seq("id"), dir) // v4
-      SnapshotMerge.optimizeSharded(spark, dir, Seq("id"),
-        Seq("id"), filesPerShard = 1) // v5
-      val got = SnapshotMerge.readSharded(spark, dir)
-      assert(got.count() == 300)
-      assert(got.filter(col("name") === "upd").count() == 100) // ids 0,3,…,297; id 5 was "n5"
-      assert(got.filter(col("id") === 5L)
-        .select("score").as[Double].head() == 5.5)
-      assert(got.filter(col("score").isNotNull).count() == 1)
-      // time travel across the evolution boundary, under marker
-      val v2 = SnapshotMerge.readShardedVersion(spark, dir, 2L)
-      assert(v2.columns.sorted.toSeq == Seq("id", "name"))
-      assert(v2.filter(col("name") === "upd").count() == 100)
-      // vacuum reaps every retired version; the live state survives
-      assert(SnapshotMerge.vacuumSharded(spark, dir) > 0)
-      assert(SnapshotMerge.shardedVersions(spark, dir) == Seq(5L))
-      val after = SnapshotMerge.readSharded(spark, dir)
-      assert(after.count() == 300)
-      assert(after.filter(col("id") === 5L)
-        .select("score").as[Double].head() == 5.5)
-    } finally spark.conf.unset(IndexFs.CommitProtocolKey)
+    val big = spark.range(0, 300)
+      .select(col("id"), concat(lit("n"), col("id")).as("name"))
+    SnapshotMerge.createSharded(big, Seq("id"), 8, dir) // v1
+    SnapshotMerge.upsertSharded(
+      spark.range(0, 300, 3).select(col("id"), lit("upd").as("name")),
+      Seq("id"), dir) // v2
+    SnapshotMerge.evolveSharded(spark, dir, Seq("id"),
+      big.limit(0).withColumn("score", lit(0.0))) // v3 — anchor republished
+    SnapshotMerge.upsertSharded(
+      Seq((5L, "wide", 5.5)).toDF("id", "name", "score"),
+      Seq("id"), dir) // v4
+    SnapshotMerge.optimizeSharded(spark, dir, Seq("id"),
+      Seq("id"), filesPerShard = 1) // v5
+    val got = SnapshotMerge.readSharded(spark, dir)
+    assert(got.count() == 300)
+    assert(got.filter(col("name") === "upd").count() == 100) // ids 0,3,…,297; id 5 was "n5"
+    assert(got.filter(col("id") === 5L)
+      .select("score").as[Double].head() == 5.5)
+    assert(got.filter(col("score").isNotNull).count() == 1)
+    // time travel across the evolution boundary
+    val v2 = SnapshotMerge.readShardedVersion(spark, dir, 2L)
+    assert(v2.columns.sorted.toSeq == Seq("id", "name"))
+    assert(v2.filter(col("name") === "upd").count() == 100)
+    // vacuum reaps every retired version; the live state survives
+    assert(SnapshotMerge.vacuumSharded(spark, dir) > 0)
+    assert(SnapshotMerge.shardedVersions(spark, dir) == Seq(5L))
+    val after = SnapshotMerge.readSharded(spark, dir)
+    assert(after.count() == 300)
+    assert(after.filter(col("id") === 5L)
+      .select("score").as[Double].head() == 5.5)
   }
 
   test("two interleaved writers: the CAS loser retries onto the winner's version — no lost rows") {

@@ -632,7 +632,7 @@ class TextDedupSpec extends SparkSpec {
     // (file name, mtime) fingerprints of the physical relation dirs: a
     // rewrite lands NEW part-file names, a no-op leaves both untouched
     def relState(name: String): Set[(String, Long)] = {
-      val p = IndexFs.resolveDir(spark, s"$dir/$name")
+      val p = s"$dir/$name"
       IndexFs.fs(spark, p).listStatus(new org.apache.hadoop.fs.Path(p))
         .map(s => (s.getPath.getName, s.getModificationTime)).toSet
     }
@@ -866,73 +866,70 @@ class TextDedupSpec extends SparkSpec {
     assert(TextDedup.loadEmbeddingIndex(spark, dir).buckets.collect().toSet == buckets)
   }
 
-  test("the whole staged-commit cycle under the marker protocol equals the rename twin") {
+  test("the whole staged-commit cycle: save, tagged append, compact, replay, query") {
     import spark.implicits._
     def sent(i: Int) = (0 until 12).map(j => s"w${i * 31 + j * 7}").mkString(" ")
     val baseDocs = (0L until 20L).map(i => (i * 2, sent(i.toInt))).toDF("doc_id", "text")
     val batch1 = Seq((101L, sent(500))).toDF("doc_id", "text")
     val batch2 = Seq((201L, sent(500) + " tail")).toDF("doc_id", "text")
-    // save → tagged append → query → compact → replay → query, returning
-    // the final band set and the batch2-vs-index pairs
-    def cycle(dir: String): (Set[org.apache.spark.sql.Row], Set[(Long, Long)]) = {
-      TextDedup.saveMinhashIndex(baseDocs, "doc_id", "text", dir)
-      assert(TextDedup.appendToMinhashIndex(batch1, "doc_id", "text", dir,
-        commitTag = Some("b1")))
-      TextDedup.compactMinhashIndex(spark, dir)
-      assert(!TextDedup.appendToMinhashIndex(batch1, "doc_id", "text", dir,
-        commitTag = Some("b1"))) // tombstone survives under both protocols
-      TextDedup.compactMinhashIndex(spark, dir) // a second fold cycle
-      val idx = TextDedup.loadMinhashIndex(spark, dir)
-      (idx.bands.collect().toSet,
-        TextDedup.minhashLshAgainstIndex(batch2, "doc_id", "text", idx,
-            threshold = 0.7)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+    // save → tagged append → compact → replay → compact → query
+    val dir = java.nio.file.Files.createTempDirectory("mh_rename").toString
+    TextDedup.saveMinhashIndex(baseDocs, "doc_id", "text", dir)
+    assert(TextDedup.appendToMinhashIndex(batch1, "doc_id", "text", dir,
+      commitTag = Some("b1")))
+    TextDedup.compactMinhashIndex(spark, dir)
+    assert(!TextDedup.appendToMinhashIndex(batch1, "doc_id", "text", dir,
+      commitTag = Some("b1"))) // the tombstone survives the fold
+    TextDedup.compactMinhashIndex(spark, dir) // a second fold cycle
+    val idx = TextDedup.loadMinhashIndex(spark, dir)
+    // the folded base equals a fresh build of base ∪ batch1
+    assert(idx.bands.collect().toSet == TextDedup.buildMinhashIndex(
+      baseDocs.union(batch1), "doc_id", "text").bands.collect().toSet)
+    assert(TextDedup.minhashLshAgainstIndex(batch2, "doc_id", "text", idx,
+        threshold = 0.7)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet == Set((201L, 101L)))
+    assert(IndexFs.exists(spark, s"$dir/bands"))
+  }
+
+  test("a publish stopped between its two renames rolls forward before the next write") {
+    import spark.implicits._
+    def sent(i: Int) = (0 until 12).map(j => s"w${i * 31 + j * 7}").mkString(" ")
+    val baseDocs = (0L until 20L).map(i => (i * 2, sent(i.toInt))).toDF("doc_id", "text")
+    val batch = Seq((101L, sent(500))).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("mh_rollfwd").toString
+    TextDedup.saveMinhashIndex(baseDocs, "doc_id", "text", dir)
+    // a compaction that stopped between the two renames of its bands
+    // publish: the new bands lie complete in the tmp sibling, the old
+    // ones in `.old-publish`, and no `bands` dir exists
+    spark.read.parquet(s"$dir/bands").write.parquet(s"$dir/bands.tmp-publish")
+    IndexFs.rename(spark, s"$dir/bands", s"$dir/bands.old-publish")
+    assert(!IndexFs.exists(spark, s"$dir/bands"))
+    // an untagged append, then a compaction: neither may drop the base
+    assert(TextDedup.appendToMinhashIndex(batch, "doc_id", "text", dir))
+    TextDedup.compactMinhashIndex(spark, dir)
+    val idx = TextDedup.loadMinhashIndex(spark, dir)
+    val want = TextDedup.buildMinhashIndex(baseDocs.union(batch), "doc_id", "text")
+    assert(idx.bands.collect().toSet == want.bands.collect().toSet,
+      "the bands must hold base ∪ batch")
+    assert(idx.shingles.select("id").as[Long].collect().toSet ==
+      (0L until 40L by 2).toSet + 101L)
+    assert(!IndexFs.exists(spark, s"$dir/bands.tmp-publish"))
+    assert(!IndexFs.exists(spark, s"$dir/bands.old-publish"))
+    // the embedding twin, whose untagged append loads the index first
+    def vec(i: Int): Seq[Float] = {
+      val r = new scala.util.Random(i)
+      Seq.fill(16)(r.nextGaussian().toFloat)
     }
-    val renameDir = java.nio.file.Files.createTempDirectory("mh_rename").toString
-    val (renameBands, renamePairs) = cycle(renameDir)
-    spark.conf.set(IndexFs.CommitProtocolKey, "marker")
-    val markerDir = java.nio.file.Files.createTempDirectory("mh_marker").toString
-    try {
-      val (markerBands, markerPairs) = cycle(markerDir)
-      assert(markerBands == renameBands)
-      assert(markerPairs == renamePairs && renamePairs == Set((201L, 101L)))
-      // the marker artifacts are real: pointer present, plain dir retired
-      assert(IndexFs.exists(spark, s"$markerDir/bands.current"))
-      assert(!IndexFs.exists(spark, s"$markerDir/bands"))
-      // marker-mode orphan discipline: an unmarked commit dir is a
-      // crashed append — invisible to loads AND to compaction's fold,
-      // reaped only once stale (the staged-reap TTL twin)
-      IndexFs.fs(spark, markerDir).mkdirs(
-        new org.apache.hadoop.fs.Path(s"$markerDir/commits/crashed/bands"))
-      TextDedup.compactMinhashIndex(spark, markerDir)
-      assert(IndexFs.exists(spark, s"$markerDir/commits/crashed"),
-        "reaper deleted a possibly-live marker-mode append")
-      assert(TextDedup.loadMinhashIndex(spark, markerDir)
-        .bands.collect().toSet == markerBands)
-      val old = System.currentTimeMillis() - 48L * 3600 * 1000
-      Seq(s"$markerDir/commits/crashed", s"$markerDir/commits/crashed/bands")
-        .foreach { p =>
-          java.nio.file.Files.setLastModifiedTime(java.nio.file.Paths.get(p),
-            java.nio.file.attribute.FileTime.fromMillis(old))
-        }
-      TextDedup.compactMinhashIndex(spark, markerDir)
-      assert(!IndexFs.exists(spark, s"$markerDir/commits/crashed"))
-      // UNTAGGED append after the base went pointer-resolved: the rows
-      // must land in the CURRENT version, not a recreated plain dir the
-      // readers would never see (the silent-loss hole of the first
-      // marker-protocol cut)
-      TextDedup.appendToMinhashIndex(
-        Seq((301L, sent(700))).toDF("doc_id", "text"), "doc_id", "text",
-        markerDir)
-      assert(!IndexFs.exists(spark, s"$markerDir/bands"),
-        "untagged append recreated the retired plain dir")
-      assert(TextDedup.loadMinhashIndex(spark, markerDir)
-        .shingles.select("id").as[Long].collect().toSet.contains(301L),
-        "untagged append invisible under the marker protocol")
-    } finally spark.conf.unset(IndexFs.CommitProtocolKey)
-    // rename twin left NO marker artifacts
-    assert(!IndexFs.exists(spark, s"$renameDir/bands.current"))
-    assert(IndexFs.exists(spark, s"$renameDir/bands"))
+    val eDir = java.nio.file.Files.createTempDirectory("emb_rollfwd").toString
+    TextDedup.saveEmbeddingIndex((0L until 20L).map(i => (i, vec(i.toInt)))
+      .toDF("vec_id", "embedding"), "vec_id", "embedding", eDir, threshold = 0.9)
+    spark.read.parquet(s"$eDir/vectors").write.parquet(s"$eDir/vectors.tmp-publish")
+    IndexFs.rename(spark, s"$eDir/vectors", s"$eDir/vectors.old-publish")
+    assert(TextDedup.appendToEmbeddingIndex(Seq((101L, vec(101))).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", eDir))
+    TextDedup.compactEmbeddingIndex(spark, eDir)
+    assert(TextDedup.loadEmbeddingIndex(spark, eDir).vectors.select("id").as[Long]
+      .collect().toSet == (0L until 20L).toSet + 101L)
   }
 
   test("staged-orphan reap: live appends survive, committed and stale orphans are reaped") {

@@ -96,23 +96,6 @@ class OrchestratorSpec extends SparkSpec {
     }
   }
 
-  test("extract cache: input-hash key, TTL freshness, hit skips materialization") {
-    val cacheDir = Files.createTempDirectory("xcache").toString
-    val key = ExtractCache.keyFor("Account", "Id,Name", "", "100")
-    assert(key == ExtractCache.keyFor("Account", "Id,Name", "", "100")) // stable
-    assert(key != ExtractCache.keyFor("Account", "Id,Name", "", "200")) // input-sensitive
-    var calls = 0
-    val (p1, hit1) = ExtractCache.withCache(cacheDir, key) { dir =>
-      calls += 1
-      Files.write(Paths.get(dir, "data.txt"), "rows".getBytes)
-    }
-    val (p2, hit2) = ExtractCache.withCache(cacheDir, key) { _ => calls += 1 }
-    assert(!hit1 && hit2 && calls == 1 && p1 == p2)
-    // expired TTL → recompute
-    val (_, hit3) = ExtractCache.withCache(cacheDir, key, ttlMs = 0) { _ => calls += 1 }
-    assert(!hit3 && calls == 2)
-  }
-
   test("scheduled runner: N iterations accumulate ledger entries and drift state") {
     val base = Files.createTempDirectory("sched").toString
     val sched = ScheduledRunner.runEvery(spark, "Order", () => source, base,

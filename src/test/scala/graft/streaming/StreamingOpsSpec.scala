@@ -293,7 +293,7 @@ class StreamingOpsSpec extends SparkSpec {
       s"fold-ins must land under their batch tags, got $commitTags")
   }
 
-  test("cluster posture composes: crawl loop under marker protocol + parquet scratch ≡ default run") {
+  test("cluster posture composes: crawl loop under parquet scratch ≡ default run") {
     import spark.implicits._
     def sent(i: Int) = (0 until 12).map(j => s"w${i * 31 + j * 7}").mkString(" ")
     val docSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -303,7 +303,7 @@ class StreamingOpsSpec extends SparkSpec {
         org.apache.spark.sql.types.StringType)))
     // one shape, run twice: batch 1 (novel 103 + index-dup 101), then
     // batch 2 near-duplicating the folded-in 103 — the fold-in is
-    // load-bearing, so any protocol/scratch break changes the pairs
+    // load-bearing, so any scratch break changes the pairs
     def runLoop(): (Set[(Long, Long)], Set[Long]) = {
       val idxPath = java.nio.file.Files.createTempDirectory("mh_posture").toString
       graft.operators.TextDedup.saveMinhashIndex(
@@ -338,17 +338,12 @@ class StreamingOpsSpec extends SparkSpec {
     }
     val default = runLoop()
     assert(default._1 == Set((101L, 10L), (201L, 103L)))
-    // the full cluster posture: object-store commit protocol AND
-    // parquet scratch, composed with the durable checkpoint the
-    // operator already requires
-    spark.conf.set(graft.operators.IndexFs.CommitProtocolKey, "marker")
+    // the cluster posture: parquet scratch, composed with the durable
+    // checkpoint the operator already requires
     spark.conf.set(graft.GraftSession.ScratchDirKey,
       java.nio.file.Files.createTempDirectory("posture_scratch").toString)
     try assert(runLoop() == default)
-    finally {
-      spark.conf.unset(graft.operators.IndexFs.CommitProtocolKey)
-      spark.conf.unset(graft.GraftSession.ScratchDirKey)
-    }
+    finally spark.conf.unset(graft.GraftSession.ScratchDirKey)
   }
 
   test("mapGroupsWithState running totals equal a batch groupBy") {
