@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileContext, FileSystem, Path => HPath}
 import org.apache.spark.sql.SparkSession
 
 /** Filesystem plumbing for persisted-index maintenance, routed through
@@ -14,7 +14,10 @@ import org.apache.spark.sql.SparkSession
   * `commits/<tag>/` ([[stagedAppend]]). A directory rename is one atomic
   * metadata operation on the local file system and on HDFS, the file
   * systems this protocol is atomic on; object stores emulate rename as
-  * a non-atomic copy-and-delete and are not supported.
+  * a non-atomic copy-and-delete and are not supported. No object-store
+  * path is kept: the no-clobber and overwrite primitives go through
+  * `FileContext`, and a scheme with no `AbstractFileSystem` binding
+  * makes them throw.
   */
 private[graft] object IndexFs {
 
@@ -50,70 +53,26 @@ private[graft] object IndexFs {
     * Returns true when THIS call moved `src` to `dst`; false when `dst`
     * already exists (a same-tag writer won the race). Built on
     * `FileContext.rename` with `Rename.NONE`, whose contract REJECTS an
-    * existing destination — unlike `FileSystem.rename`, which on
-    * HDFS-like filesystems moves the source INTO an existing destination
-    * directory (nesting the loser's data as `dst/<srcName>` while
-    * returning true — the silent-wrong outcome for two same-tag
-    * writers). Schemes with no `AbstractFileSystem` binding fall back to
-    * a guarded `FileSystem.rename` with existence re-checks; there the
-    * no-clobber window narrows to the rename call itself, so same-tag
-    * concurrency is detected best-effort and the formal contract stays
-    * single-writer-per-tag (see [[stagedAppend]]). */
+    * existing destination atomically on the local file system and on
+    * HDFS — unlike `FileSystem.rename`, which moves the source INTO an
+    * existing destination directory (nesting the loser's data as
+    * `dst/<srcName>` while returning true — the silent-wrong outcome
+    * for two same-tag writers). */
   def renameNoClobber(spark: SparkSession, src: String, dst: String): Boolean = {
     val f = fs(spark, src)
     val srcP = f.makeQualified(new HPath(src))
     val dstP = f.makeQualified(new HPath(dst))
     val parent = dstP.getParent
     if (parent != null && !f.exists(parent)) f.mkdirs(parent)
-    try {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        srcP.toUri, spark.sparkContext.hadoopConfiguration)
-      try { fc.rename(srcP, dstP); true }
-      catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
-    } catch {
-      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        renameNoClobberFallback(f, srcP, dstP)
-    }
+    try { fileContext(spark, srcP).rename(srcP, dstP); true }
+    catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
   }
 
-  /** The no-`AbstractFileSystem` fallback of [[renameNoClobber]],
-    * factored out so its race resolution is directly testable. The
-    * hazard it closes: two same-tag writers can both pass the exists
-    * pre-check, after which `FileSystem.rename` moves the LOSER's
-    * source INTO the just-created destination (as `dst/<srcName>`) and
-    * still returns true — exactly the silent-wrong nesting the
-    * `FileContext` path rejects by contract. Detection: a clean move
-    * leaves `dst`'s child set equal to `src`'s; nesting leaves
-    * `dst/<srcName>` holding it instead. A detected nesting is resolved
-    * as a lost race (the loser's nested copy is deleted, returns
-    * false — the winner's commit IS the batch); any other unexpected
-    * destination layout throws rather than reading as success. */
-  private[graft] def renameNoClobberFallback(
-      f: FileSystem, srcP: HPath, dstP: HPath,
-      /** Test seam: runs between the exists pre-check and the rename —
-        * the race window this fallback's detection exists for. */
-      beforeRename: () => Unit = () => ()): Boolean = {
-    if (f.exists(dstP)) return false
-    val srcChildren = f.listStatus(srcP).map(_.getPath.getName).toSet
-    beforeRename()
-    if (!f.rename(srcP, dstP)) {
-      if (f.exists(dstP)) return false // lost the race inside the rename
-      throw new java.io.IOException(
-        s"IndexFs.renameNoClobber failed: $srcP -> $dstP")
-    }
-    val dstChildren = f.listStatus(dstP).map(_.getPath.getName).toSet
-    if (dstChildren == srcChildren) true
-    else {
-      val nested = new HPath(dstP, srcP.getName)
-      if (f.exists(nested) && f.getFileStatus(nested).isDirectory &&
-          f.listStatus(nested).map(_.getPath.getName).toSet == srcChildren) {
-        f.delete(nested, true); false
-      } else throw new java.io.IOException(
-        s"IndexFs.renameNoClobber: unexpected destination layout after " +
-          s"fallback rename $srcP -> $dstP (children $dstChildren, " +
-          s"expected $srcChildren) — manual inspection required")
-    }
-  }
+  /** The `FileContext` of `p`'s scheme; throws for a scheme with no
+    * `AbstractFileSystem` binding. */
+  private def fileContext(spark: SparkSession, p: HPath): FileContext =
+    FileContext.getFileContext(
+      p.toUri, spark.sparkContext.hadoopConfiguration)
 
   /** A tag counts as committed when its commit dir is present (landed,
     * not yet folded), OR its tombstone survives under `committed/`
@@ -266,10 +225,12 @@ private[graft] object IndexFs {
     * `dir` is absent and its replacement lies complete (`_SUCCESS`
     * written) in the tmp sibling, so rename it in and drop the old copy.
     * Every writer that reads or appends to a relation calls this first;
-    * without it an untagged append writes a fresh `dir` holding only its
-    * batch, and the next compaction deletes the base with `.old-publish`.
-    * Readers never call it: a reader racing a live publish would take
-    * the tmp sibling from under the publisher's second rename. */
+    * without it `Layout.appendUnclustered`, the one writer that still
+    * appends into a base relation, would write a fresh `dir` holding
+    * only its batch, and the next publish would delete the base with
+    * `.old-publish`. Readers never call it: a reader racing a live
+    * publish would take the tmp sibling from under the publisher's
+    * second rename. */
   private[operators] def rollForwardPublish(spark: SparkSession, dir: String): Unit = {
     val tmp = dir + ".tmp-publish"
     if (!exists(spark, dir) && exists(spark, s"$tmp/_SUCCESS")) {
@@ -279,30 +240,19 @@ private[graft] object IndexFs {
   }
 
   /** Replace a tiny control file (a checkpoint, a stats sidecar) with NO
-    * truncation window: write a temp sibling, rename over with
-    * `Options.Rename.OVERWRITE` (atomic on any FS with an
-    * `AbstractFileSystem` binding — a bare `create(overwrite = true)`
+    * truncation window: write a temp sibling, then rename it over `p`
+    * with `FileContext.rename` under `Rename.OVERWRITE`, atomic on the
+    * local file system and on HDFS (a bare `create(overwrite = true)`
     * would truncate the LIVE file first, so a crash or a concurrent
     * read in that window sees an empty file and the whole read path
-    * bricks). Schemes without a binding are the true object stores,
-    * where the direct overwrite PUT is itself atomic — there the PUT is
-    * used as-is. */
+    * bricks). */
   private[graft] def atomicWriteSmallFile(spark: SparkSession, f: FileSystem,
       p: HPath, content: String): Unit = {
     val tmp = new HPath(p.getParent, p.getName + ".tmp")
     val out = f.create(tmp, true)
     try out.write(content.getBytes("UTF-8")) finally out.close()
-    try {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        p.toUri, spark.sparkContext.hadoopConfiguration)
-      fc.rename(f.makeQualified(tmp), f.makeQualified(p),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    } catch {
-      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        val out2 = f.create(p, true)
-        try out2.write(content.getBytes("UTF-8")) finally out2.close()
-        f.delete(tmp, false); ()
-    }
+    fileContext(spark, p).rename(f.makeQualified(tmp), f.makeQualified(p),
+      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
   /** No-clobber creation of a small control FILE — the compare-and-swap
@@ -311,16 +261,11 @@ private[graft] object IndexFs {
     * true, and a reader never observes a partial body. The body is
     * written to a dot-prefixed tmp sibling and moved in with
     * `FileContext.rename` under `Rename.NONE`, whose contract
-    * atomically REJECTS an existing destination (the file-shaped twin
-    * of [[renameNoClobber]]). Schemes with no `AbstractFileSystem`
-    * binding fall back to a direct `create(overwrite = false)` — the
-    * existence check is still atomic at the store, but a concurrent
-    * reader can glimpse a partially-written body in the create-to-close
-    * window; those schemes are the true object stores, where a
-    * conditional small-object PUT is the native primitive a production
-    * binding would supply. Returns false when the destination already
-    * exists — the caller lost the race (or found a previous crash's
-    * committed file, which reads the same way by design). */
+    * atomically REJECTS an existing destination on the local file
+    * system and on HDFS (the file-shaped twin of [[renameNoClobber]]).
+    * Returns false when the destination already exists — the caller
+    * lost the race (or found a previous crash's committed file, which
+    * reads the same way by design). */
   private[graft] def writeSmallFileNoClobber(spark: SparkSession,
       f: FileSystem, p: HPath, content: String): Boolean = {
     if (f.exists(p)) return false // cheap fast-path; the rename is the gate
@@ -328,25 +273,11 @@ private[graft] object IndexFs {
       s".${p.getName}.cas-${java.util.UUID.randomUUID().toString.take(8)}")
     val out = f.create(tmp, true)
     try out.write(content.getBytes("UTF-8")) finally out.close()
-    try {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        p.toUri, spark.sparkContext.hadoopConfiguration)
-      try { fc.rename(f.makeQualified(tmp), f.makeQualified(p)); true }
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-             _: org.apache.hadoop.fs.ParentNotDirectoryException =>
-          f.delete(tmp, false); false
-      }
-    } catch {
-      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        try {
-          val out2 = f.create(p, false)
-          try out2.write(content.getBytes("UTF-8")) finally out2.close()
-          f.delete(tmp, false); true
-        } catch {
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-            f.delete(tmp, false); false
-        }
+    try { fileContext(spark, p).rename(f.makeQualified(tmp), f.makeQualified(p)); true }
+    catch {
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException |
+           _: org.apache.hadoop.fs.ParentNotDirectoryException =>
+        f.delete(tmp, false); false
     }
   }
 
@@ -427,6 +358,16 @@ private[graft] object IndexFs {
 
   private[graft] def endRefit(spark: SparkSession, path: String): Unit =
     deleteRecursively(spark, s"$path/$RefitMarker")
+
+  /** A `save*Index` is a full rebuild: it wipes the whole tag
+    * namespace (`commits/`, `staged/`, `committed/` with its fold file)
+    * and any crashed-refit marker first, so stale appends never shadow
+    * a fresh corpus snapshot and the rebuilt index accepts every tag. */
+  private[operators] def resetForRebuild(spark: SparkSession, path: String): Unit = {
+    Seq("commits", "staged", "committed")
+      .foreach(d => deleteRecursively(spark, s"$path/$d"))
+    endRefit(spark, path)
+  }
 
   private[graft] def refitCrashed(spark: SparkSession, path: String): Boolean =
     exists(spark, s"$path/$RefitMarker")

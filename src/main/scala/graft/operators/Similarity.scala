@@ -184,16 +184,13 @@ object Similarity {
     * both relations (`centroids/`, `cells/`). The fit-once half of
     * fit-once/serve-many: appends ([[appendToIvfIndex]]) and probes
     * ([[ivfTopKFromIndex]]) both run under THIS frozen centroid
-    * family. A save is a full rebuild: stale `commits/`/`staged/`
-    * dirs are wiped, like the minhash/embedding twins. */
+    * family. A save is a full rebuild
+    * ([[graft.operators.IndexFs.resetForRebuild]]). */
   def saveIvfIndex(corpus: DataFrame, corpusId: String, corpusVec: String,
       path: String, nCentroids: Int = 16, seed: Long = 42L,
       maxIter: Int = 20, sampleRows: Int = 100000): Unit = {
     val spark = corpus.sparkSession
-    IndexFs.deleteRecursively(spark, s"$path/commits")
-    IndexFs.deleteRecursively(spark, s"$path/staged")
-    IndexFs.deleteRecursively(spark, s"$path/committed")
-    IndexFs.endRefit(spark, path) // full rebuild supersedes a crashed refit
+    IndexFs.resetForRebuild(spark, path)
     saveIndex(
       kmeansCentroids(corpus, corpusVec, nCentroids, seed, maxIter, sampleRows),
       s"$path/centroids")
@@ -218,12 +215,10 @@ object Similarity {
   /** Absorb a new vector batch into a persisted IVF index WITHOUT a
     * refit: assign under the frozen persisted centroids (the codegen
     * projection — per-batch cost is one pass over the batch, blind to
-    * index size) and append the cell rows. Same two regimes as
-    * [[graft.operators.TextDedup.appendToMinhashIndex]]:
-    * `commitTag = Some(tag)` is exactly-once per tag (staged dir + one
-    * atomic rename, idempotent replay, safe against concurrent
-    * [[compactIvfIndex]]); `None` is a direct at-least-once append
-    * with the single-writer-vs-compact contract. The frozen-centroid
+    * index size) and append the cell rows exactly-once per
+    * `commitTag`, as [[graft.operators.TextDedup.appendToMinhashIndex]]
+    * does (staged dir + one atomic rename, idempotent replay, safe
+    * against a concurrent [[compactIvfIndex]]). The frozen-centroid
     * trade is the standard IVF maintenance one: cell BALANCE can drift
     * from what a refit would choose (costing recall at small nProbe,
     * never correctness of the in-cell exact rank); refit + rebuild
@@ -232,23 +227,17 @@ object Similarity {
     * @return true if the batch's rows landed in this call; false when
     *         `commitTag` was already committed (idempotent skip). */
   def appendToIvfIndex(newVecs: DataFrame, idCol: String, vecCol: String,
-      path: String, commitTag: Option[String] = None): Boolean = {
+      path: String, commitTag: String): Boolean = {
     val spark = newVecs.sparkSession
     // assigning under a crashed refit's centroids would entrench the
     // family/assignment mismatch; converge with a refit re-run first
     IndexFs.requireNoCrashedRefit(spark, path)
-    if (commitTag.exists(t => IndexFs.isCommitted(spark, path, t)))
+    if (IndexFs.isCommitted(spark, path, commitTag))
       return false // already landed (live commit OR folded tombstone) —
                    // skip even the assignment
     val (ids, vecs) = centroidKernel(loadIndex(spark, s"$path/centroids"))
-    val cells = cellRows(newVecs, idCol, vecCol, ids, vecs)
-    commitTag match {
-      case Some(tag) => IndexFs.stagedAppend(spark, path, tag, Seq("cells" -> cells))
-      case None =>
-        IndexFs.rollForwardPublish(spark, s"$path/cells")
-        cells.write.mode("append").parquet(s"$path/cells")
-        true
-    }
+    IndexFs.stagedAppend(spark, path, commitTag,
+      Seq("cells" -> cellRows(newVecs, idCol, vecCol, ids, vecs)))
   }
 
   /** Reload a [[saveIvfIndex]]-written index: centroids plus the cell
@@ -268,9 +257,8 @@ object Similarity {
 
   /** Fold landed cell commits into the base cell relation — the
     * [[graft.operators.TextDedup.compactMinhashIndex]] engine with the
-    * same concurrency contract (tagged appends landing mid-compact
-    * survive; direct appends are single-writer). Centroids are frozen
-    * and never rewritten. */
+    * same concurrency contract (appends landing mid-compact survive).
+    * Centroids are frozen and never rewritten. */
   def compactIvfIndex(spark: SparkSession, path: String): Unit =
     TextDedup.compactIndex(spark, path, Seq("cells"),
       n => Seq(graft.GraftSession.partitionsFor(spark, n)))
@@ -296,9 +284,7 @@ object Similarity {
     *  - crashed appends (`staged/` orphans) are dropped from the
     *    rebuild and deliberately NOT tombstoned — their tag may
     *    legitimately re-append later, and will assign under the NEW
-    *    family;
-    *  - replayed UNTAGGED appends collapse via distinct on (id, vec),
-    *    exactly like compaction.
+    *    family.
     * The vectors are pinned through the scratch seam BEFORE any dir is
     * rewritten — the rebuild reads the very relation it overwrites. */
   def refitIvfIndex(spark: SparkSession, path: String,

@@ -241,10 +241,9 @@ object SnapshotMerge {
     * [[KeySep]]-separated; `-` when the version mirrors nothing), one
     * `shard, path` line per shard (paths relative to the root), and an
     * `end\t<shard-line count>` trailer. The trailer makes the body
-    * SELF-VALIDATING: on schemes where writeSmallFileNoClobber falls
-    * back to a direct create, a concurrent reader can glimpse the
-    * create-to-close window, and a truncated shard list would otherwise
-    * parse as a smaller snapshot. */
+    * SELF-VALIDATING: a torn or truncated file (a damaged copy, a
+    * partial restore) fails to parse instead of reading as a smaller
+    * snapshot. */
   private[operators] def tryCommitManifest(spark: SparkSession, dir: String,
       m: Manifest): Boolean = {
     val header = Seq("meta", m.nShards.toString, m.salt, ShardHashVersion,
@@ -427,11 +426,10 @@ object SnapshotMerge {
         "before merging into it")
     val body = lines.tail
     require(body.nonEmpty && body.last.startsWith("end\t"),
-      corrupt("missing end trailer (concurrent read of an in-flight " +
-        "commit? retry the read)"))
+      corrupt("missing end trailer"))
     require(body.last == s"end\t${body.init.length}",
       corrupt(s"trailer '${body.last}' does not match ${body.init.length} " +
-        "shard lines (concurrent read of an in-flight commit? retry)"))
+        "shard lines"))
     Manifest(name.stripPrefix("manifest-v").toLong, meta(1).toInt, meta(2),
       meta(5).split(KeySep, -1).toSeq,
       body.init.map { l =>

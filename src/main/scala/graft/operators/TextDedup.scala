@@ -244,16 +244,11 @@ object TextDedup {
     * loader can never band a batch with mismatched n/k/bands). The
     * offline half of incremental dedup: at 100 TB this runs once per
     * corpus snapshot; each incoming batch pays only its own signing.
-    * A save is a FULL REBUILD: any `commits/`/`staged/` dirs from a
-    * prior index at the same path (see [[appendToMinhashIndex]]) are
-    * wiped first — stale committed appends must never shadow a fresh
-    * corpus snapshot. */
+    * A save is a full rebuild ([[graft.operators.IndexFs.resetForRebuild]]). */
   def saveMinhashIndex(docs: DataFrame, idCol: String, textCol: String,
       path: String, n: Int = 3, k: Int = 32, bands: Int = 8): Unit = {
     val spark = docs.sparkSession
-    IndexFs.deleteRecursively(spark, s"$path/commits")
-    IndexFs.deleteRecursively(spark, s"$path/staged")
-    IndexFs.deleteRecursively(spark, s"$path/committed")
+    IndexFs.resetForRebuild(spark, path)
     val idx = buildMinhashIndex(docs, idCol, textCol, n, k, bands)
     idx.bands.write.mode("overwrite").parquet(s"$path/bands")
     idx.shingles.write.mode("overwrite").parquet(s"$path/shingles")
@@ -279,66 +274,46 @@ object TextDedup {
     * and band keys are a pure function of (text, n, k, bands) — oracled
     * end-to-end by q_minhash_index_append.
     *
-    * Two append regimes, chosen by `commitTag`:
-    *  - `Some(tag)` — EXACTLY-ONCE per tag via
-    *    [[graft.operators.IndexFs.stagedAppend]]: the
-    *    batch's relations stage under `staged/<tag>/` and land with one
-    *    atomic directory rename to `commits/<tag>/`; a replay of an
-    *    already-landed tag writes nothing and returns false — INCLUDING
-    *    after a compaction folded the tag into the base, because the
-    *    fold leaves a `committed/<tag>` tombstone that
-    *    [[graft.operators.IndexFs.isCommitted]] honors (r9; previously
-    *    idempotence died with the commit dir). Because commits live
-    *    BESIDE the base relations, a concurrent
-    *    [[compactMinhashIndex]] can never swap a just-landed batch
-    *    away — compaction folds only the commits it listed at start and
-    *    deletes exactly those. This is the streaming/crawl-loop mode
-    *    ([[graft.streaming.StreamingOps.incrementalDedupStream]] keys
-    *    it by batch id).
-    *  - `None` — direct `mode("append")` into the base relations:
-    *    at-least-once (a replayed append duplicates rows — benign for
-    *    results, candidates widen and the verify stays exact; compact
-    *    collapses them) and SINGLE-WRITER with respect to compaction
-    *    (a compact racing a direct append can swap away its rows —
-    *    use tags when anything runs concurrently). Shingles append
-    *    before bands so a crash between the writes orphans only inert
-    *    shingle rows, never band rows whose candidates the verify join
-    *    would silently drop.
+    * Exactly-once per `commitTag` via
+    * [[graft.operators.IndexFs.stagedAppend]]: the batch's relations
+    * stage under `staged/<tag>/` and land with one atomic directory
+    * rename to `commits/<tag>/`; a replay of an already-landed tag
+    * writes nothing and returns false, INCLUDING after a compaction
+    * folded the tag into the base, because the fold leaves a
+    * `committed/<tag>` tombstone that
+    * [[graft.operators.IndexFs.isCommitted]] honors. Because commits
+    * live BESIDE the base relations, a concurrent [[compactMinhashIndex]]
+    * can never swap a just-landed batch away: compaction folds only the
+    * commits it listed at start and deletes exactly those. The
+    * streaming/crawl loop ([[graft.streaming.StreamingOps.incrementalDedupStream]])
+    * keys the tag by batch id.
     * The caller owns id uniqueness across appends (see the id-space
     * contract on [[minhashLshAgainstIndex]]).
     *
     * @return true if the batch's rows landed in this call; false when
     *         `commitTag` was already committed (idempotent skip). */
   def appendToMinhashIndex(newDocs: DataFrame, idCol: String, textCol: String,
-      path: String, commitTag: Option[String] = None): Boolean = {
+      path: String, commitTag: String): Boolean = {
     val spark = newDocs.sparkSession
-    if (commitTag.exists(t => IndexFs.isCommitted(spark, path, t)))
+    if (IndexFs.isCommitted(spark, path, commitTag))
       return false // already landed (live commit OR folded tombstone) —
                    // skip even the batch signing
     val m = spark.read.parquet(s"$path/meta").head()
     val idx = buildMinhashIndex(newDocs, idCol, textCol,
       m.getAs[Int]("n"), m.getAs[Int]("k"), m.getAs[Int]("bands"))
-    commitTag match {
-      case Some(tag) =>
-        IndexFs.stagedAppend(spark, path, tag,
-          Seq("bands" -> idx.bands, "shingles" -> idx.shingles))
-      case None =>
-        Seq("shingles", "bands").foreach(r =>
-          IndexFs.rollForwardPublish(spark, s"$path/$r"))
-        idx.shingles.write.mode("append").parquet(s"$path/shingles")
-        idx.bands.write.mode("append").parquet(s"$path/bands")
-        true
-    }
+    IndexFs.stagedAppend(spark, path, commitTag,
+      Seq("bands" -> idx.bands, "shingles" -> idx.shingles))
   }
 
   /** Compact a persisted index IN PLACE without re-signing any
     * document: fold the base relations plus every LANDED commit
     * ([[appendToMinhashIndex]] tags) through distinct → rewrite, so the
     * cost tracks INDEX size (id + hashes + shingle sets), never corpus
-    * text. Three things accumulate under the append regime and all
-    * collapse here: (a) duplicate rows from replayed UNTAGGED appends
-    * (identical rows collapse exactly under `distinct`), (b) per-append
-    * small part-files and commit dirs (each batch lands its own files;
+    * text. Three things accumulate under appends and all collapse
+    * here: (a) duplicate rows, from the same rows appended under two
+    * tags or from a commit a stopped compaction published but did not
+    * retire (identical rows collapse exactly under `distinct`),
+    * (b) per-append small part-files and commit dirs (each batch lands its own files;
     * at daily-crawl cadence the scan cost creeps — the rewrite re-bins
     * to the partition width the compacted size asks for and retires the
     * commit dirs into the base), and (c) the `commits/` listing itself.
@@ -350,17 +325,16 @@ object TextDedup {
     * SURVIVES the fold; orphaned `staged/` dirs from crashed appends
     * are reaped (see [[compactIndex]]).
     *
-    * Concurrency contract: TAGGED appends may run concurrently with
+    * Concurrency contract: appends may run concurrently with
     * compaction — the commit set is snapshotted up front, only those
     * dirs are folded and deleted, and a batch committing mid-compact
     * simply stays in `commits/` for the next cycle (spec-proven:
-    * TextDedupSpec "a tagged append landing mid-compact survives").
-    * UNTAGGED (direct) appends are NOT safe against a concurrent
-    * compact: their rows land in the very base dirs the swap replaces.
-    * Crash-safe via [[graft.operators.IndexFs.publishRelation]]
-    * (write-then-swap): a crash mid-compact leaves every row
-    * reachable (at worst both in the new base and in a not-yet-deleted
-    * commit dir — duplicates, collapsed by the next compact). */
+    * TextDedupSpec "tagged appends are exactly-once, excludable at
+    * load, and survive a concurrent compact"). Crash-safe via
+    * [[graft.operators.IndexFs.publishRelation]] (write-then-swap): a
+    * crash mid-compact leaves every row reachable (at worst both in the
+    * new base and in a not-yet-deleted commit dir — duplicates,
+    * collapsed by the next compact). */
   def compactMinhashIndex(spark: SparkSession, path: String): Unit =
     compactMinhashIndexWithHook(spark, path, () => ())
 
@@ -1127,15 +1101,13 @@ object TextDedup {
     * `vectors/`, one-row `meta/` with the plane-family parameters — a
     * loader can never bucket a batch under mismatched planes). The
     * offline half of incremental embedding dedup: runs once per corpus
-    * snapshot; each incoming batch pays only its own bucketing. */
+    * snapshot; each incoming batch pays only its own bucketing. A save
+    * is a full rebuild ([[graft.operators.IndexFs.resetForRebuild]]). */
   def saveEmbeddingIndex(vecs: DataFrame, idCol: String, vecCol: String,
       path: String, threshold: Double, bits: Int = -1, tables: Int = -1,
       seed: Long = 42L, dim: Int = -1,
       requireRecallTarget: Boolean = false): Unit = {
-    IndexFs.deleteRecursively(vecs.sparkSession, s"$path/commits")
-    IndexFs.deleteRecursively(vecs.sparkSession, s"$path/staged")
-    IndexFs.deleteRecursively(vecs.sparkSession, s"$path/committed")
-    IndexFs.endRefit(vecs.sparkSession, path) // full rebuild supersedes a crashed refit
+    IndexFs.resetForRebuild(vecs.sparkSession, path)
     val idx = buildEmbeddingIndex(vecs, idCol, vecCol, threshold, bits, tables,
       seed, dim, requireRecallTarget)
     // the buckets and vectors relations are independent projections of
@@ -1165,53 +1137,42 @@ object TextDedup {
     * [[appendToMinhashIndex]]'s contract for the vector modality: the
     * batch is bucketed under the INDEX's persisted plane family (the
     * caller cannot mismatch bits/tables/seed/dim) and its bucket and
-    * vector rows are appended. Same two regimes as the minhash twin:
-    * `commitTag = Some(tag)` is exactly-once per tag (staged dir + one
+    * vector rows land exactly-once per `commitTag` (staged dir + one
     * atomic rename, idempotent replay, safe against a concurrent
-    * [[compactEmbeddingIndex]]); `None` is a direct at-least-once
-    * append with the single-writer-vs-compact contract, vectors first
-    * so a half-append orphans only inert vector rows (bucket rows
-    * whose vectors are missing would generate candidates the verify
-    * join silently drops). Same id-space contract as the minhash twin.
+    * [[compactEmbeddingIndex]]). The family comes from `meta` alone:
+    * the append never reads the base relations. Same id-space contract
+    * as the minhash twin.
     *
     * @return true if the batch's rows landed in this call; false when
     *         `commitTag` was already committed (idempotent skip). */
   def appendToEmbeddingIndex(newVecs: DataFrame, idCol: String,
-      vecCol: String, path: String,
-      commitTag: Option[String] = None): Boolean = {
+      vecCol: String, path: String, commitTag: String): Boolean = {
     val spark = newVecs.sparkSession
-    if (commitTag.exists(t => IndexFs.isCommitted(spark, path, t)))
+    if (IndexFs.isCommitted(spark, path, commitTag))
       return false // already landed (live commit OR folded tombstone) —
                    // skip even the batch bucketing
-    if (commitTag.isEmpty) // the load below reads the base this append writes
-      Seq("vectors", "buckets").foreach(r =>
-        IndexFs.rollForwardPublish(spark, s"$path/$r"))
-    val idx = loadEmbeddingIndex(spark, path)
+    // bucketing under a crashed refit's family would entrench the
+    // family/bucket mismatch; converge with a refit re-run first
+    IndexFs.requireNoCrashedRefit(spark, path)
+    val m = spark.read.parquet(s"$path/meta").head()
     // spread-small seam (guide §2.5): a sub-split-size batch pays the
     // tables×bits×dim SRP fold on one task otherwise; no-op at scale
     val buckets =
       srpBucketRows(graft.GraftSession.spreadSmallInput(newVecs),
-        idCol, vecCol, idx.bits, idx.tables, idx.seed, idx.dim)
+        idCol, vecCol, m.getAs[Int]("bits"), m.getAs[Int]("tables"),
+        m.getAs[Long]("seed"), m.getAs[Int]("dim"))
         .select(col(idCol).as("id"), col("t"), col("bkt"))
     val vectors = newVecs.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    commitTag match {
-      case Some(tag) =>
-        IndexFs.stagedAppend(spark, path, tag,
-          Seq("buckets" -> buckets, "vectors" -> vectors))
-      case None =>
-        vectors.write.mode("append").parquet(s"$path/vectors")
-        buckets.write.mode("append").parquet(s"$path/buckets")
-        true
-    }
+    IndexFs.stagedAppend(spark, path, commitTag,
+      Seq("buckets" -> buckets, "vectors" -> vectors))
   }
 
   /** [[compactMinhashIndex]] for the embedding index: fold base +
     * landed commits per relation through distinct → rewrite, retiring
     * commit dirs into the base; cost tracks index size, never
     * re-bucketing work (the bucket rows ARE the index). Same
-    * [[compactIndex]] engine, so the same concurrency contract: tagged
-    * appends landing mid-compact survive, direct appends are
-    * single-writer. */
+    * [[compactIndex]] engine, so the same concurrency contract: appends
+    * landing mid-compact survive. */
   def compactEmbeddingIndex(spark: SparkSession, path: String): Unit = {
     val tables = spark.read.parquet(s"$path/meta").head().getAs[Int]("tables")
     compactIndex(spark, path, Seq("buckets", "vectors"),
@@ -1239,8 +1200,7 @@ object TextDedup {
     * rebuilt base and are tombstoned BEFORE their commit dirs are
     * deleted (exactly-once replay survives, forever); crashed appends
     * (`staged/` orphans) are dropped and deliberately NOT tombstoned —
-    * their tag may re-append later under the new family. Replayed untagged
-    * appends collapse via distinct, like compaction. Vectors are
+    * their tag may re-append later under the new family. Vectors are
     * pinned through the scratch seam before any dir is rewritten. */
   def refitEmbeddingIndex(spark: SparkSession, path: String,
       /** -1 (default) re-uses the threshold PERSISTED in the index meta

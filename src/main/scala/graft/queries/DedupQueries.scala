@@ -328,12 +328,10 @@ object DedupQueries {
     val path = SnapshotPaths.dirFor("minhash_index_append", dir, s)
     TextDedup.saveMinhashIndex(
       docs.filter(col("doc_id") % 3 === 0), "doc_id", "text", path)
-    // tagged (exactly-once) append — the save above wipes commits/, so
-    // the tag lands fresh every run while STILL exercising the staged
-    // commit protocol under the hash gate
+    // the save above wipes the tag space, so the tag lands fresh every run
     TextDedup.appendToMinhashIndex(
       docs.filter(col("doc_id") % 3 === 1), "doc_id", "text", path,
-      commitTag = Some("accepted_batch"))
+      commitTag = "accepted_batch")
     TextDedup.minhashLshAgainstIndex(
         docs.filter(col("doc_id") % 3 === 2), "doc_id", "text",
         TextDedup.loadMinhashIndex(s, path), threshold = 0.7)
@@ -364,7 +362,7 @@ object DedupQueries {
       path, threshold = 0.4, requireRecallTarget = true)
     TextDedup.appendToEmbeddingIndex(
       emb.filter(col("vec_id") % 3 === 1), "vec_id", "embedding", path,
-      commitTag = Some("accepted_batch"))
+      commitTag = "accepted_batch")
     TextDedup.embeddingNearDupAgainstIndex(
         emb.filter(col("vec_id") % 3 === 2), "vec_id", "embedding",
         TextDedup.loadEmbeddingIndex(s, path), threshold = 0.4)
@@ -390,12 +388,12 @@ object DedupQueries {
       path, threshold = 0.4, requireRecallTarget = true)
     TextDedup.appendToEmbeddingIndex(
       emb.filter(col("vec_id") % 3 === 1), "vec_id", "embedding", path,
-      commitTag = Some("accepted_batch"))
+      commitTag = "accepted_batch")
     TextDedup.refitEmbeddingIndex(s, path, threshold = 0.4,
       requireRecallTarget = true)
     TextDedup.appendToEmbeddingIndex(
       emb.filter(col("vec_id") % 3 === 1), "vec_id", "embedding", path,
-      commitTag = Some("accepted_batch"))
+      commitTag = "accepted_batch")
     TextDedup.embeddingNearDupAgainstIndex(
         emb.filter(col("vec_id") % 3 === 2), "vec_id", "embedding",
         TextDedup.loadEmbeddingIndex(s, path), threshold = 0.4)
@@ -600,7 +598,7 @@ object DedupQueries {
     Similarity.saveIvfIndex(emb.filter(col("vec_id") % 3 === 0),
       "vec_id", "embedding", path, nCentroids = 8, maxIter = 5)
     Similarity.appendToIvfIndex(emb.filter(col("vec_id") % 3 === 1),
-      "vec_id", "embedding", path, commitTag = Some("accepted_batch"))
+      "vec_id", "embedding", path, commitTag = "accepted_batch")
     val queries = emb.filter(col("vec_id") % 3 === 2 && col("vec_id") < 15)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     Similarity.ivfTopKFromIndex(Similarity.loadIvfIndex(s, path), queries,
@@ -627,12 +625,12 @@ object DedupQueries {
     Similarity.saveIvfIndex(emb.filter(col("vec_id") % 3 === 0),
       "vec_id", "embedding", path, nCentroids = 8, maxIter = 5)
     Similarity.appendToIvfIndex(emb.filter(col("vec_id") % 3 === 1),
-      "vec_id", "embedding", path, commitTag = Some("accepted_batch"))
+      "vec_id", "embedding", path, commitTag = "accepted_batch")
     // refit with a DIFFERENT seed: the new family is genuinely not the
     // frozen one, so family-independence is exercised, not vacuous
     Similarity.refitIvfIndex(s, path, nCentroids = 8, seed = 7L, maxIter = 5)
     Similarity.appendToIvfIndex(emb.filter(col("vec_id") % 3 === 1),
-      "vec_id", "embedding", path, commitTag = Some("accepted_batch"))
+      "vec_id", "embedding", path, commitTag = "accepted_batch")
     val queries = emb.filter(col("vec_id") % 3 === 2 && col("vec_id") < 15)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
     Similarity.ivfTopKFromIndex(Similarity.loadIvfIndex(s, path), queries,

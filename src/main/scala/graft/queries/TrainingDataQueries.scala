@@ -76,7 +76,7 @@ object TrainingDataQueries {
       val accepted = curated.join(dupIds, Seq("doc_id"), "left_anti")
         .pinScratch() // feeds the append AND the final output
       TextDedup.appendToMinhashIndex(
-        accepted, "doc_id", "text", idxPath, commitTag = Some(tag))
+        accepted, "doc_id", "text", idxPath, commitTag = tag)
       accepted
     }
     val (acceptedA, curatedB) = concurrently(s)({

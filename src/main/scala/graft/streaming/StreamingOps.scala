@@ -278,7 +278,7 @@ object StreamingOps {
         .select(col("d2").as(idCol)).distinct()
       graft.operators.TextDedup.appendToMinhashIndex(
         survivors.join(intraDup, Seq(idCol), "left_anti"),
-        idCol, textCol, indexPath, commitTag = Some(tag))
+        idCol, textCol, indexPath, commitTag = tag)
       ()
     }
   }

@@ -87,44 +87,6 @@ class IndexFsSpec extends SparkSpec {
     }
   }
 
-  test("renameNoClobber fallback: a dst created inside the race window resolves as a lost race, never nesting") {
-    val root = tmp("idxfs_nest")
-    val f = IndexFs.fs(spark, root)
-    def mkCommit(dir: String): Unit =
-      Seq("bands", "shingles").foreach(r => touch(s"$dir/$r/part-0"))
-    mkCommit(s"$root/staged/t1") // the loser's staged copy
-    val src = f.makeQualified(new HPath(s"$root/staged/t1"))
-    val dst = f.makeQualified(new HPath(s"$root/commits/t1"))
-    f.mkdirs(dst.getParent)
-    // the winner's commit lands BETWEEN the exists pre-check and the
-    // rename — FileSystem.rename would move the loser INTO it
-    // (commits/t1/t1) and return true, the silent-wrong layout
-    val won = IndexFs.renameNoClobberFallback(f, src, dst,
-      beforeRename = () => mkCommit(s"$root/commits/t1"))
-    assert(!won) // resolved as a lost race...
-    assert(!f.exists(new HPath(s"$root/commits/t1/t1")),
-      "loser nested inside the winner's commit")
-    // ...with the winner's layout intact
-    assert(f.listStatus(dst).map(_.getPath.getName).toSet ==
-      Set("bands", "shingles"))
-  }
-
-  test("renameNoClobber fallback: clean move when nothing races") {
-    val root = tmp("idxfs_clean")
-    val f = IndexFs.fs(spark, root)
-    touch(s"$root/staged/t1/bands/part-0")
-    val src = f.makeQualified(new HPath(s"$root/staged/t1"))
-    val dst = f.makeQualified(new HPath(s"$root/commits/t1"))
-    f.mkdirs(dst.getParent)
-    assert(IndexFs.renameNoClobberFallback(f, src, dst))
-    assert(!f.exists(src))
-    assert(f.exists(new HPath(s"$root/commits/t1/bands/part-0")))
-    // pre-existing dst short-circuits to false without touching it
-    touch(s"$root/staged/t1/bands/part-0")
-    assert(!IndexFs.renameNoClobberFallback(f, src, dst))
-    assert(f.exists(new HPath(s"$root/commits/t1/bands/part-0")))
-  }
-
   test("stagedAppend: a staged dir disturbed mid-write fails LOUDLY, never a half-appended commit") {
     import spark.implicits._
     val dir = tmp("idxfs_half")

@@ -75,7 +75,7 @@ class RecallProbeSpec extends SparkSpec {
     Similarity.saveIvfIndex(base, "vec_id", "embedding", dir,
       nCentroids = 4, maxIter = 10)
     Similarity.appendToIvfIndex(drifted, "vec_id", "embedding", dir,
-      commitTag = Some("drift"))
+      commitTag = "drift")
     // probe with drifted-region queries (what a crawl loop's fresh
     // batches look like) against the index's own eval slice
     val queries = (1000L until 1010L).map(i =>

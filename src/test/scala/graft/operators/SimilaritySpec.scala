@@ -114,7 +114,7 @@ class SimilaritySpec extends SparkSpec {
     Similarity.saveIvfIndex(partA, "vec_id", "embedding", dir,
       nCentroids = 4, maxIter = 5)
     assert(Similarity.appendToIvfIndex(partB, "vec_id", "embedding", dir,
-      commitTag = Some("b1")))
+      commitTag = "b1"))
     val idx = Similarity.loadIvfIndex(spark, dir)
     def results(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Long](1),
@@ -132,7 +132,7 @@ class SimilaritySpec extends SparkSpec {
     // replaying the tag writes nothing; cells row-set unchanged
     val cellsBefore = idx.cells.collect().toSet
     assert(!Similarity.appendToIvfIndex(partB, "vec_id", "embedding", dir,
-      commitTag = Some("b1")))
+      commitTag = "b1"))
     assert(Similarity.loadIvfIndex(spark, dir).cells.collect().toSet == cellsBefore)
     // compaction folds the commit into the base; served results unchanged
     Similarity.compactIvfIndex(spark, dir)
@@ -145,13 +145,13 @@ class SimilaritySpec extends SparkSpec {
     // the replayed batch writes nothing and the row-set stays put (the
     // r8 gap: idempotence died with the commit dir)
     assert(!Similarity.appendToIvfIndex(partB, "vec_id", "embedding", dir,
-      commitTag = Some("b1")))
+      commitTag = "b1"))
     assert(Similarity.loadIvfIndex(spark, dir).cells.collect().toSet == cellsBefore)
     // a rebuilt index re-opens the tag space (save wipes committed/)
     Similarity.saveIvfIndex(partA, "vec_id", "embedding", dir,
       nCentroids = 4, maxIter = 5)
     assert(Similarity.appendToIvfIndex(partB, "vec_id", "embedding", dir,
-      commitTag = Some("b1")))
+      commitTag = "b1"))
   }
 
   test("refitIvfIndex: new centroid family, exact vector set, tombstoned tags, re-openable crashed tags") {
@@ -163,7 +163,7 @@ class SimilaritySpec extends SparkSpec {
     Similarity.saveIvfIndex(partA, "vec_id", "embedding", dir,
       nCentroids = 4, maxIter = 5)
     assert(Similarity.appendToIvfIndex(partB, "vec_id", "embedding", dir,
-      commitTag = Some("b1")))
+      commitTag = "b1"))
     val before = Similarity.loadIvfIndex(spark, dir)
     val famBefore = before.centroids.collect().map(_.getLong(0)).toSet
     val vecsBefore = before.cells.select("id", "vec").collect().toSet
@@ -182,7 +182,7 @@ class SimilaritySpec extends SparkSpec {
     // commit dirs folded, tag tombstoned: replay is a no-op forever
     assert(IndexFs.listDirNames(spark, s"$dir/commits").isEmpty)
     assert(!Similarity.appendToIvfIndex(partB, "vec_id", "embedding", dir,
-      commitTag = Some("b1")))
+      commitTag = "b1"))
     assert(Similarity.loadIvfIndex(spark, dir)
       .cells.select("id", "vec").collect().toSet == vecsBefore)
     // served results after refit = exact fresh assignment under the new
@@ -216,7 +216,7 @@ class SimilaritySpec extends SparkSpec {
       "a crashed append must not leak into the rebuild")
     assert(!IndexFs.isCommitted(spark, cDir, "b2"))
     assert(Similarity.appendToIvfIndex(crashed, "vec_id", "embedding", cDir,
-      commitTag = Some("b2")), "a crashed tag must stay re-appendable")
+      commitTag = "b2"), "a crashed tag must stay re-appendable")
     assert(Similarity.loadIvfIndex(spark, cDir)
       .cells.select("id", "vec").collect().toSet ==
         baseVecs ++ crashed.select(col("vec_id").cast("long"),
@@ -242,7 +242,7 @@ class SimilaritySpec extends SparkSpec {
     Similarity.saveIvfIndex(base, "vec_id", "embedding", dir,
       nCentroids = 8, maxIter = 10)
     Similarity.appendToIvfIndex(drifted, "vec_id", "embedding", dir,
-      commitTag = Some("drift"))
+      commitTag = "drift")
     def maxCellShare(): Double = {
       val counts = Similarity.loadIvfIndex(spark, dir)
         .cells.groupBy("cluster_id").count()
@@ -270,7 +270,7 @@ class SimilaritySpec extends SparkSpec {
     IndexFs.beginRefit(spark, dir)
     intercept[IllegalStateException] { Similarity.loadIvfIndex(spark, dir) }
     intercept[IllegalStateException] {
-      Similarity.appendToIvfIndex(partA, "vec_id", "embedding", dir)
+      Similarity.appendToIvfIndex(partA, "vec_id", "embedding", dir, "c1")
     }
     intercept[IllegalStateException] { Similarity.compactIvfIndex(spark, dir) }
     // the documented recovery: re-run the refit (it derives everything

@@ -368,7 +368,7 @@ class TextDedupSpec extends SparkSpec {
     assert(asPairs(b1) == Set((101L, 10L)))
     // fold the whole batch in (a real pipeline would drop 101 first —
     // keeping it also checks appended near-dups of base docs surface)
-    TextDedup.appendToMinhashIndex(batch1, "doc_id", "text", dir)
+    TextDedup.appendToMinhashIndex(batch1, "doc_id", "text", dir, "b1")
 
     // collected ONCE: later in-place compaction rewrites the files a
     // lazy plan would re-scan
@@ -389,9 +389,9 @@ class TextDedupSpec extends SparkSpec {
     val idx = TextDedup.loadMinhashIndex(spark, dir)
     assert((idx.n, idx.k, idx.numBands) == (3, 32, 8))
 
-    // REPLAYED append (the at-least-once failure mode): duplicate index
-    // rows widen candidates but results stay exact…
-    TextDedup.appendToMinhashIndex(batch1, "doc_id", "text", dir)
+    // the same rows appended again under a second, distinct tag:
+    // duplicate index rows widen candidates but results stay exact…
+    TextDedup.appendToMinhashIndex(batch1, "doc_id", "text", dir, "b1-again")
     val replayed = TextDedup.loadMinhashIndex(spark, dir)
     assert(replayed.bands.count() > idx.bands.count()) // dups really landed
     assert(asPairs(TextDedup.minhashLshAgainstIndex(
@@ -423,7 +423,7 @@ class TextDedupSpec extends SparkSpec {
     // must overwrite it and land cleanly
     IndexFs.fs(spark, dir).mkdirs(new org.apache.hadoop.fs.Path(s"$dir/staged/b1/bands"))
     assert(TextDedup.appendToMinhashIndex(batch1, "doc_id", "text", dir,
-      commitTag = Some("b1")))
+      commitTag = "b1"))
     assert(IndexFs.listDirNames(spark, s"$dir/commits") == Seq("b1"))
     assert(!IndexFs.exists(spark, s"$dir/staged/b1")) // staging retired by the commit rename
     val afterB1 = TextDedup.loadMinhashIndex(spark, dir).bands.collect().toSet
@@ -431,7 +431,7 @@ class TextDedupSpec extends SparkSpec {
 
     // replaying the same tag writes NOTHING (returns false, row-set identical)
     assert(!TextDedup.appendToMinhashIndex(batch1, "doc_id", "text", dir,
-      commitTag = Some("b1")))
+      commitTag = "b1"))
     assert(TextDedup.loadMinhashIndex(spark, dir).bands.collect().toSet == afterB1)
 
     // excluding the tag reads the index exactly as it was before the append
@@ -443,7 +443,7 @@ class TextDedupSpec extends SparkSpec {
     // compact folds and deletes only the commits it listed
     TextDedup.compactMinhashIndexWithHook(spark, dir, () => {
       TextDedup.appendToMinhashIndex(batch2, "doc_id", "text", dir,
-        commitTag = Some("b2"))
+        commitTag = "b2")
       ()
     })
     assert(IndexFs.listDirNames(spark, s"$dir/commits") == Seq("b2")) // b1 folded, b2 kept
@@ -502,7 +502,7 @@ class TextDedupSpec extends SparkSpec {
 
     // append: a second batch near-duplicating batch-1's NOVEL vector
     // matches only if the append landed (the crawl loop for vectors)
-    TextDedup.appendToEmbeddingIndex(batch, "vec_id", "embedding", dir)
+    TextDedup.appendToEmbeddingIndex(batch, "vec_id", "embedding", dir, "b1")
     val batch2 = Seq((201L, vec(999, 0.01f))).toDF("vec_id", "embedding")
     val afterAppend = TextDedup.loadEmbeddingIndex(spark, dir)
     // collected ONCE: the plan lazily scans index files that the
@@ -510,13 +510,14 @@ class TextDedupSpec extends SparkSpec {
     val b2Pairs = asPairs(TextDedup.embeddingNearDupAgainstIndex(
       batch2, "vec_id", "embedding", afterAppend, threshold = 0.9))
     assert(b2Pairs == Set((201L, 105L)))
-    // replay the append, compact, and the index row multiset returns to
-    // exactly one copy per (id, bucket) — results unchanged throughout.
+    // append the same rows under a second tag, compact, and the index
+    // row multiset returns to exactly one copy per (id, bucket) —
+    // results unchanged throughout.
     // (Counts are captured BEFORE compaction: the in-place rewrite
     // deletes the files earlier DataFrames lazily point at.)
     val cleanBuckets = afterAppend.buckets.count()
     val cleanVectors = afterAppend.vectors.count()
-    TextDedup.appendToEmbeddingIndex(batch, "vec_id", "embedding", dir)
+    TextDedup.appendToEmbeddingIndex(batch, "vec_id", "embedding", dir, "b1-again")
     val replayed = TextDedup.loadEmbeddingIndex(spark, dir)
     assert(replayed.buckets.count() > cleanBuckets)
     assert(asPairs(TextDedup.embeddingNearDupAgainstIndex(
@@ -549,7 +550,7 @@ class TextDedupSpec extends SparkSpec {
     TextDedup.saveEmbeddingIndex(indexVecs, "vec_id", "embedding", dir,
       threshold = 0.9, bits = 1)
     assert(TextDedup.appendToEmbeddingIndex(batch, "vec_id", "embedding", dir,
-      commitTag = Some("b1")))
+      commitTag = "b1"))
     val before = TextDedup.loadEmbeddingIndex(spark, dir)
     val vecsBefore = before.vectors.collect().toSet
     def asPairs(df: org.apache.spark.sql.DataFrame) =
@@ -574,7 +575,7 @@ class TextDedupSpec extends SparkSpec {
     // commit folded + tombstoned: replay is a no-op forever
     assert(IndexFs.listDirNames(spark, s"$dir/commits").isEmpty)
     assert(!TextDedup.appendToEmbeddingIndex(batch, "vec_id", "embedding", dir,
-      commitTag = Some("b1")))
+      commitTag = "b1"))
     assert(TextDedup.loadEmbeddingIndex(spark, dir).vectors.collect().toSet
       == vecsBefore)
     // probing under the re-sized family preserves the result
@@ -599,7 +600,7 @@ class TextDedupSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("emb_crowd").toString
     TextDedup.saveEmbeddingIndex(small, "vec_id", "embedding", dir, threshold = 0.9)
     TextDedup.appendToEmbeddingIndex(growth, "vec_id", "embedding", dir,
-      commitTag = Some("growth"))
+      commitTag = "growth")
     def meanBucketPop(): Double = {
       val idx = TextDedup.loadEmbeddingIndex(spark, dir)
       val pops = idx.buckets.groupBy("t", "bkt").count()
@@ -671,13 +672,13 @@ class TextDedupSpec extends SparkSpec {
     TextDedup.saveEmbeddingIndex(base, "vec_id", "embedding", dir,
       threshold = 0.9, bits = 2, tables = 3)
     assert(TextDedup.appendToEmbeddingIndex(batch, "vec_id", "embedding", dir,
-      commitTag = Some("b1")))
+      commitTag = "b1"))
     val unionVecs = TextDedup.loadEmbeddingIndex(spark, dir).vectors.collect().toSet
     TextDedup.refitEmbeddingIndex(spark, dir, bits = 2, tables = 3)
     // folded: commit dirs retired, tag tombstoned, vector set preserved
     assert(IndexFs.listDirNames(spark, s"$dir/commits").isEmpty)
     assert(!TextDedup.appendToEmbeddingIndex(batch, "vec_id", "embedding", dir,
-      commitTag = Some("b1")))
+      commitTag = "b1"))
     val after = TextDedup.loadEmbeddingIndex(spark, dir)
     assert(after.vectors.collect().toSet == unionVecs)
     assert(after.bits == 2 && after.tables == 3)
@@ -699,7 +700,7 @@ class TextDedupSpec extends SparkSpec {
     intercept[IllegalStateException] { TextDedup.loadEmbeddingIndex(spark, dir) }
     intercept[IllegalStateException] { TextDedup.compactEmbeddingIndex(spark, dir) }
     intercept[IllegalStateException] {
-      TextDedup.appendToEmbeddingIndex(vecs, "vec_id", "embedding", dir)
+      TextDedup.appendToEmbeddingIndex(vecs, "vec_id", "embedding", dir, "c1")
     }
     // the documented recovery: re-run the refit. The marker forces the
     // full rebuild (family metadata can't be trusted to describe the
@@ -798,7 +799,7 @@ class TextDedupSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("mh_idx_tomb").toString
     TextDedup.saveMinhashIndex(baseDocs, "doc_id", "text", dir)
     assert(TextDedup.appendToMinhashIndex(batch1, "doc_id", "text", dir,
-      commitTag = Some("b1")))
+      commitTag = "b1"))
     val full = TextDedup.loadMinhashIndex(spark, dir).bands.collect().toSet
 
     // compact folds b1 into the base; replay protection must OUTLIVE the
@@ -813,14 +814,14 @@ class TextDedupSpec extends SparkSpec {
         assert(tag == "b1")
         assert(IndexFs.isCommitted(spark, dir, "b1"))
         assert(!TextDedup.appendToMinhashIndex(batch1, "doc_id", "text", dir,
-          commitTag = Some("b1")))
+          commitTag = "b1"))
         windowChecked = true
       })
     assert(windowChecked)
     assert(IndexFs.listDirNames(spark, s"$dir/commits").isEmpty)
     // post-fold replay: still false, row-set identical
     assert(!TextDedup.appendToMinhashIndex(batch1, "doc_id", "text", dir,
-      commitTag = Some("b1")))
+      commitTag = "b1"))
     assert(TextDedup.loadMinhashIndex(spark, dir).bands.collect().toSet == full)
     // the compact's own fold already bounded committed/ to ONE file, and
     // recognition survives further compactions
@@ -834,14 +835,14 @@ class TextDedupSpec extends SparkSpec {
     TextDedup.compactMinhashIndex(spark, dir)
     assert(committedFiles() == Seq("_folded-1"))
     assert(!TextDedup.appendToMinhashIndex(batch1, "doc_id", "text", dir,
-      commitTag = Some("b1")))
+      commitTag = "b1"))
 
     // a save* FULL REBUILD wipes the whole tag namespace: a rebuilt
     // index must accept tags the previous incarnation had folded
     TextDedup.saveMinhashIndex(baseDocs, "doc_id", "text", dir)
     assert(committedFiles().isEmpty)
     assert(TextDedup.appendToMinhashIndex(batch1, "doc_id", "text", dir,
-      commitTag = Some("b1")))
+      commitTag = "b1"))
   }
 
   test("tombstones: the embedding-index twin survives its compaction") {
@@ -855,14 +856,14 @@ class TextDedupSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("emb_idx_tomb").toString
     TextDedup.saveEmbeddingIndex(base, "vec_id", "embedding", dir, threshold = 0.9)
     assert(TextDedup.appendToEmbeddingIndex(batch, "vec_id", "embedding", dir,
-      commitTag = Some("b1")))
+      commitTag = "b1"))
     TextDedup.compactEmbeddingIndex(spark, dir)
     assert(IndexFs.listDirNames(spark, s"$dir/commits").isEmpty)
     val after = TextDedup.loadEmbeddingIndex(spark, dir)
     val buckets = after.buckets.collect().toSet
     assert(buckets.exists(_.getLong(0) == 101L)) // the fold kept the batch
     assert(!TextDedup.appendToEmbeddingIndex(batch, "vec_id", "embedding", dir,
-      commitTag = Some("b1")))
+      commitTag = "b1"))
     assert(TextDedup.loadEmbeddingIndex(spark, dir).buckets.collect().toSet == buckets)
   }
 
@@ -876,10 +877,10 @@ class TextDedupSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("mh_rename").toString
     TextDedup.saveMinhashIndex(baseDocs, "doc_id", "text", dir)
     assert(TextDedup.appendToMinhashIndex(batch1, "doc_id", "text", dir,
-      commitTag = Some("b1")))
+      commitTag = "b1"))
     TextDedup.compactMinhashIndex(spark, dir)
     assert(!TextDedup.appendToMinhashIndex(batch1, "doc_id", "text", dir,
-      commitTag = Some("b1"))) // the tombstone survives the fold
+      commitTag = "b1")) // the tombstone survives the fold
     TextDedup.compactMinhashIndex(spark, dir) // a second fold cycle
     val idx = TextDedup.loadMinhashIndex(spark, dir)
     // the folded base equals a fresh build of base ∪ batch1
@@ -904,8 +905,8 @@ class TextDedupSpec extends SparkSpec {
     spark.read.parquet(s"$dir/bands").write.parquet(s"$dir/bands.tmp-publish")
     IndexFs.rename(spark, s"$dir/bands", s"$dir/bands.old-publish")
     assert(!IndexFs.exists(spark, s"$dir/bands"))
-    // an untagged append, then a compaction: neither may drop the base
-    assert(TextDedup.appendToMinhashIndex(batch, "doc_id", "text", dir))
+    // a tagged append, then a compaction: neither may drop the base
+    assert(TextDedup.appendToMinhashIndex(batch, "doc_id", "text", dir, "b1"))
     TextDedup.compactMinhashIndex(spark, dir)
     val idx = TextDedup.loadMinhashIndex(spark, dir)
     val want = TextDedup.buildMinhashIndex(baseDocs.union(batch), "doc_id", "text")
@@ -915,7 +916,8 @@ class TextDedupSpec extends SparkSpec {
       (0L until 40L by 2).toSet + 101L)
     assert(!IndexFs.exists(spark, s"$dir/bands.tmp-publish"))
     assert(!IndexFs.exists(spark, s"$dir/bands.old-publish"))
-    // the embedding twin, whose untagged append loads the index first
+    // the embedding twin: its append reads only `meta`, so the missing
+    // `vectors` dir must not fail it
     def vec(i: Int): Seq[Float] = {
       val r = new scala.util.Random(i)
       Seq.fill(16)(r.nextGaussian().toFloat)
@@ -926,10 +928,49 @@ class TextDedupSpec extends SparkSpec {
     spark.read.parquet(s"$eDir/vectors").write.parquet(s"$eDir/vectors.tmp-publish")
     IndexFs.rename(spark, s"$eDir/vectors", s"$eDir/vectors.old-publish")
     assert(TextDedup.appendToEmbeddingIndex(Seq((101L, vec(101))).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", eDir))
+      "vec_id", "embedding", eDir, "b1"))
     TextDedup.compactEmbeddingIndex(spark, eDir)
     assert(TextDedup.loadEmbeddingIndex(spark, eDir).vectors.select("id").as[Long]
       .collect().toSet == (0L until 20L).toSet + 101L)
+  }
+
+  test("a compaction stopped between its publish and the commit retirement stays exact and converges") {
+    import spark.implicits._
+    def sent(i: Int) = (0 until 12).map(j => s"w${i * 31 + j * 7}").mkString(" ")
+    val baseDocs = (0L until 20L).map(i => (i * 2, sent(i.toInt))).toDF("doc_id", "text")
+    val batch = Seq((101L, sent(500)), (103L, sent(501))).toDF("doc_id", "text")
+    // one probe doc near-duplicates an appended doc, one a base doc
+    val probe = Seq((201L, sent(500) + " tail"), (203L, sent(7) + " tail"))
+      .toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("mh_stopped_compact").toString
+    TextDedup.saveMinhashIndex(baseDocs, "doc_id", "text", dir)
+    assert(TextDedup.appendToMinhashIndex(batch, "doc_id", "text", dir, "b1"))
+    // distinct (new_id, index_id, jaccard) rows: an index row held twice
+    // repeats its output row until the next compaction collapses it
+    def pairs(idx: TextDedup.MinhashIndex) = TextDedup.minhashLshAgainstIndex(
+        probe, "doc_id", "text", idx, threshold = 0.7)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val clean = TextDedup.loadMinhashIndex(spark, dir)
+    val cleanPairs = pairs(clean)
+    assert(cleanPairs.map(p => (p._1, p._2)) == Set((201L, 101L), (203L, 14L)))
+    val cleanBands = clean.bands.count()
+    // the folded base is published and b1 tombstoned, then the
+    // compaction stops before it deletes `commits/b1`
+    intercept[IllegalStateException] {
+      TextDedup.compactIndex(spark, dir, Seq("bands", "shingles"), _ => Seq(4, 4),
+        beforeCommitDelete = _ => throw new IllegalStateException("stopped"))
+    }
+    assert(IndexFs.listDirNames(spark, s"$dir/commits") == Seq("b1"))
+    val stopped = TextDedup.loadMinhashIndex(spark, dir)
+    assert(stopped.bands.count() > cleanBands) // b1 in the base AND its commit
+    assert(pairs(stopped) == cleanPairs)
+    assert(!TextDedup.appendToMinhashIndex(batch, "doc_id", "text", dir, "b1"))
+    TextDedup.compactMinhashIndex(spark, dir)
+    assert(IndexFs.listDirNames(spark, s"$dir/commits").isEmpty)
+    val bands = TextDedup.loadMinhashIndex(spark, dir).bands
+    val want = TextDedup.buildMinhashIndex(baseDocs.union(batch), "doc_id", "text").bands
+    assert(bands.count() == want.count())
+    assert(bands.collect().toSet == want.collect().toSet)
   }
 
   test("staged-orphan reap: live appends survive, committed and stale orphans are reaped") {
@@ -969,7 +1010,7 @@ class TextDedupSpec extends SparkSpec {
     // the survivor's tag still lands cleanly afterwards
     assert(TextDedup.appendToMinhashIndex(
       Seq((301L, sent(700))).toDF("doc_id", "text"), "doc_id", "text", dir,
-      commitTag = Some("live")))
+      commitTag = "live"))
   }
 
   test("embeddingNearDupPairs finds planted duplicate vector") {

@@ -25,6 +25,10 @@ from pathlib import Path
 
 import duckdb
 
+# the checkout this script sits in: Verify runs on, and BENCH snapshots
+# are read from, this tree
+REPO = Path(__file__).resolve().parent.parent
+
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
@@ -35,7 +39,7 @@ def main():
     if "--skip-verify" not in sys.argv:
         r = subprocess.run(
             ["sbt", "-batch", f'runMain graft.Verify {sf_dir} {out_dir}'],
-            cwd="/root/repo", capture_output=True, text=True)
+            cwd=REPO, capture_output=True, text=True)
         sys.stdout.write(r.stdout[-3000:])
         if r.returncode != 0:
             sys.stderr.write(r.stderr[-3000:])
@@ -141,9 +145,9 @@ def calibration_drift(argv):
             cur_probe = load_bench(cur_path)
         except Exception:
             pass
-        rounds = (sorted(Path("/root/repo").glob("BENCH_LOCAL_r*.jsonl"),
+        rounds = (sorted(REPO.glob("BENCH_LOCAL_r*.jsonl"),
                          key=_round_num)
-                  or sorted(Path("/root/repo").glob("BENCH_r*.json"),
+                  or sorted(REPO.glob("BENCH_r*.json"),
                             key=_round_num))
         for cand in reversed(rounds):
             try:
