@@ -150,6 +150,7 @@ object Bench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.hadoopSettings)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.silenceCheckpointReleaseWarns()

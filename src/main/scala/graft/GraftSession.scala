@@ -16,9 +16,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object GraftSession {
 
-  /** The SQL settings every engine session carries — applied by both
-    * [[builder]] and [[configure]], so no entry point spells its own. */
-  private val sqlSettings = Seq(
+  /** The settings every engine session carries — applied by both
+    * [[builder]] and [[configure]], so no entry point spells its own.
+    *
+    * The two `spark.hadoop.` keys bind `file:` to [[LocalFsBinding]].
+    * `FileContext` (the index and manifest commits of `IndexFs`) reads
+    * its binding from the Hadoop conf on every lookup, so it follows
+    * these keys in every session. Spark's own reads and writes go
+    * through the JVM-wide `FileSystem` cache instead, which keeps the
+    * first `file:` `FileSystem` the JVM built: they use the binding only
+    * when that first one was built from a conf carrying these keys, as
+    * in a JVM whose first session comes from [[builder]]. */
+  private val settings = Seq(
     "spark.sql.ansi.enabled" -> "false",
     "spark.sql.session.timeZone" -> "UTC",
     // Parquet TIMESTAMP(NANOS) (events.ts) has no Spark type; read the
@@ -30,13 +39,24 @@ object GraftSession {
     // ran a 40-task listing job: 0.24–0.33 s of wall time and 0.7–0.9 s
     // of summed task deserialization, for listings the driver does in a
     // few milliseconds. A few hundred paths stay on the driver.
-    "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "256")
+    "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "256",
+    "spark.hadoop.fs.file.impl" -> classOf[LocalFsBinding.FileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+      classOf[LocalFsBinding.AbstractFs].getName)
+
+  private val hadoopPrefix = "spark.hadoop."
+
+  /** The `spark.hadoop.` entries of [[settings]], for an entry point
+    * whose session shape is its own (`Bench`, `Verify`) to pass to its
+    * builder. */
+  val hadoopSettings: Map[String, String] =
+    settings.filter(_._1.startsWith(hadoopPrefix)).toMap
 
   def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .appName("graft")
-      .config(sqlSettings.toMap)
+      .config(settings.toMap)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -340,10 +360,14 @@ object GraftSession {
         org.apache.logging.log4j.Level.ERROR)
   }
 
-  /** Applies the engine-required SQL confs to an externally-built session
-    * (used by Verify/Bench whose session shape is driver-imposed). */
+  /** Applies [[settings]] to an externally-built session: the SQL keys
+    * to its conf, the `spark.hadoop.` keys to its Hadoop conf. */
   def configure(spark: SparkSession): SparkSession = {
-    sqlSettings.foreach { case (k, v) => spark.conf.set(k, v) }
+    settings.foreach {
+      case (k, v) if k.startsWith(hadoopPrefix) =>
+        spark.sparkContext.hadoopConfiguration.set(k.stripPrefix(hadoopPrefix), v)
+      case (k, v) => spark.conf.set(k, v)
+    }
     spark
   }
 }

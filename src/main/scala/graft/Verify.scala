@@ -15,6 +15,7 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.hadoopSettings)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.silenceCheckpointReleaseWarns()

@@ -11,13 +11,19 @@ import org.apache.spark.sql.SparkSession
   * writes a tmp sibling and swaps it in with two renames
   * ([[publishRelation]]); a tagged append stages its batch under
   * `staged/<tag>/` and lands it with one no-clobber rename to
-  * `commits/<tag>/` ([[stagedAppend]]). A directory rename is one atomic
-  * metadata operation on the local file system and on HDFS, the file
-  * systems this protocol is atomic on; object stores emulate rename as
-  * a non-atomic copy-and-delete and are not supported. No object-store
-  * path is kept: the no-clobber and overwrite primitives go through
-  * `FileContext`, and a scheme with no `AbstractFileSystem` binding
-  * makes them throw.
+  * `commits/<tag>/` ([[stagedAppend]]); a manifest commit creates its
+  * file with the same no-clobber rename ([[writeSmallFileNoClobber]]).
+  * The no-clobber and overwrite primitives go through `FileContext`,
+  * and a scheme with no `AbstractFileSystem` binding makes them throw.
+  * The no-clobber rename is atomic on HDFS, which rejects an existing
+  * destination in the NameNode, and on `file:` under
+  * [[graft.LocalFsBinding]], which makes it one link(2) (a file) or
+  * rename(2) (a directory) that fails on an existing destination.
+  * Hadoop's stock `file:` binding is not atomic here: it checks the
+  * destination and then renames, so racing writers could both win, a
+  * file could be replaced under its `.crc`, and a directory could be
+  * copied into the winner's. Object stores emulate rename as a
+  * non-atomic copy-and-delete and are not supported.
   */
 private[graft] object IndexFs {
 
@@ -52,12 +58,14 @@ private[graft] object IndexFs {
   /** No-clobber directory rename — the commit step of [[stagedAppend]].
     * Returns true when THIS call moved `src` to `dst`; false when `dst`
     * already exists (a same-tag writer won the race). Built on
-    * `FileContext.rename` with `Rename.NONE`, whose contract REJECTS an
-    * existing destination atomically on the local file system and on
-    * HDFS — unlike `FileSystem.rename`, which moves the source INTO an
-    * existing destination directory (nesting the loser's data as
-    * `dst/<srcName>` while returning true — the silent-wrong outcome
-    * for two same-tag writers). */
+    * `FileContext.rename` with `Rename.NONE`, which rejects an existing
+    * destination — atomically on HDFS and on `file:` under
+    * [[graft.LocalFsBinding]] (one rename(2); see the header). Under
+    * Hadoop's stock `file:` binding a racing loser could pass the
+    * existence check and then be copied INTO the winner's dir, as
+    * `FileSystem.rename` always does with an existing destination
+    * directory: the loser's data nested as `dst/<srcName>` while the
+    * call returns true. */
   def renameNoClobber(spark: SparkSession, src: String, dst: String): Boolean = {
     val f = fs(spark, src)
     val srcP = f.makeQualified(new HPath(src))
@@ -260,9 +268,14 @@ private[graft] object IndexFs {
     * commit: at most ONE concurrent caller per target path ever returns
     * true, and a reader never observes a partial body. The body is
     * written to a dot-prefixed tmp sibling and moved in with
-    * `FileContext.rename` under `Rename.NONE`, whose contract
-    * atomically REJECTS an existing destination on the local file
-    * system and on HDFS (the file-shaped twin of [[renameNoClobber]]).
+    * `FileContext.rename` under `Rename.NONE` (the file-shaped twin of
+    * [[renameNoClobber]]), which rejects an existing destination
+    * atomically on HDFS and on `file:` under [[graft.LocalFsBinding]]:
+    * one link(2), so the loser's body never lands, and the winner's
+    * `.crc` follows its body. Under Hadoop's stock `file:` binding the
+    * check and the rename(2) were two steps, and the body and its `.crc`
+    * moved separately: racing writers could both return true, and a
+    * body could end up under another writer's `.crc`, unreadable.
     * Returns false when the destination already exists — the caller
     * lost the race (or found a previous crash's committed file, which
     * reads the same way by design). */

@@ -10,6 +10,7 @@ object CalRefProbe {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
+      .config(graft.GraftSession.hadoopSettings)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm: Janino + shuffle machinery

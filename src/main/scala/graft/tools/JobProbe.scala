@@ -30,6 +30,7 @@ object JobProbe {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.hadoopSettings)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.silenceCheckpointReleaseWarns()

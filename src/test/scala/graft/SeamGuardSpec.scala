@@ -15,8 +15,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `copyDelta` / `commit`), and the keyed
   * snapshot has that one format — `SnapshotMerge.scala` and
   * `Revisit.scala` never publish or resolve a flat relation; parquet
-  * footers are read only by `Footers.footer`'s tail read; and no
-  * `spark.graft.*` conf key but the scratch dir exists. */
+  * footers are read only by `Footers.footer`'s tail read; the `file:`
+  * binding is spelled only in `LocalFsBinding.scala` and registered
+  * only in `GraftSession`'s settings list; and no `spark.graft.*` conf
+  * key but the scratch dir exists. */
 class SeamGuardSpec extends AnyFunSuite {
 
   private val banned =
@@ -104,6 +106,31 @@ class SeamGuardSpec extends AnyFunSuite {
       f <- files if f != seam.head
       (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
       token <- footerTokens if line.contains(token)
+    } yield s"$f:${n + 1}: $token"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  private val bindingTokens =
+    Seq("RawLocalFileSystem", "DelegateToFileSystem", "fs.file.impl", "fs.AbstractFileSystem.")
+
+  test("the file: binding lives only in LocalFsBinding and GraftSession's settings list") {
+    val files = sources()
+    val binding = files.filter(_.getFileName.toString == "LocalFsBinding.scala")
+    val session = files.filter(_.getFileName.toString == "GraftSession.scala")
+    assert(binding.size == 1 && session.size == 1,
+      "the scan must see LocalFsBinding.scala and GraftSession.scala")
+    val lines = Files.readAllLines(session.head).asScala.toIndexedSeq
+    // the list: from its definition to the first blank line
+    val start = lines.indexWhere(_.contains("private val settings = Seq("))
+    val end = lines.indexWhere(_.trim.isEmpty, start)
+    assert(start >= 0 && end > start, "GraftSession.scala must hold the settings list")
+    Seq("fs.file.impl", "fs.AbstractFileSystem.").foreach(t =>
+      assert(lines.slice(start, end).exists(_.contains(t)), s"the settings list must hold $t"))
+    val offenders = for {
+      f <- files if f != binding.head
+      (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
+      if !(f == session.head && n >= start && n < end)
+      token <- bindingTokens if line.contains(token)
     } yield s"$f:${n + 1}: $token"
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }

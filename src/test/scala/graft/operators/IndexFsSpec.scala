@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{Path => HPath}
 
 import graft.SparkSpec
@@ -148,6 +150,57 @@ class IndexFsSpec extends SparkSpec {
     // a different target is independent
     assert(IndexFs.writeSmallFileNoClobber(spark, f,
       new org.apache.hadoop.fs.Path(s"$dir/commit-v8"), "next"))
+  }
+
+  /** Runs `body(0) … body(n - 1)` on `n` threads released together. */
+  private def race[T](n: Int)(body: Int => T): Seq[T] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(n)
+    val gate = new java.util.concurrent.CyclicBarrier(n)
+    try {
+      val futures = (0 until n).map(i => pool.submit(
+        new java.util.concurrent.Callable[T] { def call(): T = { gate.await(); body(i) } }))
+      futures.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdownNow()
+  }
+
+  private def names(dir: String): Seq[String] = {
+    val s = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+    try s.iterator().asScala.map(_.getFileName.toString).toSeq.sorted finally s.close()
+  }
+
+  test("writeSmallFileNoClobber: 6 racing writers, 120 rounds: one winner, its body reads back checksum-verified") {
+    val root = tmp("idxfs_cas_race")
+    val f = IndexFs.fs(spark, root)
+    assert(f.isInstanceOf[org.apache.hadoop.fs.ChecksumFileSystem], "the read must verify checksums")
+    (1 to 120).foreach { round =>
+      val dir = s"$root/r$round"
+      f.mkdirs(new HPath(dir))
+      val p = new HPath(s"$dir/commit-v1")
+      val won = race(6)(i => IndexFs.writeSmallFileNoClobber(spark, f, p, s"body-$i"))
+      assert(won.count(identity) == 1, s"round $round: winners ${won.zipWithIndex.filter(_._1).map(_._2)}")
+      assert(IndexFs.readSmallFile(f, p) == s"body-${won.indexOf(true)}", s"round $round")
+      assert(names(dir) == Seq(".commit-v1.crc", "commit-v1"), s"round $round: debris")
+    }
+  }
+
+  test("renameNoClobber: 6 racing commits of one tag, 100 rounds: one winner, never nested") {
+    val root = tmp("idxfs_rename_race")
+    (1 to 100).foreach { round =>
+      val dir = s"$root/r$round"
+      (0 until 6).foreach { i =>
+        val staged = java.nio.file.Paths.get(s"$dir/staged/t1-$i")
+        java.nio.file.Files.createDirectories(staged)
+        java.nio.file.Files.createFile(staged.resolve(s"from-$i"))
+      }
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/commits"))
+      val won = race(6)(i =>
+        IndexFs.renameNoClobber(spark, s"$dir/staged/t1-$i", s"$dir/commits/t1"))
+      assert(won.count(identity) == 1, s"round $round: winners ${won.zipWithIndex.filter(_._1).map(_._2)}")
+      val w = won.indexOf(true)
+      assert(names(s"$dir/commits/t1") == Seq(s"from-$w"), s"round $round: commit holds more than its winner")
+      assert(names(s"$dir/staged") == (0 until 6).filter(_ != w).map(i => s"t1-$i"),
+        s"round $round: a loser's staged dir moved")
+    }
   }
 
   test("newestMtime sees part-file recency two levels deep") {
