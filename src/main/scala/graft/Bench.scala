@@ -146,12 +146,7 @@ object Bench {
     // shows dispersion — the signal that separates a real plan regression
     // from a loaded host (see BenchHarness).
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config(GraftSession.hadoopSettings)
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.silenceCheckpointReleaseWarns()
     // Warm the session (codegen compiler, parquet footer reads, shuffle

@@ -46,12 +46,6 @@ object GraftSession {
 
   private val hadoopPrefix = "spark.hadoop."
 
-  /** The `spark.hadoop.` entries of [[settings]], for an entry point
-    * whose session shape is its own (`Bench`, `Verify`) to pass to its
-    * builder. */
-  val hadoopSettings: Map[String, String] =
-    settings.filter(_._1.startsWith(hadoopPrefix)).toMap
-
   def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -62,8 +56,24 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.ui.enabled", "false")
 
+  /** The local entry points' session (`Bench`, `Verify`, the probes):
+    * `cores` workers and a shuffle width of `cores`. */
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
     builder(s"local[$cores]", math.max(cores, 1)).getOrCreate()
+
+  /** THE job-label seam: runs `body` with a `label` function that sets
+    * this thread's job description to `prefix:stage`, attributing the
+    * jobs after it in the UI and [[graft.tools.JobProbe]], and restores
+    * the caller's description in a finally — so a flow's last label
+    * never rides the caller's later jobs, whether `body` returns or
+    * throws. */
+  def withJobLabels[T](spark: SparkSession, prefix: String)(
+      body: (String => Unit) => T): T = {
+    val sc = spark.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description")
+    try body(stage => sc.setJobDescription(s"$prefix:$stage"))
+    finally sc.setJobDescription(caller)
+  }
 
   /** Shuffle-partition count that tracks input size — SCALE.md knob #2
     * (the measured 100× fix: per-task shuffle/agg state stays

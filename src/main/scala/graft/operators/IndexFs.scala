@@ -247,7 +247,7 @@ private[graft] object IndexFs {
     }
   }
 
-  /** Replace a tiny control file (a checkpoint, a stats sidecar) with NO
+  /** Replace a tiny control file (a stream checkpoint) with NO
     * truncation window: write a temp sibling, then rename it over `p`
     * with `FileContext.rename` under `Rename.OVERWRITE`, atomic on the
     * local file system and on HDFS (a bare `create(overwrite = true)`

@@ -188,7 +188,8 @@ object Layout {
     * `numFiles` output slices, local sort per slice, parquet. Content
     * is preserved row-for-row (layout only); every file's min/max
     * window is narrow in every z-dimension — the property
-    * [[fileStats]] measures and the spec asserts.
+    * [[fileStats]] measures and the spec asserts, and the footer stats
+    * [[prunedFiles]] selects files by.
     *
     * Published via [[IndexFs.publishRelation]] (write-then-swap): a
     * rewrite that crashes mid-write leaves the PREVIOUS dataset intact
@@ -200,7 +201,6 @@ object Layout {
     withMicrosTimestamps(df.sparkSession) {
       IndexFs.publishRelation(
         clustered(df, cols, numFiles, bits, curve, rankMode), path)
-      writeStatsSidecar(df.sparkSession, path, cols)
     }
 
   /** The cheap INGEST path of a clustered dataset: appends `df`'s rows
@@ -233,7 +233,6 @@ object Layout {
     withMicrosTimestamps(spark) {
       IndexFs.publishRelation(
         clustered(all, cols, numFiles, bits, curve, rankMode), path)
-      writeStatsSidecar(spark, path, cols)
     }
   }
 
@@ -266,15 +265,11 @@ object Layout {
   private case object NoStats extends ColStat
   private case object AbsentCol extends ColStat
 
-  /** One file's blocks: block index → (column → stat). */
-  private final case class FileStats(
-      file: String, blocks: Seq[Map[String, ColStat]])
-
   /** Does some block admit EVERY band? (A matching row must live in a
     * block whose every banded column's window intersects its band —
     * per-block conjunction, strictly tighter than per-file.) */
-  private def admits(fs: FileStats, bands: Seq[Band]): Boolean =
-    fs.blocks.isEmpty || fs.blocks.exists { block =>
+  private def admits(blocks: Seq[Map[String, ColStat]], bands: Seq[Band]): Boolean =
+    blocks.isEmpty || blocks.exists { block =>
       bands.forall { b =>
         block.getOrElse(b.column, AbsentCol) match {
           case RangeStat(l, h) => h >= b.lo && l <= b.hi
@@ -284,18 +279,18 @@ object Layout {
       }
     }
 
-  /** Footer-derived [[FileStats]] for one parquet file — integer-backed
+  /** One parquet file's footer stats, block by block — integer-backed
     * columns only (int/long/date/timestamp written as INT64 micros —
     * every layout and sharded-snapshot write goes through
     * [[withMicrosTimestamps]] for exactly this; a timestamp written as
     * legacy INT96 by an UNWRAPPED writer carries Binary stats, which
     * read as [[NoStats]] → kept, safe but unpruned). */
   private def footerStats(conf: org.apache.hadoop.conf.Configuration,
-      p: org.apache.hadoop.fs.Path, cols: Seq[String]): FileStats = {
+      p: org.apache.hadoop.fs.Path,
+      cols: Seq[String]): Seq[Map[String, ColStat]] = {
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.column.statistics.{IntStatistics, LongStatistics}
-    val footer = graft.sources.Footers.footer(conf, p)
-    val blocks = footer.getBlocks.asScala.toSeq.map { block =>
+    graft.sources.Footers.footer(conf, p).getBlocks.asScala.toSeq.map { block =>
       cols.map { c =>
         c -> (block.getColumns.asScala.find(_.getPath.toDotString == c) match {
           case None => AbsentCol: ColStat
@@ -311,123 +306,10 @@ object Layout {
         })
       }.toMap
     }
-    FileStats(p.toString, blocks)
   }
 
-  /** The stats sidecar's name inside a data dir — `_`-prefixed so every
-    * parquet reader treats it as hidden metadata. */
-  private[operators] val SidecarName = "_stats.tsv"
-
-  /** Persists the (file → per-block per-column min/max) map as ONE
-    * small sidecar file inside `dir` — written once at
-    * [[writeZOrdered]]/[[optimize]] time (when the files are fresh and
-    * the footers are hot), so [[prunedFiles]] answers from a single
-    * small read instead of O(files) serial driver footer GETs: the
-    * metadata plane a table format (Delta/Iceberg) keeps in its
-    * manifest, in one file. The sidecar names the columns it covers;
-    * files appended AFTER it was written ([[appendUnclustered]]) simply
-    * have no entry and are footer-read at query time (and never
-    * pruned away wrongly) — [[optimize]] rewrites the sidecar fresh. */
-  private[operators] def writeStatsSidecar(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      cols: Seq[String]): Unit = {
-    val fs = IndexFs.fs(spark, dir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath).sortBy(_.getName)
-    val kindOf: ColStat => String = {
-      case RangeStat(_, _) => "range"
-      case AllNullStat => "allnull"
-      case NoStats => "nostats"
-      case AbsentCol => "absent"
-    }
-    val lines = Seq("graft-layout-stats\tv1", s"cols\t${cols.mkString("\t")}") ++
-      files.flatMap { p =>
-        val st = footerStats(conf, p, cols)
-        st.blocks.zipWithIndex.flatMap { case (block, bi) =>
-          cols.map { c =>
-            val (kind, lo, hi) = block(c) match {
-              case RangeStat(l, h) => ("range", l.toString, h.toString)
-              case other => (kindOf(other), "", "")
-            }
-            s"${p.getName}\t$bi\t$c\t$kind\t$lo\t$hi"
-          }
-        } match {
-          // a zero-block (empty) file still needs a row so the sidecar
-          // marks it COVERED (blocks=[] admits nothing to prune wrongly)
-          case Nil => Seq(s"${p.getName}\t-\t-\tempty\t\t")
-          case rows => rows
-        }
-      }
-    IndexFs.atomicWriteSmallFile(spark, fs,
-      new org.apache.hadoop.fs.Path(s"$dir/$SidecarName"),
-      lines.mkString("\n"))
-  }
-
-  /** Parses a sidecar into (covered columns, file name → stats);
-    * None when absent or unparseable (→ footer fallback). */
-  private def readSidecar(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Option[(Set[String], Map[String, FileStats])] = {
-    val fs = IndexFs.fs(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$SidecarName")
-    if (!fs.exists(p)) return None
-    // ANY parse failure (a torn write on a scheme without an atomic
-    // rename binding, external corruption) degrades to None → the
-    // footer fallback, per the contract — a cache must never be able
-    // to brick the read path it accelerates
-    try {
-      val lines = IndexFs.readSmallFile(fs, p).split("\n").toSeq
-      if (lines.length < 2 || lines.head != "graft-layout-stats\tv1") return None
-      val cols = lines(1).split("\t").toSeq.drop(1)
-      val byFile = lines.drop(2).filter(_.nonEmpty).map(_.split("\t", -1))
-        .groupBy(_(0))
-      val stats = byFile.map { case (name, rows) =>
-        val blocks = rows.filter(_(3) != "empty").groupBy(_(1).toInt).toSeq
-          .sortBy(_._1).map { case (_, cells) =>
-            cells.map { cell =>
-              cell(2) -> (cell(3) match {
-                case "range" => RangeStat(cell(4).toLong, cell(5).toLong)
-                case "allnull" => AllNullStat
-                case "absent" => AbsentCol
-                case _ => NoStats
-              })
-            }.toMap
-          }
-        name -> FileStats(s"$dir/$name", blocks)
-      }
-      Some((cols.toSet, stats))
-    } catch {
-      case scala.util.control.NonFatal(_) => None
-    }
-  }
-
-  /** The files under a single data dir whose stats admit every
-    * band. Answers from the [[writeStatsSidecar]] sidecar when it
-    * exists and covers every banded column — one small read, zero
-    * footer GETs; files the sidecar doesn't know (later appends) and
-    * datasets without a sidecar fall back to per-file footer reads.
-    * Returns (selected paths, total file count). */
-  private[operators] def prunedFilesInDir(
-      spark: org.apache.spark.sql.SparkSession, dir: String,
-      bands: Seq[Band]): (Seq[String], Int) = {
-    require(bands.nonEmpty, "pruning needs at least one band")
-    val fs = IndexFs.fs(spark, dir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath).sortBy(_.getName)
-    val sidecar = readSidecar(spark, dir)
-      .filter { case (cols, _) => bands.forall(b => cols.contains(b.column)) }
-    val statsFor: org.apache.hadoop.fs.Path => FileStats = p =>
-      sidecar.flatMap(_._2.get(p.getName))
-        .getOrElse(footerStats(conf, p, bands.map(_.column)))
-    val selected = files.filter(p => admits(statsFor(p), bands))
-    (selected.map(_.toString).toSeq, files.length)
-  }
-
-  /** The files of a parquet dataset whose stats admit rows inside EVERY
-    * band — file-level skipping from metadata alone, no data pages
+  /** The files of one parquet data dir whose stats admit rows inside
+    * EVERY band — file-level skipping from metadata alone, no data pages
     * touched. This is the read-side payoff of [[writeZOrdered]]:
     * Spark's own parquet reader prunes row groups AFTER opening every
     * file; pre-selecting files here also removes the per-file
@@ -445,14 +327,19 @@ object Layout {
     * [[withZValue]] range-ranks; string dims are hash-ranked, so range
     * stats carry no signal for them.
     *
-    * Metadata cost: ONE small sidecar read when [[writeStatsSidecar]]
-    * ran at write time (the default — [[writeZOrdered]] and
-    * [[optimize]] both write it); only sidecar-less datasets and
-    * post-sidecar appends pay the O(files) driver footer GETs.
-    * Returns (selected, total). */
+    * Metadata cost: one driver-side footer tail read per file
+    * ([[graft.sources.Footers.footer]]). Returns (selected, total). */
   def prunedFiles(spark: org.apache.spark.sql.SparkSession, path: String,
-      bands: Seq[Band]): (Seq[String], Int) =
-    prunedFilesInDir(spark, path, bands)
+      bands: Seq[Band]): (Seq[String], Int) = {
+    require(bands.nonEmpty, "pruning needs at least one band")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = IndexFs.fs(spark, path).listStatus(new org.apache.hadoop.fs.Path(path))
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .map(_.getPath).sortBy(_.getName)
+    val selected =
+      files.filter(p => admits(footerStats(conf, p, bands.map(_.column)), bands))
+    (selected.map(_.toString).toSeq, files.length)
+  }
 
   /** Single-band [[prunedFiles]]. */
   def prunedFiles(spark: org.apache.spark.sql.SparkSession, path: String,

@@ -54,9 +54,9 @@ final class ConcurrentCommitException(msg: String)
 object SnapshotMerge {
 
   /** Thread bound for the driver-side per-shard metadata round-trips
-    * (sidecar reads, listStatus, exists): overlapped so object-store
-    * latency is not additive in shard count, bounded so a 10k-shard
-    * snapshot does not open 10k connections. */
+    * (footer reads, listStatus, exists): overlapped so their latency is
+    * not additive in shard count, bounded so a 10k-shard snapshot does
+    * not start 10k threads. */
   private val MetadataFanOut = 16
 
   /** Trailing-slash-insensitive snapshot root (a caller spelling
@@ -570,7 +570,9 @@ object SnapshotMerge {
       s"deleteCol $c absent from updates"))
     requireNoReservedKeyNames(updates, keyCols, "updates")
     commitTag.foreach(IndexFs.requireValidTag)
-    if (commitTag.exists(t => IndexFs.isCommitted(spark, dir, t))) return false
+    // a snapshot's only tag state is the per-tag marker this writer
+    // (and Revisit's first fold) leaves: no commit dirs, no fold files
+    if (commitTag.exists(t => IndexFs.exists(spark, s"$dir/committed/$t"))) return false
     // every key of the keep-last batch, deleted or not, knocks its
     // current row out; deleted rows and deleteCol never reach the inserts
     val ranked = updateOrder.fold(updates)(
@@ -656,7 +658,7 @@ object SnapshotMerge {
     * range-exchanged on (shard, z) into ≈`nShards × filesPerShard`
     * slices, and the partitioned write splits boundary slices per
     * shard — clustered files land under each `__shard=` dir, each with
-    * a narrow stats window, plus a [[Layout]] stats sidecar per shard.
+    * a narrow footer-stats window.
     * Commits like every writer ([[commit]]). Content is preserved
     * row-for-row (hash-gated in q_merge_optimize_sharded). A lost CAS
     * (a concurrent CDC batch committed mid-rewrite) throws
@@ -688,7 +690,6 @@ object SnapshotMerge {
           col("__shard"), col("__zvalue"))
         .sortWithinPartitions("__shard", "__zvalue")
         .drop("__zvalue"))
-    d.shards.values.foreach(s => Layout.writeStatsSidecar(spark, s, clusterCols))
     if (!commit(spark, dir, Some(m), d.over(m), d.written))
       throw lostRace("optimizeSharded", dir, m.version + 1)
   }
@@ -705,9 +706,8 @@ object SnapshotMerge {
     * full re-cluster (which decides row order for the split); plain
     * bin-packing it would write multi-file output in arbitrary order
     * and destroy any clustering it had. Row content is preserved
-    * exactly; existing stats sidecars do NOT carry over (the new file
-    * replaces the old boundaries — pruned reads fall back to parquet
-    * footers until the next OPTIMIZE refreshes the sidecar).
+    * exactly; the compacted file's footer stats span the files it
+    * replaces, so pruned reads skip less until the next OPTIMIZE.
     *
     * ONE Spark job for all qualifying shards (each shard's rows tagged
     * with its manifest shard id — no key re-hash, so no `keyCols`
@@ -1116,18 +1116,17 @@ object SnapshotMerge {
 
   /** Footer-stat pruned read over a sharded snapshot (after
     * [[optimizeSharded]]): file selection across every live shard dir
-    * from each shard's stats sidecar / parquet footers — a SUPERSET of
+    * from each shard's parquet footers — a SUPERSET of
     * the rows matching `bands` (re-apply the exact filter), same
     * contract as [[Layout.readPruned]]. */
   def readShardedPruned(spark: SparkSession, dir: String,
       bands: Seq[Layout.Band]): DataFrame = {
     val m = readManifest(spark, dir)
     val dirs = m.shards.toSeq.sortBy(_._1).map(_._2)
-    // one sidecar/footer fetch per shard, overlapped — serial
-    // round-trips would make the driver stall additive in shard count
-    // on an object store
+    // one footer pass per shard, overlapped — serial passes would make
+    // the driver stall additive in shard count
     val selected = GraftSession.concurrently(spark, MetadataFanOut)(
-      dirs.map(d => () => Layout.prunedFilesInDir(spark, d, bands)._1)).flatten
+      dirs.map(d => () => Layout.prunedFiles(spark, d, bands)._1)).flatten
     if (selected.isEmpty)
       spark.read.parquet(m.anchor).limit(0)
     else spark.read.parquet(selected: _*)

@@ -140,8 +140,7 @@ object AnalyticsQueries {
 
   /** Stats-based file skipping under the hard gate: the z-ordered
     * snapshot is read back through [[graft.operators.Layout.readPruned]]
-    * — file selection from the write-time stats sidecar (one small
-    * read; parquet footers are the fallback) — under a TWO-dimensional
+    * — file selection from the parquet footers — under a TWO-dimensional
     * band (user_id × ts), the conjunction a multi-dim clustered layout
     * exists to serve, with the exact filters re-applied. The oracle
     * filters the plain table, so a file wrongly pruned (lost rows) or
@@ -252,7 +251,7 @@ object AnalyticsQueries {
     "q_zorder_layout" ->
       """SELECT event_id, user_id, ts, event_type, value, props
          FROM events ORDER BY event_id""",
-    // sidecar/footer-pruned read + exact 2-dim filter ≡ filtering the
+    // footer-pruned read + exact 2-dim filter ≡ filtering the
     // plain table on the same conjunction
     "q_zorder_pruned_read" ->
       """SELECT event_id, user_id, ts, event_type, value, props

@@ -219,14 +219,8 @@ object HtmlQueries {
       cfg: graft.operators.Curation.Config =
         graft.operators.Curation.Config()): DataFrame = {
     import graft.functions.{TextAnalysis, TextNormalize}
-    // §1.5 job labels: attribute the flow's eager seams in the UI/probe;
-    // restored in the finally below so the last stage's label never
-    // leaks onto later queries' jobs (the r21 probe-misattribution bug)
-    def label(stage: String): Unit =
-      raw.sparkSession.sparkContext.setJobDescription(s"crawl:$stage")
-    val prevDesc = raw.sparkSession.sparkContext
-      .getLocalProperty("spark.job.description")
-    try {
+    // §1.5 job labels: attribute the flow's eager seams in the UI/probe
+    graft.GraftSession.withJobLabels(raw.sparkSession, "crawl") { label =>
     // spread-small seam (guide §2.5): the extract → clean chain is
     // regex-heavy per row and otherwise runs single-task over a
     // sub-split-size page relation (measured: one 1.6 s task inside
@@ -246,7 +240,7 @@ object HtmlQueries {
       .select(col("doc_id"), col("text"), col("pred_lang"))
     graft.operators.Curation.filterAndExactDedupWithLang(
       withLang, "doc_id", "text", "pred_lang", cfg)
-    } finally raw.sparkSession.sparkContext.setJobDescription(prevDesc)
+    }
   }
 
   /** The capstone's page ADDRESS: scheme/host case, www, default

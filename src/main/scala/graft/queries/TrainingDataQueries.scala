@@ -5,7 +5,7 @@ import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.GraftSession.{Pinnable, concurrently}
+import graft.GraftSession.{Pinnable, concurrently, withJobLabels}
 import graft.operators.{Blocklist, Chunking, Curation, Dsir, Packing,
   ParagraphDedup, QualityClassifier, Sampling, SemDedup, Sharding,
   SubstringDedup, TextDedup}
@@ -58,11 +58,11 @@ object TrainingDataQueries {
     // against-index → append chain stays strictly ordered (wave B must
     // see wave A's append). Every leg's inputs are unchanged, so results
     // equal the sequential spelling.
-    def curateWave(wave: Int): DataFrame = {
-      s.sparkContext.setJobDescription(s"e2e:curate_wave_$wave")
+    def curateWave(wave: Int): DataFrame = withJobLabels(s, "e2e") { label =>
+      label(s"curate_wave_$wave")
       // pinned: the curated wave feeds the against-index dedup AND the
       // anti-join below; the pin also FORCES the wave's curation jobs
-      // now, inside the overlap window
+      // now, inside the overlap window (and inside the label)
       Curation.curate(docs.filter(col("doc_id") % 4 === wave), "doc_id", "text")
         .pinScratch()
     }
@@ -83,9 +83,11 @@ object TrainingDataQueries {
       val (_, curatedA) = concurrently(s)({
         // the pre-existing corpus, signed once (save wipes stale
         // commits, so re-runs in one session start from the same state)
-        s.sparkContext.setJobDescription("e2e:index_save")
-        TextDedup.saveMinhashIndex(
-          docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", idxPath)
+        withJobLabels(s, "e2e") { label =>
+          label("index_save")
+          TextDedup.saveMinhashIndex(
+            docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", idxPath)
+        }
       }, curateWave(1))
       ingestWave(curatedA, "wave_a")
     }, curateWave(3))
@@ -177,16 +179,8 @@ object TrainingDataQueries {
     val dsRef = Option(dsirRef).getOrElse(docs)
     import graft.functions.GraftFunctions.roundPortable
     // §1.5 job labels: attribute each eager seam (pin/write/collect) to
-    // its stage in the UI / JobProbe. Thread-local, and RESTORED at the
-    // end of the flow ([[labeled]]'s try/finally) — the last stage's
-    // label would otherwise ride every later job this thread submits,
-    // misattributing whole unrelated queries in the very probe output
-    // the labels exist to feed.
-    def label(stage: String): Unit =
-      s.sparkContext.setJobDescription(s"v2:$stage")
-    val prevDesc =
-      s.sparkContext.getLocalProperty("spark.job.description")
-    try {
+    // its stage in the UI / JobProbe
+    withJobLabels(s, "v2") { label =>
 
     // the DSIR reference-LM pair depends ONLY on dsRef (the raw
     // corpus), not on stages 1-5, so it is fitted as a leg beside them;
@@ -328,7 +322,7 @@ object TrainingDataQueries {
         col("log_ratio"), col("n_tokens"), col("group_start"),
         col("chunk_text"), col("n_chunk_tokens"), col("start_offset"),
         col("bin"), col("bin_offset"), col("shard"))
-    } finally s.sparkContext.setJobDescription(prevDesc)
+    }
   }
 
   val trainingDataV2: Q = (s, dir) =>

@@ -1,17 +1,12 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
-/** Dev probe: measures [[graft.Bench.microCalibrationBody]] under the
-  * bench's default config to (re-)pin [[graft.BenchHarness.calRefSeconds]].
+/** Dev probe: measures [[graft.Bench.microCalibrationBody]] in the
+  * bench's session (the engine settings at the default cpus) to
+  * (re-)pin [[graft.BenchHarness.calRefSeconds]].
   * Run on an idle host; take the printed min. */
 object CalRefProbe {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config(graft.GraftSession.hadoopSettings)
-      .getOrCreate()
+    val spark = graft.GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // warm: Janino + shuffle machinery
     graft.Bench.microCalibrationBody(spark)()

@@ -4,7 +4,6 @@ import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import graft.{GraftSession, SparkEntry}
 
@@ -26,12 +25,7 @@ object JobProbe {
     val names = if (args.length > 1) args.tail.toSeq
       else Seq("q_training_data_v3")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config(GraftSession.hadoopSettings)
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.silenceCheckpointReleaseWarns()
     try SparkEntry.queries.headOption.foreach(_._2(spark, sfDir).count())

@@ -165,6 +165,38 @@ class GraftSessionSpec extends SparkSpec {
     assert(viaParquet == viaLocal)
   }
 
+  test("withJobLabels: a flow leaves the caller's job description as it found it, on return and on throw") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    def description = sc.getLocalProperty("spark.job.description")
+    val raw = Seq((1L, "<html><body><p>the quick brown fox jumps over the lazy dog</p></body></html>"))
+      .toDF("doc_id", "html")
+    val labeled = graft.sources.Scan.table(spark, "/root/testdata/sf0.001", "documents")
+    try {
+      for (caller <- Seq("caller's label", null)) {
+        sc.setJobDescription(caller)
+        GraftSession.withJobLabels(spark, "t") { label =>
+          label("stage")
+          assert(description == "t:stage")
+        }
+        assert(description == caller)
+        intercept[IllegalStateException] {
+          GraftSession.withJobLabels(spark, "t") { label =>
+            label("stage")
+            throw new IllegalStateException("stage failed")
+          }
+        }
+        assert(description == caller)
+        // the crawl flow labels its eager stages (a pin, the NB fit)
+        graft.queries.HtmlQueries.crawlFlow(raw, labeled)
+        assert(description == caller)
+        // ... and throws from its NB fit when the labels column is missing
+        intercept[Exception](graft.queries.HtmlQueries.crawlFlow(raw, labeled.drop("lang")))
+        assert(description == caller)
+      }
+    } finally sc.setJobDescription(null)
+  }
+
   test("partitionsForPlan schedules NO job, even for aggregate-shaped plans under AQE") {
     import spark.implicits._
     // an exchange-bearing plan: the old Dataset.rdd spelling would

@@ -15,7 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `copyDelta` / `commit`), and the keyed
   * snapshot has that one format — `SnapshotMerge.scala` and
   * `Revisit.scala` never publish or resolve a flat relation; parquet
-  * footers are read only by `Footers.footer`'s tail read; the `file:`
+  * footers are read only by `Footers.footer`'s tail read; job
+  * descriptions are set only by `GraftSession` (`withJobLabels`,
+  * `concurrently`); the `file:`
   * binding is spelled only in `LocalFsBinding.scala` and registered
   * only in `GraftSession`'s settings list; and no `spark.graft.*` conf
   * key but the scratch dir exists. */
@@ -92,6 +94,20 @@ class SeamGuardSpec extends AnyFunSuite {
     assert(flatOffenders.isEmpty,
       "the keyed snapshot commits only through the manifest:" +
         flatOffenders.mkString("\n", "\n", ""))
+  }
+
+  test("job descriptions are set only in GraftSession") {
+    val files = sources()
+    val seam = files.filter(_.getFileName.toString == "GraftSession.scala")
+    assert(seam.size == 1, "the scan must see GraftSession.scala")
+    assert(new String(Files.readAllBytes(seam.head), "UTF-8").contains("def withJobLabels["),
+      "GraftSession.scala must hold the job-label seam")
+    val offenders = for {
+      f <- files if f != seam.head
+      (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("setJobDescription")
+    } yield s"$f:${n + 1}"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
 
   private val footerTokens = Seq("ParquetFileReader", "readFooter")

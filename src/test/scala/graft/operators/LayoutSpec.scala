@@ -271,34 +271,42 @@ class LayoutSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/z").count() == before)
   }
 
-  test("stats sidecar: written at write time, answers ≡ footers exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zside").toString
+  test("pruning reads footers only: no stats file is written, a stale one is ignored") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_zfooters").toString
+    def statsFiles(d: String): Seq[String] =
+      new java.io.File(d).listFiles().map(_.getName).filter(_ == "_stats.tsv").toSeq
     Layout.writeZOrdered(events, Seq("user_id", "ts"), s"$dir/z", numFiles = 16)
-    val side = new java.io.File(s"$dir/z/${Layout.SidecarName}")
-    assert(side.exists, "writeZOrdered must persist the stats sidecar")
+    assert(statsFiles(s"$dir/z").isEmpty, "writeZOrdered wrote a stats file")
+    Layout.optimize(spark, s"$dir/z", Seq("user_id", "ts"), numFiles = 12)
+    assert(statsFiles(s"$dir/z").isEmpty, "optimize wrote a stats file")
+    val snap = s"$dir/snap"
+    SnapshotMerge.createSharded(events, Seq("event_id"), 4, snap)
+    SnapshotMerge.optimizeSharded(spark, snap, Seq("event_id"), Seq("user_id"))
+    val shardDirs = SnapshotMerge.readManifest(spark, snap).shards.values.toSeq
+    assert(shardDirs.nonEmpty)
+    shardDirs.foreach(d =>
+      assert(statsFiles(d).isEmpty, s"optimizeSharded wrote a stats file in $d"))
+    // a v1 stats file an older build left behind, claiming every file's
+    // user_id lies in [0, 0]: trusting it would prune every file away
     val bands = Seq(Layout.Band("user_id", 3L, 5L))
-    val (viaSidecar, total) = Layout.prunedFiles(spark, s"$dir/z", bands)
-    assert(viaSidecar.nonEmpty && viaSidecar.length < total)
-    // the footer path must give the IDENTICAL selection: the sidecar is
-    // a cache of the footers, never a different answer
-    assert(side.delete())
-    val (viaFooters, total2) = Layout.prunedFiles(spark, s"$dir/z", bands)
-    assert(total2 == total)
-    assert(viaSidecar.toSet == viaFooters.toSet,
-      s"sidecar selected ${viaSidecar.length}, footers ${viaFooters.length}")
-    // a band column the sidecar does not cover → clean footer fallback
-    Layout.writeZOrdered(events, Seq("user_id"), s"$dir/u", numFiles = 8)
-    val (selUncovered, t3) = Layout.prunedFiles(spark, s"$dir/u",
-      Seq(Layout.Band("event_id", 0L, 10L)))
-    assert(selUncovered.length <= t3) // no crash; footer answer
-    // a TORN/corrupt sidecar degrades to the footer answer, never a
-    // crash — the cache can't brick the read path it accelerates
+    val (clean, total) = Layout.prunedFiles(spark, s"$dir/z", bands)
+    assert(clean.nonEmpty && clean.length < total)
+    val names = new java.io.File(s"$dir/z").listFiles().map(_.getName)
+      .filter(_.endsWith(".parquet")).sorted
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/u/${Layout.SidecarName}"),
-      "graft-layout-stats\tv1\ncols\tuser_id\npart-0.parquet\t0\tuser_id\trange\t12")
-    val (selTorn, t4) = Layout.prunedFiles(spark, s"$dir/u",
-      Seq(Layout.Band("user_id", 3L, 5L)))
-    assert(t4 == 8 && selTorn.nonEmpty && selTorn.length < t4)
+      java.nio.file.Paths.get(s"$dir/z/_stats.tsv"),
+      (Seq("graft-layout-stats\tv1", "cols\tuser_id") ++
+        names.map(n => s"$n\t0\tuser_id\trange\t0\t0")).mkString("\n"))
+    val (planted, total2) = Layout.prunedFiles(spark, s"$dir/z", bands)
+    assert(total2 == total)
+    assert(planted == clean,
+      s"a stale stats file changed the selection: ${clean.length} → ${planted.length} files")
+    val exact = col("user_id").between(3, 5)
+    val pruned = Layout.readPruned(spark, s"$dir/z", bands).filter(exact)
+    val full = spark.read.parquet(s"$dir/z").filter(exact)
+    assert(full.count() > 0, "fixture vacuous: no rows in the probe band")
+    assert(pruned.exceptAll(full).count() == 0)
+    assert(full.exceptAll(pruned).count() == 0)
   }
 
   test("2-dim band: conjunction prunes harder than either dimension alone") {
@@ -345,12 +353,12 @@ class LayoutSpec extends SparkSpec {
     assert(full.count() > 0, "fixture vacuous: no rows in the time band")
   }
 
-  test("appended files have no sidecar entry and are footer-read, never lost") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zsideapp").toString
+  test("appended unclustered files are footer-read, never lost") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_zappend").toString
     val evens = events.filter(col("event_id") % 2 === 0)
     val odds = events.filter(col("event_id") % 2 === 1)
     Layout.writeZOrdered(evens, Seq("user_id", "ts"), s"$dir/z", numFiles = 8)
-    Layout.appendUnclustered(odds, s"$dir/z") // sidecar now stale (no entries)
+    Layout.appendUnclustered(odds, s"$dir/z")
     val bands = Seq(Layout.Band("user_id", 3L, 5L))
     val pruned = Layout.readPruned(spark, s"$dir/z", bands)
       .filter(col("user_id").between(3, 5))

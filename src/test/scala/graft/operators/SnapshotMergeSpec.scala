@@ -561,7 +561,7 @@ class SnapshotMergeSpec extends SparkSpec {
     }.sum
     val band = Seq(Layout.Band("cat", 0L, 9L))
     val prunedFiles = m.shards.values.toSeq.map { d =>
-      Layout.prunedFilesInDir(spark, d, band)._1.length
+      Layout.prunedFiles(spark, d, band)._1.length
     }.sum
     assert(prunedFiles < allFiles,
       s"optimizeSharded must enable skipping: $prunedFiles/$allFiles files")
