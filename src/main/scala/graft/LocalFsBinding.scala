@@ -42,7 +42,7 @@ object LocalFsBinding {
   final class AbstractFs(uri: URI, conf: Configuration)
       extends ChecksumFs(new RawAbstractFs(uri, conf))
 
-  final class RawFileSystem extends RawLocalFileSystem {
+  class RawFileSystem extends RawLocalFileSystem {
 
     /** The same mode bits through `java.nio`; bits beyond `rwxrwxrwx`
       * (the sticky bit) keep the stock path. */
@@ -98,14 +98,17 @@ object LocalFsBinding {
   }
 
   /** Hadoop's `RawLocalFs` over [[RawFileSystem]], whose no-clobber
-    * rename it routes to [[RawFileSystem.renameNoClobber]]. */
-  final class RawAbstractFs(uri: URI, conf: Configuration)
-      extends DelegateToFileSystem(uri, new RawFileSystem, conf,
-        FsConstants.LOCAL_FS_URI.getScheme, false) {
+    * rename it routes to [[RawFileSystem.renameNoClobber]]; `raw` and
+    * `scheme` let another scheme bind a subclass of the raw layer. */
+  final class RawAbstractFs(uri: URI, conf: Configuration, raw: RawFileSystem,
+      scheme: String) extends DelegateToFileSystem(uri, raw, conf, scheme, false) {
+
+    def this(uri: URI, conf: Configuration) =
+      this(uri, conf, new RawFileSystem, FsConstants.LOCAL_FS_URI.getScheme)
 
     override def renameInternal(src: Path, dst: Path, overwrite: Boolean): Unit =
       if (overwrite) super.renameInternal(src, dst, true)
-      else fsImpl.asInstanceOf[RawFileSystem].renameNoClobber(src, dst)
+      else raw.renameNoClobber(src, dst)
 
     override def getUriDefaultPort: Int = -1
     override def getServerDefaults(f: Path): FsServerDefaults =

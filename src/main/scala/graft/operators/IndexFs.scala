@@ -87,10 +87,10 @@ private[graft] object IndexFs {
     * (landed, then folded into the base by a compaction), OR it is
     * recorded in the folded-tombstone relation ([[foldTombstones]]) —
     * the replay-protection check that OUTLIVES both the commit dir and
-    * the per-tag tombstone file. Before r9 this keyed on
-    * `commits/<tag>` alone, so a batch replayed after a compaction
-    * re-appended its rows (duplicates) and, load-side, could no longer
-    * exclude its own folded-in data. */
+    * the per-tag tombstone file. Keyed on `commits/<tag>` alone, a
+    * batch replayed after a compaction would re-append its rows
+    * (duplicates) and, load-side, could no longer exclude its own
+    * folded-in data. */
   def isCommitted(spark: SparkSession, path: String, tag: String): Boolean =
     exists(spark, s"$path/commits/$tag") ||
       exists(spark, s"$path/committed/$tag") ||
@@ -101,17 +101,16 @@ private[graft] object IndexFs {
     * is no instant at which a landed tag reads as uncommitted. Per-tag
     * files are transient: each compaction ends by folding them into one
     * versioned `_folded-<n>` text file ([[foldTombstones]]), so
-    * `committed/` stays O(1) files at any append cadence — at a
-    * tag-per-15-minutes crawl loop, the unfolded r9 scheme grew ~35k
-    * listing entries per year per index, an FS-listing hazard on object
-    * stores. A `save*Index` full rebuild wipes the whole tag namespace
+    * `committed/` stays O(1) files at any append cadence — unfolded, a
+    * tag-per-15-minutes crawl loop would add ~35k listing entries per
+    * year per index. A `save*Index` full rebuild wipes the whole tag namespace
     * (commits, staged, committed — fold file included) together. */
   def markCommitted(spark: SparkSession, path: String, tag: String): Unit = {
     // path-safety only, NOT the full new-tag rule: maintenance must be
-    // able to tombstone a commit dir that ALREADY EXISTS under a name a
-    // stricter round would no longer accept (e.g. an r9-era `_`-prefixed
-    // tag) — rejecting it here would abort every future compaction of
-    // that index. The fold-file test is exact (`_folded-<digits>`), so
+    // able to tombstone a commit dir that ALREADY EXISTS under a name the
+    // new-tag rule no longer accepts (a legacy `_`-prefixed tag) —
+    // rejecting it here would abort every future compaction of that
+    // index. The fold-file test is exact (`_folded-<digits>`), so
     // even those legacy names can't be misparsed as fold versions.
     requirePathSegment(tag)
     val f = fs(spark, path)
@@ -210,21 +209,22 @@ private[graft] object IndexFs {
   }
 
   /** Publish `df` as the new content of relation `dir`: write a tmp
-    * sibling, then swap it in with two renames (`dir` to `.old-publish`,
-    * the tmp sibling to `dir`). A crash leaves the old or the new data
-    * complete, never neither; one that stops between the two renames
-    * leaves no `dir`, which [[rollForwardPublish]] mends before the next
-    * write. The two renames are not one atomic step, so a concurrent
-    * reader can see a missing dir: an error, never partial data. */
+    * sibling, then swap it in with two renames (`dir`, when present, to
+    * `.old-publish`, the tmp sibling to `dir`). A crash leaves the old
+    * or the new data complete, never neither; one that stops between
+    * the two renames leaves no `dir`, which [[rollForwardPublish]]
+    * mends before the next write. The two renames are not one atomic
+    * step, so a concurrent reader can see a missing dir: an error, never
+    * partial data. A first publish goes through the tmp sibling too: a
+    * job commit's renames land its files one at a time. */
   def publishRelation(df: org.apache.spark.sql.DataFrame, dir: String): Unit = {
     val spark = df.sparkSession
     rollForwardPublish(spark, dir)
-    if (!exists(spark, dir)) { df.write.mode("overwrite").parquet(dir); return }
     val tmp = dir + ".tmp-publish"
     val old = dir + ".old-publish"
     df.write.mode("overwrite").parquet(tmp)
     deleteRecursively(spark, old)
-    rename(spark, dir, old)
+    if (exists(spark, dir)) rename(spark, dir, old)
     rename(spark, tmp, dir)
     deleteRecursively(spark, old)
   }
@@ -249,16 +249,26 @@ private[graft] object IndexFs {
 
   /** Replace a tiny control file (a stream checkpoint) with NO
     * truncation window: write a temp sibling, then rename it over `p`
-    * with `FileContext.rename` under `Rename.OVERWRITE`, atomic on the
-    * local file system and on HDFS (a bare `create(overwrite = true)`
-    * would truncate the LIVE file first, so a crash or a concurrent
-    * read in that window sees an empty file and the whole read path
-    * bricks). */
+    * with `FileContext.rename` under `Rename.OVERWRITE` (a bare
+    * `create(overwrite = true)` would truncate the LIVE file first, so a
+    * crash or a concurrent read in that window sees an empty file and
+    * the whole read path bricks). The rename is atomic on HDFS; on
+    * `file:` it deletes `p` and then renames, so a crash between leaves
+    * no checkpoint, which the stream reads as a fresh start. A `.crc`
+    * sidecar moves in a rename of its own, so `p`'s is dropped first: a
+    * crash between the two renames leaves a body without a checksum,
+    * never one under the old body's checksum, which no read gets past
+    * (CrashSweepSpec's copySpan sweep). */
   private[graft] def atomicWriteSmallFile(spark: SparkSession, f: FileSystem,
       p: HPath, content: String): Unit = {
     val tmp = new HPath(p.getParent, p.getName + ".tmp")
     val out = f.create(tmp, true)
     try out.write(content.getBytes("UTF-8")) finally out.close()
+    f match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem =>
+        c.getRawFileSystem.delete(c.getChecksumFile(p), false)
+      case _ =>
+    }
     fileContext(spark, p).rename(f.makeQualified(tmp), f.makeQualified(p),
       org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
@@ -412,19 +422,18 @@ private[graft] object IndexFs {
       listDirNames(spark, s"$path/staged"))
 
   /** Retire commit tags whose rows a maintenance pass just folded into
-    * the rebuilt/compacted base: tombstone BEFORE delete — a replay
-    * arriving between the two still reads the tag as committed, so
-    * there is no instant at which a folded tag could re-append (the r8
-    * gap: idempotence keyed on the very commit dirs this loop
-    * deletes). `beforeCommitDelete` is the test seam proving that
-    * ordering: it runs inside the window. THE single copy of this
-    * ordering — compaction and both index refits all route here. */
+    * the rebuilt/compacted base: tombstone BEFORE delete, so a replay
+    * arriving between the two still reads the tag as committed and no
+    * instant exists at which a folded tag could re-append (idempotence
+    * cannot key on the very commit dirs this loop deletes). TextDedupSpec
+    * "tombstones: append → compact → replay is a no-op; …" replays
+    * inside that window, and CrashSweepSpec crashes at every point of
+    * it. THE single copy of this ordering: compaction and both index
+    * refits route here. */
   private[graft] def retireFoldedCommits(spark: SparkSession, path: String,
-      folded: Seq[String],
-      beforeCommitDelete: String => Unit = _ => ()): Unit =
+      folded: Seq[String]): Unit =
     folded.foreach { t =>
       markCommitted(spark, path, t)
-      beforeCommitDelete(t)
       deleteRecursively(spark, s"$path/commits/$t")
     }
 
@@ -441,12 +450,11 @@ private[graft] object IndexFs {
     * mtime, part-files included, is older than the TTL — far longer
     * than any plausible append. */
   private[graft] def reapDeadOrphans(spark: SparkSession, path: String,
-      snapshot: MaintenanceSnapshot,
-      stagedOrphanTtlMs: Long = DefaultStagedOrphanTtlMs): Unit = {
+      snapshot: MaintenanceSnapshot): Unit = {
     val now = System.currentTimeMillis()
     snapshot.stagedAtStart
       .filter(t => isCommitted(spark, path, t) ||
-        now - newestMtime(spark, s"$path/staged/$t") > stagedOrphanTtlMs)
+        now - newestMtime(spark, s"$path/staged/$t") > DefaultStagedOrphanTtlMs)
       .foreach(t => deleteRecursively(spark, s"$path/staged/$t"))
     foldTombstones(spark, path)
   }
@@ -474,20 +482,18 @@ private[graft] object IndexFs {
     * detectable outcome — the loser gets `false` (never the nested
     * `commits/<tag>/<tag>` layout — see [[renameNoClobber]]), its staged
     * copy is discarded, and none of its data mixes into the winner's
-    * commit. */
+    * commit. IndexFsSpec "stagedAppend: same-tag double commit …" and
+    * "stagedAppend: a staged dir disturbed mid-write …" act just before
+    * the commit rename; CrashSweepSpec crashes at every point. */
   def stagedAppend(spark: SparkSession, path: String, tag: String,
-      relations: Seq[(String, org.apache.spark.sql.DataFrame)],
-      /** Test seam: runs after the relation writes, before the commit
-        * rename — the window where external disturbance of the written
-        * relations must be caught by the post-commit verification. */
-      beforeCommitRename: () => Unit = () => ()): Boolean = {
+      relations: Seq[(String, org.apache.spark.sql.DataFrame)]): Boolean = {
     requireValidTag(tag)
     if (isCommitted(spark, path, tag)) return false
     val commitDir = s"$path/commits/$tag"
     val stageDir = s"$path/staged/$tag"
     deleteRecursively(spark, stageDir)
     // the batch's relations are independent projections — overlap their
-    // writes (guide §2.6); nothing is visible until the commit rename
+    // writes; nothing is visible until the commit rename
     // below, so the all-or-nothing contract is untouched
     relations match {
       case Seq((n1, d1), (n2, d2)) =>
@@ -498,15 +504,14 @@ private[graft] object IndexFs {
         df.write.mode("overwrite").parquet(s"$stageDir/$name")
       }
     }
-    beforeCommitRename()
     if (!renameNoClobber(spark, stageDir, commitDir)) {
       deleteRecursively(spark, stageDir)
       return false
     }
     // Post-commit verification that the commit carries EVERY relation of
     // the batch: anything that disturbed the written relations mid-write
-    // (an out-of-contract concurrent writer; historically, the orphan
-    // reaper racing a slow append) would otherwise land a half-appended
+    // (an out-of-contract concurrent writer, or an orphan reaper racing
+    // a slow append) would otherwise land a half-appended
     // batch — bands without shingles — that silently violates the
     // all-or-nothing invariant and breaks later loads. Fail LOUDLY and
     // clear the commit (the tag has no tombstone yet), so a clean retry

@@ -130,12 +130,14 @@ object Similarity {
     * [[loadIndex]]es it into [[ivfTopK]]'s `centroids` injection seam
     * instead of re-fitting. Schema is normalized on write (long id,
     * float vector) so a reloaded index is bit-identical input to the
-    * assignment kernel regardless of what built it. */
+    * assignment kernel regardless of what built it. Published through
+    * [[graft.operators.IndexFs.publishRelation]], so a refit that
+    * crashes mid-write leaves the old centroids whole for its re-run. */
   def saveIndex(centroids: DataFrame, path: String): Unit =
-    centroids
+    IndexFs.publishRelation(centroids
       .select(col("centroid_id").cast("long").as("centroid_id"),
         col("cvec").cast("array<float>").as("cvec"))
-      .coalesce(1).write.mode("overwrite").parquet(path)
+      .coalesce(1), path)
 
   /** Reload a [[saveIndex]]-written IVF index for [[ivfTopK]]'s
     * `centroids` parameter. */
@@ -296,7 +298,7 @@ object Similarity {
       seed: Long = 42L, maxIter: Int = 20,
       sampleRows: Int = 100000): Unit = {
     import graft.GraftSession.Pinnable
-    IndexFs.rollForwardPublish(spark, s"$path/cells")
+    Seq("cells", "centroids").foreach(r => IndexFs.rollForwardPublish(spark, s"$path/$r"))
     val snapshot = IndexFs.maintenanceSnapshot(spark, path)
     val useCentroids =
       if (nCentroids != -1) nCentroids

@@ -1050,11 +1050,11 @@ object SnapshotMerge {
     * a head that records `fromVersion` with `fromVersion`'s header and
     * shard ids — a replica that something else wrote, or one at another
     * version, fails loudly before anything is written. A lost commit
-    * race throws [[ConcurrentCommitException]] with the copy deleted.
-    * `onCommitAttempt` runs just before the commit CAS. */
+    * race throws [[ConcurrentCommitException]] with the copy deleted
+    * (StreamingOpsSpec "replicateSharded: a non-mirror replica, …"
+    * commits a restore just before the replica's manifest CAS). */
   private[graft] def copySpan(spark: SparkSession, srcDir: String,
-      replicaDir: String, fromVersion: Long, toVersion: Long,
-      onCommitAttempt: () => Unit = () => ()): Unit = {
+      replicaDir: String, fromVersion: Long, toVersion: Long): Unit = {
     val base = if (existsSharded(spark, replicaDir))
       Some(readManifest(spark, replicaDir)) else None
     if (base.exists(_.mirrors.contains(toVersion))) return
@@ -1073,7 +1073,6 @@ object SnapshotMerge {
     val d = copyDelta(spark, replicaDir, b.version + 1,
       to.shards.filter { case (k, p) => !fromShards.get(k).contains(p) },
       anchor = Some(to.anchor).filterNot(a => from.exists(_.anchor == a)))
-    onCommitAttempt()
     if (!commit(spark, replicaDir, base,
         d.over(b, replaced = b.shards.keySet -- to.shards.keySet)
           .copy(nShards = to.nShards, salt = to.salt, keys = to.keys,
@@ -1195,6 +1194,13 @@ object SnapshotMerge {
     val live = (m.shards.values.toSeq :+ m.anchor).map(qual).toSet
     val curManifest = s"manifest-v${m.version}"
     var reaped = 0
+    // version dirs this pass reaped a shard dir from: reaping bumps a
+    // dir's own mtime, so their age is that of what they still hold
+    val emptied = scala.collection.mutable.Set.empty[String]
+    def reap(p: String): Unit = {
+      IndexFs.deleteRecursively(spark, p); reaped += 1
+      emptied += qual(new org.apache.hadoop.fs.Path(p).getParent.toString)
+    }
 
     // phase 1: expired retire logs — delete what they name, then them.
     // TWO passes over the log files: a path can appear in SEVERAL
@@ -1239,7 +1245,7 @@ object SnapshotMerge {
               if (!live.contains(qual(p)) &&
                   !protectedPaths.contains(qual(p)) &&
                   IndexFs.exists(spark, p)) {
-                IndexFs.deleteRecursively(spark, p); reaped += 1
+                reap(p)
               }
             }
           }
@@ -1285,7 +1291,7 @@ object SnapshotMerge {
         if (!live.contains(q) && !protectedPaths.contains(q)) {
           if (minAgeMs == 0L) {
             if (candidateMtimes(p) <= cutoff) {
-              IndexFs.deleteRecursively(spark, p); reaped += 1
+              reap(p)
             }
           } else {
             // deterministic name per qualified path: re-sighting never
@@ -1302,14 +1308,14 @@ object SnapshotMerge {
           }
         }
     }
-    // a version dir with no shard children left is a husk (only write
-    // markers like _SUCCESS remain) — drop it whole
+    // a version dir with no shard dir left is a husk (write markers like
+    // _SUCCESS, or a crashed job's _temporary, remain) — drop it whole
     versionDirs.foreach { vDir =>
-      if (IndexFs.listDirNames(spark, vDir)
-          .count(_.startsWith("__shard=")) == 0 &&
-          IndexFs.newestMtime(spark, vDir) <= cutoff) {
+      val rest = f.listStatus(new org.apache.hadoop.fs.Path(vDir))
+      if (!rest.exists(_.getPath.getName.startsWith("__shard=")) &&
+          rest.forall(st => IndexFs.newestMtime(spark, st.getPath.toString) <= cutoff) &&
+          (emptied(qual(vDir)) || IndexFs.newestMtime(spark, vDir) <= cutoff))
         IndexFs.deleteRecursively(spark, vDir)
-      }
     }
 
     // phase 3: superseded manifest FILES no retire log names (a commit

@@ -328,28 +328,19 @@ object TextDedup {
     * Concurrency contract: appends may run concurrently with
     * compaction — the commit set is snapshotted up front, only those
     * dirs are folded and deleted, and a batch committing mid-compact
-    * simply stays in `commits/` for the next cycle (spec-proven:
-    * TextDedupSpec "tagged appends are exactly-once, excludable at
-    * load, and survive a concurrent compact"). Crash-safe via
+    * simply stays in `commits/` for the next cycle (TextDedupSpec
+    * "tagged appends are exactly-once, excludable at load, and survive
+    * a concurrent compact" lands one right after the listing). Crash-safe via
     * [[graft.operators.IndexFs.publishRelation]] (write-then-swap): a
     * crash mid-compact leaves every row reachable (at worst both in the
     * new base and in a not-yet-deleted commit dir — duplicates,
     * collapsed by the next compact). */
-  def compactMinhashIndex(spark: SparkSession, path: String): Unit =
-    compactMinhashIndexWithHook(spark, path, () => ())
-
-  /** [[compactMinhashIndex]] with a test seam: `afterSnapshot` runs
-    * after the commit listing is taken — the window where a concurrent
-    * append historically raced the swap. */
-  private[graft] def compactMinhashIndexWithHook(spark: SparkSession,
-      path: String, afterSnapshot: () => Unit): Unit = {
+  def compactMinhashIndex(spark: SparkSession, path: String): Unit = {
     val numBands = spark.read.parquet(s"$path/meta").head().getAs[Int]("bands")
-    compactIndex(spark, path, Seq("bands", "shingles"),
-      n => {
-        val p = graft.GraftSession.partitionsFor(spark, n)
-        Seq(p, math.max(1, p / math.max(1, numBands)))
-      },
-      afterSnapshot)
+    compactIndex(spark, path, Seq("bands", "shingles"), n => {
+      val p = graft.GraftSession.partitionsFor(spark, n)
+      Seq(p, math.max(1, p / math.max(1, numBands)))
+    })
   }
 
   /** The shared compact engine (minhash and embedding twins): snapshot
@@ -357,12 +348,13 @@ object TextDedup {
     * (distinct at the width `widths` assigns from the first relation's
     * row count), swap each in, then delete ONLY the folded commit dirs.
     * Relation DataFrames are built from explicit dir lists, so a commit
-    * landing after the snapshot is neither read nor deleted. */
+    * landing after the snapshot is neither read nor deleted. A stop
+    * between the publish and the commit retirement leaves duplicates
+    * that probes do not repeat (TextDedupSpec "a compaction stopped
+    * between its publish and the commit retirement …"); CrashSweepSpec
+    * crashes it at every point. */
   private[graft] def compactIndex(spark: SparkSession, path: String,
-      relations: Seq[String], widths: Long => Seq[Int],
-      afterSnapshot: () => Unit = () => (),
-      beforeCommitDelete: String => Unit = _ => (),
-      stagedOrphanTtlMs: Long = IndexFs.DefaultStagedOrphanTtlMs): Unit = {
+      relations: Seq[String], widths: Long => Seq[Int]): Unit = {
     // a crashed refit leaves family metadata and bucket/cell rows that
     // may disagree — folding commits into that base would entrench the
     // mixed-family state; converge with a refit re-run first
@@ -372,7 +364,6 @@ object TextDedup {
     // index refits (IndexFs.maintenanceSnapshot / retireFoldedCommits /
     // reapDeadOrphans — one spec-proven copy of the ordering)
     val snapshot = IndexFs.maintenanceSnapshot(spark, path)
-    afterSnapshot()
     def read(name: String): DataFrame = spark.read.parquet(
       (s"$path/$name" +:
         snapshot.landed.map(t => s"$path/commits/$t/$name")): _*)
@@ -380,8 +371,8 @@ object TextDedup {
     relations.zip(ws).foreach { case (name, w) =>
       IndexFs.publishRelation(read(name).distinct().repartition(w), s"$path/$name")
     }
-    IndexFs.retireFoldedCommits(spark, path, snapshot.landed, beforeCommitDelete)
-    IndexFs.reapDeadOrphans(spark, path, snapshot, stagedOrphanTtlMs)
+    IndexFs.retireFoldedCommits(spark, path, snapshot.landed)
+    IndexFs.reapDeadOrphans(spark, path, snapshot)
   }
 
   /** Reload a [[saveMinhashIndex]]-written index (base relations plus
@@ -513,11 +504,16 @@ object TextDedup {
           .repartition(p, col("new_id"), col("index_id")).distinct()
         shuffleVerify(cand, p)
       }
+    // an index row held twice (one batch appended under two tags, or a
+    // compaction stopped before its commit retirement) joins twice; the
+    // distinct keeps each pair once, and needs no exchange of its own
+    // (both arms are already clustered on the pair's ids)
     verified
       .withColumn("jaccard", jaccard(col("sh1"), col("sh2")))
       .filter(col("jaccard") >= threshold)
       .select(col("new_id"), col("index_id"),
         roundPortable(col("jaccard"), 4).as("jaccard"))
+      .distinct()
   }
 
   /** LSH banding: one (band, bandHash) row per signature band — the
@@ -897,8 +893,8 @@ object TextDedup {
       vecs: DataFrame, idCol: String, vecCol: String,
       threshold: Double,
       /** Bucket width per table. Default (-1) sizes it to the corpus via
-        * [[srpBitsFor]] — the measured r3 quadratic-blowup fix promoted
-        * to the DEFAULT path: a fixed bits value degrades B²/2-per-bucket
+        * [[srpBitsFor]], the default because a fixed bits value
+        * measurably blew up quadratically: it degrades B²/2-per-bucket
         * as the corpus grows. Explicit values keep exact caller control. */
       bits: Int = -1,
       /** Table count. Default (-1) sizes it from (bits, threshold) via
@@ -1084,10 +1080,10 @@ object TextDedup {
           "recall-gated oracle, which would fail on silently-missing " +
           "pairs. Raise maxTables, pass explicit smaller bits (bigger " +
           "buckets), or raise the threshold.")
-    // spread-small seam (guide §2.5): the tables×bits×dim SRP fold is
-    // the expensive map stage of the index build, and over a
-    // sub-split-size corpus it ran as ONE task feeding the buckets
-    // write (measured r22: a ~0.8 s single-task job per save). No-op
+    // spread-small seam: the tables×bits×dim SRP fold is the expensive
+    // map stage of the index build, and over a sub-split-size corpus it
+    // runs as ONE task feeding the buckets write (measured in the
+    // 168-query driver bench: a ~0.8 s single-task job per save). No-op
     // at scale, and on the refit path (pinned, already-wide input).
     val bucketed = srpBucketRows(graft.GraftSession.spreadSmallInput(vecs),
       idCol, vecCol, useBits, useTables, seed, planeDim)
@@ -1111,7 +1107,7 @@ object TextDedup {
     val idx = buildEmbeddingIndex(vecs, idCol, vecCol, threshold, bits, tables,
       seed, dim, requireRecallTarget)
     // the buckets and vectors relations are independent projections of
-    // the same input — overlap their writes (guide §2.6) so the cheap
+    // the same input — overlap their writes so the cheap
     // vectors write rides the SRP-heavy buckets write's idle capacity
     graft.GraftSession.concurrently(vecs.sparkSession)(
       idx.buckets.write.mode("overwrite").parquet(s"$path/buckets"),
@@ -1122,16 +1118,18 @@ object TextDedup {
 
   /** THE single spelling of the embedding index's meta row — save and
     * refit both route here so the persisted parameter set can never
-    * fork. `threshold` rides along (r13): the refit re-derives
+    * fork. `threshold` rides along: the refit re-derives
     * `srpTablesFor` from it by default, so a mistyped refit threshold
-    * can no longer silently re-target the family's recall. */
+    * can no longer silently re-target the family's recall. Published
+    * ([[IndexFs.publishRelation]]), so a refit that crashes mid-write
+    * leaves a whole meta row for its re-run to read. */
   private def writeEmbeddingMeta(spark: SparkSession, path: String,
       bits: Int, tables: Int, seed: Long, dim: Int, threshold: Double): Unit =
-    spark.range(1)
+    IndexFs.publishRelation(spark.range(1)
       .select(lit(bits).as("bits"), lit(tables).as("tables"),
         lit(seed).as("seed"), lit(dim).as("dim"),
         lit(threshold).as("threshold"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+      .coalesce(1), s"$path/meta")
 
   /** Fold an ACCEPTED vector batch into a persisted embedding index —
     * [[appendToMinhashIndex]]'s contract for the vector modality: the
@@ -1155,7 +1153,7 @@ object TextDedup {
     // family/bucket mismatch; converge with a refit re-run first
     IndexFs.requireNoCrashedRefit(spark, path)
     val m = spark.read.parquet(s"$path/meta").head()
-    // spread-small seam (guide §2.5): a sub-split-size batch pays the
+    // spread-small seam: a sub-split-size batch pays the
     // tables×bits×dim SRP fold on one task otherwise; no-op at scale
     val buckets =
       srpBucketRows(graft.GraftSession.spreadSmallInput(newVecs),
@@ -1219,7 +1217,7 @@ object TextDedup {
       seedOverride: Long = -1L,
       requireRecallTarget: Boolean = false): Unit = {
     import graft.GraftSession.Pinnable
-    Seq("buckets", "vectors").foreach(r =>
+    Seq("buckets", "vectors", "meta").foreach(r =>
       IndexFs.rollForwardPublish(spark, s"$path/$r"))
     val snapshot = IndexFs.maintenanceSnapshot(spark, path)
     val meta = spark.read.parquet(s"$path/meta").head()
@@ -1269,7 +1267,7 @@ object TextDedup {
     // so loads refuse until a re-run converges (IndexFs.RefitMarker)
     IndexFs.beginRefit(spark, path)
     // independent relations of the same pinned input — overlap the two
-    // publishes (guide §2.6; the saveEmbeddingIndex twin)
+    // publishes (the saveEmbeddingIndex twin)
     graft.GraftSession.concurrently(spark)(
       IndexFs.publishRelation(
         idx.buckets.repartition(
@@ -1339,7 +1337,7 @@ object TextDedup {
     // v1 lookup, and the size/byte gates all derive from this checkpoint
     // — a batch produced by an expensive upstream pipeline pays its
     // compute exactly once per call (the minhash twin's `sigs` pattern)
-    // spread BEFORE the pin (guide §2.5): the pin freezes the layout,
+    // spread BEFORE the pin: the pin freezes the layout,
     // and a one-split batch would otherwise run the SRP fold and every
     // later batch-side stage single-task; no-op at scale
     val batchVecs = graft.GraftSession.spreadSmallInput(
@@ -1382,10 +1380,13 @@ object TextDedup {
           .repartition(p, col("new_id"), col("index_id")).distinct()
         shuffleVerify(cand, p)
       }
+    // each pair once however many copies of an index row the index
+    // holds ([[minhashLshAgainstIndex]]'s distinct)
     verified
       .withColumn("cosine", cosine_similarity(col("v1"), col("v2")))
       .filter(col("cosine") >= threshold)
       .select(col("new_id"), col("index_id"),
         roundPortable(col("cosine"), 6).as("cosine"))
+      .distinct()
   }
 }

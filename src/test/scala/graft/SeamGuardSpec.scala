@@ -151,6 +151,30 @@ class SeamGuardSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
 
+  /** A function-typed parameter with a default (`hook: () => Unit =
+    * () => ()`) is a test hook in an operator's signature. Crash and
+    * race windows are driven through the `fault:` file system
+    * ([[FaultFs]]) instead; `upsertSharded`'s `onCommitAttempt` stays,
+    * because the benchmark counts commit attempts through it. */
+  private val hookParam = """=>\s*Unit\s*=(?!>)""".r
+
+  test("no operator takes a test hook but upsertSharded's onCommitAttempt") {
+    val ops = sources().filter(_.toString.contains("/graft/operators/"))
+    assert(ops.size > 20, s"the scan saw only ${ops.size} operator sources")
+    val hooks = for {
+      f <- ops
+      (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
+      if hookParam.findFirstIn(line).isDefined
+    } yield (f, n, line)
+    val allowed = hooks.filter { case (f, _, line) =>
+      f.getFileName.toString == "SnapshotMerge.scala" && line.contains("onCommitAttempt:") }
+    def at(h: (Path, Int, String)) = s"${h._1}:${h._2 + 1}: ${h._3.trim}"
+    assert(allowed.size == 1,
+      "exactly one onCommitAttempt, upsertSharded's:" + allowed.map(at).mkString("\n", "\n", ""))
+    val offenders = (hooks diff allowed).map(at)
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
   /** Engine behaviour is chosen by code, not by `spark.graft.*` conf
     * knobs; the one key allowed names a deployment path. */
   private val allowedGraftKeys = Set("\"spark.graft.scratchDir\"")

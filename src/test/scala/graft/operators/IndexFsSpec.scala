@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path => HPath}
 
-import graft.SparkSpec
+import graft.{FaultFs, SparkSpec}
 
 /** Contract tests for the staged-commit filesystem layer all three
   * persisted index families share — the r9 exactly-once machinery
@@ -15,6 +15,14 @@ class IndexFsSpec extends SparkSpec {
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** A fresh tmp dir addressed through [[FaultFs]], with its controls
+    * reset. */
+  private def faultTmp(prefix: String): String = {
+    FaultFs.install(spark.sparkContext.hadoopConfiguration)
+    FaultFs.reset()
+    FaultFs.uri(tmp(prefix))
+  }
 
   private def touch(path: String): Unit = {
     val f = IndexFs.fs(spark, path)
@@ -91,17 +99,17 @@ class IndexFsSpec extends SparkSpec {
 
   test("stagedAppend: a staged dir disturbed mid-write fails LOUDLY, never a half-appended commit") {
     import spark.implicits._
-    val dir = tmp("idxfs_half")
+    val dir = faultTmp("idxfs_half")
     val rel1 = Seq((1L, "a")).toDF("id", "v")
     val rel2 = Seq((2L, "b")).toDF("id", "v")
     // the historical reaper race: the staged dir is deleted after the
     // first relation lands and recreated by the second write — the
     // commit rename would land a batch missing relation "r1"
+    FaultFs.before("renameNoClobber", _.endsWith("/staged/t1")) {
+      IndexFs.deleteRecursively(spark, s"$dir/staged/t1/r1")
+    }
     val ex = intercept[java.io.IOException] {
-      IndexFs.stagedAppend(spark, dir, "t1",
-        Seq("r1" -> rel1, "r2" -> rel2),
-        beforeCommitRename = () =>
-          IndexFs.deleteRecursively(spark, s"$dir/staged/t1/r1"))
+      IndexFs.stagedAppend(spark, dir, "t1", Seq("r1" -> rel1, "r2" -> rel2))
     }
     assert(ex.getMessage.contains("r1"))
     // the half-commit was removed and the tag NOT burned: a clean retry lands
@@ -115,18 +123,18 @@ class IndexFsSpec extends SparkSpec {
 
   test("stagedAppend: same-tag double commit yields one winner, one false, no nested dir") {
     import spark.implicits._
-    val dir = tmp("idxfs_double")
+    val dir = faultTmp("idxfs_double")
     val rel = Seq((1L, "a")).toDF("id", "v")
     // the loser stages, then the winner commits inside the loser's
     // write→rename window; the loser's no-clobber rename must yield
     // false and leave the winner's commit exactly as it landed
-    val loser = IndexFs.stagedAppend(spark, dir, "t1", Seq("r" -> rel),
-      beforeCommitRename = () => {
-        val won = IndexFs.stagedAppend(spark, dir + "_w", "t1", Seq("r" -> rel))
-        assert(won)
-        // move the winner's commit into OUR index (same-tag writer)
-        IndexFs.rename(spark, s"${dir}_w/commits/t1", s"$dir/commits/t1")
-      })
+    FaultFs.before("renameNoClobber", _.endsWith("/staged/t1")) {
+      val won = IndexFs.stagedAppend(spark, dir + "_w", "t1", Seq("r" -> rel))
+      assert(won)
+      // move the winner's commit into OUR index (same-tag writer)
+      IndexFs.rename(spark, s"${dir}_w/commits/t1", s"$dir/commits/t1")
+    }
+    val loser = IndexFs.stagedAppend(spark, dir, "t1", Seq("r" -> rel))
     assert(!loser)
     assert(!IndexFs.exists(spark, s"$dir/commits/t1/t1"),
       "loser nested inside the winner's commit")

@@ -415,7 +415,9 @@ class TextDedupSpec extends SparkSpec {
     val baseDocs = (0L until 20L).map(i => (i * 2, sent(i.toInt))).toDF("doc_id", "text")
     val batch1 = Seq((101L, sent(500)), (103L, sent(501))).toDF("doc_id", "text")
     val batch2 = Seq((201L, sent(600))).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("mh_idx_tagged").toString
+    graft.FaultFs.install(spark.sparkContext.hadoopConfiguration)
+    val dir = graft.FaultFs.uri(
+      java.nio.file.Files.createTempDirectory("mh_idx_tagged").toString)
     TextDedup.saveMinhashIndex(baseDocs, "doc_id", "text", dir)
     val baseBands = TextDedup.loadMinhashIndex(spark, dir).bands.collect().toSet
 
@@ -438,14 +440,18 @@ class TextDedupSpec extends SparkSpec {
     assert(TextDedup.loadMinhashIndex(spark, dir, excludeCommits = Set("b1"))
       .bands.collect().toSet == baseBands)
 
-    // a tagged append landing mid-compact (after the commit snapshot —
-    // the window where the r7 wholesale swap lost rows) SURVIVES: the
-    // compact folds and deletes only the commits it listed
-    TextDedup.compactMinhashIndexWithHook(spark, dir, () => {
+    // a tagged append landing mid-compact (after the commit snapshot,
+    // just before the first publish write — the window where a wholesale
+    // swap of the index dir would lose rows) SURVIVES: the compact folds
+    // and deletes only the commits it listed
+    graft.FaultFs.reset()
+    graft.FaultFs.before("mkdirs", _.endsWith("/bands.tmp-publish")) {
       TextDedup.appendToMinhashIndex(batch2, "doc_id", "text", dir,
         commitTag = "b2")
       ()
-    })
+    }
+    TextDedup.compactMinhashIndex(spark, dir)
+    assert(graft.FaultFs.mutations.nonEmpty)
     assert(IndexFs.listDirNames(spark, s"$dir/commits") == Seq("b2")) // b1 folded, b2 kept
     val afterCompact = TextDedup.loadMinhashIndex(spark, dir)
     val ids = afterCompact.shingles.select("id").as[Long].collect().toSet
@@ -796,27 +802,34 @@ class TextDedupSpec extends SparkSpec {
     def sent(i: Int) = (0 until 12).map(j => s"w${i * 31 + j * 7}").mkString(" ")
     val baseDocs = (0L until 20L).map(i => (i * 2, sent(i.toInt))).toDF("doc_id", "text")
     val batch1 = Seq((101L, sent(500))).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("mh_idx_tomb").toString
+    graft.FaultFs.install(spark.sparkContext.hadoopConfiguration)
+    val dir = graft.FaultFs.uri(
+      java.nio.file.Files.createTempDirectory("mh_idx_tomb").toString)
     TextDedup.saveMinhashIndex(baseDocs, "doc_id", "text", dir)
     assert(TextDedup.appendToMinhashIndex(batch1, "doc_id", "text", dir,
       commitTag = "b1"))
     val full = TextDedup.loadMinhashIndex(spark, dir).bands.collect().toSet
 
     // compact folds b1 into the base; replay protection must OUTLIVE the
-    // commit dir (the r8 gap: idempotence keyed on the dir itself). The
-    // beforeCommitDelete seam drives a replay INSIDE the window between
-    // markCommitted and the commit-dir delete — no instant exists at
-    // which the landed tag reads as uncommitted.
+    // commit dir (idempotence cannot key on the dir itself). A replay
+    // runs INSIDE the window between markCommitted and the commit-dir
+    // delete — no instant exists at which the landed tag reads as
+    // uncommitted.
     var windowChecked = false
-    TextDedup.compactIndex(spark, dir, Seq("bands", "shingles"),
-      n => Seq(4, 4),
-      beforeCommitDelete = tag => {
-        assert(tag == "b1")
-        assert(IndexFs.isCommitted(spark, dir, "b1"))
-        assert(!TextDedup.appendToMinhashIndex(batch1, "doc_id", "text", dir,
-          commitTag = "b1"))
-        windowChecked = true
-      })
+    var tag = ""
+    graft.FaultFs.reset()
+    graft.FaultFs.before("delete", p => {
+      val hit = p.contains("/commits/")
+      if (hit) tag = p.split('/').last
+      hit
+    }) {
+      assert(tag == "b1")
+      assert(IndexFs.isCommitted(spark, dir, "b1"))
+      assert(!TextDedup.appendToMinhashIndex(batch1, "doc_id", "text", dir,
+        commitTag = "b1"))
+      windowChecked = true
+    }
+    TextDedup.compactIndex(spark, dir, Seq("bands", "shingles"), n => Seq(4, 4))
     assert(windowChecked)
     assert(IndexFs.listDirNames(spark, s"$dir/commits").isEmpty)
     // post-fold replay: still false, row-set identical
@@ -942,23 +955,28 @@ class TextDedupSpec extends SparkSpec {
     // one probe doc near-duplicates an appended doc, one a base doc
     val probe = Seq((201L, sent(500) + " tail"), (203L, sent(7) + " tail"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("mh_stopped_compact").toString
+    graft.FaultFs.install(spark.sparkContext.hadoopConfiguration)
+    val dir = graft.FaultFs.uri(
+      java.nio.file.Files.createTempDirectory("mh_stopped_compact").toString)
     TextDedup.saveMinhashIndex(baseDocs, "doc_id", "text", dir)
     assert(TextDedup.appendToMinhashIndex(batch, "doc_id", "text", dir, "b1"))
-    // distinct (new_id, index_id, jaccard) rows: an index row held twice
-    // repeats its output row until the next compaction collapses it
+    // the bag of (new_id, index_id, jaccard) rows: an index row held
+    // twice must not repeat its output row
     def pairs(idx: TextDedup.MinhashIndex) = TextDedup.minhashLshAgainstIndex(
         probe, "doc_id", "text", idx, threshold = 0.7)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
     val clean = TextDedup.loadMinhashIndex(spark, dir)
     val cleanPairs = pairs(clean)
-    assert(cleanPairs.map(p => (p._1, p._2)) == Set((201L, 101L), (203L, 14L)))
+    assert(cleanPairs.map(p => (p._1, p._2)) == Seq((201L, 101L), (203L, 14L)))
     val cleanBands = clean.bands.count()
     // the folded base is published and b1 tombstoned, then the
     // compaction stops before it deletes `commits/b1`
+    graft.FaultFs.reset()
+    graft.FaultFs.before("delete", _.endsWith("/commits/b1")) {
+      throw new IllegalStateException("stopped")
+    }
     intercept[IllegalStateException] {
-      TextDedup.compactIndex(spark, dir, Seq("bands", "shingles"), _ => Seq(4, 4),
-        beforeCommitDelete = _ => throw new IllegalStateException("stopped"))
+      TextDedup.compactIndex(spark, dir, Seq("bands", "shingles"), _ => Seq(4, 4))
     }
     assert(IndexFs.listDirNames(spark, s"$dir/commits") == Seq("b1"))
     val stopped = TextDedup.loadMinhashIndex(spark, dir)
@@ -971,6 +989,63 @@ class TextDedupSpec extends SparkSpec {
     val want = TextDedup.buildMinhashIndex(baseDocs.union(batch), "doc_id", "text").bands
     assert(bands.count() == want.count())
     assert(bands.collect().toSet == want.collect().toSet)
+  }
+
+  test("index probes emit each pair once while an index holds the same rows under two tags") {
+    import spark.implicits._
+    def sent(i: Int) = (0 until 12).map(j => s"w${i * 31 + j * 7}").mkString(" ")
+    val baseDocs = (0L until 20L).map(i => (i * 2, sent(i.toInt))).toDF("doc_id", "text")
+    val batch = Seq((101L, sent(500)), (103L, sent(501))).toDF("doc_id", "text")
+    val probe = Seq((201L, sent(500) + " tail"), (203L, sent(7) + " tail"))
+      .toDF("doc_id", "text")
+    def bag(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+    // minhash: the broadcast arm, the shuffle verify and the symmetric regime
+    def minhash(dir: String) = {
+      val idx = TextDedup.loadMinhashIndex(spark, dir)
+      Seq(TextDedup.minhashLshAgainstIndex(probe, "doc_id", "text", idx, threshold = 0.7),
+        TextDedup.minhashLshAgainstIndex(probe, "doc_id", "text", idx, threshold = 0.7,
+          maxBroadcastCandidates = 0L),
+        TextDedup.minhashLshAgainstIndex(probe, "doc_id", "text", idx, threshold = 0.7,
+          broadcastMaxNewDocs = 0L)).map(bag)
+    }
+    val once = java.nio.file.Files.createTempDirectory("mh_twice_once").toString
+    val twice = java.nio.file.Files.createTempDirectory("mh_twice").toString
+    Seq(once, twice).foreach(TextDedup.saveMinhashIndex(baseDocs, "doc_id", "text", _))
+    assert(TextDedup.appendToMinhashIndex(batch, "doc_id", "text", once, "b1"))
+    assert(TextDedup.appendToMinhashIndex(batch, "doc_id", "text", twice, "b1"))
+    assert(TextDedup.appendToMinhashIndex(batch, "doc_id", "text", twice, "b2"))
+    val want = minhash(once)
+    assert(want.head.map(p => (p._1, p._2)) == Seq((201L, 101L), (203L, 14L)))
+    minhash(twice).zip(want).foreach { case (got, w) => assert(got == w) }
+
+    // embedding: the broadcast arm, the shuffle verify and the symmetric regime
+    def vec(i: Int, nudge: Float = 0f): Seq[Float] = {
+      val r = new scala.util.Random(i)
+      val v = Seq.fill(16)(r.nextGaussian().toFloat)
+      if (nudge == 0f) v else v.updated(0, v.head + nudge)
+    }
+    val vecs = (0L until 20L).map(i => (i * 2, vec(i.toInt))).toDF("vec_id", "embedding")
+    val vBatch = Seq((101L, vec(999))).toDF("vec_id", "embedding")
+    val vProbe = Seq((201L, vec(999, 0.01f)), (203L, vec(5, 0.01f))).toDF("vec_id", "embedding")
+    def embedding(dir: String) = {
+      val idx = TextDedup.loadEmbeddingIndex(spark, dir)
+      Seq(TextDedup.embeddingNearDupAgainstIndex(vProbe, "vec_id", "embedding", idx, 0.9),
+        TextDedup.embeddingNearDupAgainstIndex(vProbe, "vec_id", "embedding", idx, 0.9,
+          maxBroadcastCandidates = 0L),
+        TextDedup.embeddingNearDupAgainstIndex(vProbe, "vec_id", "embedding", idx, 0.9,
+          broadcastMaxNewVecs = 0L)).map(bag)
+    }
+    val eOnce = java.nio.file.Files.createTempDirectory("emb_twice_once").toString
+    val eTwice = java.nio.file.Files.createTempDirectory("emb_twice").toString
+    Seq(eOnce, eTwice).foreach(
+      TextDedup.saveEmbeddingIndex(vecs, "vec_id", "embedding", _, threshold = 0.9))
+    assert(TextDedup.appendToEmbeddingIndex(vBatch, "vec_id", "embedding", eOnce, "b1"))
+    assert(TextDedup.appendToEmbeddingIndex(vBatch, "vec_id", "embedding", eTwice, "b1"))
+    assert(TextDedup.appendToEmbeddingIndex(vBatch, "vec_id", "embedding", eTwice, "b2"))
+    val eWant = embedding(eOnce)
+    assert(eWant.head.map(p => (p._1, p._2)) == Seq((201L, 101L), (203L, 10L)))
+    embedding(eTwice).zip(eWant).foreach { case (got, w) => assert(got == w) }
   }
 
   test("staged-orphan reap: live appends survive, committed and stale orphans are reaped") {

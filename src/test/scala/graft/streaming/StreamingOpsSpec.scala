@@ -827,9 +827,14 @@ class StreamingOpsSpec extends SparkSpec {
       SnapshotMerge.shardedVersions(spark, src).last)
     val next = SnapshotMerge.shardedVersions(spark, rep).last + 1
     assert(recorded(rep) == from.toString)
+    graft.FaultFs.install(spark.sparkContext.hadoopConfiguration)
+    graft.FaultFs.reset()
+    graft.FaultFs.before("create", _.startsWith(s"$rep/.manifest-v")) {
+      SnapshotMerge.restoreSharded(spark, rep, 1L)
+      ()
+    }
     val e = intercept[ConcurrentCommitException] {
-      SnapshotMerge.copySpan(spark, src, rep, from, to,
-        onCommitAttempt = () => SnapshotMerge.restoreSharded(spark, rep, 1L))
+      SnapshotMerge.copySpan(spark, src, graft.FaultFs.uri(rep), from, to)
     }
     assert(e.getMessage.contains(s"version $next"), e.getMessage)
     assert(!IndexFs.listDirNames(spark, rep).exists(_.startsWith(s"shards-v$next-")),
