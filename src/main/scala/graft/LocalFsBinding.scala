@@ -12,7 +12,7 @@ import org.apache.hadoop.fs.permission.FsPermission
 
 /** The engine's Hadoop binding for `file:`, registered by
   * [[GraftSession]]. It is Hadoop's checksummed local file system with
-  * three changes in the raw layer, and otherwise the same: checksums,
+  * four changes in the raw layer, and otherwise the same: checksums,
   * permissions, symlinks and the bytes on disk do not change.
   *
   * Without the native `libhadoop`, the stock binding starts a child
@@ -25,7 +25,8 @@ import org.apache.hadoop.fs.permission.FsPermission
   * which replaces a file that landed in between, and for a directory it
   * falls back to a copy into the destination. Here that rename is one
   * syscall that fails on an existing destination (see
-  * [[RawFileSystem.renameNoClobber]]).
+  * [[RawFileSystem.renameNoClobber]]), and an overwriting rename of a
+  * file is one rename(2) (see [[RawAbstractFs]]).
   */
 object LocalFsBinding {
 
@@ -40,7 +41,8 @@ object LocalFsBinding {
 
   /** `fs.AbstractFileSystem.file.impl`: the `FileContext` binding. */
   final class AbstractFs(uri: URI, conf: Configuration)
-      extends ChecksumFs(new RawAbstractFs(uri, conf))
+      extends ChecksumFs(new RawAbstractFs(uri, conf, new RawFileSystem,
+        FsConstants.LOCAL_FS_URI.getScheme))
 
   class RawFileSystem extends RawLocalFileSystem {
 
@@ -98,17 +100,23 @@ object LocalFsBinding {
   }
 
   /** Hadoop's `RawLocalFs` over [[RawFileSystem]], whose no-clobber
-    * rename it routes to [[RawFileSystem.renameNoClobber]]; `raw` and
-    * `scheme` let another scheme bind a subclass of the raw layer. */
+    * rename it routes to [[RawFileSystem.renameNoClobber]]. An
+    * overwriting rename of a file onto a file is one rename(2), which
+    * replaces the destination atomically; the stock path deletes the
+    * destination first, so a crash between the two leaves neither.
+    * `raw` and `scheme` let another scheme bind a subclass of the raw
+    * layer. */
   final class RawAbstractFs(uri: URI, conf: Configuration, raw: RawFileSystem,
       scheme: String) extends DelegateToFileSystem(uri, raw, conf, scheme, false) {
 
-    def this(uri: URI, conf: Configuration) =
-      this(uri, conf, new RawFileSystem, FsConstants.LOCAL_FS_URI.getScheme)
-
     override def renameInternal(src: Path, dst: Path, overwrite: Boolean): Unit =
-      if (overwrite) super.renameInternal(src, dst, true)
-      else raw.renameNoClobber(src, dst)
+      if (!overwrite) raw.renameNoClobber(src, dst)
+      else if (src != dst && isFile(src) && isFile(dst)) {
+        if (!raw.rename(src, dst)) throw new java.io.IOException(s"rename $src to $dst failed")
+      } else super.renameInternal(src, dst, true)
+
+    private def isFile(p: Path): Boolean =
+      Files.isRegularFile(raw.pathToFile(p).toPath, LinkOption.NOFOLLOW_LINKS)
 
     override def getUriDefaultPort: Int = -1
     override def getServerDefaults(f: Path): FsServerDefaults =

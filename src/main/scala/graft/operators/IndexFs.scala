@@ -252,11 +252,11 @@ private[graft] object IndexFs {
     * with `FileContext.rename` under `Rename.OVERWRITE` (a bare
     * `create(overwrite = true)` would truncate the LIVE file first, so a
     * crash or a concurrent read in that window sees an empty file and
-    * the whole read path bricks). The rename is atomic on HDFS; on
-    * `file:` it deletes `p` and then renames, so a crash between leaves
-    * no checkpoint, which the stream reads as a fresh start. A `.crc`
-    * sidecar moves in a rename of its own, so `p`'s is dropped first: a
-    * crash between the two renames leaves a body without a checksum,
+    * the whole read path bricks). The rename is atomic on HDFS and, under
+    * [[graft.LocalFsBinding]], on `file:` (the stock local binding
+    * deletes `p` and then renames). A `.crc` sidecar moves in a rename
+    * of its own, so `p`'s is dropped first: a crash between the two
+    * renames leaves a body without a checksum,
     * never one under the old body's checksum, which no read gets past
     * (CrashSweepSpec's copySpan sweep). */
   private[graft] def atomicWriteSmallFile(spark: SparkSession, f: FileSystem,

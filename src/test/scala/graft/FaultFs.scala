@@ -19,11 +19,11 @@ import org.apache.hadoop.fs.permission.FsPermission
   * create) is part of it. Paths under `fault:` are plain local paths.
   *
   * Two one-shot controls drive a writer into a crash state:
-  *  - [[dieAt]]`(k)`: crash point `k` and every later mutation throw
+  *  - `dieAt(k)`: crash point `k` and every later mutation throw
   *    [[Crash]] before they act, so no `finally` block can repair the
   *    disk, as after a killed process. A close that dies leaves its
   *    file empty: a torn control file is a reachable state.
-  *  - [[before]]`(op, path predicate)(action)`: runs `action`, with
+  *  - `before(op, path predicate)(action)`: runs `action`, with
   *    triggering off, just before the first matching mutation.
   *
   * A crash point is one mutation, except that a run of consecutive
@@ -122,12 +122,9 @@ object FaultFs {
   /** The control of every mutation outside a [[scope]]. */
   private val global = new Control
   def reset(): Unit = global.reset()
-  def dieAt(k: Int): Unit = global.dieAt(k)
   def before(op: String, path: String => Boolean)(action: => Unit): Unit =
     global.before(op, path)(action)
   def mutations: Seq[(Int, Mutation)] = global.mutations
-  def crashPoints: Int = global.crashPoints
-  def crashed: Option[Mutation] = global.crashed
 
   @volatile private var scopes = Map.empty[String, Control]
 

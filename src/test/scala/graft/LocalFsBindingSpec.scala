@@ -108,4 +108,31 @@ class LocalFsBindingSpec extends SparkSpec {
       }
     } finally { ours.close(); stock.close() }
   }
+
+  test("an overwriting rename of a file is one rename: a checkpoint crashed at any point reads whole") {
+    FaultFs.install(spark.sparkContext.hadoopConfiguration)
+    val root = Files.createTempDirectory("localfs_overwrite").toString
+    val ckpt = new Path(FaultFs.uri(s"$root/ck"))
+    val fs = ckpt.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def read(): String = {
+      val in = fs.open(ckpt)
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    try {
+      IndexFs.atomicWriteSmallFile(spark, fs, ckpt, "1")
+      val counting = FaultFs.scope(root)
+      IndexFs.atomicWriteSmallFile(spark, fs, ckpt, "2")
+      assert(!counting.mutations.exists { case (_, m) => m.op == "delete" && m.path == s"$root/ck" },
+        counting.mutations.mkString(", "))
+      val n = counting.crashPoints
+      (1 to n).foreach { k =>
+        FaultFs.scope(root)
+        IndexFs.atomicWriteSmallFile(spark, fs, ckpt, "old")
+        FaultFs.scope(root).dieAt(k)
+        assert(scala.util.Try(IndexFs.atomicWriteSmallFile(spark, fs, ckpt, "new")).isFailure, s"k=$k")
+        FaultFs.scope(root)
+        assert(Set("old", "new")(read()), s"k=$k of $n")
+      }
+    } finally FaultFs.unscope(root)
+  }
 }
