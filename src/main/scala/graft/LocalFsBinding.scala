@@ -34,7 +34,8 @@ object LocalFsBinding {
     * existing file returns false, as on HDFS and as under Hive's
     * `ProxyLocalFileSystem`, the class Hadoop's service loader binds to
     * `file:` on Spark's classpath when no binding is set. */
-  final class FileSystem extends LocalFileSystem(new RawFileSystem) {
+  class FileSystem(raw: RawFileSystem) extends LocalFileSystem(raw) {
+    def this() = this(new RawFileSystem)
     override def rename(src: Path, dst: Path): Boolean =
       !pathToFile(dst).isFile && super.rename(src, dst)
   }
@@ -119,8 +120,7 @@ object LocalFsBinding {
       Files.isRegularFile(raw.pathToFile(p).toPath, LinkOption.NOFOLLOW_LINKS)
 
     override def getUriDefaultPort: Int = -1
-    override def getServerDefaults(f: Path): FsServerDefaults =
-      LocalConfigKeys.getServerDefaults
+    override def getServerDefaults(f: Path): FsServerDefaults = LocalConfigKeys.getServerDefaults
     override def getServerDefaults: FsServerDefaults = LocalConfigKeys.getServerDefaults
     override def isValidName(src: String): Boolean = true
   }

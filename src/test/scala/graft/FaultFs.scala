@@ -7,7 +7,7 @@ import java.nio.file.{Files, StandardOpenOption}
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFs, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** A fault-injecting local file system for crash specs, bound to the
@@ -33,10 +33,10 @@ import org.apache.hadoop.fs.permission.FsPermission
   * commit's renames out of `_temporary/` are points of their own.
   *
   * Unsynced data is not modelled: a mutation that returned is durable.
-  * The state is JVM-wide: every `FileSystem` and `FileContext` instance
-  * of the scheme shares it. The controls on the object govern every
-  * mutation outside a [[scope]]; a scope gives one dir tree controls of
-  * its own, so crash runs on separate trees can run side by side. */
+  * The controls and the log belong to a [[scope]], one local dir tree,
+  * and are shared by every `FileSystem` and `FileContext` instance of
+  * the scheme; crash runs on separate trees can run side by side. A
+  * mutation outside every scope acts unrecorded. */
 object FaultFs {
 
   val Scheme = "fault"
@@ -60,12 +60,7 @@ object FaultFs {
   private def temporary(p: String): Boolean =
     p.contains("/_temporary/") || p.endsWith("/_temporary")
 
-  /** Whether a run of `_temporary/` mutations is one crash point (the
-    * default) or each is its own. */
-  @volatile var collapseTemporary = true
-
-  /** The controls and log of the mutations routed to it: those under
-    * a [[scope]]'s tree, or for the object itself every other one. */
+  /** The controls and log of the mutations under a [[scope]]'s tree. */
   class Control {
     private val log = ArrayBuffer.empty[(Int, Mutation)]
     private var points = 0
@@ -107,7 +102,7 @@ object FaultFs {
         try action() finally triggering = true
       }
       synchronized {
-        val tmp = collapseTemporary && temporary(m.path) && m.dst.forall(temporary)
+        val tmp = temporary(m.path) && m.dst.forall(temporary)
         if (!(tmp && lastTemporary)) points += 1
         lastTemporary = tmp
         log += points -> m
@@ -118,13 +113,6 @@ object FaultFs {
       }
     }
   }
-
-  /** The control of every mutation outside a [[scope]]. */
-  private val global = new Control
-  def reset(): Unit = global.reset()
-  def before(op: String, path: String => Boolean)(action: => Unit): Unit =
-    global.before(op, path)(action)
-  def mutations: Seq[(Int, Mutation)] = global.mutations
 
   @volatile private var scopes = Map.empty[String, Control]
 
@@ -139,12 +127,8 @@ object FaultFs {
 
   def unscope(tree: String): Unit = synchronized { scopes -= tree.stripSuffix("/") }
 
-  private def controlOf(m: Mutation): Control = {
-    val under = scopes
-    if (under.isEmpty) global
-    else under.collectFirst {
-      case (t, c) if m.path == t || m.path.startsWith(t + "/") => c
-    }.getOrElse(global)
+  private def controlOf(m: Mutation): Option[Control] = scopes.collectFirst {
+    case (t, c) if m.path == t || m.path.startsWith(t + "/") => c
   }
 
   private val depth = new ThreadLocal[Int] { override def initialValue = 0 }
@@ -153,7 +137,7 @@ object FaultFs {
     if (depth.get > 0) body
     else {
       val mutation = m
-      controlOf(mutation).enter(mutation)
+      controlOf(mutation).foreach(_.enter(mutation))
       depth.set(1)
       try body finally depth.set(0)
     }
@@ -220,10 +204,8 @@ object FaultFs {
 
   /** `fs.fault.impl`: [[LocalFsBinding.FileSystem]] over the fault raw
     * layer. */
-  final class FileSystem extends LocalFileSystem(new RawFileSystem) {
+  final class FileSystem extends LocalFsBinding.FileSystem(new RawFileSystem) {
     override def getScheme: String = Scheme
-    override def rename(src: Path, dst: Path): Boolean =
-      !pathToFile(dst).isFile && super.rename(src, dst)
   }
 
   /** `fs.AbstractFileSystem.fault.impl`: the `FileContext` binding. */

@@ -25,8 +25,7 @@ import graft.streaming.StreamingOps
   * 2014) and CrashMonkey (Mohan et al., OSDI 2018) at the Hadoop
   * `FileSystem` API. Unsynced data is not modelled: a mutation that
   * returned is durable. Mutations inside a write job's `_temporary/`
-  * form one crash point per run of them (see [[FaultFs]]); set
-  * `CRASH_SWEEP_UNCOLLAPSED=1` to make every mutation a point.
+  * form one crash point per run of them (see [[FaultFs]]).
   *
   * `Layout.appendUnclustered` is not swept: it has no replay handle and
   * its job commit lands its files one rename at a time, so a crash can
@@ -36,7 +35,6 @@ class CrashSweepSpec extends SparkSpec {
 
   private lazy val root: Path = {
     FaultFs.install(spark.sparkContext.hadoopConfiguration)
-    FaultFs.collapseTemporary = !sys.env.get("CRASH_SWEEP_UNCOLLAPSED").contains("1")
     Files.createTempDirectory("crash_sweep")
   }
 

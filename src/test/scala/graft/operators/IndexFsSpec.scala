@@ -16,12 +16,11 @@ class IndexFsSpec extends SparkSpec {
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  /** A fresh tmp dir addressed through [[FaultFs]], with its controls
-    * reset. */
-  private def faultTmp(prefix: String): String = {
+  /** A fresh tmp dir addressed through [[FaultFs]], and its control. */
+  private def faultTmp(prefix: String): (String, FaultFs.Control) = {
     FaultFs.install(spark.sparkContext.hadoopConfiguration)
-    FaultFs.reset()
-    FaultFs.uri(tmp(prefix))
+    val local = tmp(prefix)
+    (FaultFs.uri(local), FaultFs.scope(local))
   }
 
   private def touch(path: String): Unit = {
@@ -99,13 +98,13 @@ class IndexFsSpec extends SparkSpec {
 
   test("stagedAppend: a staged dir disturbed mid-write fails LOUDLY, never a half-appended commit") {
     import spark.implicits._
-    val dir = faultTmp("idxfs_half")
+    val (dir, fault) = faultTmp("idxfs_half")
     val rel1 = Seq((1L, "a")).toDF("id", "v")
     val rel2 = Seq((2L, "b")).toDF("id", "v")
     // the historical reaper race: the staged dir is deleted after the
     // first relation lands and recreated by the second write — the
     // commit rename would land a batch missing relation "r1"
-    FaultFs.before("renameNoClobber", _.endsWith("/staged/t1")) {
+    fault.before("renameNoClobber", _.endsWith("/staged/t1")) {
       IndexFs.deleteRecursively(spark, s"$dir/staged/t1/r1")
     }
     val ex = intercept[java.io.IOException] {
@@ -123,12 +122,12 @@ class IndexFsSpec extends SparkSpec {
 
   test("stagedAppend: same-tag double commit yields one winner, one false, no nested dir") {
     import spark.implicits._
-    val dir = faultTmp("idxfs_double")
+    val (dir, fault) = faultTmp("idxfs_double")
     val rel = Seq((1L, "a")).toDF("id", "v")
     // the loser stages, then the winner commits inside the loser's
     // write→rename window; the loser's no-clobber rename must yield
     // false and leave the winner's commit exactly as it landed
-    FaultFs.before("renameNoClobber", _.endsWith("/staged/t1")) {
+    fault.before("renameNoClobber", _.endsWith("/staged/t1")) {
       val won = IndexFs.stagedAppend(spark, dir + "_w", "t1", Seq("r" -> rel))
       assert(won)
       // move the winner's commit into OUR index (same-tag writer)

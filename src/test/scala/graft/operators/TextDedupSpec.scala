@@ -416,8 +416,8 @@ class TextDedupSpec extends SparkSpec {
     val batch1 = Seq((101L, sent(500)), (103L, sent(501))).toDF("doc_id", "text")
     val batch2 = Seq((201L, sent(600))).toDF("doc_id", "text")
     graft.FaultFs.install(spark.sparkContext.hadoopConfiguration)
-    val dir = graft.FaultFs.uri(
-      java.nio.file.Files.createTempDirectory("mh_idx_tagged").toString)
+    val local = java.nio.file.Files.createTempDirectory("mh_idx_tagged").toString
+    val (dir, fault) = (graft.FaultFs.uri(local), graft.FaultFs.scope(local))
     TextDedup.saveMinhashIndex(baseDocs, "doc_id", "text", dir)
     val baseBands = TextDedup.loadMinhashIndex(spark, dir).bands.collect().toSet
 
@@ -444,14 +444,13 @@ class TextDedupSpec extends SparkSpec {
     // just before the first publish write — the window where a wholesale
     // swap of the index dir would lose rows) SURVIVES: the compact folds
     // and deletes only the commits it listed
-    graft.FaultFs.reset()
-    graft.FaultFs.before("mkdirs", _.endsWith("/bands.tmp-publish")) {
+    fault.before("mkdirs", _.endsWith("/bands.tmp-publish")) {
       TextDedup.appendToMinhashIndex(batch2, "doc_id", "text", dir,
         commitTag = "b2")
       ()
     }
     TextDedup.compactMinhashIndex(spark, dir)
-    assert(graft.FaultFs.mutations.nonEmpty)
+    assert(fault.mutations.nonEmpty)
     assert(IndexFs.listDirNames(spark, s"$dir/commits") == Seq("b2")) // b1 folded, b2 kept
     val afterCompact = TextDedup.loadMinhashIndex(spark, dir)
     val ids = afterCompact.shingles.select("id").as[Long].collect().toSet
@@ -803,8 +802,8 @@ class TextDedupSpec extends SparkSpec {
     val baseDocs = (0L until 20L).map(i => (i * 2, sent(i.toInt))).toDF("doc_id", "text")
     val batch1 = Seq((101L, sent(500))).toDF("doc_id", "text")
     graft.FaultFs.install(spark.sparkContext.hadoopConfiguration)
-    val dir = graft.FaultFs.uri(
-      java.nio.file.Files.createTempDirectory("mh_idx_tomb").toString)
+    val local = java.nio.file.Files.createTempDirectory("mh_idx_tomb").toString
+    val (dir, fault) = (graft.FaultFs.uri(local), graft.FaultFs.scope(local))
     TextDedup.saveMinhashIndex(baseDocs, "doc_id", "text", dir)
     assert(TextDedup.appendToMinhashIndex(batch1, "doc_id", "text", dir,
       commitTag = "b1"))
@@ -817,8 +816,7 @@ class TextDedupSpec extends SparkSpec {
     // uncommitted.
     var windowChecked = false
     var tag = ""
-    graft.FaultFs.reset()
-    graft.FaultFs.before("delete", p => {
+    fault.before("delete", p => {
       val hit = p.contains("/commits/")
       if (hit) tag = p.split('/').last
       hit
@@ -956,8 +954,8 @@ class TextDedupSpec extends SparkSpec {
     val probe = Seq((201L, sent(500) + " tail"), (203L, sent(7) + " tail"))
       .toDF("doc_id", "text")
     graft.FaultFs.install(spark.sparkContext.hadoopConfiguration)
-    val dir = graft.FaultFs.uri(
-      java.nio.file.Files.createTempDirectory("mh_stopped_compact").toString)
+    val local = java.nio.file.Files.createTempDirectory("mh_stopped_compact").toString
+    val (dir, fault) = (graft.FaultFs.uri(local), graft.FaultFs.scope(local))
     TextDedup.saveMinhashIndex(baseDocs, "doc_id", "text", dir)
     assert(TextDedup.appendToMinhashIndex(batch, "doc_id", "text", dir, "b1"))
     // the bag of (new_id, index_id, jaccard) rows: an index row held
@@ -971,8 +969,7 @@ class TextDedupSpec extends SparkSpec {
     val cleanBands = clean.bands.count()
     // the folded base is published and b1 tombstoned, then the
     // compaction stops before it deletes `commits/b1`
-    graft.FaultFs.reset()
-    graft.FaultFs.before("delete", _.endsWith("/commits/b1")) {
+    fault.before("delete", _.endsWith("/commits/b1")) {
       throw new IllegalStateException("stopped")
     }
     intercept[IllegalStateException] {

@@ -828,8 +828,7 @@ class StreamingOpsSpec extends SparkSpec {
     val next = SnapshotMerge.shardedVersions(spark, rep).last + 1
     assert(recorded(rep) == from.toString)
     graft.FaultFs.install(spark.sparkContext.hadoopConfiguration)
-    graft.FaultFs.reset()
-    graft.FaultFs.before("create", _.startsWith(s"$rep/.manifest-v")) {
+    graft.FaultFs.scope(rep).before("create", _.startsWith(s"$rep/.manifest-v")) {
       SnapshotMerge.restoreSharded(spark, rep, 1L)
       ()
     }
